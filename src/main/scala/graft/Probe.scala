@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev utility: print the Spark-side schema of every testdata table (the
   * DuckDB oracle sees the same files natively — any type skew must be
@@ -8,11 +7,7 @@ import org.apache.spark.sql.SparkSession
 object Probe {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession()
     spark.sparkContext.setLogLevel("ERROR")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     Seq("region", "nation", "customer", "supplier", "part", "orders",

@@ -522,9 +522,8 @@ object JobRunner {
         .toDF("file", "n_rows"), p, "routes_geo_latest_json")
     }))
 
-  /** Execute the whole graph in wave order. Returns the executed node
-    * keys in execution order (the driver-side walk over the collected
-    * schedule is the scheduler's job — tens of rows of metadata).
+  /** Execute the whole graph in wave order, ties by node key. Returns the
+    * executed node keys in execution order.
     */
   def run(spark: SparkSession, sfDir: String, outDir: String,
       streaming: Boolean = false): Seq[String] = {
@@ -532,13 +531,7 @@ object JobRunner {
     java.nio.file.Files.createDirectories(
       java.nio.file.Paths.get(s"$outDir/exports"))
     val fx = effects(spark, sfDir, p, streaming)
-    val order = JobGraph.schedule(spark)
-      .select(concat_ws(".", col("dag_id"), col("task_id")).as("node"),
-        col("wave"))
-      .orderBy("wave", "node")
-      .collect()
-      .map(_.getString(0))
-      .toSeq
+    val order = JobGraph.tasks.map(JobGraph.key).sortBy(k => (JobGraph.waves(k), k))
     val missing = order.filterNot(fx.contains)
     require(missing.isEmpty, s"no effect for: ${missing.mkString(", ")}")
     order.foreach(k => fx(k)())

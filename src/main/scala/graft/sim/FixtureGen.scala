@@ -22,12 +22,7 @@ object FixtureGen {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val outDir = if (args.length > 1) args(1) else "src/main/scala/graft/sim"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession()
     spark.sparkContext.setLogLevel("ERROR")
     generate(spark, dir, outDir).foreach(println)
     spark.stop()

@@ -42,7 +42,7 @@ import org.apache.spark.sql.functions._
   * any number of folded batches, the dedupStateHashes rule).
   */
 object IvfMaintenance {
-  import Knn.{lloydQuantized, lloydAssign, lloydTrainGrid, lloydAssignGrid,
+  import Knn.{lloydQuantized, lloydTrainGrid, lloydAssignGrid,
     lloydCenFrame, lloydSqlCtes, Dim, LloydScale}
 
   def cenPath(stateDir: String, v: Long): String = s"$stateDir/centroids_v$v"
@@ -110,7 +110,9 @@ object IvfMaintenance {
     */
   private def attachAssign(batch: DataFrame, cen: DataFrame): DataFrame = {
     val eb = lloydQuantized(batch)
-    val out = lloydAssign(eb, cen)
+    val grid = cen.select("j", "c").collect().sortBy(_.getInt(0))
+      .toSeq.map(_.getSeq[Long](1))
+    val out = lloydAssignGrid(eb, grid)
       .withColumn("d", array_min(col("ds")))
       .select(col("vec_id"), col("j").as("cell"), col("d"), col("q"))
       .localCheckpoint()

@@ -66,7 +66,7 @@ object KnnGraph {
     s"CAST(list_sum(list_transform(range(1, ${Dim + 1}), i -> ($a[i]-$b[i])*($a[i]-$b[i]))) AS BIGINT)"
 
   /** md5-ranked seed block — the deterministic unbiased sample the
-    * graph bootstraps from (the lloydSeeds ranking).
+    * graph bootstraps from (the lloydSeedGrid ranking).
     */
   private def seedOf(e0: DataFrame, seedSize: Int): DataFrame =
     e0.withColumn("h", md5(col("vec_id").cast("string")))

@@ -64,69 +64,12 @@ private[sim] trait KnnQuant extends KnnCore {
     withNorm(embeddings).select(col("vec_id"), quant.as("q")).persist()
   }
 
-  /** k seed centroids in md5 order. The global window is over the
-    * already-LIMITed k-row frame — bounded by construction, not a
-    * corpus-wide single-partition sort (the heavy ranking is TakeOrdered).
-    */
-  private[graft] def lloydSeeds(e0: DataFrame, k: Int): DataFrame = {
-    val seedW = Window.orderBy("h", "vec_id")
-    e0.withColumn("h", md5(col("vec_id").cast("string")))
-      .orderBy("h", "vec_id").limit(k)
-      .withColumn("j", (row_number().over(seedW) - 1).cast("int"))
-      .select(col("j"), col("q").as("c"))
-  }
-
-  /** Argmin assignment of the quantized corpus against the k-row
-    * centroid frame: the centroids collapse to a one-row k×64 grid
-    * (ordered by j) and broadcast — KB-sized at any corpus size.
-    */
-  private[graft] def lloydAssign(e0: DataFrame, cen: DataFrame): DataFrame = {
-    val grid = cen.groupBy().agg(
-      transform(array_sort(collect_list(struct(col("j"), col("c")))),
-        s => s.getField("c")).as("cb"))
-    e0.crossJoin(broadcast(grid))
-      .withColumn("ds", transform(col("cb"), cenA =>
-        aggregate(zip_with(col("q"), cenA, (x, c) => (x - c) * (x - c)),
-          lit(0L), _ + _)))
-      .withColumn("j", (array_position(col("ds"), array_min(col("ds"))) - 1).cast("int"))
-  }
-
-  /** One Lloyd update step: per-(cluster, dim) integer sums off an
-    * assignment frame carrying (j, q), exactly-divisible floor-means,
-    * empty-cluster-keeps-previous, lineage truncated (localCheckpoint,
-    * never persist — the grown plan, not the data, is the cost; see the
-    * connected-components loop for the same rule), otherwise iteration N
-    * re-embeds and re-optimizes every earlier iteration's aggregation
-    * subtree twice over.
-    */
-  private[graft] def lloydUpdate(cen: DataFrame, asg: DataFrame): DataFrame = {
-    // r17 (guide §2.3/§2.4): the per-(cluster, dim) sums as Dim aggregate
-    // expressions over ONE partial-aggregated hash shuffle of k rows —
-    // the previous posexplode form pushed k×Dim exploded rows through
-    // TWO aggregations (sum, then collect_list+array_sort rebuild) plus
-    // the same join. Exactly-divisible floor-means are computed per
-    // dimension from the identical integer sums, so every centroid bit
-    // is unchanged (OptimizationEquivalenceSpec pins it).
-    val sums = asg.groupBy("j").agg(
-      count(lit(1)).as("cnt"),
-      (0 until Dim).map(i => sum(col("q").getItem(i)).as(s"s$i")): _*)
-    val newCen = sums.select(col("j"),
-      array((0 until Dim).map { i =>
-        val s = col(s"s$i")
-        val m = ((s % col("cnt")) + col("cnt")) % col("cnt")
-        ((s - m).cast("double") / col("cnt")).cast("long")
-      }: _*).as("nc"))
-    cen.join(newCen, Seq("j"), "left")
-      .select(col("j"), coalesce(col("nc"), col("c")).as("c"))
-      .localCheckpoint()
-  }
-
   // ─────────── r18: the training loop fused to 1 job/iteration ───────────
 
   /** The k seed centroids as a collected grid — the md5-ranked LIMIT-k
-    * frame [[lloydSeeds]] ranks, brought to the driver (k·Dim longs:
-    * parameter-sized, the same bytes [[lloydAssign]]'s broadcast already
-    * collected to the driver on every use).
+    * frame, brought to the driver (k·Dim longs: parameter-sized, the same
+    * bytes the join-form trainer's broadcast collected on every use; that
+    * form is OptimizationEquivalenceSpec's reference).
     */
   private[graft] def lloydSeedGrid(e0: DataFrame, k: Int): Seq[Seq[Long]] =
     e0.withColumn("h", md5(col("vec_id").cast("string")))
@@ -177,10 +120,9 @@ private[sim] trait KnnQuant extends KnnCore {
     grid
   }
 
-  /** Argmin assignment against a literal centroid grid — the identical
-    * `ds`/`j` expressions of [[lloydAssign]] with the broadcast grid
-    * column replaced by a k×Dim literal (no crossJoin, no per-use
-    * broadcast-build job).
+  /** Argmin assignment against a literal centroid grid — the join form's
+    * `ds`/`j` expressions with its broadcast grid column replaced by a
+    * k×Dim literal (no crossJoin, no per-use broadcast-build job).
     */
   private[graft] def lloydAssignGrid(e0: DataFrame,
       grid: Seq[Seq[Long]]): DataFrame =
@@ -192,7 +134,7 @@ private[sim] trait KnnQuant extends KnnCore {
 
   /** The (j, c) centroid frame of a trained grid, for consumers that keep
     * centroids in-plan (state-dir writes, checksum outputs) — the same
-    * k rows/values/types [[lloydSeeds]]+[[lloydUpdate]] produced.
+    * k rows/values/types the join-form trainer produced.
     */
   private[graft] def lloydCenFrame(spark: org.apache.spark.sql.SparkSession,
       grid: Seq[Seq[Long]]): DataFrame = {
@@ -1090,7 +1032,7 @@ private[sim] trait KnnQuant extends KnnCore {
     def pqUpdate(cb: DataFrame, pasg: DataFrame): DataFrame = {
       // r17: subDim per-dimension sums as aggregate expressions over ONE
       // partial-aggregated shuffle — the posexplode form shuffled
-      // subDim× the rows through two aggregations (the lloydUpdate
+      // subDim× the rows through two aggregations (the Lloyd update
       // rewrite, one level down; same exact integers).
       val sums = pasg.groupBy("sub", "cidx").agg(
         count(lit(1)).as("cnt"),

@@ -163,18 +163,6 @@ private[graft] trait TextCore extends Serializable {
       .otherwise("und")
   }
 
-  /** Append `predicted_lang` to `df` (which must carry `text`) via the
-    * factored two-projection plan of [[langScoreCols]] — the form every
-    * query-side consumer should use.
-    */
-  def withPredictedLang(df: DataFrame, out: String = "predicted_lang"): DataFrame = {
-    val scores = langScoreCols(col("text"))
-    val scored = df.select(
-      col("*") +: scores.map { case (n, c) => c.cast("long").as("__" + n) }: _*)
-    scored.withColumn(out, langCaseFromScores("__"))
-      .drop(scores.map("__" + _._1): _*)
-  }
-
   /** Predicted language of a text column (fixed-priority decision tree
     * over the marker scores; CJK first via codepoint-range count).
     * Shared single-expression form — semantics reference for specs and

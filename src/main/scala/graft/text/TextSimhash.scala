@@ -66,34 +66,6 @@ private[graft] trait TextSimhash extends TextQuality {
       element_at(sh, 2).as("sim_lo"))
   }
 
-  /** The composed built-in form simhash64 replaced (explode → hex-digit
-    * columns → 64 bit-vote SUMs → sign). Kept as the reference
-    * implementation for the equivalence spec — the custom expression
-    * must never drift from what these built-ins compute.
-    */
-  private[graft] def simhash64Composed(documents: DataFrame): DataFrame = {
-    val tok = documents
-      .select(col("doc_id"), explode(toks(col("text"))).as("t"))
-      .withColumn("h", md5(col("t")))
-    val withDigits = (0 until 16).foldLeft(tok) { (df, j) =>
-      df.withColumn(s"d$j", hexVal(substring(col("h"), j + 1, 1)))
-    }
-    val sums = (0 until 64).map { b =>
-      val d = col(s"d${b / 4}")
-      val bit = (d / lit(1 << (3 - b % 4))).cast("int") % 2
-      sum(when(bit === 1, 1).otherwise(-1)).as(s"v$b")
-    }
-    def half(bits: Range, off: Int) = bits
-      .map(b => when(col(s"v$b") > 0, lit(1L << (b - off))).otherwise(lit(0L)))
-      .reduceLeft(_ + _)
-    withDigits
-      .groupBy("doc_id")
-      .agg(sums.head, sums.tail: _*)
-      .select(col("doc_id"),
-        half(32 until 64, 32).cast("long").as("sim_hi"),
-        half(0 until 32, 0).cast("long").as("sim_lo"))
-  }
-
   /** CTE chain ending in `simsel64(doc_id, sim_hi, sim_lo)` — the DuckDB
     * twin of [[simhash64]], composable into larger oracle queries.
     */

@@ -56,6 +56,10 @@ class JobGraphSpec extends SparkSpec {
     val out = java.nio.file.Files.createTempDirectory("graft_jobrun").toString
     val order = JobRunner.run(spark, sfDir, out)
     assert(order.size === JobGraph.tasks.size)
+    // the driver-side order is the published schedule's (wave, node) order
+    assert(order === JobGraph.schedule(spark)
+      .select(concat_ws(".", col("dag_id"), col("task_id")).as("node"), col("wave"))
+      .orderBy("wave", "node").collect().map(_.getString(0)).toSeq)
     // execution order respects the declared edges
     val pos = order.zipWithIndex.toMap
     JobGraph.edges(spark).collect().foreach { e =>

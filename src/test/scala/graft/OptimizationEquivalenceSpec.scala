@@ -18,6 +18,67 @@ class OptimizationEquivalenceSpec extends SparkSpec {
 
   private def embs = TestdataAdapter.table(spark, sfDir, "embeddings")
 
+  // The join-form Lloyd trainer (seed frame, broadcast-grid assignment,
+  // join + checkpoint update) that src/main ran before the r18 grid
+  // trainer replaced it: the reference the grid forms are pinned to.
+
+  /** k seed centroids in md5 order. The global window is over the
+    * already-LIMITed k-row frame — bounded by construction, not a
+    * corpus-wide single-partition sort (the heavy ranking is TakeOrdered).
+    */
+  private def lloydSeeds(e0: DataFrame, k: Int): DataFrame = {
+    val seedW = Window.orderBy("h", "vec_id")
+    e0.withColumn("h", md5(col("vec_id").cast("string")))
+      .orderBy("h", "vec_id").limit(k)
+      .withColumn("j", (row_number().over(seedW) - 1).cast("int"))
+      .select(col("j"), col("q").as("c"))
+  }
+
+  /** Argmin assignment of the quantized corpus against the k-row
+    * centroid frame: the centroids collapse to a one-row k×64 grid
+    * (ordered by j) and broadcast — KB-sized at any corpus size.
+    */
+  private def lloydAssign(e0: DataFrame, cen: DataFrame): DataFrame = {
+    val grid = cen.groupBy().agg(
+      transform(array_sort(collect_list(struct(col("j"), col("c")))),
+        s => s.getField("c")).as("cb"))
+    e0.crossJoin(broadcast(grid))
+      .withColumn("ds", transform(col("cb"), cenA =>
+        aggregate(zip_with(col("q"), cenA, (x, c) => (x - c) * (x - c)),
+          lit(0L), _ + _)))
+      .withColumn("j", (array_position(col("ds"), array_min(col("ds"))) - 1).cast("int"))
+  }
+
+  /** One Lloyd update step: per-(cluster, dim) integer sums off an
+    * assignment frame carrying (j, q), exactly-divisible floor-means,
+    * empty-cluster-keeps-previous, lineage truncated (localCheckpoint,
+    * never persist — the grown plan, not the data, is the cost; see the
+    * connected-components loop for the same rule), otherwise iteration N
+    * re-embeds and re-optimizes every earlier iteration's aggregation
+    * subtree twice over.
+    */
+  private def lloydUpdate(cen: DataFrame, asg: DataFrame): DataFrame = {
+    // r17 (guide §2.3/§2.4): the per-(cluster, dim) sums as Dim aggregate
+    // expressions over ONE partial-aggregated hash shuffle of k rows —
+    // the previous posexplode form pushed k×Dim exploded rows through
+    // TWO aggregations (sum, then collect_list+array_sort rebuild) plus
+    // the same join. Exactly-divisible floor-means are computed per
+    // dimension from the identical integer sums, so every centroid bit
+    // is unchanged (the first test below pins it).
+    val sums = asg.groupBy("j").agg(
+      count(lit(1)).as("cnt"),
+      (0 until Knn.Dim).map(i => sum(col("q").getItem(i)).as(s"s$i")): _*)
+    val newCen = sums.select(col("j"),
+      array((0 until Knn.Dim).map { i =>
+        val s = col(s"s$i")
+        val m = ((s % col("cnt")) + col("cnt")) % col("cnt")
+        ((s - m).cast("double") / col("cnt")).cast("long")
+      }: _*).as("nc"))
+    cen.join(newCen, Seq("j"), "left")
+      .select(col("j"), coalesce(col("nc"), col("c")).as("c"))
+      .localCheckpoint()
+  }
+
   test("lloydUpdate: Dim-aggregate form ≡ the r16 posexplode form, bit for bit") {
     // r16 reference implementation: explode to (j, i, v), two
     // aggregations, collect_list+array_sort rebuild, join+coalesce
@@ -37,12 +98,12 @@ class OptimizationEquivalenceSpec extends SparkSpec {
         .select(col("j"), coalesce(col("nc"), col("c")).as("c"))
     }
     val e0 = Knn.lloydQuantized(embs)
-    var cenNew = Knn.lloydSeeds(e0, 4)
+    var cenNew = lloydSeeds(e0, 4)
     var cenOld = cenNew
     for (_ <- 1 to 3) {
-      val asgNew = Knn.lloydAssign(e0, cenNew)
-      val asgOld = Knn.lloydAssign(e0, cenOld)
-      cenNew = Knn.lloydUpdate(cenNew, asgNew)
+      val asgNew = lloydAssign(e0, cenNew)
+      val asgOld = lloydAssign(e0, cenOld)
+      cenNew = lloydUpdate(cenNew, asgNew)
       cenOld = lloydUpdateR16(cenOld, asgOld).localCheckpoint()
       val a = cenNew.orderBy("j").collect().map(r =>
         (r.getInt(0), r.getSeq[Long](1).toList))
@@ -52,8 +113,8 @@ class OptimizationEquivalenceSpec extends SparkSpec {
     }
     // empty-cluster keeps-previous leg: run an update off an assignment
     // that drops cluster 0 entirely
-    val asg = Knn.lloydAssign(e0, cenNew).filter(col("j") =!= 0)
-    val kept = Knn.lloydUpdate(cenNew, asg).orderBy("j").collect()
+    val asg = lloydAssign(e0, cenNew).filter(col("j") =!= 0)
+    val kept = lloydUpdate(cenNew, asg).orderBy("j").collect()
     val keptOld = lloydUpdateR16(cenOld, asg).orderBy("j").collect()
     assert(kept.map(r => (r.getInt(0), r.getSeq[Long](1).toList)).toSeq ==
       keptOld.map(r => (r.getInt(0), r.getSeq[Long](1).toList)).toSeq)
@@ -68,13 +129,13 @@ class OptimizationEquivalenceSpec extends SparkSpec {
     // assignment against the broadcast-grid assignment on the result.
     val e0 = Knn.lloydQuantized(embs)
     val (k, iters) = (4, 3)
-    var cenOld = Knn.lloydSeeds(e0, k)
+    var cenOld = lloydSeeds(e0, k)
     var grid = Knn.lloydSeedGrid(e0, k)
     def gridOf(cen: DataFrame): Seq[Seq[Long]] =
       cen.orderBy("j").collect().map(_.getSeq[Long](1)).toSeq
     assert(grid == gridOf(cenOld), "seed grids diverged")
     for (it <- 1 to iters) {
-      cenOld = Knn.lloydUpdate(cenOld, Knn.lloydAssign(e0, cenOld))
+      cenOld = lloydUpdate(cenOld, lloydAssign(e0, cenOld))
       grid = Knn.lloydUpdateGrid(grid, Knn.lloydAssignGrid(e0, grid))
       assert(grid == gridOf(cenOld), s"iteration $it centroids diverged")
     }
@@ -82,15 +143,15 @@ class OptimizationEquivalenceSpec extends SparkSpec {
     val a = Knn.lloydAssignGrid(e0, grid)
       .select("vec_id", "j", "ds").orderBy("vec_id").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getSeq[Long](2).toList)).toSeq
-    val b = Knn.lloydAssign(e0, cenOld)
+    val b = lloydAssign(e0, cenOld)
       .select("vec_id", "j", "ds").orderBy("vec_id").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getSeq[Long](2).toList)).toSeq
     assert(a == b, "literal-grid assignment diverged from the broadcast form")
     // empty-cluster-keeps-previous: an update fed an assignment frame
     // missing cluster 0 must keep its previous centroid in both forms
-    val partial = Knn.lloydAssign(e0, cenOld).filter(col("j") =!= 0)
+    val partial = lloydAssign(e0, cenOld).filter(col("j") =!= 0)
     assert(Knn.lloydUpdateGrid(grid, partial) ==
-      gridOf(Knn.lloydUpdate(cenOld, partial)),
+      gridOf(lloydUpdate(cenOld, partial)),
       "empty-cluster rule diverged")
     // the rebuilt centroid frame carries the same rows/types
     val cf = Knn.lloydCenFrame(spark, grid).orderBy("j").collect()

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.text.TextOps
 
@@ -18,9 +19,36 @@ class SimHashExprSpec extends SparkSpec {
     (8L, "dup dup dup dup unique")) // duplicate tokens vote with multiplicity
     .toDF("doc_id", "text")
 
+  /** The composed built-in form simhash64 replaced (explode → hex-digit
+    * columns → 64 bit-vote SUMs → sign): the reference implementation
+    * the custom expression must never drift from.
+    */
+  private def simhash64Composed(documents: DataFrame): DataFrame = {
+    val tok = documents
+      .select(col("doc_id"), explode(TextOps.toks(col("text"))).as("t"))
+      .withColumn("h", md5(col("t")))
+    val withDigits = (0 until 16).foldLeft(tok) { (df, j) =>
+      df.withColumn(s"d$j", TextOps.hexVal(substring(col("h"), j + 1, 1)))
+    }
+    val sums = (0 until 64).map { b =>
+      val d = col(s"d${b / 4}")
+      val bit = (d / lit(1 << (3 - b % 4))).cast("int") % 2
+      sum(when(bit === 1, 1).otherwise(-1)).as(s"v$b")
+    }
+    def half(bits: Range, off: Int) = bits
+      .map(b => when(col(s"v$b") > 0, lit(1L << (b - off))).otherwise(lit(0L)))
+      .reduceLeft(_ + _)
+    withDigits
+      .groupBy("doc_id")
+      .agg(sums.head, sums.tail: _*)
+      .select(col("doc_id"),
+        half(32 until 64, 32).cast("long").as("sim_hi"),
+        half(0 until 32, 0).cast("long").as("sim_lo"))
+  }
+
   test("native simhash64 is bit-identical to the composed explode/aggregate form") {
     val native = TextOps.simhash64(docs).orderBy("doc_id").collect()
-    val composed = TextOps.simhash64Composed(docs).orderBy("doc_id").collect()
+    val composed = simhash64Composed(docs).orderBy("doc_id").collect()
     assert(native.toSeq == composed.toSeq)
   }
 
