@@ -50,11 +50,13 @@ import org.apache.spark.sql.functions._
   * frontier expansion bounded by the node count, the same fixpoint shape
   * as dedup.Dedup's label propagation) and hash-checked against a DuckDB
   * recursive-CTE twin, so the scheduler's semantics are part of the
-  * oracle gate, not prose. [[run]] executes wave-by-wave with every
-  * task reading ONLY materialized upstream artifacts (parquet per table,
-  * the Postgres-table handoff done in files), which is what makes the
-  * execution honest: a mis-ordered schedule fails loudly on a missing
-  * artifact rather than silently reading stale state.
+  * oracle gate, not prose. [[JobRunner.run]] starts each task as soon as
+  * every upstream in [[upstreamsOf]] has finished, on [[width]] driver
+  * threads, with every task reading ONLY the materialized tables it
+  * declares in `consumes` and writing only those in its `produces`
+  * (parquet per table, the Postgres-table handoff done in files): an
+  * undeclared read or write throws, so the declarations this graph
+  * derives its edges from are the whole concurrency contract.
   */
 object JobGraph {
 
@@ -120,7 +122,7 @@ object JobGraph {
     JobTask("ml_train_predict_demand_rf_psycopg2", "ensure_ml_dataset_view",
       "@hourly",
       Seq("passenger_flow_events", "trip_updates", "vehicle_positions",
-        "weather_observations", "stop_times", "trips"),
+        "weather_observations", "stop_times", "trips", "gtfs_versions"),
       Seq("ml_dataset_hourly")),
     JobTask("ml_train_predict_demand_rf_psycopg2", "ensure_tables",
       "@hourly", Nil, Seq("ml_tables_ddl")),
@@ -152,9 +154,11 @@ object JobGraph {
       Seq("kpi_hourly", "route_optimization_suggestions"),
       Seq("suggestions_exports")),
 
-    // export_routes_geo_json (export-routes-geo-job.py:56-, @daily).
+    // export_routes_geo_json (export-routes-geo-job.py:56-, @daily); like
+    // ensure_ml_dataset_view it reads gtfs_versions to pin its static
+    // reads to the current feed.
     JobTask("export_routes_geo_json", "export_routes_geo", "@daily",
-      Seq("stops", "routes", "trips", "stop_times"),
+      Seq("stops", "routes", "trips", "stop_times", "gtfs_versions"),
       Seq("routes_geo_latest_json")))
 
   // ---- relational derivations ------------------------------------------
@@ -189,9 +193,11 @@ object JobGraph {
   }
 
   /** Upstream map derived from the same declarations [[edges]] joins:
-    * node → its distinct producing-task keys, sorted.
+    * node → its distinct producing-task keys, sorted; source nodes have
+    * no entry. [[waves]] orders by it and [[JobRunner.run]] starts each
+    * node once every upstream listed here has finished.
     */
-  private lazy val upstreamsOf: Map[String, Seq[String]] = {
+  lazy val upstreamsOf: Map[String, Seq[String]] = {
     val pairs = for {
       p <- tasks; c <- tasks
       if key(p) != key(c)
@@ -205,11 +211,13 @@ object JobGraph {
   /** Deterministic wave per task: wave(n) = length of the longest
     * dependency path ending at n (sources = wave 1). Tasks sharing a
     * wave have no path between them and may run concurrently — the
-    * schedule IS the parallelism plan. Computed on the driver: the graph
-    * is deployment metadata, O(#tasks) however big the data, which is
-    * exactly where every real scheduler computes it (compare the audited
-    * bounded collects: BPE vocab, hour histogram). Kahn-style so a cycle
-    * fails loudly instead of recursing forever.
+    * schedule IS the parallelism plan ([[JobRunner.run]] goes further
+    * and starts a task the moment its own upstreams finish, without
+    * waiting for the rest of the wave before it). Computed on the
+    * driver: the graph is deployment metadata, O(#tasks) however big the
+    * data, which is exactly where every real scheduler computes it
+    * (compare the audited bounded collects: BPE vocab, hour histogram).
+    * Kahn-style so a cycle fails loudly instead of recursing forever.
     */
   lazy val waves: Map[String, Int] = {
     var acc = Map.empty[String, Int]
@@ -227,6 +235,11 @@ object JobGraph {
     }
     acc
   }
+
+  /** Node count of the widest wave — the most tasks the wave schedule
+    * runs side by side — and so [[JobRunner.run]]'s driver thread count.
+    */
+  lazy val width: Int = waves.values.groupBy(identity).values.map(_.size).max
 
   /** The wave schedule as a frame: (wave, dag, task, cadence, upstream
     * count + sorted list). The DuckDB twin ([[scheduleSql]]) re-derives

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -54,19 +56,34 @@ class JobGraphSpec extends SparkSpec {
 
   test("full run: artifacts match direct composition, re-run is idempotent") {
     val out = java.nio.file.Files.createTempDirectory("graft_jobrun").toString
-    val order = JobRunner.run(spark, sfDir, out)
-    assert(order.size === JobGraph.tasks.size)
-    // the driver-side order is the published schedule's (wave, node) order
-    assert(order === JobGraph.schedule(spark)
-      .select(concat_ws(".", col("dag_id"), col("task_id")).as("node"), col("wave"))
-      .orderBy("wave", "node").collect().map(_.getString(0)).toSeq)
-    // execution order respects the declared edges
-    val pos = order.zipWithIndex.toMap
+    val sc = spark.sparkContext
+    val groups = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+    }
+    org.apache.spark.GraftBus.drain(sc)
+    sc.addSparkListener(listener)
+    val runs = try JobRunner.run(spark, sfDir, out) finally {
+      org.apache.spark.GraftBus.drain(sc)
+      sc.removeSparkListener(listener)
+    }
+    val nodes = JobGraph.schedule(spark)
+      .select(concat_ws(".", col("dag_id"), col("task_id"))).collect().map(_.getString(0))
+    // one record per scheduled node
+    assert(runs.size === JobGraph.tasks.size)
+    assert(runs.map(_.key).toSet === nodes.toSet)
+    // every declared edge: the upstream ended before the downstream started
+    val at = runs.map(r => r.key -> r).toMap
     JobGraph.edges(spark).collect().foreach { e =>
       val src = keyOf(e.getAs[String]("src_dag"), e.getAs[String]("src_task"))
       val dst = keyOf(e.getAs[String]("dst_dag"), e.getAs[String]("dst_task"))
-      assert(pos(src) < pos(dst), s"$src executed after $dst")
+      assert(at(src).endNs <= at(dst).startNs, s"$dst started before $src ended")
     }
+    // every job of the run ran under its node's key as job group, every
+    // node launched jobs, and the caller's own group is left untouched
+    assert(groups.asScala.toSet === nodes.toSet)
+    assert(sc.getLocalProperty("spark.jobGroup.id") === null)
 
     val p = JobRunner.Paths(out)
     def art(t: String): DataFrame = spark.read.parquet(p.table(t))
@@ -158,6 +175,20 @@ class JobGraphSpec extends SparkSpec {
       "a stale feed snapshot leaked into the downstream chain")
     val mlArt3 = art("ml_dataset_hourly").orderBy("route_id", "hour_ts").collect()
     assert(mlArt3.toSeq === mlArt.toSeq)
+  }
+
+  test("a node touching a table outside its declarations throws before any I/O") {
+    val node = JobGraph.tasks.find(_.task == "ensure_ml_dataset_view").get
+    val io = new JobRunner.NodeIo(spark, JobRunner.Paths("/nonexistent"), node)
+    val e = intercept[IllegalArgumentException](io.table("kpi_hourly"))
+    assert(e.getMessage.contains("does not declare in consumes"))
+    // a table it reads but does not produce, and one another node produces
+    for (t <- Seq("trip_updates", "ml_runs")) {
+      val w = intercept[IllegalArgumentException](io.write(spark.range(1).toDF(), t))
+      assert(w.getMessage.contains("does not declare in produces"))
+      intercept[IllegalArgumentException](io.own(t))
+    }
+    intercept[IllegalArgumentException](io.queue("rt_frames"))
   }
 
   test("wall-clock triggers: Airflow interval alignment, run-at-interval-end, " +

@@ -526,7 +526,7 @@ class ScaleSoakSpec extends SparkSpec {
     // with a broadcast at small scale (count drops), so the pin is a
     // budget, not an equality; the action count IS structural and must
     // not move with data volume at all.
-    // measured 138/142/142 at 1×/10×/30× (AQE broadcasts 4 exchanges
+    // measured 136/140/140 at 1×/10×/30× (AQE broadcasts 4 exchanges
     // away at 1×); the pin is the CURRENT shape + headroom for listener
     // jitter, lowered like every PlanBudget when a plan improves
     val ShuffleBudget = 150
