@@ -422,9 +422,9 @@ private[graft] trait LlmQueries extends RegistryBase {
       // order is the broker's commit order. This is the ONE registered
       // dedup-index stream (r12): the earlier file-source twin pinned
       // mtimes to fake that ordering — its own comment called it a
-      // test-harness device — so it now lives only in specs
-      // (DedupStreamParitySpec parity, CrashRecoverySpec recovery,
-      // ScaleSoakSpec growth), not in the benched registry.
+      // test-harness device — so only specs feed the same fold from a
+      // file source (CrashRecoverySpec recovery and file ≡ queue parity,
+      // ScaleSoakSpec growth); it is not in the benched registry.
       // The streaming forms get a per-(scale dir, query) cached state
       // dir: the corpus v0 bootstrap (the one expensive part, seeded only
       // if absent) is amortized so repeated runs time the per-batch

@@ -39,7 +39,7 @@ import org.apache.spark.sql.functions._
   * verdict frame; a retrain is the explicit full-window cost production
   * pays exactly when the gate says the geometry no longer serves — and
   * the window is read back as ONE multi-path parquet scan (flat plan at
-  * any number of folded batches, the dedupStateHashes rule).
+  * any number of folded batches, the Streams.stateBefore rule).
   */
 object IvfMaintenance {
   import Knn.{lloydQuantized, lloydTrainGrid, lloydAssignGrid,

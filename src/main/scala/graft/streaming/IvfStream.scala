@@ -3,16 +3,15 @@ package graft.streaming
 import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.sim.IvfMaintenance
 
 /** The ANN index-maintenance loop on REAL transport (VERDICT r14 item 1):
-  * embedding batches ride a `graftqueue` topic as JSON envelopes and
-  * drain as offset-ordered micro-batches (whole-segment admission, so
-  * batch order IS the broker's commit order); each micro-batch runs
-  * [[IvfMaintenance.maintenanceStep]] — attach to the persisted centroid
+  * embedding batches make the queue round trip of every maintained-state
+  * stream ([[Streams.queueRoundTrip]]: JSON envelopes on a `graftqueue`
+  * topic, drained as offset-ordered micro-batches, so batch order IS the
+  * broker's commit order), and [[Streams.foldBatches]] runs
+  * [[IvfMaintenance.maintenanceStep]] on each — attach to the persisted centroid
   * state, emit the drift verdict, append the delta, gate the retrain —
   * exactly the fold the in-plan batch twin (`ivf_maintenance_batch`)
   * runs, so the two registered queries share one DuckDB oracle and
@@ -25,34 +24,6 @@ import graft.sim.IvfMaintenance
   */
 object IvfStream {
 
-  /** Stage the two standard-carve micro-batches onto a fresh graftqueue
-    * topic and return (offset-ordered stream, corpus frame).
-    */
-  private def stageEmbQueue(
-      spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val (corpus, b1, b2) = IvfMaintenance.carve(
-      graft.TestdataAdapter.table(spark, dir, "embeddings"))
-    val qdir = Files.createTempDirectory("graft_ivfq").toString
-    def produce(batch: DataFrame): Unit = batch
-      .select(
-        col("vec_id").cast("string").cast("binary").as("key"),
-        to_json(struct(col("vec_id"), col("embedding"))).cast("binary").as("value"))
-      .coalesce(1) // one committed segment per produce → one micro-batch each
-      .write.format("graftqueue").option("path", qdir)
-      .option("topic", "emb.ingest").mode("append").save()
-    produce(b1)
-    produce(b2)
-    val wire = org.apache.spark.sql.types.StructType.fromDDL(
-      "vec_id BIGINT, embedding ARRAY<FLOAT>")
-    val stream = spark.readStream.format("graftqueue")
-      .option("path", qdir).option("topic", "emb.ingest")
-      .option("maxRecordsPerTrigger", "1")
-      .load()
-      .select(from_json(col("value").cast("string"), wire).as("r"))
-      .select("r.*")
-    (stream, corpus)
-  }
-
   /** The maintenance fold over ANY streaming source of embedding rows —
     * exposed for the crash-recovery spec (file-staged there, queue-fed
     * here; `crashAfterVerdictsOfBatch` is the same fault-injection seam
@@ -64,21 +35,13 @@ object IvfStream {
       verdictsDir: String, checkpoint: String,
       cells: Int = 8, iters: Int = 2,
       driftRatio: Double = 1.5, shareRatio: Double = 2.0,
-      crashAfterVerdictsOfBatch: Option[Long] = None): Unit = {
-    val q = stream
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        IvfMaintenance.maintenanceStep(
-          batch.sparkSession, corpus, stateDir, verdictsDir, batch, batchId,
-          cells, iters, driftRatio, shareRatio,
-          crashAfterVerdictsOfBatch)
-        ()
-      }
-      .start()
-    q.awaitTermination()
-  }
+      crashAfterVerdictsOfBatch: Option[Long] = None): Unit =
+    Streams.foldBatches(stream, checkpoint) { (batch, batchId) =>
+      IvfMaintenance.maintenanceStep(
+        batch.sparkSession, corpus, stateDir, verdictsDir, batch, batchId,
+        cells, iters, driftRatio, shareRatio,
+        crashAfterVerdictsOfBatch)
+    }
 
   /** The registered streaming query: drain the two queue segments
     * through the maintenance fold, read back the per-batch drift
@@ -90,7 +53,10 @@ object IvfStream {
       stateDir: Option[String] = None,
       cells: Int = 8, iters: Int = 2,
       driftRatio: Double = 1.5, shareRatio: Double = 2.0): DataFrame = {
-    val (stream, corpus) = stageEmbQueue(spark, dir)
+    val (corpus, b1, b2) = IvfMaintenance.carve(
+      graft.TestdataAdapter.table(spark, dir, "embeddings"))
+    val stream = Streams.queueRoundTrip("vec_id",
+      Seq(b1, b2).map(_.select("vec_id", "embedding")))
     val staged = Files.createTempDirectory("graft_ivfq_state").toString
     runIvfIndexStreamFrom(stream, corpus,
       stateDir.getOrElse(s"$staged/state"), s"$staged/verdicts",

@@ -73,10 +73,10 @@ object Streams {
     * (bounded cardinality), so extra partitions add store overhead
     * without parallelism — measured 8.1 s → 3.2 s on the sf0.1
     * stream-stream join going 32 → 8. On a real cluster this is the
-    * knob you size to state VOLUME (rows × bytes per partition), not to
-    * core count; override via SPARK_GRAFT_STREAM_PARTS.
+    * width you size to state VOLUME (rows × bytes per partition), not to
+    * core count.
     */
-  private val StreamParts = sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "8")
+  private val StreamParts = "8"
 
   /** The session's batch shuffle width, captured before any streaming
     * override so concurrent runToTable calls (Verify's thread pool)
@@ -107,6 +107,52 @@ object Streams {
       q.awaitTermination()
     } finally spark.conf.set(key, base)
     spark.table(name)
+  }
+
+  /** The one micro-batch fold of the maintained-state streams: drain
+    * `stream` through `f`, one call per micro-batch, checkpointed at
+    * `checkpoint`. AvailableNow, so it returns once every record
+    * available at start has been folded. A restart on the same
+    * checkpoint redelivers an uncommitted batch under the same batchId,
+    * which is why every fold keys its writes by batchId and overwrites.
+    */
+  private[graft] def foldBatches(stream: DataFrame, checkpoint: String)(
+      f: (DataFrame, Long) => Unit): Unit =
+    stream.writeStream
+      .trigger(Trigger.AvailableNow())
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch(f)
+      .start()
+      .awaitTermination()
+
+  /** The queue wire contract of the maintained-state streams, in one
+    * place: each frame of `batches` is produced to a fresh `graftqueue`
+    * topic (private to this call) as exactly ONE committed segment (key
+    * = `idCol` as string bytes, value = the row's JSON envelope), and
+    * the returned stream drains them as offset-ordered micro-batches —
+    * `maxRecordsPerTrigger` admits whole segments, so micro-batch k IS
+    * frame k and batch order is the broker's commit order (produce calls
+    * are sequential Spark jobs, so segment commit stamps strictly
+    * increase). The wire schema is the first frame's own; JSON
+    * round-trips strings, BIGINTs and float arrays (shortest-round-trip
+    * repr) exactly.
+    */
+  private[graft] def queueRoundTrip(idCol: String, batches: Seq[DataFrame]): DataFrame = {
+    val qdir = Files.createTempDirectory("graft_queue").toString
+    val topic = "batches"
+    batches.foreach(b => b
+      .select(
+        col(idCol).cast("string").cast("binary").as("key"),
+        to_json(struct(b.columns.map(col): _*)).cast("binary").as("value"))
+      .coalesce(1) // one committed segment per produce → one micro-batch each
+      .write.format("graftqueue").option("path", qdir)
+      .option("topic", topic).mode("append").save())
+    batches.head.sparkSession.readStream.format("graftqueue")
+      .option("path", qdir).option("topic", topic)
+      .option("maxRecordsPerTrigger", "1")
+      .load()
+      .select(from_json(col("value").cast("string"), batches.head.schema).as("r"))
+      .select("r.*")
   }
 
   /** A3 as a stream: hourly vehicle-event counts — identical to the batch
@@ -390,28 +436,22 @@ object Streams {
     // table catalog); the checkpoint already makes batch replay safe since
     // the merge is idempotent.
     var current: Option[String] = None
-    val q = ev.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        val existing = current
-          .map(p => s.read.parquet(p))
-          .getOrElse(s.createDataFrame(
-            s.sparkContext.emptyRDD[org.apache.spark.sql.Row], batch.schema))
-        val w = Window.partitionBy("user_id", "event_type")
-          .orderBy(col("ts").desc, col("event_id").desc)
-        val next = s"$sink/v$batchId"
-        existing.unionByName(batch)
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") === 1)
-          .drop("rn")
-          .write.mode("overwrite").parquet(next)
-        current = Some(next)
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    foldBatches(ev, checkpoint) { (batch, batchId) =>
+      val s = batch.sparkSession
+      val existing = current
+        .map(p => s.read.parquet(p))
+        .getOrElse(s.createDataFrame(
+          s.sparkContext.emptyRDD[org.apache.spark.sql.Row], batch.schema))
+      val w = Window.partitionBy("user_id", "event_type")
+        .orderBy(col("ts").desc, col("event_id").desc)
+      val next = s"$sink/v$batchId"
+      existing.unionByName(batch)
+        .withColumn("rn", row_number().over(w))
+        .filter(col("rn") === 1)
+        .drop("rn")
+        .write.mode("overwrite").parquet(next)
+      current = Some(next)
+    }
     val state = spark.read.parquet(current.getOrElse(
       sys.error("streaming upsert produced no batches")))
     state.select(col("user_id"), col("event_type"), col("event_id"),
@@ -468,22 +508,16 @@ object Streams {
     // into the hour-partitioned serving table with
     // overwriteHourPartitions(merged touched hours) — the same
     // mergePartials doing the folding.
-    val q = spark.readStream
-      .schema(ev.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$staged/half_*")
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation",
-        Files.createTempDirectory("graft_incr_ckpt").toString)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        Incremental.hourlyPartial(batch)
-          .coalesce(1) // partials are groups-sized; one file per batch
-          .write.mode("overwrite").parquet(s"$sink/delta_b$batchId")
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    foldBatches(
+        spark.readStream
+          .schema(ev.schema)
+          .option("maxFilesPerTrigger", "1")
+          .parquet(s"$staged/half_*"),
+        Files.createTempDirectory("graft_incr_ckpt").toString) { (batch, batchId) =>
+      Incremental.hourlyPartial(batch)
+        .coalesce(1) // partials are groups-sized; one file per batch
+        .write.mode("overwrite").parquet(s"$sink/delta_b$batchId")
+    }
     val deltas = Option(new java.io.File(sink).listFiles()).toSeq.flatten
       .filter(f => f.isDirectory && f.getName.startsWith("delta_b"))
       .map(_.getAbsolutePath).sorted
@@ -492,103 +526,42 @@ object Streams {
       Incremental.mergePartials(Seq(spark.read.parquet(deltas: _*))))
   }
 
+  /** Stage the two-batch continuous-ingest split onto the queue —
+    * SHARED by the exact-hash and LSH index streams, so the batch
+    * predicates (which must stay in lockstep with BOTH registered
+    * oracles' predicates) live in exactly one place. Returns
+    * (offset-ordered document stream, corpus, staged root).
+    */
+  private def stageDocQueue(
+      spark: SparkSession, dir: String, prefix: String): (DataFrame, DataFrame, String) = {
+    val docs = graft.TestdataAdapter.table(spark, dir, "documents")
+      .select("doc_id", "text", "lang", "source", "n_chars")
+    val stream = queueRoundTrip("doc_id", Seq(
+      docs.filter(col("doc_id") % 3 === 0 && col("doc_id") % 2 === 0),
+      docs.filter(col("doc_id") % 3 === 0 && col("doc_id") % 2 =!= 0)))
+    (stream, docs.filter(col("doc_id") % 3 =!= 0),
+      Files.createTempDirectory(s"${prefix}_q_state").toString)
+  }
+
   /** Continuous-ingest dedup: the maintained exact-dedup index
     * (dedup.Dedup.{buildDedupIndex, bloomNewDocsIncremental,
     * mergeDedupIndex}) driven by a REAL micro-batch stream — each
     * arriving document batch is classified against the persisted
     * bloom + hash state and then folded into it, exactly the shape a
     * 100 TB ingest pipeline runs (per-batch cost never rescans the
-    * corpus; state grows by the batch's distinct hashes). Two staged
-    * files with pinned modification times make the batch order — and
-    * therefore the verdicts — deterministic; the oracle recomputes
-    * both classifications from the raw table.
+    * corpus; state grows by the batch's distinct hashes). The batches
+    * drain from the queue in commit order ([[queueRoundTrip]]), so the
+    * verdicts are deterministic; the oracle recomputes both
+    * classifications from the raw table.
+    *
+    * `stateDir` may be a caller-provided CACHED dir (registry: one per
+    * scale dir per query per JVM): base/v0 — the corpus bootstrap, the
+    * one expensive part — seeds only if absent, so repeated runs time
+    * the per-batch classify/merge steady state, exactly like a
+    * deployment that maintains the index instead of rebuilding it.
+    * Later state versions and verdicts are deterministic overwrites;
+    * the checkpoint is fresh per run.
     */
-  def dedupIndexStream(
-      spark: SparkSession, dir: String,
-      stateDir: Option[String] = None): DataFrame = {
-    import graft.dedup.Dedup
-    val docs = graft.TestdataAdapter.table(spark, dir, "documents")
-      .select("doc_id", "text", "lang", "source", "n_chars")
-    val corpus = docs.filter(col("doc_id") % 3 =!= 0)
-    val staged = Files.createTempDirectory("graft_dedup_stream").toString
-    docs.filter(col("doc_id") % 3 === 0 && col("doc_id") % 2 === 0)
-      .coalesce(1).write.mode("overwrite").parquet(s"$staged/in/batch_a")
-    docs.filter(col("doc_id") % 3 === 0 && col("doc_id") % 2 =!= 0)
-      .coalesce(1).write.mode("overwrite").parquet(s"$staged/in/batch_b")
-    // the file source orders batches by modification time — pin it so
-    // batch_a is always micro-batch 0. TEST-HARNESS DEVICE ONLY: mtime +
-    // maxFilesPerTrigger is not a production ordering contract (mtimes
-    // are writer-controlled and clock-skewed across a fleet); a real
-    // deployment orders on the queue offsets it already has (GraftQueue
-    // exposes them), where batch order is the broker's commit order.
-    import java.nio.file.attribute.FileTime
-    Seq("batch_a" -> 0L, "batch_b" -> 60000L).foreach { case (n, off) =>
-      val d = java.nio.file.Paths.get(s"$staged/in/$n")
-      java.nio.file.Files.list(d).forEach(p =>
-        java.nio.file.Files.setLastModifiedTime(p, FileTime.fromMillis(1700000000000L + off)))
-      java.nio.file.Files.setLastModifiedTime(d, FileTime.fromMillis(1700000000000L + off))
-    }
-    // stateDir may be a caller-provided CACHED dir (registry: one per
-    // scale dir per query per JVM): v0 — the corpus bootstrap, the one
-    // expensive part — seeds only if absent, so repeated runs time the
-    // per-batch classify/merge steady state, exactly like a deployment
-    // that maintains the index instead of rebuilding it. v1+/verdicts
-    // are deterministic overwrites, checkpoint is fresh per run.
-    runDedupIndexStream(spark, docs.schema, corpus, s"$staged/in/batch_*",
-      stateDir.getOrElse(s"$staged/state"), s"$staged/verdicts",
-      Files.createTempDirectory("graft_dedup_ckpt").toString)
-    spark.read.parquet(s"$staged/verdicts/*")
-      .drop("is_new_bloom", "h")
-      .orderBy("doc_id")
-  }
-
-  /** [[dedupIndexStream]] under the PRODUCTION ordering contract: the
-    * document batches are produced to a `graftqueue` topic (two
-    * committed segments), and the consumer drains them as offset-ordered
-    * micro-batches via the source's Kafka-style admission control
-    * (`maxRecordsPerTrigger` — each trigger admits whole segments, so
-    * batch order IS the broker's commit order; no mtime pinning
-    * anywhere). The docs ride the queue as JSON envelopes and round-trip
-    * exactly (strings escape-roundtrip, BIGINTs are lossless), so the
-    * verdicts — and the oracle — are the SAME as the file-staged form.
-    * Produce calls are sequential Spark jobs, so segment commit stamps
-    * strictly increase; offsets follow committed-segment order.
-    */
-  /** Stage the two-batch continuous-ingest split onto a fresh
-    * `graftqueue` topic — SHARED by the exact-hash and LSH index
-    * streams, so the envelope JSON, wire schema, admission-control
-    * option and batch predicates (which must stay in lockstep with BOTH
-    * registered oracles' predicates) live in exactly one place.
-    * Returns (offset-ordered document stream, corpus, staged root).
-    */
-  private def stageDocQueue(
-      spark: SparkSession, dir: String, prefix: String): (DataFrame, DataFrame, String) = {
-    val docs = graft.TestdataAdapter.table(spark, dir, "documents")
-      .select("doc_id", "text", "lang", "source", "n_chars")
-    val corpus = docs.filter(col("doc_id") % 3 =!= 0)
-    val qdir = Files.createTempDirectory(s"${prefix}_q").toString
-    val staged = Files.createTempDirectory(s"${prefix}_q_state").toString
-    def produce(batch: DataFrame): Unit = batch
-      .select(
-        col("doc_id").cast("string").cast("binary").as("key"),
-        to_json(struct(col("doc_id"), col("text"), col("lang"),
-          col("source"), col("n_chars"))).cast("binary").as("value"))
-      .coalesce(1) // one committed segment per produce → one micro-batch each
-      .write.format("graftqueue").option("path", qdir)
-      .option("topic", "docs.ingest").mode("append").save()
-    produce(docs.filter(col("doc_id") % 3 === 0 && col("doc_id") % 2 === 0))
-    produce(docs.filter(col("doc_id") % 3 === 0 && col("doc_id") % 2 =!= 0))
-    val wire = org.apache.spark.sql.types.StructType.fromDDL(
-      "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT")
-    val stream = spark.readStream.format("graftqueue")
-      .option("path", qdir).option("topic", "docs.ingest")
-      .option("maxRecordsPerTrigger", "1")
-      .load()
-      .select(from_json(col("value").cast("string"), wire).as("r"))
-      .select("r.*")
-    (stream, corpus, staged)
-  }
-
   def dedupIndexQueueStream(
       spark: SparkSession, dir: String,
       stateDir: Option[String] = None): DataFrame = {
@@ -601,9 +574,26 @@ object Streams {
       .orderBy("doc_id")
   }
 
-  /** The maintained-dedup-index micro-batch loop itself, factored so the
-    * crash-recovery spec can run it twice against the SAME checkpoint +
-    * state dirs.
+  /** Index state BEFORE batch `batchId` of a delta-structured fold —
+    * base ∪ the deltas of earlier batches (the exact fold's hash table,
+    * the LSH fold's signature index) — read as ONE multi-path parquet
+    * relation: a union chain here would grow the plan linearly with the
+    * number of folded batches (thousands deep on a long-running stream);
+    * the multi-path scan stays one flat node regardless. Exposed for the
+    * crash-recovery spec's end-state comparison.
+    */
+  private[graft] def stateBefore(
+      s: SparkSession, stateDir: String, batchId: Long): DataFrame = {
+    val parts = (Seq(s"$stateDir/base") ++
+      (0L until batchId).map(b => s"$stateDir/delta_b$b"))
+      .filter(p => java.nio.file.Files.exists(java.nio.file.Paths.get(p)))
+    s.read.parquet(parts: _*)
+  }
+
+  /** The maintained-dedup-index micro-batch loop over ANY streaming
+    * source of document rows (the queue in [[dedupIndexQueueStream]], a
+    * file source in the crash-recovery spec, which runs it twice
+    * against the SAME checkpoint + state dirs).
     *
     * State layout — DELTA-STRUCTURED for 100 TB write amplification
     * (r10): `base/` is the one-time corpus hash table; each batch N
@@ -632,37 +622,6 @@ object Streams {
     * replays it to the identical end state. Production callers leave it
     * None.
     */
-  private[graft] def runDedupIndexStream(
-      spark: SparkSession, schema: org.apache.spark.sql.types.StructType,
-      corpus: DataFrame, inGlob: String, stateDir: String,
-      verdictsDir: String, checkpoint: String,
-      crashAfterVerdictsOfBatch: Option[Long] = None): Unit =
-    runDedupIndexStreamFrom(
-      spark.readStream
-        .schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(inGlob),
-      corpus, stateDir, verdictsDir, checkpoint, crashAfterVerdictsOfBatch)
-
-  /** Hash table of the state BEFORE batch `batchId`: base ∪ existing
-    * deltas of earlier batches, read as ONE multi-path parquet relation —
-    * a union chain here would grow the plan linearly with the number of
-    * folded batches (thousands deep on a long-running stream); the
-    * multi-path scan stays one flat node regardless. Exposed for the
-    * crash-recovery spec's end-state comparison.
-    */
-  private[graft] def dedupStateHashes(
-      s: SparkSession, stateDir: String, batchId: Long): DataFrame = {
-    val parts = (Seq(s"$stateDir/base") ++
-      (0L until batchId).map(b => s"$stateDir/delta_b$b"))
-      .filter(p => java.nio.file.Files.exists(java.nio.file.Paths.get(p)))
-    s.read.parquet(parts: _*)
-  }
-
-  /** The fold itself over ANY streaming source of document rows —
-    * shared by the file-staged form above and the offset-ordered
-    * graftqueue form ([[dedupIndexQueueStream]]).
-    */
   private[graft] def runDedupIndexStreamFrom(
       stream: DataFrame, corpus: DataFrame, stateDir: String,
       verdictsDir: String, checkpoint: String,
@@ -680,50 +639,31 @@ object Streams {
       idx.hashes.write.mode("overwrite").parquet(s"$stateDir/base")
       writeBloom(idx.bloomBits, 0L)
     }
-    val q = stream
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        val state = Dedup.DedupIndex(
-          readBloom(batchId), dedupStateHashes(s, stateDir, batchId))
-        // verdicts carry the content hash, so the state increment below
-        // derives from THIS one classify pass — no second state scan
-        Dedup.bloomNewDocsIncrementalWithHash(state, batch)
-          .withColumn("batch_seq", (lit(batchId) + 1).cast("int"))
-          .write.mode("overwrite").parquet(s"$verdictsDir/b$batchId")
-        if (crashAfterVerdictsOfBatch.contains(batchId))
-          throw new RuntimeException(
-            s"injected crash after verdicts of batch $batchId (recovery spec)")
-        // delta = the batch's genuinely-new distinct hashes (batch-
-        // internal duplicates collapse; everything already in state was
-        // classified is_new_exact=false and stays out — deltas disjoint)
-        s.read.parquet(s"$verdictsDir/b$batchId")
-          .filter(col("is_new_exact")).select("h").distinct()
-          .coalesce(1) // batch-sized; one bloom partial, one delta file
-          .write.mode("overwrite").parquet(s"$stateDir/delta_b$batchId")
-        writeBloom(
-          Dedup.mergeBloomBits(state.bloomBits,
-            Dedup.bloomBitsOfHashes(
-              s.read.parquet(s"$stateDir/delta_b$batchId").coalesce(1))),
-          batchId + 1)
-        ()
-      }
-      .start()
-    q.awaitTermination()
-  }
-
-  /** Signature state BEFORE batch `batchId`: base ∪ earlier deltas read
-    * as ONE multi-path scan (same flat-plan argument as
-    * [[dedupStateHashes]]). Exposed for the crash-recovery spec.
-    */
-  private[graft] def lshStateSigs(
-      s: SparkSession, stateDir: String, batchId: Long): DataFrame = {
-    val parts = (Seq(s"$stateDir/base") ++
-      (0L until batchId).map(b => s"$stateDir/delta_b$b"))
-      .filter(p => java.nio.file.Files.exists(java.nio.file.Paths.get(p)))
-    s.read.parquet(parts: _*)
+    foldBatches(stream, checkpoint) { (batch, batchId) =>
+      val s = batch.sparkSession
+      val state = Dedup.DedupIndex(
+        readBloom(batchId), stateBefore(s, stateDir, batchId))
+      // verdicts carry the content hash, so the state increment below
+      // derives from THIS one classify pass — no second state scan
+      Dedup.bloomNewDocsIncrementalWithHash(state, batch)
+        .withColumn("batch_seq", (lit(batchId) + 1).cast("int"))
+        .write.mode("overwrite").parquet(s"$verdictsDir/b$batchId")
+      if (crashAfterVerdictsOfBatch.contains(batchId))
+        throw new RuntimeException(
+          s"injected crash after verdicts of batch $batchId (recovery spec)")
+      // delta = the batch's genuinely-new distinct hashes (batch-
+      // internal duplicates collapse; everything already in state was
+      // classified is_new_exact=false and stays out — deltas disjoint)
+      s.read.parquet(s"$verdictsDir/b$batchId")
+        .filter(col("is_new_exact")).select("h").distinct()
+        .coalesce(1) // batch-sized; one bloom partial, one delta file
+        .write.mode("overwrite").parquet(s"$stateDir/delta_b$batchId")
+      writeBloom(
+        Dedup.mergeBloomBits(state.bloomBits,
+          Dedup.bloomBitsOfHashes(
+            s.read.parquet(s"$stateDir/delta_b$batchId").coalesce(1))),
+        batchId + 1)
+    }
   }
 
   /** The NEAR-dup sibling of [[runDedupIndexStreamFrom]]: continuous
@@ -750,50 +690,26 @@ object Streams {
     import graft.dedup.Dedup
     if (!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$stateDir/base")))
       Dedup.lshIndex(corpus).write.mode("overwrite").parquet(s"$stateDir/base")
-    val q = stream
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        Dedup.classifyNearDupIncremental(
-          lshStateSigs(s, stateDir, batchId), batch)
-          .withColumn("batch_seq", (lit(batchId) + 1).cast("int"))
-          .write.mode("overwrite").parquet(s"$verdictsDir/b$batchId")
-        if (crashAfterVerdictsOfBatch.contains(batchId))
-          throw new RuntimeException(
-            s"injected crash after verdicts of batch $batchId (recovery spec)")
-        Dedup.lshIndex(batch)
-          .coalesce(1) // batch-sized; one delta file
-          .write.mode("overwrite").parquet(s"$stateDir/delta_b$batchId")
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    foldBatches(stream, checkpoint) { (batch, batchId) =>
+      val s = batch.sparkSession
+      Dedup.classifyNearDupIncremental(
+        stateBefore(s, stateDir, batchId), batch)
+        .withColumn("batch_seq", (lit(batchId) + 1).cast("int"))
+        .write.mode("overwrite").parquet(s"$verdictsDir/b$batchId")
+      if (crashAfterVerdictsOfBatch.contains(batchId))
+        throw new RuntimeException(
+          s"injected crash after verdicts of batch $batchId (recovery spec)")
+      Dedup.lshIndex(batch)
+        .coalesce(1) // batch-sized; one delta file
+        .write.mode("overwrite").parquet(s"$stateDir/delta_b$batchId")
+    }
   }
 
-  /** File-staged entry for the crash-recovery spec (mirrors
-    * [[runDedupIndexStream]]).
-    */
-  private[graft] def runLshIndexStream(
-      spark: SparkSession, schema: org.apache.spark.sql.types.StructType,
-      corpus: DataFrame, inGlob: String, stateDir: String,
-      verdictsDir: String, checkpoint: String,
-      crashAfterVerdictsOfBatch: Option[Long] = None): Unit =
-    runLshIndexStreamFrom(
-      spark.readStream
-        .schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(inGlob),
-      corpus, stateDir, verdictsDir, checkpoint, crashAfterVerdictsOfBatch)
-
-  /** The near-dup index maintained under the PRODUCTION ordering
-    * contract, like [[dedupIndexQueueStream]]: batches ride a
-    * `graftqueue` topic as JSON envelopes and drain as offset-ordered
-    * micro-batches (admission control, whole committed segments per
-    * trigger), the fold is [[runLshIndexStreamFrom]], and the verdicts
-    * are hash-equal to the two-batch in-plan `lsh_incremental_newdocs`
-    * — which is what the shared DuckDB oracle recomputes.
+  /** The near-dup index maintained under the same queue contract as
+    * [[dedupIndexQueueStream]]: the fold is [[runLshIndexStreamFrom]],
+    * and the verdicts are hash-equal to the two-batch in-plan
+    * `lsh_incremental_newdocs` — which is what the shared DuckDB oracle
+    * recomputes.
     */
   def lshIndexQueueStream(
       spark: SparkSession, dir: String,
@@ -818,42 +734,29 @@ object Streams {
     * offset-ordered micro-batches under admission control.
     */
   def qualityScoreQueueStream(spark: SparkSession, dir: String): DataFrame = {
-    import graft.ml.{QualityClassifier, QualityFixture}
     val docs = graft.TestdataAdapter.table(spark, dir, "documents")
       .select("doc_id", "text", "lang", "source", "n_chars")
-    val qdir = Files.createTempDirectory("graft_qscore_q").toString
     val outDir = Files.createTempDirectory("graft_qscore_out").toString
-    def produce(batch: DataFrame): Unit = batch
-      .select(
-        col("doc_id").cast("string").cast("binary").as("key"),
-        to_json(struct(col("doc_id"), col("text"), col("lang"),
-          col("source"), col("n_chars"))).cast("binary").as("value"))
-      .coalesce(1)
-      .write.format("graftqueue").option("path", qdir)
-      .option("topic", "docs.score").mode("append").save()
-    produce(docs.filter(col("doc_id") % 3 === 0))
-    produce(docs.filter(col("doc_id") % 3 === 1))
-    produce(docs.filter(col("doc_id") % 3 === 2))
-    val wire = org.apache.spark.sql.types.StructType.fromDDL(
-      "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT")
-    val stream = spark.readStream.format("graftqueue")
-      .option("path", qdir).option("topic", "docs.score")
-      .option("maxRecordsPerTrigger", "1")
-      .load()
-      .select(from_json(col("value").cast("string"), wire).as("r"))
-      .select("r.*")
-    val q = stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation",
-        Files.createTempDirectory("graft_qscore_ckpt").toString)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        QualityClassifier.scorePinned(batch, QualityFixture.labelThreshold,
-            QualityFixture.interceptE9, QualityFixture.weightsE9)
-          .write.mode("append").parquet(outDir)
-      }
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(outDir).orderBy("doc_id")
+    runQualityScoreStreamFrom(
+      queueRoundTrip("doc_id", (0 until 3).map(k => docs.filter(col("doc_id") % 3 === k))),
+      outDir, Files.createTempDirectory("graft_qscore_ckpt").toString)
+    spark.read.parquet(s"$outDir/*").orderBy("doc_id")
+  }
+
+  /** The scoring fold over ANY streaming source of document rows.
+    * Replay-idempotent like the index folds: batch N overwrites its own
+    * `b{N}`, so a batch redelivered after its write committed but before
+    * the streaming commit log recorded it (a crash between the two)
+    * rewrites the same rows instead of appending them a second time.
+    */
+  private[graft] def runQualityScoreStreamFrom(
+      stream: DataFrame, outDir: String, checkpoint: String): Unit = {
+    import graft.ml.{QualityClassifier, QualityFixture}
+    foldBatches(stream, checkpoint) { (batch, batchId) =>
+      QualityClassifier.scorePinned(batch, QualityFixture.labelThreshold,
+          QualityFixture.interceptE9, QualityFixture.weightsE9)
+        .write.mode("overwrite").parquet(s"$outDir/b$batchId")
+    }
   }
 
   /** S9 as a stream: idempotent append (DO NOTHING) — anti-join each batch

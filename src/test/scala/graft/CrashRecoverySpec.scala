@@ -31,8 +31,10 @@ class CrashRecoverySpec extends SparkSpec {
 
   private val sfDir = "/root/testdata/sf0.001"
 
-  /** Stage corpus/batch inputs exactly like Streams.dedupIndexStream:
-    * corpus = docs with doc_id % 3 != 0; two mtime-pinned batch files.
+  /** Stage the continuous-ingest split the queue form produces
+    * (corpus = docs with doc_id % 3 != 0, batches by doc_id parity) as
+    * two batch files whose pinned mtimes give the file source the queue's
+    * batch order.
     */
   private def stage(root: String) = {
     val docs = TestdataAdapter.table(spark, sfDir, "documents")
@@ -50,12 +52,17 @@ class CrashRecoverySpec extends SparkSpec {
     (docs.schema, docs.filter(col("doc_id") % 3 =!= 0))
   }
 
+  /** The staged batch files as a stream, one file per micro-batch. */
+  private def fileStream(schema: org.apache.spark.sql.types.StructType, root: String) =
+    spark.readStream.schema(schema)
+      .option("maxFilesPerTrigger", "1").parquet(s"$root/in/batch_*")
+
   private def readSorted(path: String) =
     spark.read.parquet(path).orderBy("doc_id").collect().toSeq
 
   /** base ∪ all deltas — the exact distinct hash table after 2 batches. */
   private def finalStateHashes(stateDir: String) =
-    Streams.dedupStateHashes(spark, stateDir, 2L)
+    Streams.stateBefore(spark, stateDir, 2L)
       .collect().map(_.getString(0)).sorted.toSeq
 
   test("dedup index stream: crash after batch-1 verdicts, resume from checkpoint, end state identical") {
@@ -63,15 +70,21 @@ class CrashRecoverySpec extends SparkSpec {
     val (schema, corpus) = stage(root)
 
     // --- uninterrupted reference run
-    Streams.runDedupIndexStream(spark, schema, corpus, s"$root/in/batch_*",
+    Streams.runDedupIndexStreamFrom(fileStream(schema, root), corpus,
       s"$root/ref_state", s"$root/ref_verdicts", s"$root/ref_ckpt")
     val refVerdicts = readSorted(s"$root/ref_verdicts/*")
     val refState = finalStateHashes(s"$root/ref_state")
     assert(refVerdicts.nonEmpty, "reference run produced no verdicts")
+    // transport independence: the queue form feeds the same fold the same
+    // two batches in the same order, so its verdicts equal the file run's
+    assert(spark.read.parquet(s"$root/ref_verdicts/*").drop("is_new_bloom", "h")
+      .orderBy("doc_id").collect().toSeq ==
+      Streams.dedupIndexQueueStream(spark, sfDir).collect().toSeq,
+      "file-source and queue-transport dedup index streams must agree verdict-for-verdict")
 
     // --- crashed run: batch 0 commits; batch 1 dies half-applied
     val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-      Streams.runDedupIndexStream(spark, schema, corpus, s"$root/in/batch_*",
+      Streams.runDedupIndexStreamFrom(fileStream(schema, root), corpus,
         s"$root/state", s"$root/verdicts", s"$root/ckpt",
         crashAfterVerdictsOfBatch = Some(1L))
     }
@@ -90,7 +103,7 @@ class CrashRecoverySpec extends SparkSpec {
     val baseMtime = Files.getLastModifiedTime(Paths.get(s"$root/state/base"))
 
     // --- resume from the SAME checkpoint + state dirs, no fault injected
-    Streams.runDedupIndexStream(spark, schema, corpus, s"$root/in/batch_*",
+    Streams.runDedupIndexStreamFrom(fileStream(schema, root), corpus,
       s"$root/state", s"$root/verdicts", s"$root/ckpt")
 
     assert(Files.exists(Paths.get(s"$root/state/delta_b1")), "resume did not fold batch 1")
@@ -112,16 +125,16 @@ class CrashRecoverySpec extends SparkSpec {
     val (schema, corpus) = stage(root)
 
     // --- uninterrupted reference run
-    Streams.runLshIndexStream(spark, schema, corpus, s"$root/in/batch_*",
+    Streams.runLshIndexStreamFrom(fileStream(schema, root), corpus,
       s"$root/ref_state", s"$root/ref_verdicts", s"$root/ref_ckpt")
     val refVerdicts = readSorted(s"$root/ref_verdicts/*")
-    val refState = Streams.lshStateSigs(spark, s"$root/ref_state", 2L)
+    val refState = Streams.stateBefore(spark, s"$root/ref_state", 2L)
       .orderBy("doc_id").collect().toSeq
     assert(refVerdicts.nonEmpty, "reference run produced no verdicts")
 
     // --- crashed run: batch 1 dies after verdicts, before its delta
     val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-      Streams.runLshIndexStream(spark, schema, corpus, s"$root/in/batch_*",
+      Streams.runLshIndexStreamFrom(fileStream(schema, root), corpus,
         s"$root/state", s"$root/verdicts", s"$root/ckpt",
         crashAfterVerdictsOfBatch = Some(1L))
     }
@@ -134,20 +147,20 @@ class CrashRecoverySpec extends SparkSpec {
     val baseMtime = Files.getLastModifiedTime(Paths.get(s"$root/state/base"))
 
     // --- resume from the SAME checkpoint + state dirs
-    Streams.runLshIndexStream(spark, schema, corpus, s"$root/in/batch_*",
+    Streams.runLshIndexStreamFrom(fileStream(schema, root), corpus,
       s"$root/state", s"$root/verdicts", s"$root/ckpt")
 
     assert(Files.exists(Paths.get(s"$root/state/delta_b1")), "resume did not fold batch 1")
     assert(readSorted(s"$root/verdicts/*") == refVerdicts,
       "LSH verdicts after crash+resume differ from the uninterrupted run")
-    assert(Streams.lshStateSigs(spark, s"$root/state", 2L)
+    assert(Streams.stateBefore(spark, s"$root/state", 2L)
       .orderBy("doc_id").collect().toSeq == refState,
       "final signature index after crash+resume differs from the uninterrupted run")
     assert(Files.getLastModifiedTime(Paths.get(s"$root/state/base")) == baseMtime,
       "resume rewrote the immutable signature base")
     // signature deltas are per-doc rows: doc_ids must stay unique across
     // base ∪ deltas (disjointness-by-construction)
-    val all = Streams.lshStateSigs(spark, s"$root/state", 2L)
+    val all = Streams.stateBefore(spark, s"$root/state", 2L)
     assert(all.count() == all.select("doc_id").distinct().count(),
       "signature state carries duplicate doc_ids — deltas must be disjoint")
   }
@@ -155,13 +168,13 @@ class CrashRecoverySpec extends SparkSpec {
   test("resumed run does not reprocess committed batches") {
     val root = Files.createTempDirectory("graft_crash_noreplay").toString
     val (schema, corpus) = stage(root)
-    Streams.runDedupIndexStream(spark, schema, corpus, s"$root/in/batch_*",
+    Streams.runDedupIndexStreamFrom(fileStream(schema, root), corpus,
       s"$root/state", s"$root/verdicts", s"$root/ckpt")
     val b0Mtime = Files.getLastModifiedTime(Paths.get(s"$root/verdicts/b0"))
     // second invocation against the exhausted checkpoint: all offsets are
     // committed, so AvailableNow finds nothing and must not rewrite any
     // verdict or state version
-    Streams.runDedupIndexStream(spark, schema, corpus, s"$root/in/batch_*",
+    Streams.runDedupIndexStreamFrom(fileStream(schema, root), corpus,
       s"$root/state", s"$root/verdicts", s"$root/ckpt")
     assert(Files.getLastModifiedTime(Paths.get(s"$root/verdicts/b0")) == b0Mtime,
       "a fully-committed checkpoint resume rewrote batch-0 verdicts")

@@ -389,8 +389,10 @@ class ScaleSoakSpec extends SparkSpec {
       d.filter(col("doc_id") % 3 === 0 && col("doc_id") % 2 =!= 0).coalesce(1)
         .write.mode("overwrite").parquet(s"$root/in/batch_b")
       val t0 = System.nanoTime()
-      graft.streaming.Streams.runDedupIndexStream(spark, d.schema, corpus,
-        s"$root/in/batch_*", s"$root/state", s"$root/verdicts", s"$root/ckpt")
+      graft.streaming.Streams.runDedupIndexStreamFrom(
+        spark.readStream.schema(d.schema)
+          .option("maxFilesPerTrigger", "1").parquet(s"$root/in/batch_*"),
+        corpus, s"$root/state", s"$root/verdicts", s"$root/ckpt")
       (System.nanoTime() - t0) / 1e9
     }
     run(baseDocs) // warm

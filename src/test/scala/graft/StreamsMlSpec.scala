@@ -183,6 +183,30 @@ class StreamsMlSpec extends SparkSpec {
     assert(streamed == batch)
   }
 
+  test("streaming quality scores: a batch redelivered after its write committed adds no rows") {
+    val docs = spark.range(0, 500, 1, 4).select(
+      col("id").as("doc_id"),
+      concat(lit("an ingested document, number "), col("id").cast("string")).as("text"),
+      lit("en").as("lang"), lit("web").as("source"), lit(40L).as("n_chars"))
+    val root = java.nio.file.Files.createTempDirectory("graft_qscore_replay").toString
+    val (out, ckpt) = (s"$root/out", s"$root/ckpt")
+    val stream = Streams.queueRoundTrip("doc_id",
+      Seq(docs.filter(col("doc_id") % 2 === 0), docs.filter(col("doc_id") % 2 =!= 0)))
+    Streams.runQualityScoreStreamFrom(stream, out, ckpt)
+    // a crash after the last batch's write but before its commit-log
+    // entry: the restart redelivers that batch under the same batchId
+    val last = new java.io.File(s"$ckpt/commits").list()
+      .filter(n => n.nonEmpty && n.forall(_.isDigit)).map(_.toLong).max
+    Seq(s"$last", s".$last.crc").foreach(n =>
+      java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(s"$ckpt/commits/$n")))
+    Streams.runQualityScoreStreamFrom(stream, out, ckpt)
+    assert(new java.io.File(s"$ckpt/commits/$last").exists, "the restart did not replay the batch")
+    val scored = spark.read.option("recursiveFileLookup", "true").parquet(out)
+    assert(scored.count() == docs.count(), "replayed batch changed the scored row count")
+    assert(scored.select("doc_id").distinct().count() == docs.count(),
+      "replayed batch duplicated doc_ids")
+  }
+
   test("pinned run record: run_id is exactly Java's nameUUIDFromBytes of the name string") {
     val ds = Pipelines.mlDataset(spark, "/root/testdata/sf0.001")
     val trees = Array(Array((-1, 0.0, 20.0)))
