@@ -205,16 +205,13 @@ private[graft] trait DedupClusters extends DedupSketch {
     * population is singleton-dominated). Same determinism contract as
     * the doc-level split: rerun-, layout- and append-stable.
     *
-    * Scale: the labels come from the soaked CC pipeline; the split
-    * itself is a narrow hash over the label frame — no extra shuffle.
-    */
-  def clusterSplitAssign(documents: DataFrame): DataFrame =
-    clusterSplitAssignFrom(dedupClusters(documents))
-
-  /** The split tail over an existing label frame (doc_id, cluster_id,
-    * cluster_size) — lets callers amortize the clustering itself (the
-    * registry persists the labels once per scale dir; a deployment keeps
-    * them as maintained state via [[attachToClustersWithSizes]]).
+    * Scale: the labels (doc_id, cluster_id, cluster_size) come from the
+    * soaked CC pipeline ([[dedupClusters]]), and the split itself is a
+    * narrow hash over the label frame — no extra shuffle. Taking the
+    * labels rather than the documents lets callers amortize the
+    * clustering itself (the registry persists the labels once per scale
+    * dir; a deployment keeps them as maintained state via
+    * [[attachToClustersWithSizes]]).
     */
   def clusterSplitAssignFrom(labels: DataFrame): DataFrame = {
     val b = graft.ml.HashSplit.hashBucket(col("cluster_id"), 100)
@@ -225,7 +222,7 @@ private[graft] trait DedupClusters extends DedupSketch {
       .orderBy("doc_id")
   }
 
-  /** DuckDB twin of [[clusterSplitAssign]] (the full recursive closure
+  /** DuckDB twin of [[clusterSplitAssignFrom]] (the full recursive closure
     * nests as a subquery; plain concatenation, no stripMargin over the
     * spliced SQL).
     */
@@ -237,19 +234,14 @@ private[graft] trait DedupClusters extends DedupSketch {
       "FROM cl ORDER BY doc_id"
   }
 
-  /** Quality-max representative per near-dup cluster: [[nearDedupKeep]]
+  /** Quality-max representative per near-dup cluster: [[nearDedupKeepFrom]]
     * keeps the minimum doc_id — fine for dedup bookkeeping, wasteful
     * for training data, where the cluster's BEST-quality member should
     * survive. Per cluster, keep the document with the highest
     * [[graft.text.TextOps.qualityScore]] (doc_id tie-break); singleton
     * clusters trivially keep themselves. One cluster_id window over the
     * label frame plus a narrow per-doc score join — no text ever
-    * shuffles.
-    */
-  def clusterBestKeep(documents: DataFrame): DataFrame =
-    clusterBestKeepFrom(dedupClusters(documents), documents)
-
-  /** The keep tail over an existing label frame (see
+    * shuffles. Runs over an existing label frame (see
     * [[clusterSplitAssignFrom]] for the amortization contract).
     */
   def clusterBestKeepFrom(labels: DataFrame, documents: DataFrame): DataFrame = {
@@ -265,7 +257,7 @@ private[graft] trait DedupClusters extends DedupSketch {
       .orderBy("doc_id")
   }
 
-  /** DuckDB twin of [[clusterBestKeep]]. */
+  /** DuckDB twin of [[clusterBestKeepFrom]] over [[dedupClusters]]. */
   val clusterBestKeepSql: String =
     s"WITH cl AS (SELECT * FROM ($dedupClustersSql)),\n" +
       s"q AS (SELECT doc_id, ${TextOps.qualityScoreSqlExpr} AS quality_score FROM documents)\n" +

@@ -10,19 +10,6 @@ import graft.text.TextOps
   * behavior change; mixed into [[Dedup]].
   */
 private[graft] trait DedupGovern extends DedupClusters {
-  /** Cross-source near-duplicate overlap matrix — the curation
-    * diagnostic that tells you WHICH sources copy from each other
-    * (mirrors, scrapes of the same upstream, license-text commons):
-    * count of near-dup pairs per unordered source pair, including the
-    * within-source diagonal. Composes [[dedupClusters]], but never
-    * materializes a doc pair: the cluster membership collapses to
-    * per-(cluster, source) COUNTS first, and pair counts fall out of
-    * combinatorics — `n_a · n_b` across two sources, `n·(n-1)/2` on the
-    * diagonal. The self-join therefore runs on the count table
-    * (|clusters| × |sources| rows), so a degenerate mega-cluster — one
-    * boilerplate string shared by 10⁶ docs — costs one aggregation row
-    * instead of 10¹² join rows. Output is |sources|²-sized (tiny).
-    */
   /** Per-source corpus governance report — the one-row-per-source
     * dashboard a data platform publishes before a training run: document
     * count, exact-duplicate exposure (docs whose content hash occurs ≥2
@@ -172,11 +159,20 @@ private[graft] trait DedupGovern extends DedupClusters {
         |  quota_toks, CAST(keep_rank AS INTEGER) AS keep_rank
         |FROM w WHERE cum_toks <= quota_toks ORDER BY doc_id""".stripMargin
 
-  def sourceOverlap(documents: DataFrame): DataFrame =
-    sourceOverlapFrom(dedupClusters(documents), documents)
-
-  /** The overlap matrix over an EXISTING label frame (see
-    * [[nearDedupKeepFrom]] for the amortization contract).
+  /** Cross-source near-duplicate overlap matrix — the curation
+    * diagnostic that tells you WHICH sources copy from each other
+    * (mirrors, scrapes of the same upstream, license-text commons):
+    * count of near-dup pairs per unordered source pair, including the
+    * within-source diagonal. Composes [[dedupClusters]], but never
+    * materializes a doc pair: the cluster membership collapses to
+    * per-(cluster, source) COUNTS first, and pair counts fall out of
+    * combinatorics — `n_a · n_b` across two sources, `n·(n-1)/2` on the
+    * diagonal. The self-join therefore runs on the count table
+    * (|clusters| × |sources| rows), so a degenerate mega-cluster — one
+    * boilerplate string shared by 10⁶ docs — costs one aggregation row
+    * instead of 10¹² join rows. Output is |sources|²-sized (tiny). Runs
+    * over an EXISTING label frame (see [[nearDedupKeepFrom]] for the
+    * amortization contract).
     */
   def sourceOverlapFrom(labels: DataFrame, documents: DataFrame): DataFrame = {
     val counts = labels
@@ -290,12 +286,8 @@ private[graft] trait DedupGovern extends DedupClusters {
     * how many near-duplicates it stands for. Composes
     * [[dedupClusters]]; no extra shuffle beyond it (the representative
     * filter is cluster_id == doc_id on the already-labeled frame).
-    */
-  def nearDedupKeep(documents: DataFrame): DataFrame =
-    nearDedupKeepFrom(dedupClusters(documents))
-
-  /** The keep list over an EXISTING label frame — the deployment shape
-    * (keep lists derive from the maintained cluster state, they don't
+    * Runs over an EXISTING label frame — the deployment shape (keep
+    * lists derive from the maintained cluster state, they don't
     * re-cluster the corpus; the registry's amortization contract, same
     * as `cluster_split_assign`/`cluster_best_keep`).
     */

@@ -223,18 +223,13 @@ private[graft] trait DedupIncremental extends DedupGovern {
     * band0..band3): 8 fixed-width hashes + 4 band keys per doc —
     * BOUNDED per-doc state (~0.3 KB), unlike the raw shingle sets, which
     * is what makes it persistable at corpus scale. A deployment writes
-    * it to a table and feeds it back to [[classifyNearDupIncremental]] /
-    * [[mergeLshIndex]] per batch.
+    * it to a table and feeds it back to [[classifyNearDupIncremental]]
+    * per batch. Signatures are per-doc rows, so folding a processed
+    * batch into the running index is a plain union with the batch's own
+    * `lshIndex` — no recompute of the existing state, no corpus rescan.
     */
   def lshIndex(corpus: DataFrame): DataFrame =
     minhashSignaturesFrom(hashedShingles(corpus))
-
-  /** Fold a processed batch into the running index: signatures are
-    * per-doc rows, so the merge is a plain union — no recompute of the
-    * existing state, no corpus rescan.
-    */
-  def mergeLshIndex(index: DataFrame, batch: DataFrame): DataFrame =
-    index.unionByName(lshIndex(batch))
 
   /** Classify a batch against the RUNNING index: batch docs →
     * signatures; four band-equality joins against the index surface

@@ -156,7 +156,7 @@ object Export {
     * the suggestion-side derivations the reference's build_route_rows
     * computes per row: data-availability `status`, human `message`, and
     * headway deltas. Flat columns (one per payload field) so the whole
-    * shape is DuckDB-hash-checkable; [[exportRowsNested]] folds them into
+    * shape is DuckDB-hash-checkable; [[routeRowsJson]] folds them into
     * the reference's {kpi{}, suggestion{}} JSON structure.
     * Ref: src/optimization/export_suggestions_json.py:88-117 (SQL_LATEST_ROWS),
     * :149-177 (compute_status/compute_message), :204-252 (build_route_rows).
@@ -222,27 +222,10 @@ object Export {
         "is_peak_hour INT, confidence DOUBLE, rule STRING, " +
         "trips_per_hour_target DOUBLE, raw_recommended_headway_min DOUBLE")
 
-  /** D7 nested — the reference's exact {route_id, hour_ts, kpi{...},
-    * suggestion{...}} payload shape over [[exportRows]] output (kept out
-    * of the oracle registry: struct columns are not pandas-hashable in
-    * the driver harness; the flat twin checks every leaf value instead).
-    * Ref: export_suggestions_json.py:226-250.
-    */
-  def exportRowsNested(rows: DataFrame): DataFrame =
-    rows.select(
-      col("route_id"), col("hour_ts"),
-      struct(
-        col("predicted_passengers"), col("observed_passengers"),
-        col("active_vehicles"), col("avg_headway_min"), col("is_peak_hour")).as("kpi"),
-      struct(
-        col("action"), col("status"), col("message"),
-        col("current_headway_min"), col("recommended_headway_min"),
-        col("delta_headway_min"), col("delta_headway_pct"),
-        col("priority_score"), col("confidence")).as("suggestion"))
-
   /** D7/S11 — the per-route payload serialized EXACTLY as
-    * build_route_rows emits it (export_suggestions_json.py:202-250),
-    * reasons object included: real suggestions carry the 17-key reasons
+    * build_route_rows emits it (export_suggestions_json.py:202-250): the
+    * reference's {route_id, hour_ts, kpi{...}, suggestion{...}} shape
+    * over [[exportRows]] output, reasons object included: real suggestions carry the 17-key reasons
     * parsed back out of the suggestions frame's JSON column; rows the
     * LEFT JOIN left without a suggestion carry the reference's
     * `{"reason": "no data"}` fallback (:214). The two branches have
@@ -375,7 +358,7 @@ object Export {
 
   /** S11 — JSON file sink: the result rows as one pretty-printed JSON
     * array (NaN/Inf scrubbed to null by the caller's schema, timestamps
-    * already ISO via Cols.isoTs columns). Export results are
+    * already ISO strings via the caller's date_format). Export results are
     * route-count-sized, so a driver-side write is the right tool — this is
     * the one deliberate non-distributed step, matching the reference's
     * single JSON artifact per export. Ref: export_suggestions_json.py:31-83.

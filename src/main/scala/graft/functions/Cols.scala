@@ -30,22 +30,16 @@ object Cols {
   def isPeakHour(ts: Column): Column =
     (hour(ts).between(7, 9) || hour(ts).between(16, 18)).cast("int")
 
-  /** F4/W1 — exact minutes between two timestamps as double (microsecond
-    * precision, no float drift: integer micros difference, one division).
-    * Accepts TIMESTAMP and TIMESTAMP_NTZ: unix_micros rejects NTZ input
-    * (DATATYPE_MISMATCH on Spark 4.1), so cast explicitly first — safe
-    * under the UTC session timezone pinned in build.sbt/Verify.
-    * Ref: kpi_views.sql:45 (EXTRACT(EPOCH FROM a-b)/60).
-    */
-  def minutesBetween(a: Column, b: Column): Column =
-    microsBetween(a, b) / lit(6.0e7)
-
-  /** Exact microseconds between two timestamps as a long. Time math should
-    * stay in this integer domain as long as possible: integer sums are
+  /** F4/W1 — exact microseconds between two timestamps as a long
+    * (EXTRACT(EPOCH FROM a-b) at µs precision). Time math should stay in
+    * this integer domain as long as possible: integer sums are
     * associative (partition-order independent) and cross-engine exact,
     * whereas any double→decimal rounding of a derived minutes value is
     * engine-specific at half-boundaries (Δµs ≡ 30 mod 60 puts Δµs/6e7
-    * exactly on a 6-decimal half — 1 in 60 gaps!).
+    * exactly on a 6-decimal half — 1 in 60 gaps!). Accepts TIMESTAMP and
+    * TIMESTAMP_NTZ: unix_micros rejects NTZ input (DATATYPE_MISMATCH on
+    * Spark 4.1), so cast explicitly first — safe under the UTC session
+    * timezone pinned in build.sbt/Verify. Ref: kpi_views.sql:45.
     */
   def microsBetween(a: Column, b: Column): Column =
     unix_micros(a.cast("timestamp")) - unix_micros(b.cast("timestamp"))
@@ -82,11 +76,6 @@ object Cols {
           parts.getItem(2).cast("int"))
   }
 
-  /** F17 — ISO timestamp formatting for JSON exports.
-    * Ref: src/optimization/export_suggestions_json.py:43-44,209.
-    */
-  def isoTs(ts: Column): Column = date_format(ts, "yyyy-MM-dd'T'HH:mm:ss")
-
   /** The canonical event-time → µs-since-epoch conversion, SCHEMA-ADAPTIVE
     * (see [[EventTimeExpr]]): a long child is treated as nanos and
     * floor-divided by 1000 (integer-exact for any 64-bit count); a
@@ -116,14 +105,6 @@ object Cols {
   def scrubDouble(c: Column): Column =
     when(isnan(c) || c === Double.PositiveInfinity || c === Double.NegativeInfinity, lit(null).cast("double"))
       .otherwise(c)
-
-  /** A7 — AVG(x) FILTER (WHERE x BETWEEN lo AND hi): avg ignores nulls, so
-    * masking with when() reproduces FILTER exactly (numerator and
-    * denominator both exclude masked rows); computed via [[detAvg]] so the
-    * value is partition-order independent. Ref: kpi_views.sql:50-57.
-    */
-  def avgFiltered(x: Column, lo: Double, hi: Double): Column =
-    detAvg(when(x.between(lo, hi), x))
 
   /** A8 — base-demand seeding LEAST(50, GREATEST(5, n*3)).
     * Ref: initdb/init-postgis.sql:170-176.

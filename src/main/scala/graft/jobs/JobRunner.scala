@@ -314,7 +314,12 @@ object JobRunner {
       }),
 
     // :102 process — id normalization (P1), typed casts (P3), key dedup
-    // (P4); each op individually oracle-checked at its own registration.
+    // (P4). P1 and P3 are oracle-checked at their own through-disk
+    // registrations; P4 has no registration (GtfsStatic.dedupKeys is
+    // spec-checked only), and this node dedups with dropDuplicates.
+    // stop_times dedups on (trip_id, stop_id), not SURVEY P4's
+    // (trip_id, stop_id, stop_sequence): the synthetic zip (ZipFiles)
+    // carries no stop_sequence column.
     "static_gtfs_job.process" -> (io => {
       def raw(name: String) = io.part("gtfs_raw", name)
       def out(df: DataFrame, name: String) =

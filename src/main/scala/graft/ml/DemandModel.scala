@@ -1,7 +1,6 @@
 package graft.ml
 
 import org.apache.spark.ml.Pipeline
-import org.apache.spark.ml.evaluation.RegressionEvaluator
 import org.apache.spark.ml.feature.VectorAssembler
 import org.apache.spark.ml.regression.RandomForestRegressor
 import org.apache.spark.sql.DataFrame
@@ -10,12 +9,13 @@ import org.apache.spark.sql.functions._
 
 /** Next-hour demand model (SURVEY.md §2.12): the reference's sklearn
   * RandomForest re-expressed with spark.ml — same 9 features, same
-  * next-hour lead label (W3/A12), same temporal 80/20 split, 200 trees,
-  * seed 42. Tree ensembles differ numerically from sklearn by design, so
-  * quality is asserted as an MAE band (tests), and the registry exposes a
-  * rows-only metrics query rather than an exact oracle.
+  * next-hour lead label (W3/A12), same temporal 80/20 split, seed 42.
+  * The reference retrains on every run; here one trainer
+  * ([[trainPinnedForest]]) fits the forest at fixture time and the
+  * refresh serves the committed trees ([[RfFixture]]) as SQL, so every
+  * prediction, the MAE and the run record are oracle-exact.
   *
-  * Ref: src/ml/train_predict.py:30-40,145-164.
+  * Ref: src/ml/train_predict.py:30-40,145-195.
   */
 object DemandModel {
 
@@ -58,12 +58,6 @@ object DemandModel {
       labeled.filter(col("hour_ts") > lit(cut)))
   }
 
-  /** Train RF(numTrees, seed) and return (test predictions, MAE, n_train,
-    * n_test). The split halves are persisted: the RF fitter makes many
-    * passes over the training frame, and without the cache each pass
-    * re-executes the lead-window + global-sort lineage.
-    * Ref: train_predict.py:155-164.
-    */
   /** Partition-layout pin for RF inputs: MLlib's bootstrap sampling is
     * seeded per (seed, partitionId) over the rows in partition order, so
     * the model — and its MAE — is only reproducible if the training
@@ -81,77 +75,12 @@ object DemandModel {
     df.repartition(TrainPartitions, col("route_id"), col("hour_ts"))
       .sortWithinPartitions("route_id", "hour_ts")
 
-  def trainPredict(
-      labeled: DataFrame,
-      numTrees: Int = 200,
-      seed: Long = 42L): (DataFrame, Double, Long, Long) = {
-    // persisted: the hour histogram, the train filter, and the test
-    // filter each consume this frame — without the cache the upstream
-    // pipeline (joins + aggregations + label window) executes three times
-    val l = labeled.persist()
-    val (train0, test0) = temporalSplit(l)
-    val train = pinLayout(train0).persist()
-    val test = pinLayout(test0).persist()
-    try {
-      val pipeline = new Pipeline().setStages(Array(
-        new VectorAssembler()
-          .setInputCols(FeatureCols.toArray)
-          .setOutputCol("features"),
-        new RandomForestRegressor()
-          .setLabelCol("label")
-          .setFeaturesCol("features")
-          .setNumTrees(numTrees)
-          .setSeed(seed)))
-      val model = pipeline.fit(train)
-      val pred = model.transform(test)
-      val mae = new RegressionEvaluator()
-        .setLabelCol("label").setPredictionCol("prediction").setMetricName("mae")
-        .evaluate(pred)
-      (pred, mae, train.count(), test.count())
-    } finally {
-      train.unpersist(blocking = false)
-      test.unpersist(blocking = false)
-      l.unpersist(blocking = false)
-    }
-  }
-
-  /** Rows-only registry query: one row of run metrics (the reference's
-    * ml_runs record, train_predict.py:173-195).
-    */
-  def runMetrics(mlDataset: DataFrame, numTrees: Int = 200): DataFrame = {
-    val spark = mlDataset.sparkSession
-    import spark.implicits._
-    val (_, mae, nTrain, nTest) = trainPredict(withLabel(mlDataset), numTrees)
-    Seq((nTrain, nTest, mae, numTrees))
-      .toDF("n_train", "n_test", "mae", "num_trees")
-  }
-
-  /** The reference's full ml_runs lineage record: run_id, model
-    * name/version, rows_used, split_ratio, MAE, features JSON. run_id is
-    * a deterministic name-UUID of (model, version, trees, seed, split
-    * sizes, features) — the reference uses uuid4, but a content-derived
-    * id is the idempotency key its ON CONFLICT (run_id) DO NOTHING
-    * insert actually wants, and it keeps the rows-only check stable.
-    * Ref: src/ml/train_predict.py:84-95,173-195.
-    */
-  def runRecord(mlDataset: DataFrame, numTrees: Int = 200, seed: Long = 42L): DataFrame = {
-    val spark = mlDataset.sparkSession
-    import spark.implicits._
-    val (_, mae, nTrain, nTest) = trainPredict(withLabel(mlDataset), numTrees, seed)
-    val featuresJson = FeatureCols.mkString("[\"", "\",\"", "\"]")
-    val runId = java.util.UUID.nameUUIDFromBytes(
-      s"rf_demand|1|$numTrees|$seed|$nTrain|$nTest|$featuresJson".getBytes("UTF-8")).toString
-    Seq((runId, "rf_demand", "1", nTrain + nTest, 0.8, mae, featuresJson, numTrees))
-      .toDF("run_id", "model_name", "model_version", "rows_used",
-        "split_ratio", "mae", "features", "num_trees")
-  }
-
   // ---- pinned-forest serving (oracle-exact operating point) ---------
   //
-  // The trained rows-only queries above fit 200 trees in-query; a tree
-  // ensemble's VALUES are engine-specific, so they can never be
-  // oracle-checked directly. The PINNED path trains a compact serving
-  // forest ONCE at fixture time and commits the trees themselves
+  // A tree ensemble trained in-query has engine-specific VALUES, so it
+  // could never be oracle-checked directly. The PINNED path trains a
+  // compact serving forest ONCE at fixture time and commits the trees
+  // themselves
   // (preorder (featureIndex, threshold, prediction) triples —
   // [[RfFixture]]): every split threshold and leaf value is then a
   // literal, so the whole predict-and-score pass is ONE shared SQL
@@ -314,8 +243,10 @@ object DemandModel {
     * md5(name) by hex surgery — digit 13 forced to '3' (version) and
     * digit 17 to (v AND 3) OR 8 (variant), the exact bit ops the JDK
     * applies to md5 bytes 6 and 8. The name string carries the split
-    * sizes, so the id is computed IN-PLAN from the aggregated row,
-    * matching [[runRecord]]'s content-derived idempotency key.
+    * sizes, so the id is computed IN-PLAN from the aggregated row.
+    * The reference uses uuid4; a content-derived id is the idempotency
+    * key its ON CONFLICT (run_id) DO NOTHING insert actually wants.
+    * Ref: src/ml/train_predict.py:84-95,173-195.
     */
   def pinnedRunRecord(
       mlDataset: DataFrame, trees: Array[Array[(Int, Double, Double)]],

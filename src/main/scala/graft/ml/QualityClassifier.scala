@@ -1,26 +1,22 @@
 package graft.ml
 
-import org.apache.spark.ml.Pipeline
 import org.apache.spark.ml.classification.LogisticRegression
-import org.apache.spark.ml.evaluation.BinaryClassificationEvaluator
-import org.apache.spark.ml.feature.{HashingTF, Tokenizer}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.text.TextOps
 
 /** Learned document-quality model — the fastText-style linear classifier
   * a curation pipeline trains to replace hand-tuned heuristics once it
-  * has labels: hashed bag-of-words features (Tokenizer → HashingTF into
+  * has labels: hashed bag-of-words features (md5 feature hashing into
   * 2^12 buckets, the hashing trick — vocabulary-free, so the feature
   * space is fixed however large the corpus) into a logistic regression.
   *
   * Labels here are weak labels bootstrapped from the heuristic
   * [[TextOps.qualityScore]] (top-half of the corpus by the exact median
   * = positive), which is exactly how such classifiers start in practice:
-  * heuristic seed labels, then human/LLM labels later. The train/test
-  * split reuses [[HashSplit.splitAssign]]'s bucket arithmetic — the
-  * deterministic, append-stable, shuffle-free assignment (train < 80,
-  * test ≥ 80 collapses val into test for the binary eval).
+  * heuristic seed labels, then human/LLM labels later. The training half
+  * reuses [[HashSplit.splitAssign]]'s bucket arithmetic — the
+  * deterministic, append-stable, shuffle-free assignment (train < 80).
   *
   * Scale shape: featurization is a narrow per-row map; LBFGS does
   * `treeAggregate` passes over the (persisted) training frame — the
@@ -28,8 +24,8 @@ import graft.text.TextOps
   * no shuffles beyond the fixed-count layout pin. The layout pin
   * (fixed-count hash repartition + in-partition sort, as in
   * [[DemandModel]]) makes gradient-sum float addition order — and so
-  * the coefficients, the AUC, and every per-doc score — a pure function
-  * of the data, byte-identical across cluster sizes.
+  * the coefficients and every per-doc score — a pure function of the
+  * data, byte-identical across cluster sizes.
   */
 object QualityClassifier {
 
@@ -40,73 +36,11 @@ object QualityClassifier {
     df.repartition(TrainPartitions, col("doc_id"))
       .sortWithinPartitions("doc_id")
 
-  /** documents + weak label (1.0 = quality_score ≥ exact corpus median)
-    * + split assignment.
-    */
-  def labeled(documents: DataFrame): DataFrame = {
-    val scored = documents
-      .select(col("doc_id"), col("text"),
-        TextOps.qualityScore(col("text")).as("quality_score"))
-    // exact median (Spark's `percentile` is the sort-based exact form);
-    // single scalar → broadcast, no driver round-trip besides the agg
-    val med = scored.agg(expr("percentile(quality_score, 0.5)").as("m"))
-    scored.crossJoin(broadcast(med))
-      .withColumn("label", when(col("quality_score") >= col("m"), 1.0).otherwise(0.0))
-      .withColumn("split",
-        when(HashSplit.hashBucket(col("doc_id"), 100) < 80, "train").otherwise("test"))
-  }
-
-  private def fit(train: DataFrame) = {
-    val pipeline = new Pipeline().setStages(Array(
-      new Tokenizer().setInputCol("text").setOutputCol("words"),
-      new HashingTF().setInputCol("words").setOutputCol("features")
-        .setNumFeatures(NumFeatures),
-      new LogisticRegression()
-        .setLabelCol("label").setFeaturesCol("features")
-        .setMaxIter(30).setRegParam(0.01)))
-    pipeline.fit(train)
-  }
-
-  /** One metrics row: split sizes, positive rate, held-out AUC and
-    * accuracy. Rows-only in the registry (an iterative fitter is not
-    * SQL-expressible); the spec asserts the AUC band and determinism.
-    */
-  def trainEval(documents: DataFrame): DataFrame = {
-    val spark = documents.sparkSession
-    import spark.implicits._
-    val all = labeled(documents)
-    val train = pinLayout(all.filter(col("split") === "train")).persist()
-    val test = pinLayout(all.filter(col("split") === "test")).persist()
-    try {
-      val model = fit(train)
-      val pred = model.transform(test)
-      val auc = new BinaryClassificationEvaluator()
-        .setLabelCol("label").setRawPredictionCol("rawPrediction")
-        .setMetricName("areaUnderROC").evaluate(pred)
-      val acc = pred.filter(col("prediction") === col("label")).count().toDouble /
-        math.max(1L, test.count())
-      val posRate = train.agg(avg("label")).head.getDouble(0)
-      Seq((train.count(), test.count(), posRate, auc, acc))
-        .toDF("n_train", "n_test", "train_pos_rate", "auc", "accuracy")
-    } finally {
-      train.unpersist(blocking = false)
-      test.unpersist(blocking = false)
-    }
-  }
-
   /** Precision/recall/F1 of the learned filter at a threshold grid —
     * how an operating point for `p_quality ≥ τ` gets picked before the
     * filter ships. All thresholds are evaluated in ONE aggregation pass
-    * over the scored corpus (3 conditional counters per threshold in
-    * the same agg), then unpivoted; the scored frame is computed once.
-    */
-  def thresholdSweep(
-      documents: DataFrame,
-      thresholds: Seq[Double] = (1 to 9).map(_ / 10.0)): DataFrame =
-    sweepFrom(scoreDocuments(documents), thresholds)
-
-  /** The one-pass sweep over any (label, p_quality) frame — shared by
-    * the trained and pinned operating points.
+    * over the scored (label, p_quality) frame (3 conditional counters per
+    * threshold in the same agg), then unpivoted.
     */
   private def sweepFrom(scored: DataFrame, thresholds: Seq[Double]): DataFrame = {
     val aggs = thresholds.zipWithIndex.flatMap { case (t, i) =>
@@ -134,16 +68,16 @@ object QualityClassifier {
 
   // ---- pinned-model serving (oracle-exact operating point) ----------
   //
-  // The trained path above uses MLlib's Tokenizer + HashingTF (murmur3)
-  // — fast, but the hash is not reproducible outside the JVM, so its
-  // scores can never be oracle-checked. The PINNED path swaps in the
-  // engine's own md5 feature hashing (HashSplit.hashBucket over
-  // TextOps.toks — the same cross-engine-safe primitives every other
-  // oracle uses), trains ONCE at fixture time, and commits the model as
-  // 1e9-quantized integer weights: serving is then an exact integer dot
-  // product + one sigmoid, reproducible bit-for-bit in DuckDB. This is
-  // the production shape anyway — a curation filter ships a frozen
-  // model artifact; it does not retrain per corpus batch.
+  // MLlib's own Tokenizer + HashingTF (murmur3) is not reproducible
+  // outside the JVM, so its scores could never be oracle-checked. The
+  // model instead uses the engine's md5 feature hashing
+  // (HashSplit.hashBucket over TextOps.toks — the same cross-engine-safe
+  // primitives every other oracle uses), trains ONCE at fixture time,
+  // and commits the model as 1e9-quantized integer weights: serving is
+  // then an exact integer dot product + one sigmoid, reproducible
+  // bit-for-bit in DuckDB. This is the production shape anyway — a
+  // curation filter ships a frozen model artifact; it does not retrain
+  // per corpus batch.
 
   /** md5-hashed bag-of-words counts per (doc_id, bucket) — the shared
     * featurizer of the pinned trainer and the pinned scorer.
@@ -248,7 +182,7 @@ object QualityClassifier {
        |FROM lab l JOIN sc s USING (doc_id)
        |ORDER BY l.doc_id""".stripMargin
 
-  /** [[thresholdSweep]] under the committed model — the sweep a pipeline
+  /** [[sweepFrom]] under the committed model — the sweep a pipeline
     * actually runs to pick `p_quality ≥ τ` for a FROZEN artifact before
     * it ships. Same one-pass conditional-counter shape; oracle-exact
     * because the pinned scores are.
@@ -290,26 +224,5 @@ object QualityClassifier {
        |  END AS f1
        |FROM c
        |ORDER BY threshold""".stripMargin
-  }
-
-  /** Per-document learned quality probability over the full corpus —
-    * the artifact downstream filtering consumes (`p_quality ≥ τ` as a
-    * cheaper, learned stand-in for the heuristic filter chain). Model
-    * application is a narrow map (one sparse dot product per doc).
-    */
-  def scoreDocuments(documents: DataFrame): DataFrame = {
-    val all = labeled(documents)
-    val train = pinLayout(all.filter(col("split") === "train")).persist()
-    try {
-      val model = fit(train)
-      // vector_to_array + element_at keep the probability extraction a
-      // codegen'd built-in (no Scala UDF); index 2 is P(label=1)
-      model.transform(all)
-        .select(col("doc_id"), col("label"),
-          element_at(org.apache.spark.ml.functions.vector_to_array(col("probability")), 2)
-            .as("p_quality"),
-          col("prediction").as("predicted_label"))
-        .orderBy("doc_id")
-    } finally train.unpersist(blocking = false)
   }
 }

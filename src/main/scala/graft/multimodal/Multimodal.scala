@@ -35,22 +35,6 @@ object Multimodal {
       doc_id: Long, media_type: String, n_bytes: Long,
       sha256_hex: String, decoded_ok: Boolean, width: Int, height: Int)
 
-  /** STUB decode: fake dimensions from the content hash (bytes 0/1). */
-  def stubDecode(hash: Array[Byte]): (Int, Int) =
-    ((hash(0) & 0xff) + 1, (hash(1) & 0xff) + 1)
-
-  /** Stub decode as a payload→dims codec (hash computed from payload),
-    * for running the stub through the codec-template path. The payload
-    * is hashed a second time here on top of the template's own digest —
-    * accepted: the codec interface is payload→dims by design (a real
-    * demuxer needs the bytes, not a hash), and this stub path is
-    * spec-only.
-    */
-  def stubCodec(payload: Array[Byte]): Option[(Int, Int)] = {
-    val md = java.security.MessageDigest.getInstance("SHA-256")
-    Some(stubDecode(md.digest(payload)))
-  }
-
   /** REAL decode: dims via the JRE's built-in ImageIO readers. Returns
     * None when the payload is not a decodable image (ImageIO yields
     * null) instead of failing the task — at 100 TB some payloads WILL be

@@ -672,7 +672,8 @@ private[graft] trait CoverageQueries extends RegistryBase {
              |FROM snap""".stripMargin)),
 
       // D7 — full frontend export rows (status/message/deltas), flat for
-      // the hash compare; the nested {kpi,suggestion} twin is spec-covered.
+      // the hash compare; the nested {kpi,suggestion} payload is
+      // Export.routeRowsJson, which the export_all job node writes
       Q("export_rows",
         (s, dir) => {
           val k = kpiHourly(s, dir).persist()

@@ -187,19 +187,14 @@ private[graft] trait DynamicQueries extends RegistryBase {
           .withColumn("hour_ts", col("hour_ts").cast("timestamp_ntz")),
         Some(EXPORT_ROWS_SQL)),
 
-      // The in-query-trained 200-tree RF (`DemandModel.runMetrics`) is
-      // SPEC coverage (retired r13): MLlib ensemble values are
-      // engine-specific by design (SURVEY §2.12 prescribes tolerance).
-      // RfTrainedSpec asserts the MAE band + split sizes; FixtureSpec pins
-      // retrain == committed forest; `rf_pinned_mae` below is the
-      // oracle-exact serving twin.
-
       // MAE of the COMMITTED serving forest (RfFixture: 20 trees as
       // preorder literal triples) — ORACLE-EXACT: the forest is one
       // shared CASE expression evaluated identically by both engines,
       // the temporal cut is computed in-plan, and per-row errors go
-      // through round(.,6) before the exact decimal sum. The
-      // in-query-trained 200-tree form stays rows-only above;
+      // through round(.,6) before the exact decimal sum. An in-query
+      // MLlib fit could only be rows-only (ensemble values are
+      // engine-specific by design, SURVEY §2.12), so the forest trains
+      // once at fixture time (DemandModel.trainPinnedForest) and
       // FixtureSpec pins retrain == fixture.
       Q("rf_pinned_mae",
         (s, d) => DemandModel.pinnedMae(mlDataset(s, d),
@@ -207,14 +202,7 @@ private[graft] trait DynamicQueries extends RegistryBase {
         Some(DemandModel.pinnedMaeSql(ML_DATASET_SQL,
           graft.ml.RfFixture.trees))),
 
-      // The trained-RF ml_runs lineage record (`DemandModel.runRecord`)
-      // is SPEC coverage (retired r13): its MAE field comes from the
-      // engine-specific trained forest. RfTrainedSpec asserts the record's
-      // deterministic fields (run_id derivation, split sizes, features
-      // JSON) and the MAE band; `ml_run_record_pinned` below is the
-      // oracle-exact twin.
-
-      // the lineage record at the PINNED forest — ORACLE-EXACT down to
+      // the ml_runs lineage record at the PINNED forest — ORACLE-EXACT down to
       // the run_id: nameUUIDFromBytes is a v3 (md5) UUID, rebuilt in
       // both engines by hex surgery on md5(name) (digit 13 -> '3',
       // digit 17 -> (v AND 3) OR 8), with the name composed in-plan
@@ -256,16 +244,13 @@ private[graft] trait DynamicQueries extends RegistryBase {
              |  FROM hist) WHERE rn = 1
              |ORDER BY route_id, hour_ts""".stripMargin)),
 
-      // MLlib k-means|| over embeddings (`Knn.kmeansClusterSizes`) is
-      // SPEC coverage (retired r13): k-means|| centroids are
-      // seed+layout-dependent, never SQL-expressible. KnnSpec asserts the
-      // partition-count/size invariants; the operator stays inside the
-      // hash gate twice over — `kmeans_sizes_pinned` (frozen trained
-      // artifact) and `kmeans_lloyd_train` (the in-engine trainer itself).
-
       // the k-means reporting surface at PINNED centroids
       // (SemDedupFixture — the committed trained artifact), ORACLE-EXACT:
-      // literal-centroid argmin assignment + plain size/norm rollup
+      // literal-centroid argmin assignment + plain size/norm rollup.
+      // MLlib's k-means|| centroids are seed+layout-dependent, never
+      // SQL-expressible, so the MLlib fit (Knn.trainSemDedupCentroids)
+      // runs only at fixture time; `kmeans_lloyd_train` below puts an
+      // in-engine trainer itself inside the hash gate.
       Q("kmeans_sizes_pinned",
         (s, d) => graft.sim.Knn.kmeansSizesPinned(
           TestdataAdapter.table(s, d, "embeddings"),
@@ -289,7 +274,7 @@ private[graft] trait DynamicQueries extends RegistryBase {
       // quantization, md5-ranked seeds, integer argmin, exactly-divisible
       // floor-means) that the DuckDB twin replays iteration-for-iteration
       // as unrolled CTE blocks — the trainer itself inside the hash gate,
-      // where the MLlib leg above can only ever be rows-only
+      // where an MLlib fit can only ever be rows-only
       Q("kmeans_lloyd_train",
         (s, d) => graft.sim.Knn.kmeansLloydTrain(
           TestdataAdapter.table(s, d, "embeddings")),

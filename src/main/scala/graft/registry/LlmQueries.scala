@@ -523,8 +523,9 @@ private[graft] trait LlmQueries extends RegistryBase {
           // exact-dedup stream): each increment writes ONLY the batch's
           // signatures; the running index is base ∪ deltas. The earlier
           // form re-persisted base ∪ batch as v1 — an O(corpus) state
-          // rewrite per batch. mergeLshIndex is a plain union, so the
-          // union-of-dirs read IS the merged index, bit-for-bit.
+          // rewrite per batch. The index merge is a plain union of
+          // per-batch lshIndex frames, so the union-of-dirs read IS the
+          // merged index, bit-for-bit.
           def persist(ix: org.apache.spark.sql.DataFrame, name: String) = {
             ix.write.mode("overwrite").parquet(s"$state/$name")
             s.read.parquet(s"$state/$name")
@@ -541,17 +542,12 @@ private[graft] trait LlmQueries extends RegistryBase {
           "doc_id % 3 <> 0",
           "doc_id % 3 = 0 AND doc_id % 2 = 0",
           "doc_id % 3 = 0 AND doc_id % 2 <> 0"))),
-      // The learned quality model's in-query TRAINING leg
-      // (`QualityClassifier.trainEval`, hashed BoW → logistic regression)
-      // is SPEC coverage (retired r13): an iterative fitter's weights are
-      // engine-specific. AUC band + determinism are asserted in
-      // CurationOpsSpec; FixtureSpec pins retrain == committed fixture;
-      // the pinned serving twin below stays oracle-exact.
       // per-doc scores under the COMMITTED quality model (md5-BoW LR,
       // 1e9-quantized weights, frozen weak-label threshold) — the
       // serving artifact, ORACLE-EXACT: integer dot product + one
-      // round-pinned sigmoid, mirrored verbatim in DuckDB. The
-      // in-query-trained form stays rows-only (`quality_classifier`);
+      // round-pinned sigmoid, mirrored verbatim in DuckDB. An iterative
+      // fitter's weights are engine-specific, so the model trains once
+      // at fixture time (QualityClassifier.trainPinnedQuality) and
       // FixtureSpec pins retrain == fixture.
       Q("quality_score_pinned",
         (s, d) => graft.ml.QualityClassifier.scorePinned(docs(s, d),
@@ -598,11 +594,11 @@ private[graft] trait LlmQueries extends RegistryBase {
       // the pinned-centroid serving point (promoted r11): centroids are a
       // committed trained-model artifact (SemDedupFixture — MLlib k-means
       // output, provenance spec-pinned), the argmin assignment and the
-      // within-cell prune are plain arithmetic mirrored in DuckDB. The
-      // in-query-trained k-means path stays in the gate via
-      // `kmeans_clusters` and KnnSpec. tau=0.3 matches
-      // embedding_near_dup's threshold — the synthetic embeddings'
-      // planted near-dups live at cosine ~0.3-0.4
+      // within-cell prune are plain arithmetic mirrored in DuckDB; the
+      // MLlib fit itself (Knn.trainSemDedupCentroids) runs only at
+      // fixture time, and FixtureSpec pins retrain == fixture.
+      // tau=0.3 matches embedding_near_dup's threshold — the synthetic
+      // embeddings' planted near-dups live at cosine ~0.3-0.4
       Q("semdedup_keep",
         (s, d) => Knn.semDedupKeepPinned(embs(s, d),
           SemDedupFixture.centroids, tau = 0.3),
@@ -722,7 +718,8 @@ private[graft] trait LlmQueries extends RegistryBase {
       // pq_topk/semdedup_keep): the loading matrix is the committed
       // trained artifact (PcaFixture, provenance spec-pinned), so the
       // whole shortlist → rerank → recall experiment is mirrored in
-      // DuckDB. The in-query-trained fit stays spec-asserted in KnnSpec.
+      // DuckDB. The MLlib fit itself (Knn.trainPcaBasis) runs only at
+      // fixture time, and FixtureSpec pins retrain == fixture.
       Q("pca_recall",
         (s, d) => Knn.pcaRecallPinned(embs(s, d),
           PcaFixture.basis, PcaFixture.explainedVariance),

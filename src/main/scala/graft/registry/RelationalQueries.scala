@@ -510,22 +510,13 @@ private[graft] trait RelationalQueries extends RegistryBase {
       (s, dir) => Sketches.profileEvents(TestdataAdapter.table(s, dir, "events")),
       Some(Sketches.profileEventsSql)),
 
-    // HLL++/t-digest sketch audit (`Sketches.sketchStats`) is SPEC
-    // coverage, not a registry query (retired r13, same precedent as the
-    // mtime dedup index in r12): builtin-sketch VALUES are
-    // engine-specific, so a rows-only row would read as `err` to the
-    // mechanical gate. Accuracy bands are asserted in ScaleSpec; the
-    // oracle-exact twins below (`sketch_stats_exact`, `cardinality_hll`)
-    // keep the operator itself inside the hash gate.
+    // Builtin-sketch (HLL++/t-digest) VALUES are engine-specific, so the
+    // sketches registered here are engine-owned (`cardinality_hll`,
+    // `heavy_hitters_cms`) and their exact audit legs ride along.
     // the exact cardinality+median leg of the sketch audit, hash-checked
     Q("sketch_stats_exact",
       (s, dir) => Sketches.sketchStatsExact(TestdataAdapter.table(s, dir, "events")),
       Some(Sketches.sketchStatsExactSql)),
-    // Builtin Count-Min heavy hitters (`Sketches.heavyHitters`) is SPEC
-    // coverage (retired r13): estimate values are implementation-specific;
-    // the ≥-exact and error-bound contracts are asserted in ScaleSpec, and
-    // the engine-owned md5 CMS twin (`heavy_hitters_cms`) plus the exact
-    // top-k leg below keep the operator oracle-exact.
     // the exact top-k frequency leg, hash-checked
     Q("heavy_hitters_exact",
       (s, dir) => Sketches.heavyHittersExact(TestdataAdapter.table(s, dir, "events")),

@@ -404,42 +404,21 @@ object Relational {
       .orderBy("priority", "status")
 
   /** As-of join without a global sort: each probe row is matched to the
-    * LATEST quote at-or-before its timestamp, under a bounded-staleness
-    * contract of `lookbackHours`. Scalable shape: every quote is exploded
-    * to the lookbackHours+1 probe-hour buckets it can serve, the join is
-    * a plain equality join on the bucket (shuffle on hour keys — never a
-    * range join, never a single-partition ordering), and a per-probe-key
-    * row_number keeps the newest surviving quote. Probe rows with no
-    * quote inside the lookback drop — identical to inner ASOF JOIN
-    * semantics whenever quote gaps are bounded by the lookback (the
-    * caller's contract; feeds with hourly-ish cadence satisfy it by
-    * construction). DuckDB's native ASOF JOIN is the oracle twin.
-    */
-  def asofJoinHourly(
-      probes: DataFrame, probeTs: String, probeKey: String,
-      quotes: DataFrame, quoteTs: String, lookbackHours: Int): DataFrame = {
-    val served = quotes.withColumn("__bucket",
-      explode(expr(
-        s"transform(sequence(0, $lookbackHours), " +
-          s"i -> date_trunc('HOUR', $quoteTs) + make_interval(0, 0, 0, 0, i, 0, 0))")))
-    val w = Window.partitionBy(probeKey).orderBy(col(quoteTs).desc)
-    probes
-      .withColumn("__bucket", date_trunc("hour", col(probeTs)))
-      .join(served, Seq("__bucket"))
-      .filter(col(quoteTs) <= col(probeTs))
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .drop("__bucket", "__rn")
-  }
-
-  /** [[asofJoinHourly]] with the staleness bound DERIVED from the data
-    * instead of asserted by the caller: the lookback is the largest gap
-    * between consecutive distinct quote hours, widened by the tail gap
-    * from the last quote to the last probe (DuckDB's ASOF matches
-    * trailing probes to the final quote at arbitrary staleness). With
-    * that bound every probe at-or-after the first quote matches exactly
-    * its ASOF row, whatever the feed's cadence — sparse synthetic feeds
-    * included.
+    * LATEST quote at-or-before its timestamp. Scalable shape: every quote
+    * is exploded to the lookback+1 probe-hour buckets it can serve, the
+    * join is a plain equality join on the bucket (shuffle on hour keys —
+    * never a range join, never a single-partition ordering), and a
+    * per-probe-key row_number keeps the newest surviving quote. DuckDB's
+    * native ASOF JOIN is the oracle twin.
+    *
+    * The staleness bound is DERIVED from the data instead of asserted by
+    * the caller: the lookback is the largest gap between consecutive
+    * distinct quote hours, widened by the tail gap from the last quote to
+    * the last probe (DuckDB's ASOF matches trailing probes to the final
+    * quote at arbitrary staleness). With that bound every probe
+    * at-or-after the first quote matches exactly its ASOF row, whatever
+    * the feed's cadence — sparse synthetic feeds included; probes before
+    * the first quote drop, as in an inner ASOF JOIN.
     *
     * LAZY, like every other builder in this module: the bound is a
     * broadcast one-row scalar cross-joined into the quote side and read
@@ -449,8 +428,7 @@ object Relational {
     * value frozen at build time. Cost of adaptivity: one aggregate over
     * the DISTINCT quote/probe hours (bounded by calendar hours — ~9k
     * rows for a year of data regardless of corpus size; the global
-    * window sort is over that hour set, not the data). The dominant
-    * join stays the bucketed equality shape of [[asofJoinHourly]].
+    * window sort is over that hour set, not the data).
     */
   def asofJoinHourlyAuto(
       probes: DataFrame, probeTs: String, probeKey: String,

@@ -15,11 +15,13 @@ import org.apache.spark.sql.functions._
   *  - t-digest (`approx_percentile`): bounded-memory mergeable quantile
   *    state instead of per-group sorted buffers.
   *
-  * Sketch values are engine-specific by construction (DuckDB's HLL and
-  * Spark's HLL++ disagree in the last percent), so the query is
-  * registered rows-only; the accuracy contract — approx within the
-  * advertised error of exact, on the same Spark plan — is what the spec
-  * asserts, and the exact columns ride along for audit.
+  * Library sketch values are engine-specific by construction (DuckDB's
+  * HLL and Spark's HLL++ disagree in the last percent), so the sketches
+  * registered here are ENGINE-OWNED ([[cmsHeavyHitters]],
+  * [[hllCardinality]]): their hashes are md5 slices any engine can
+  * replay, which makes every estimate oracle-exact, and the exact
+  * columns ([[heavyHittersExact]], [[sketchStatsExact]]) ride along
+  * for audit.
   */
 object Sketches {
 
@@ -92,41 +94,9 @@ object Sketches {
     }.mkString("", "\nUNION ALL\n", "\nORDER BY column_name")
   }
 
-  /** Heavy hitters via Count-Min Sketch — the frequency sketch that
-    * completes the family (HLL++ cardinality, t-digest quantiles, Bloom
-    * membership, CMS counts): fixed `O(1/eps × ln 1/δ)` counter state,
-    * mergeable map-side like the others, built through the public
-    * `DataFrameStatFunctions.countMinSketch` distributed aggregation.
-    * The report joins the sketch estimate onto the exact top-k (the
-    * audit ride-along, same contract as [[sketchStats]]): CMS
-    * guarantees estimate ≥ exact, within eps·N with probability δ.
-    * Counter adds are order-independent and the hash seed is fixed, so
-    * the output is deterministic across any partition layout. The
-    * estimate probe touches only the k retained keys on the driver.
-    */
-  def heavyHitters(events: DataFrame, k: Int = 10): DataFrame = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    val cms = events.stat.countMinSketch(
-      col("user_id"), eps = 0.001, confidence = 0.99, seed = 42)
-    val exactTop = events.groupBy("user_id")
-      .agg(count(lit(1)).as("n_exact"))
-      .orderBy(col("n_exact").desc, col("user_id"))
-      .limit(k)
-      .collect()
-      .map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("n_exact")))
-    exactTop.toSeq
-      .map { case (uid, n) =>
-        val est = cms.estimateCount(uid)
-        (uid, n, est, (est - n).toDouble / n)
-      }
-      .toDF("user_id", "n_exact", "n_cms", "rel_overestimate")
-  }
-
-  /** Exact top-k frequency leg, split out of [[heavyHitters]] so it can
-    * be hash-verified against a DuckDB twin (the CMS estimates in the
-    * combined report are engine-specific and stay rows-only). One hash
-    * aggregation + a bounded TakeOrdered — no global sort.
+  /** Exact top-k frequency leg — the audit ride-along of
+    * [[cmsHeavyHitters]]. One hash aggregation + a bounded TakeOrdered —
+    * no global sort.
     */
   def heavyHittersExact(events: DataFrame, k: Int = 10): DataFrame =
     events.groupBy("user_id")
@@ -138,8 +108,8 @@ object Sketches {
     s"""SELECT user_id, COUNT(*) AS n_events FROM events
        |GROUP BY user_id ORDER BY n_events DESC, user_id LIMIT $k""".stripMargin
 
-  /** Exact cardinality + median leg, split out of [[sketchStats]] for
-    * hash verification. The median goes through round(x, 6) on both
+  /** Exact cardinality + median — the audit leg [[hllCardinality]]'s
+    * estimates are judged against. The median goes through round(x, 6) on both
     * sides so the two engines' linear-interpolation formulas (which can
     * differ by an ulp) land on the same double — the documented
     * cross-engine-safe pattern for derived doubles.
@@ -158,9 +128,9 @@ object Sketches {
 
   /** Heavy hitters via an ENGINE-OWNED Count-Min Sketch whose d row
     * hashes are disjoint 6-hex-digit slices of ONE md5 per key — the
-    * same CMS counter algebra as [[heavyHitters]], but every counter is
-    * reproducible in ANY engine that has md5, so the whole sketch (not
-    * just its exact audit leg) is oracle-exact. The d×w counter grid is
+    * CMS counter algebra (fixed `O(1/eps × ln 1/δ)` counter state,
+    * estimate ≥ exact), but every counter is reproducible in ANY engine
+    * that has md5, so the whole sketch is oracle-exact. The d×w counter grid is
     * one hash aggregation over a d-way in-row fan-out: counts are
     * map-side combinable and the reduced state is exactly d·w rows
     * (8 192 here) whatever the corpus size — the fixed-state mergeable
@@ -232,8 +202,8 @@ object Sketches {
   /** Per-event-type cardinality via an ENGINE-OWNED HyperLogLog whose
     * hash is md5-derived — the same register algebra as Spark's HLL++
     * (`approx_count_distinct`), reproducible bit-for-bit in any engine
-    * with md5, so the ESTIMATE itself is oracle-exact (the builtin-HLL
-    * [[sketchStats]] stays rows-only by construction). Register layout:
+    * with md5, so the ESTIMATE itself is oracle-exact (the builtin
+    * HLL++ never can be). Register layout:
     * m=256 buckets from the first md5 byte; rank = leading-zero count of
     * the next 64 hash bits + 1, computed with integer/string ops only
     * (no transcendentals in the per-row path). State is a fixed
@@ -330,40 +300,5 @@ object Sketches {
        |  abs(s.users_hll - e.users_exact) / e.users_exact AS rel_err
        |FROM ex e JOIN est s USING (event_type)
        |ORDER BY e.event_type""".stripMargin
-  }
-
-  /** Per-event-type exact vs sketch cardinality + median, with relative
-    * errors. Exact columns are themselves deterministic (integer count,
-    * sort-based percentile), so the rows-only gate still exercises them.
-    *
-    * Execution shape: the exact-distinct leg and the sketch leg run as
-    * SEPARATE aggregations joined on the (group-count-sized) key. Fusing
-    * them into one `agg` looks cheaper but triggers Catalyst's
-    * single-distinct rewrite — the non-distinct sketch aggregates get
-    * partial HLL/percentile state built per (event_type, user_id) group,
-    * i.e. one sketch object per DISTINCT USER, merged across two extra
-    * exchanges (measured 5-10 s at sf0.1 vs ~1.5 s split). Two scans of
-    * a columnar source beat millions of single-row sketch merges at any
-    * scale; the join is a broadcast of a handful of rows.
-    */
-  def sketchStats(events: DataFrame): DataFrame = {
-    val sketch = events
-      .groupBy("event_type")
-      .agg(
-        approx_count_distinct("user_id", rsd = 0.01).as("users_approx"),
-        expr("percentile(value, 0.5)").as("p50_exact"),
-        expr("approx_percentile(value, 0.5, 10000)").as("p50_approx"))
-    val exact = events
-      .select("event_type", "user_id").distinct()
-      .groupBy("event_type").agg(count(lit(1)).as("users_exact"))
-    exact.join(broadcast(sketch), Seq("event_type"))
-      .select(
-        col("event_type"), col("users_exact"), col("users_approx"),
-        col("p50_exact"), col("p50_approx"),
-        (abs(col("users_approx") - col("users_exact")).cast("double") /
-          col("users_exact")).as("users_rel_err"),
-        (abs(col("p50_approx") - col("p50_exact")) /
-          abs(col("p50_exact"))).as("p50_rel_err"))
-      .orderBy("event_type")
   }
 }

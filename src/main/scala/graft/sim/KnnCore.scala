@@ -392,32 +392,6 @@ private[sim] trait KnnCore {
        |FROM p WHERE cosine >= $threshold GROUP BY 1 ORDER BY 1""".stripMargin
   }
 
-  /** K-means clustering over the embedding column (MLlib; array<float> →
-    * Vector via array_to_vector, k-means|| init, fixed seed). Returns
-    * cluster sizes + per-cluster norm range — the IVF coarse-quantizer
-    * building block (bucketedTopK's sign-buckets are the degenerate
-    * no-training version of these centroids).
-    */
-  def kmeansClusterSizes(embeddings: DataFrame, k: Int = 10, seed: Long = 42L): DataFrame = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
-    val feats = withNorm(embeddings)
-      .withColumn("features", array_to_vector(col("embedding")))
-      .persist()
-    // cache scoped to the EAGER fit (which iterates over feats); the lazy
-    // transform leg re-derives the narrow projection at action time — one
-    // extra map pass instead of a leaked corpus handle (r14 sweep)
-    val model =
-      try new KMeans().setK(k).setSeed(seed).setFeaturesCol("features").fit(feats)
-      finally feats.unpersist(blocking = false)
-    model.transform(feats)
-      .groupBy(col("prediction").as("cluster"))
-      .agg(count(lit(1)).as("n"),
-        min(sqrt(col("n2"))).as("min_norm"),
-        max(sqrt(col("n2"))).as("max_norm"))
-      .orderBy("cluster")
-  }
-
   /** IVF ANN: k-means centroids as the trained coarse quantizer (the
     * production upgrade of [[bucketedTopK]]'s untrained sign-buckets).
     * Every vector is assigned to its nearest centroid; a query probes its
@@ -726,93 +700,13 @@ private[sim] trait KnnCore {
        |SELECT label, COUNT(*) AS n, MIN(sqrt(n2)) AS min_norm, MAX(sqrt(n2)) AS max_norm
        |FROM e GROUP BY 1 ORDER BY 1""".stripMargin
 
-  /** PCA shortlist + full-space rerank — the two-stage ANN a reduced
-    * representation is actually used for at scale: project 64-dim
-    * vectors to `dimOut` principal components, scan the CHEAP reduced
-    * space for a `shortlistFactor × k` candidate shortlist per query,
-    * then rerank only the shortlist with exact full-space cosine. The
-    * reduced vectors are what a 100 TB deployment stores and shuffles
-    * (dimOut/Dim of the bytes; the scan cost drops by the same factor);
-    * the full vectors are touched for shortlist×k rows per query, not
-    * n. Reported: variance kept and recall@k of the reranked result
-    * against full-space brute force.
-    *
-    * Shape: covariance is one treeAggregate pass (all-reduce, no data
-    * shuffle); the eigendecomposition is a driver-side Dim×Dim solve;
-    * projection is a narrow per-row matmul; the rerank join is keyed by
-    * neighbor_id. The layout pin fixes covariance summation order,
-    * making components — and recall — byte-reproducible across cluster
-    * sizes. Rows-only in the registry (trained projection not
-    * SQL-expressible); recall band spec-asserted.
-    */
-  def pcaRecall(
-      embeddings: DataFrame, nQueries: Int = 50, k: Int = 5,
-      dimOut: Int = 16, shortlistFactor: Int = 8): DataFrame = {
-    import org.apache.spark.ml.feature.PCA
-    import org.apache.spark.ml.functions.{array_to_vector, vector_to_array}
-    val spark = embeddings.sparkSession
-    import spark.implicits._
-    val e = withNorm(embeddings)
-      .repartition(8, col("vec_id")).sortWithinPartitions("vec_id")
-      .withColumn("features", array_to_vector(col("embedding")))
-      .persist()
-    try {
-      val model = new PCA().setK(dimOut).setInputCol("features")
-        .setOutputCol("pc").fit(e)
-      val explained = model.explainedVariance.toArray.sum
-      val red = model.transform(e)
-        .select(col("vec_id"), vector_to_array(col("pc")).as("re"))
-      recallFromReduced(embeddings, e, red, explained,
-        nQueries, k, dimOut, shortlistFactor)
-    } finally e.unpersist(blocking = false)
-  }
-
-  /** The shortlist → rerank → recall-vs-brute-force tail shared by the
-    * trained and pinned-basis PCA forms.
-    */
-  private[sim] def recallFromReduced(
-      embeddings: DataFrame, e: DataFrame, red: DataFrame, explained: Double,
-      nQueries: Int, k: Int, dimOut: Int, shortlistFactor: Int): DataFrame = {
-    val spark = embeddings.sparkSession
-    import spark.implicits._
-    val rdot = expr("aggregate(zip_with(qe, ce, (x, y) -> x * y), 0D, (a, x) -> a + x)")
-    val qn = expr("aggregate(zip_with(qe, qe, (x, y) -> x * y), 0D, (a, x) -> a + x)")
-    val cn = expr("aggregate(zip_with(ce, ce, (x, y) -> x * y), 0D, (a, x) -> a + x)")
-    val q = red.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("re").as("qe"))
-    val c = red.select(col("vec_id").as("neighbor_id"), col("re").as("ce"))
-    val wr = Window.partitionBy("query_id").orderBy(col("rcos").desc, col("neighbor_id"))
-    val shortlist = c.crossJoin(broadcast(q))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("rcos", rdot / (sqrt(qn) * sqrt(cn)))
-      .withColumn("srank", row_number().over(wr))
-      .filter(col("srank") <= k * shortlistFactor)
-      .select("query_id", "neighbor_id")
-    // full-space rerank of the shortlist only: two keyed joins to pull
-    // the exact vectors, one bounded per-query window
-    val full = e.select(col("vec_id"), col("embedding"), col("n2"))
-    val reranked = shortlist
-      .join(full.select(col("vec_id").as("query_id"),
-        col("embedding").as("qfe"), col("n2").as("qn2")), Seq("query_id"))
-      .join(full.select(col("vec_id").as("neighbor_id"),
-        col("embedding").as("cfe"), col("n2").as("cn2")), Seq("neighbor_id"))
-      .withColumn("cosine", dot("qfe", "cfe") / (sqrt(col("qn2")) * sqrt(col("cn2"))))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id"))))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id")
-    val exact = bruteForceTopK(embeddings, nQueries, k)
-      .select("query_id", "neighbor_id")
-    val hits = reranked.join(exact, Seq("query_id", "neighbor_id")).count()
-    val denom = exact.count()
-    Seq((Dim, dimOut, k * shortlistFactor, explained, hits.toDouble / denom, denom))
-      .toDF("dim_in", "dim_out", "shortlist", "explained_variance", "recall_at_k", "n_pairs")
-  }
-
-  /** The trained PCA basis of [[pcaRecall]] (same layout-pinned fit),
-    * as `dimOut` rows of `Dim` loadings plus the explained-variance sum
-    * — the serving fixture [[PcaFixture]]'s provenance
-    * ([[FixtureGen]] writes it, FixtureSpec pins it).
+  /** The PCA basis [[pcaRecallPinned]] serves: a layout-pinned MLlib PCA
+    * fit (the pin fixes covariance summation order, so the components are
+    * byte-reproducible across cluster sizes), as `dimOut` rows of `Dim`
+    * loadings plus the explained-variance sum — the serving fixture
+    * [[PcaFixture]]'s provenance ([[FixtureGen]] writes it, FixtureSpec
+    * pins it). Covariance is one treeAggregate pass (all-reduce, no data
+    * shuffle); the eigendecomposition is a driver-side Dim×Dim solve.
     */
   def trainPcaBasis(
       embeddings: DataFrame, dimOut: Int = 16): (Array[Array[Double]], Double) = {
@@ -831,22 +725,35 @@ private[sim] trait KnnCore {
     } finally e.unpersist(blocking = false)
   }
 
-  /** [[pcaRecall]] at a PINNED basis — the serving operating point (a
-    * PCA projection is a trained model artifact: fit offline, frozen,
-    * applied to every later corpus), and the point at which the whole
-    * reduced-space-shortlist → full-space-rerank → recall-vs-brute-force
-    * experiment is SQL-expressible: the projection becomes `dimOut`
-    * unrolled Σ xᵗ·bᵗ sums over basis literals (computed by our own
-    * fold, not BLAS, so the arithmetic order is pinned), and every
+  /** PCA shortlist + full-space rerank at a PINNED basis — the two-stage
+    * ANN a reduced representation is actually used for at scale: project
+    * 64-dim vectors to `basis.length` principal components, scan the
+    * CHEAP reduced space for a `shortlistFactor × k` candidate shortlist
+    * per query, then rerank only the shortlist with exact full-space
+    * cosine. The reduced vectors are what a 100 TB deployment stores and
+    * shuffles (dimOut/Dim of the bytes; the scan cost drops by the same
+    * factor); the full vectors are touched for shortlist×k rows per
+    * query, not n. Reported: variance kept and recall@k of the reranked
+    * result against full-space brute force.
+    *
+    * The basis is a trained model artifact ([[trainPcaBasis]]: fit
+    * offline, frozen, applied to every later corpus), and pinning it is
+    * what makes the experiment SQL-expressible: the projection becomes
+    * `dimOut` unrolled Σ xᵗ·bᵗ sums over basis literals (computed by our
+    * own fold, not BLAS, so the arithmetic order is pinned), and every
     * downstream cosine already has a proven SQL twin. MLlib's PCA
     * transform is plain multiplication by the loading matrix (no
-    * centering), so the pinned projection is semantically the trained
-    * one with the basis frozen.
+    * centering), so this is the trained projection with the basis
+    * frozen. Projection is a narrow per-row matmul; the rerank join is
+    * keyed by neighbor_id.
     */
   def pcaRecallPinned(
       embeddings: DataFrame, basis: Array[Array[Double]],
       explainedVariance: Double, nQueries: Int = 50, k: Int = 5,
       shortlistFactor: Int = 8): DataFrame = {
+    val spark = embeddings.sparkSession
+    import spark.implicits._
+    val dimOut = basis.length
     val e = withNorm(embeddings).persist()
     try {
       val bk = typedLit(basis.map(_.toSeq).toSeq)
@@ -854,8 +761,38 @@ private[sim] trait KnnCore {
         transform(bk, b => aggregate(
           zip_with(col("embedding"), b, (x, bb) => x.cast("double") * bb),
           lit(0.0), (a, v) => a + v)).as("re"))
-      recallFromReduced(embeddings, e, red, explainedVariance,
-        nQueries, k, basis.length, shortlistFactor)
+      val rdot = expr("aggregate(zip_with(qe, ce, (x, y) -> x * y), 0D, (a, x) -> a + x)")
+      val qn = expr("aggregate(zip_with(qe, qe, (x, y) -> x * y), 0D, (a, x) -> a + x)")
+      val cn = expr("aggregate(zip_with(ce, ce, (x, y) -> x * y), 0D, (a, x) -> a + x)")
+      val q = red.filter(col("vec_id") < nQueries)
+        .select(col("vec_id").as("query_id"), col("re").as("qe"))
+      val c = red.select(col("vec_id").as("neighbor_id"), col("re").as("ce"))
+      val wr = Window.partitionBy("query_id").orderBy(col("rcos").desc, col("neighbor_id"))
+      val shortlist = c.crossJoin(broadcast(q))
+        .filter(col("neighbor_id") =!= col("query_id"))
+        .withColumn("rcos", rdot / (sqrt(qn) * sqrt(cn)))
+        .withColumn("srank", row_number().over(wr))
+        .filter(col("srank") <= k * shortlistFactor)
+        .select("query_id", "neighbor_id")
+      // full-space rerank of the shortlist only: two keyed joins to pull
+      // the exact vectors, one bounded per-query window
+      val full = e.select(col("vec_id"), col("embedding"), col("n2"))
+      val reranked = shortlist
+        .join(full.select(col("vec_id").as("query_id"),
+          col("embedding").as("qfe"), col("n2").as("qn2")), Seq("query_id"))
+        .join(full.select(col("vec_id").as("neighbor_id"),
+          col("embedding").as("cfe"), col("n2").as("cn2")), Seq("neighbor_id"))
+        .withColumn("cosine", dot("qfe", "cfe") / (sqrt(col("qn2")) * sqrt(col("cn2"))))
+        .withColumn("rank", row_number().over(
+          Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id"))))
+        .filter(col("rank") <= k)
+        .select("query_id", "neighbor_id")
+      val exact = bruteForceTopK(embeddings, nQueries, k)
+        .select("query_id", "neighbor_id")
+      val hits = reranked.join(exact, Seq("query_id", "neighbor_id")).count()
+      val denom = exact.count()
+      Seq((Dim, dimOut, k * shortlistFactor, explainedVariance, hits.toDouble / denom, denom))
+        .toDF("dim_in", "dim_out", "shortlist", "explained_variance", "recall_at_k", "n_pairs")
     } finally e.unpersist(blocking = false)
   }
 
@@ -919,131 +856,32 @@ private[sim] trait KnnCore {
        |FROM h CROSS JOIN d""".stripMargin
   }
 
-  /** SemDeDup-style semantic dedup: k-means the embedding space, then
-    * prune within each cluster — a vector is DROPPED when some lower-id
-    * member of its own cluster sits above the cosine threshold, so each
-    * semantic-duplicate group keeps exactly its minimum surviving id
-    * (pinned, deterministic tie-break). This is the cluster-then-prune
-    * recipe that makes semantic dedup tractable at corpus scale: the
-    * quadratic comparison never crosses cluster boundaries, so with
-    * numClusters grown ~n/1000 the per-cell self-join stays bounded
-    * (~cluster-size² per cell, embarrassingly parallel across cells)
-    * instead of n² — the same reason [[ivfTopK]] beats brute force.
-    * Complements [[nearDupPairs]] (LSH finds textual near-copies at high
-    * cosine; trained clusters catch semantic redundancy at lower
-    * thresholds where random-projection bands lose recall).
-    *
-    * Determinism: the k-means input layout is pinned (fixed-count hash
-    * repartition + in-partition sort — MLlib init is layout-sensitive),
-    * cosine is the fused [[graft.functions.DotProductFloat]] expression,
-    * and drop decisions compare ids, so output is byte-identical across
-    * cluster layouts. Rows-only in the registry (trained centroids are
-    * not SQL-expressible); the prune rule is spec-asserted.
-    *
-    * `numClusters = 0` (the default) auto-scales k ≈ max(16, n/1000)
-    * from a count, so the expected per-cell population — and with it the
-    * |cell|² prune cost — stays ~constant as the corpus grows instead of
-    * silently degrading to all-pairs at a fixed k. Pass an explicit k to
-    * pin it (tests do).
-    */
-  // normalized, layout-pinned k-means input: cosine geometry lives on
-  // the unit sphere, and raw-magnitude k-means would split a semantic
-  // group by scale before direction
-  private[sim] def kmeansInput(embeddings: DataFrame): DataFrame = {
-    import org.apache.spark.ml.functions.array_to_vector
-    withNorm(embeddings)
-      .repartition(8, col("vec_id")).sortWithinPartitions("vec_id")
-      .withColumn("features", array_to_vector(
-        expr("transform(embedding, x -> CAST(x AS DOUBLE) / sqrt(n2))")))
-  }
-
-  private[sim] def assignCells(e: DataFrame, numClusters: Int, seed: Long): DataFrame = {
-    import org.apache.spark.ml.clustering.KMeans
-    val k = if (numClusters > 0) numClusters
-      else math.max(16L, e.count() / 1000L).toInt
-    val model = new KMeans().setK(k).setSeed(seed)
-      .setFeaturesCol("features").fit(e)
-    model.transform(e)
-      .select(col("vec_id"), col("embedding"), col("n2"),
-        col("prediction").cast("int").as("cell"))
-  }
-
-  /** The cell assignment alone (vec_id, cell) with the same auto-scaled
-    * k as [[semDedupKeep]] — the surface the cluster-size-bound spec
-    * asserts on without paying the within-cell prune.
-    */
-  def semDedupCells(
-      embeddings: DataFrame, numClusters: Int = 0, seed: Long = 42L): DataFrame = {
-    // persist the pinned k-means input (count + fit + transform all read
-    // it); the eager localCheckpoint makes the small (vec_id, cell)
-    // result a leaf so the input can unpersist before returning
-    val e = kmeansInput(embeddings).persist()
-    try assignCells(e, numClusters, seed).select("vec_id", "cell").localCheckpoint()
-    finally e.unpersist(blocking = false)
-  }
-
-  /** The within-cell prune tail shared by the trained and
-    * pinned-centroid forms: a vector is dropped when a lower-id member
-    * of its own cell clears the cosine threshold.
-    */
-  private[sim] def pruneCells(assigned: DataFrame, tau: Double): DataFrame = {
-    val a = assigned.select(col("cell"), col("vec_id"),
-      col("embedding").as("ea"), col("n2").as("na"))
-    val b = assigned.select(col("cell"), col("vec_id").as("vec_b"),
-      col("embedding").as("eb"), col("n2").as("nb"))
-    val near = a.join(b, Seq("cell"))
-      .filter(col("vec_b") < col("vec_id"))
-      .withColumn("cosine", dot("ea", "eb") / (sqrt(col("na")) * sqrt(col("nb"))))
-      .filter(col("cosine") >= tau)
-      .groupBy("cell", "vec_id")
-      .agg(min("vec_b").as("dup_of"), count(lit(1)).as("n_near"))
-    assigned.select("vec_id", "cell")
-      .join(near, Seq("cell", "vec_id"), "left")
-      .select(
-        col("vec_id"), col("cell"),
-        col("dup_of").isNull.as("keep"),
-        col("dup_of"),
-        coalesce(col("n_near"), lit(0L)).as("n_near"))
-      .orderBy("vec_id")
-  }
-
-  def semDedupKeep(
-      embeddings: DataFrame, numClusters: Int = 0, tau: Double = 0.7,
-      seed: Long = 42L): DataFrame = {
-    val e = kmeansInput(embeddings).persist()
-    try pruneCells(assignCells(e, numClusters, seed).persist(), tau)
-    finally e.unpersist(blocking = false)
-  }
-
-  /** The trained MLlib centroids of [[semDedupKeep]]'s k-means (same
-    * layout-pinned input, same seed), exposed so the committed serving
-    * fixture ([[SemDedupFixture]]) can be regenerated ([[FixtureGen]])
-    * and staleness-checked (FixtureSpec). Centroids live in the
-    * NORMALIZED space the assignment runs in.
+  /** The trained k-means centroids [[semDedupKeepPinned]],
+    * [[kmeansSizesPinned]] and the other pinned-centroid operators serve,
+    * exposed so the committed serving fixture ([[SemDedupFixture]]) can
+    * be regenerated ([[FixtureGen]]) and staleness-checked (FixtureSpec).
+    * The input is normalized (cosine geometry lives on the unit sphere,
+    * and raw-magnitude k-means would split a semantic group by scale
+    * before direction) and layout-pinned (fixed-count hash repartition +
+    * in-partition sort — MLlib init is layout-sensitive), so the
+    * centroids are byte-identical across cluster layouts. Centroids live
+    * in the NORMALIZED space the assignment runs in.
     */
   def trainSemDedupCentroids(
       embeddings: DataFrame, k: Int = 16, seed: Long = 42L): Array[Array[Double]] = {
     import org.apache.spark.ml.clustering.KMeans
-    val e = kmeansInput(embeddings).persist()
+    import org.apache.spark.ml.functions.array_to_vector
+    val e = withNorm(embeddings)
+      .repartition(8, col("vec_id")).sortWithinPartitions("vec_id")
+      .withColumn("features", array_to_vector(
+        expr("transform(embedding, x -> CAST(x AS DOUBLE) / sqrt(n2))")))
+      .persist()
     try {
       new KMeans().setK(k).setSeed(seed).setFeaturesCol("features").fit(e)
         .clusterCenters.map(_.toArray)
     } finally e.unpersist(blocking = false)
   }
 
-  /** [[semDedupKeep]] at PINNED centroids — the production serving mode
-    * (cluster centroids are a trained model artifact: fit offline once,
-    * then every corpus batch is assigned and pruned against the frozen
-    * cells), and the operating point at which the whole
-    * assign-then-prune pipeline is SQL-expressible and hence
-    * oracle-exact: assignment is an argmin of plain (x−c)² arithmetic
-    * over centroid literals (first index on ties, like the PQ encoder),
-    * computed on the same normalized vectors the trained fit uses, and
-    * the prune tail is the shared [[pruneCells]]. The in-query-trained
-    * form stays registered rows-only (`kmeans_clusters`) and
-    * spec-asserted; the fixture's provenance from
-    * [[trainSemDedupCentroids]] is pinned by FixtureSpec.
-    */
   /** Shared pinned-centroid argmin assignment — the Scala side of
     * [[pinnedAssignSqlCtes]], extracted so the four pinned-serving
     * operators (semDedup prune, sizes, silhouette, cluster keywords)
@@ -1064,10 +902,34 @@ private[sim] trait KnnCore {
         (array_position(col("ds"), array_min(col("ds"))) - 1).cast("int"))
   }
 
+  /** SemDeDup-style semantic dedup at PINNED centroids: assign every
+    * vector to its nearest committed cell, then prune within each cell —
+    * a vector is DROPPED when some lower-id member of its own cell sits
+    * above the cosine threshold, so each semantic-duplicate group keeps
+    * exactly its minimum surviving id (pinned, deterministic tie-break).
+    * This is the cluster-then-prune recipe that makes semantic dedup
+    * tractable at corpus scale: the quadratic comparison never crosses
+    * cell boundaries, so with the cell count grown ~n/1000 the per-cell
+    * self-join stays bounded (~cell-size² per cell, embarrassingly
+    * parallel across cells) instead of n² — the same reason [[ivfTopK]]
+    * beats brute force. Complements [[nearDupPairs]] (LSH finds textual
+    * near-copies at high cosine; trained clusters catch semantic
+    * redundancy at lower thresholds where random-projection bands lose
+    * recall).
+    *
+    * Centroids are a trained model artifact ([[trainSemDedupCentroids]]:
+    * fit offline once, then every corpus batch is assigned and pruned
+    * against the frozen cells), which is what makes the whole
+    * assign-then-prune pipeline SQL-expressible and hence oracle-exact:
+    * assignment is an argmin of plain (x−c)² arithmetic over centroid
+    * literals (first index on ties, like the PQ encoder), cosine is the
+    * fused [[graft.functions.DotProductFloat]] expression, and drop
+    * decisions compare ids.
+    */
   def semDedupKeepPinned(
       embeddings: DataFrame, centroids: Array[Array[Double]],
       tau: Double): DataFrame = {
-    // persisted: pruneCells reads the assignment on both sides of the
+    // persisted: the prune reads the assignment on both sides of the
     // self-join plus the final left join — without the cache, the
     // 16-centroid × 64-dim argmin subtree re-evaluates three times per
     // action (the frame is |corpus| × ~40 B, and Bench's between-rep
@@ -1075,15 +937,26 @@ private[sim] trait KnnCore {
     val assigned = pinnedAssign(embeddings, centroids)
       .select("vec_id", "embedding", "n2", "cell")
       .persist()
-    pruneCells(assigned, tau)
+    val a = assigned.select(col("cell"), col("vec_id"),
+      col("embedding").as("ea"), col("n2").as("na"))
+    val b = assigned.select(col("cell"), col("vec_id").as("vec_b"),
+      col("embedding").as("eb"), col("n2").as("nb"))
+    val near = a.join(b, Seq("cell"))
+      .filter(col("vec_b") < col("vec_id"))
+      .withColumn("cosine", dot("ea", "eb") / (sqrt(col("na")) * sqrt(col("nb"))))
+      .filter(col("cosine") >= tau)
+      .groupBy("cell", "vec_id")
+      .agg(min("vec_b").as("dup_of"), count(lit(1)).as("n_near"))
+    assigned.select("vec_id", "cell")
+      .join(near, Seq("cell", "vec_id"), "left")
+      .select(
+        col("vec_id"), col("cell"),
+        col("dup_of").isNull.as("keep"),
+        col("dup_of"),
+        coalesce(col("n_near"), lit(0L)).as("n_near"))
+      .orderBy("vec_id")
   }
 
-  /** DuckDB twin of [[semDedupKeepPinned]]: normalized vectors via
-    * list_transform (elementwise — no summation-order seam), unrolled
-    * per-centroid 64-term (x−c)² sums in Spark's fold order, LEAST +
-    * first-match CASE argmin, then the standard pair-join prune with
-    * the proven fused dot product.
-    */
   /** Shared CTE chain (`e` → `nv` → `cd` → `asg`) assigning every
     * vector to its nearest PINNED centroid: normalized vectors via
     * list_transform (elementwise — no summation-order seam), unrolled
@@ -1123,6 +996,10 @@ private[sim] trait KnnCore {
        |  FROM (SELECT *, $least AS md FROM cd))""".stripMargin
   }
 
+  /** DuckDB twin of [[semDedupKeepPinned]]: the [[pinnedAssignSqlCtes]]
+    * assignment, then the standard pair-join prune with the proven fused
+    * dot product.
+    */
   def semDedupKeepPinnedSql(
       centroids: Array[Array[Double]], tau: Double): String = {
     s"""WITH ${pinnedAssignSqlCtes(centroids)},
@@ -1139,13 +1016,14 @@ private[sim] trait KnnCore {
        |ORDER BY a.vec_id""".stripMargin
   }
 
-  /** [[kmeansClusterSizes]]'s reporting surface at PINNED centroids —
-    * the k-means family's oracle-exact operating point: assignment is
-    * the same literal-centroid argmin as [[semDedupKeepPinned]]
-    * (normalized space), and the per-cluster size + norm-range rollup
-    * is plain aggregation (sqrt is IEEE correctly-rounded, so min/max
-    * over sqrt(n2) are cross-engine exact). The in-query-trained
-    * k-means|| form stays registered rows-only (`kmeans_clusters`).
+  /** K-means cluster sizes + per-cluster norm range at PINNED
+    * centroids — the IVF coarse-quantizer building block
+    * ([[bucketedTopK]]'s sign-buckets are the degenerate no-training
+    * version of these centroids), and the k-means family's oracle-exact
+    * operating point: assignment is the same literal-centroid argmin as
+    * [[semDedupKeepPinned]] (normalized space), and the per-cluster size
+    * + norm-range rollup is plain aggregation (sqrt is IEEE
+    * correctly-rounded, so min/max over sqrt(n2) are cross-engine exact).
     */
   def kmeansSizesPinned(
       embeddings: DataFrame, centroids: Array[Array[Double]]): DataFrame = {

@@ -23,8 +23,8 @@ private[sim] trait KnnQuant extends KnnCore {
     * Lloyd's loop whose every iteration is exact integer arithmetic, so
     * the TRAINER itself (not just a frozen-centroid serving point) is
     * replayable step-for-step by the SQL oracle. This closes the gap the
-    * MLlib leg can't ([[kmeansClusterSizes]] stays rows-only: k-means‖
-    * init + double accumulation are not SQL-expressible); the same move
+    * MLlib trainer ([[trainSemDedupCentroids]]) can't: k-means‖ init +
+    * double accumulation are not SQL-expressible; the same move
     * that promoted the BPE trainer (`bpe_train`) and the HLL estimate
     * (`cardinality_hll`) to oracle-exact.
     *
@@ -407,7 +407,7 @@ private[sim] trait KnnQuant extends KnnCore {
     * of the PRUNED search against the exhaustive integer-L2 ranking over
     * the same trained index — one training pass feeds both legs, one row
     * out, fully in-plan. Completes the measurement-query pattern every
-    * approximate path here ships ([[pcaRecall]], [[sq8Recall]]).
+    * approximate path here ships ([[pcaRecallPinned]], [[sq8Recall]]).
     */
   def ivfLloydRecall(
       embeddings: DataFrame, nQueries: Int = 10, k: Int = 5,
@@ -1085,11 +1085,6 @@ private[sim] trait KnnQuant extends KnnCore {
       .orderBy("query_id", "rank")
   }
 
-  /** recall@k of [[ivfPqResidualTopK]] against the exact integer-L2
-    * ranking over the same quantized domain (the [[ivfLloydRecall]]
-    * exact leg) — one row, with the variant labeled so residual and
-    * no-residual runs union into one comparable frame.
-    */
   /** Exact integer-L2 top-k over the quantized domain, no cache (one
     * corpus scan plus a pushdown-filtered query scan) — the recall
     * experiments' ground-truth leg.
@@ -1132,22 +1127,14 @@ private[sim] trait KnnQuant extends KnnCore {
         (col("hits").cast("double") / col("n_exact")).as("recall"))
   }
 
-  def ivfPqResidualRecall(
-      embeddings: DataFrame, nQueries: Int = 10, k: Int = 5,
-      cells: Int = 8, iters: Int = 2, nprobe: Int = 2,
-      m: Int = 16, nC: Int = 16, pqIters: Int = 3,
-      residual: Boolean = true): DataFrame =
-    ivfPqResidualRecallRow(
-      ivfCoarseOf(embeddings, nQueries, cells, iters, nprobe),
-      exactIntTopK(embeddings, nQueries, k),
-      k, cells, nprobe, m, nC, pqIters, residual)
-
-  /** Both variants of the residual-vs-no-residual experiment off ONE
-    * coarse train and ONE exact ranking (r17; the registration formerly
-    * ran [[ivfPqResidualRecall]] twice, duplicating the identical Lloyd
-    * chain, home assignment, probe sets and brute-force leg — only the
-    * PQ codebooks differ between the variants). Output rows are
-    * bit-identical to the two independent runs.
+  /** recall@k of [[ivfPqResidualTopK]] against the exact integer-L2
+    * ranking over the same quantized domain (the [[ivfLloydRecall]]
+    * exact leg) — one row per variant, labeled so the residual and
+    * no-residual runs union into one comparable frame. Both variants run
+    * off ONE coarse train and ONE exact ranking (r17): the Lloyd chain,
+    * home assignment, probe sets and brute-force leg are identical
+    * between them — only the PQ codebooks differ. Each output row is
+    * bit-identical to an independent run of its variant.
     */
   def ivfPqResidualRecallBoth(
       embeddings: DataFrame, nQueries: Int = 10, k: Int = 5,
@@ -1451,7 +1438,7 @@ private[sim] trait KnnQuant extends KnnCore {
        |SELECT query_id, neighbor_id, CAST(rn AS INTEGER) AS "rank", adist
        |FROM rr WHERE rn <= $k ORDER BY query_id, "rank"""".stripMargin
 
-  /** DuckDB twin of the two-variant [[ivfPqResidualRecall]] union: one
+  /** DuckDB twin of [[ivfPqResidualRecallBoth]]: one
     * shared coarse prefix + exact leg, the residual (r_) and raw (n_)
     * training/encode/search blocks side by side, one recall row each.
     */

@@ -674,8 +674,8 @@ object Streams {
     * text is never touched after the one base build), write verdicts,
     * then append ONLY the batch's own signatures as `delta_b{N}` —
     * per-doc rows keyed by doc_id, so deltas are disjoint by
-    * construction and base ∪ deltas IS [[graft.dedup.Dedup
-    * .mergeLshIndex]]'s plain union, bit-for-bit. State WRITE cost is
+    * construction and base ∪ deltas IS the plain union of the per-batch
+    * [[graft.dedup.Dedup.lshIndex]] frames, bit-for-bit. State WRITE cost is
     * O(batch); no bloom versioning is needed because the signature
     * index has no residual-membership prefilter. Replay-idempotent for
     * the same reason as the exact-index fold: state is re-read from
@@ -758,13 +758,6 @@ object Streams {
         .write.mode("overwrite").parquet(s"$outDir/b$batchId")
     }
   }
-
-  /** S9 as a stream: idempotent append (DO NOTHING) — anti-join each batch
-    * against the sink before appending. Ref: ingestor.py:71. Used by the
-    * streaming spec; same rewrite pattern as above.
-    */
-  def appendDoNothing(existing: DataFrame, batch: DataFrame, keys: Seq[String]): DataFrame =
-    existing.unionByName(batch.join(existing, keys, "left_anti"))
 
   /** Gap sessions via `flatMapGroupsWithState` — the fully-custom state
     * machine Structured Streaming offers when `session_window`'s built-in

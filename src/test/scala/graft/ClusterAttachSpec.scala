@@ -97,7 +97,7 @@ class ClusterAttachSpec extends SparkSpec {
     def attachSeq(first: org.apache.spark.sql.DataFrame,
         second: org.apache.spark.sql.DataFrame) = {
       val labels1 = Dedup.attachToClusters(labels0, idx0, first)
-      Dedup.attachToClusters(labels1, Dedup.mergeLshIndex(idx0, first), second)
+      Dedup.attachToClusters(labels1, idx0.unionByName(Dedup.lshIndex(first)), second)
         .orderBy("doc_id").as[(Long, Long)].collect().toSeq
     }
     val pq = attachSeq(p, q)

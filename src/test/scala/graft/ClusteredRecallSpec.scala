@@ -69,10 +69,9 @@ class ClusteredRecallSpec extends SparkSpec {
     // (codes collapse — the PQ analogue of SQ8's near-tie failure), while
     // residual codes describe the within-cell geometry the final ranking
     // needs. This is WHY FAISS IndexIVFPQ encodes residuals.
-    val res = Knn.ivfPqResidualRecall(emb, residual = true)
-      .collect().head.getAs[Double]("recall")
-    val raw = Knn.ivfPqResidualRecall(emb, residual = false)
-      .collect().head.getAs[Double]("recall")
+    val recall = Knn.ivfPqResidualRecallBoth(emb).collect()
+      .map(r => r.getAs[String]("variant") -> r.getAs[Double]("recall")).toMap
+    val (res, raw) = (recall("residual"), recall("no_residual"))
     assert(res >= raw,
       s"residual must be >= no-residual at equal nprobe: residual=$res raw=$raw")
     assert(res >= 0.5, s"residual coding should carry real ranking signal, got $res")

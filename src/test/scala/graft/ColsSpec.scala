@@ -47,17 +47,13 @@ class ColsSpec extends SparkSpec {
     assert(r.toSeq == Seq(0, 1))
   }
 
-  test("minutesBetween accepts TIMESTAMP_NTZ (the round-1 NTZ regression)") {
-    val r = Seq(("2024-01-01 10:30:00", "2024-01-01 10:00:00")).toDF("a", "b")
-      .select(minutesBetween(col("a").cast("timestamp_ntz"), col("b").cast("timestamp_ntz")).as("m"))
-      .as[Double].collect()
-    assert(r.head == 30.0)
-  }
-
-  test("avgFiltered excludes out-of-range rows from numerator and denominator") {
-    val r = Seq(0.1, 1.0, 2.0, 100.0).toDF("x")
-      .select(avgFiltered(col("x"), 0.5, 60.0).as("a")).as[Double].collect()
-    assert(r.head == 1.5) // only 1.0 and 2.0 qualify
+  test("microsBetween accepts TIMESTAMP_NTZ (the round-1 NTZ regression)") {
+    // unix_micros rejects NTZ input outright; the explicit cast inside
+    // microsBetween is what lets the headway lag run over NTZ columns
+    val r = Seq(("2024-01-01 10:30:00.000001", "2024-01-01 10:00:00")).toDF("a", "b")
+      .select(microsBetween(col("a").cast("timestamp_ntz"), col("b").cast("timestamp_ntz")).as("us"))
+      .as[Long].collect()
+    assert(r.head == 30L * 60 * 1000000 + 1)
   }
 
   test("detAvg ignores nulls like AVG") {

@@ -76,7 +76,7 @@ class CurationOpsSpec extends SparkSpec {
   }
 
   test("near-dedup keep: transitive cluster keeps one representative") {
-    val keep = Dedup.nearDedupKeep(docs).collect()
+    val keep = Dedup.nearDedupKeepFrom(Dedup.dedupClusters(docs)).collect()
       .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("cluster_size")).toMap
     // 0-1 exact dups and 2 near-dup chain into one cluster, rep = 0
     assert(keep(0L) == 3L)
@@ -88,7 +88,7 @@ class CurationOpsSpec extends SparkSpec {
   test("source overlap: near-dup pairs counted per unordered source pair") {
     // docs 0,1,2 (s0,s1,s2) form one near-dup cluster → 3 cross pairs;
     // singletons contribute nothing
-    val r = Dedup.sourceOverlap(docs).collect()
+    val r = Dedup.sourceOverlapFrom(Dedup.dedupClusters(docs), docs).collect()
       .map(x => (x.getAs[String]("source_x"), x.getAs[String]("source_y")) ->
         x.getAs[Long]("n_pairs")).toMap
     assert(r == Map(("s0", "s1") -> 1L, ("s0", "s2") -> 1L, ("s1", "s2") -> 1L))
@@ -108,9 +108,10 @@ class CurationOpsSpec extends SparkSpec {
         val tail = if (rnd.nextBoolean()) "" else s" variant ${rnd.nextInt(3)}"
         (i.toLong, s"$base$tail", s"s${rnd.nextInt(4)}")
       }.toDF("doc_id", "text", "source")
-      val fast = Dedup.sourceOverlap(corpus).collect()
+      val labels = Dedup.dedupClusters(corpus)
+      val fast = Dedup.sourceOverlapFrom(labels, corpus).collect()
         .map(r => (r.getString(0), r.getString(1)) -> r.getAs[Long]("n_pairs")).toMap
-      val lab = Dedup.dedupClusters(corpus)
+      val lab = labels
         .filter(col("cluster_size") > 1)
         .join(corpus.select("doc_id", "source"), Seq("doc_id"))
       val naive = lab.select(col("cluster_id"), col("doc_id").as("a"), col("source").as("sa"))
@@ -174,21 +175,41 @@ class CurationOpsSpec extends SparkSpec {
     assert(a == b)
   }
 
-  test("quality classifier learns the heuristic signal (AUC band) on testdata") {
+  /** sf0.001 documents scored by the committed quality model. */
+  private def pinnedScores(): org.apache.spark.sql.DataFrame = {
+    import graft.ml.QualityFixture
     val d = TestdataAdapter.table(spark, "/root/testdata/sf0.001", "documents")
-    val m = QualityClassifier.trainEval(d).collect().head
-    val auc = m.getAs[Double]("auc")
-    val pos = m.getAs[Double]("train_pos_rate")
-    assert(m.getAs[Long]("n_train") + m.getAs[Long]("n_test") == 500L)
-    // weak labels come from token-level heuristics; hashed BoW + LR must
-    // recover most of that signal on held-out docs
-    assert(auc > 0.7, s"held-out AUC $auc too low")
-    assert(pos > 0.3 && pos < 0.7, s"weak-label classes unbalanced: $pos")
+      .select("doc_id", "text", "lang", "source", "n_chars")
+    QualityClassifier.scorePinned(d, QualityFixture.labelThreshold,
+      QualityFixture.interceptE9, QualityFixture.weightsE9)
+  }
+
+  test("quality classifier learns the heuristic signal (AUC band) on testdata") {
+    import org.apache.spark.ml.evaluation.BinaryClassificationEvaluator
+    val bucket = graft.ml.HashSplit.hashBucket(col("doc_id"), 100)
+    val s = pinnedScores().withColumn("label", col("label").cast("double")).persist()
+    try {
+      // the committed model trained on the bucket < 80 half only
+      val (train, test) = (s.filter(bucket < 80), s.filter(bucket >= 80))
+      assert(train.count() + test.count() == 500L)
+      val auc = new BinaryClassificationEvaluator()
+        .setLabelCol("label").setRawPredictionCol("p_quality")
+        .setMetricName("areaUnderROC").evaluate(test)
+      val pos = train.agg(avg("label")).head.getDouble(0)
+      // weak labels come from token-level heuristics; hashed BoW + LR must
+      // recover most of that signal on held-out docs
+      assert(auc > 0.7, s"held-out AUC $auc too low")
+      assert(pos > 0.3 && pos < 0.7, s"weak-label classes unbalanced: $pos")
+    } finally s.unpersist(blocking = false)
   }
 
   test("threshold sweep: recall falls as threshold rises; counts reconcile") {
+    import graft.ml.QualityFixture
     val d = TestdataAdapter.table(spark, "/root/testdata/sf0.001", "documents")
-    val r = QualityClassifier.thresholdSweep(d, thresholds = Seq(0.2, 0.5, 0.8)).collect()
+      .select("doc_id", "text", "lang", "source", "n_chars")
+    val r = QualityClassifier.thresholdSweepPinned(d, QualityFixture.labelThreshold,
+      QualityFixture.interceptE9, QualityFixture.weightsE9,
+      thresholds = Seq(0.2, 0.5, 0.8)).collect()
     assert(r.length == 3)
     val recalls = r.map(_.getAs[Double]("recall"))
     assert(recalls.sameElements(recalls.sorted.reverse), "recall must be non-increasing")
@@ -231,8 +252,7 @@ class CurationOpsSpec extends SparkSpec {
   }
 
   test("quality scores cover the corpus and stay in [0,1]") {
-    val d = TestdataAdapter.table(spark, "/root/testdata/sf0.001", "documents")
-    val s = QualityClassifier.scoreDocuments(d)
+    val s = pinnedScores()
     assert(s.count() == 500L)
     assert(s.filter(col("p_quality") < 0 || col("p_quality") > 1).isEmpty)
   }

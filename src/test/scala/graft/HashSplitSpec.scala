@@ -107,7 +107,8 @@ class HashSplitSpec extends SparkSpec {
     import graft.dedup.Dedup
     val docs = TestdataAdapter.table(spark, "/root/testdata/sf0.001", "documents")
       .select("doc_id", "text", "lang", "source", "n_chars")
-    val assign = Dedup.clusterSplitAssign(docs).select("doc_id", "split").persist()
+    val assign = Dedup.clusterSplitAssignFrom(Dedup.dedupClusters(docs))
+      .select("doc_id", "split").persist()
     // every LSH candidate pair — the exact frame splitLeakage audits —
     // must land with both sides in the SAME split
     val pairs = Dedup.minhashPairs(docs)
@@ -131,7 +132,7 @@ class HashSplitSpec extends SparkSpec {
     import graft.dedup.Dedup
     val docs = TestdataAdapter.table(spark, "/root/testdata/sf0.001", "documents")
       .select("doc_id", "text", "lang", "source", "n_chars")
-    val kept = Dedup.clusterBestKeep(docs).persist()
+    val kept = Dedup.clusterBestKeepFrom(Dedup.dedupClusters(docs), docs).persist()
     val perCluster = kept.groupBy("cluster_id")
       .agg(sum(when(col("keep"), 1).otherwise(0)).as("n_keep"),
         max(when(col("keep"), col("quality_score"))).as("kept_q"),

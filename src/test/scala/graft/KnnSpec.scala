@@ -167,7 +167,9 @@ class KnnSpec extends SparkSpec {
 
   test("PCA shortlist + rerank recovers most of the exact top-k") {
     val e = TestdataAdapter.table(spark, "/root/testdata/sf0.001", "embeddings")
-    val r = Knn.pcaRecall(e, nQueries = 20, k = 5).collect().head
+    // fit the basis on this corpus (the fixture trainer), then serve it
+    val (basis, explained) = Knn.trainPcaBasis(e)
+    val r = Knn.pcaRecallPinned(e, basis, explained, nQueries = 20, k = 5).collect().head
     val ev = r.getAs[Double]("explained_variance")
     val recall = r.getAs[Double]("recall_at_k")
     assert(ev > 0.0 && ev <= 1.0)
@@ -180,8 +182,8 @@ class KnnSpec extends SparkSpec {
   test("IVF cells stay balanced on the testdata embeddings") {
     val e = TestdataAdapter.table(spark, "/root/testdata/sf0.001", "embeddings")
     val n = e.count()
-    // assignment balance via the cluster-size query (same quantizer)
-    val sizes = Knn.kmeansClusterSizes(e, k = 16)
+    // assignment balance of the committed 16-cell k-means quantizer
+    val sizes = Knn.kmeansSizesPinned(e, graft.sim.SemDedupFixture.centroids)
       .select("n").as[Long].collect()
     assert(sizes.sum == n)
     // no cell degenerates to a majority bucket — the per-cell join stays
@@ -221,34 +223,6 @@ class KnnSpec extends SparkSpec {
     assert(r.toSeq == Seq((0L, 1L)))
   }
 
-  test("semdedup auto-k grows with n and keeps cells bounded on a mass-skewed corpus") {
-    // 90% of the mass lies on a wide arc inside span(dim0,dim1) — one
-    // "domain" dominating the corpus — with a thin tail over 6
-    // orthogonal directions. At n=24,000 the auto rule picks k=24
-    // (n/1000), and minimizing SSE forces k-means to slice the heavy
-    // arc, so no cell approaches corpus size and the |cell|² prune
-    // stays bounded. A fixed k=16 would also pass here, but the rule
-    // keeps E[|cell|] constant as n grows 1000× — that is what the
-    // assertion on k pins.
-    val n = 24000
-    val e = (0 until n).map { i =>
-      val a = Array.fill(64)(0f)
-      if (i % 10 != 0) {
-        val t = (i % 997).toFloat / 997f * 0.785f
-        a(0) = math.cos(t).toFloat
-        a(1) = math.sin(t).toFloat
-      } else {
-        a(2 + (i / 10) % 6) = 1f
-      }
-      (i.toLong, a, 0)
-    }.toDF("vec_id", "embedding", "label")
-    val sizes = Knn.semDedupCells(e).groupBy("cell").count()
-      .select("count").as[Long].collect()
-    assert(sizes.sum == n)
-    assert(sizes.length > 16, s"auto-k picked only ${sizes.length} cells at n=$n")
-    assert(sizes.max <= n / 4, s"largest cell ${sizes.max} of $n — prune no longer bounded")
-  }
-
   test("semdedup: within-cluster duplicates drop to the min id, distinct vectors keep") {
     // two tight semantic groups (parallel vectors → cosine 1 within,
     // 0 across) plus a lone orthogonal vector
@@ -257,7 +231,9 @@ class KnnSpec extends SparkSpec {
       (2L, unit(1), 1), (7L, scaled(1, 3f), 1),                           // group B
       (9L, unit(2), 2))                                                   // lone
       .toDF("vec_id", "embedding", "label")
-    val r = Knn.semDedupKeep(e, numClusters = 3, tau = 0.9).collect()
+    // one pinned centroid per group direction (normalized space)
+    val centroids = Array(0, 1, 2).map(i => unit(i).map(_.toDouble))
+    val r = Knn.semDedupKeepPinned(e, centroids, tau = 0.9).collect()
       .map(x => x.getAs[Long]("vec_id") ->
         (x.getAs[Boolean]("keep"), Option(x.getAs[java.lang.Long]("dup_of")).map(_.longValue())))
       .toMap

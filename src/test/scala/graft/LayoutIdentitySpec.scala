@@ -1,7 +1,7 @@
 package graft
 
-/** Byte-identity across partition layouts for the rows-only queries
-  * (the ones DuckDB cannot twin: trained quantizers, k-means, the
+/** Byte-identity across partition layouts for the queries and trainers
+  * whose machinery is layout-sensitive (trained quantizers, k-means, the
   * learned quality model). The failure mode a different `local[n]`
   * exposes is never the thread count itself — it is the different
   * PARTITION LAYOUT (shuffle fan-out, input split boundaries) that a
@@ -11,28 +11,36 @@ package graft
   * partition counts AND different input split sizes — inside the one
   * shared test JVM, and requires the full collected output (values AND
   * row order) to match exactly. semdedup/bpe carry the same claim in
-  * their own suites; rf_demand_mae/ml_run_record pin layout via
-  * DemandModel.pinLayout (see StreamsMlSpec).
+  * their own suites; the pinned RF forest's trainer pins its layout via
+  * DemandModel.pinLayout.
   */
 class LayoutIdentitySpec extends SparkSpec {
+  import org.apache.spark.sql.{DataFrame, SparkSession}
 
   private val dir = "/root/testdata/sf0.001"
-  // plus two oracle-checked queries whose machinery is layout-sensitive
-  // by construction: ccnet_buckets (zipWithIndex global numbering) and
-  // search_bm25 (bounded-heap TopKPerGroup keep-set). kmeans_clusters /
-  // quality_classifier were retired from the registry in r13 (their
-  // trained legs live in spec coverage), so they run here as direct
-  // function calls rather than registry lookups.
-  private val cases: Seq[(String, (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame)] = Seq(
+  // registry queries, including two oracle-checked ones whose machinery
+  // is layout-sensitive by construction: ccnet_buckets (zipWithIndex
+  // global numbering) and search_bm25 (bounded-heap TopKPerGroup
+  // keep-set); then the MLlib trainers that regenerate the committed
+  // SemDedupFixture (k-means centroids) and QualityFixture (LR weights),
+  // collected to rows — a fixture is only as reproducible as its trainer
+  private val cases: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     "knn_ivf", "pq_topk", "pca_recall", "ccnet_buckets", "search_bm25")
     .map(n => n -> SparkEntry.queries(n)) ++ Seq(
-    ("kmeans_clusters", (s: org.apache.spark.sql.SparkSession, d: String) =>
-      graft.sim.Knn.kmeansClusterSizes(TestdataAdapter.table(s, d, "embeddings"))),
-    ("quality_classifier", (s: org.apache.spark.sql.SparkSession, d: String) =>
-      graft.ml.QualityClassifier.trainEval(TestdataAdapter.table(s, d, "documents"))))
+    ("kmeans_clusters", (s: SparkSession, d: String) => {
+      import s.implicits._
+      graft.sim.Knn.trainSemDedupCentroids(TestdataAdapter.table(s, d, "embeddings"))
+        .zipWithIndex.toSeq.map { case (c, i) => (i, c.toSeq) }.toDF("cell", "centroid")
+    }),
+    ("quality_classifier", (s: SparkSession, d: String) => {
+      import s.implicits._
+      val (thr, iE9, wE9) = graft.ml.QualityClassifier.trainPinnedQuality(
+        TestdataAdapter.table(s, d, "documents"))
+      Seq((thr, iE9, wE9.toSeq)).toDF("label_threshold", "intercept_e9", "weights_e9")
+    }))
 
   /** Run `q` under the given layout knobs and collect its rows. */
-  private def run(q: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame,
+  private def run(q: (SparkSession, String) => DataFrame,
       shufflePartitions: Int, splitBytes: String): Seq[String] = {
     val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
     val prevSplit = spark.conf.get("spark.sql.files.maxPartitionBytes")

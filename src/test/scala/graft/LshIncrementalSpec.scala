@@ -4,8 +4,9 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.dedup.Dedup
 
-/** The maintained near-dup LSH index (Dedup.{lshIndex, mergeLshIndex,
-  * classifyNearDupIncremental}): merged state must classify exactly like
+/** The maintained near-dup LSH index (Dedup.{lshIndex,
+  * classifyNearDupIncremental}; merging a batch is a plain union with its
+  * own lshIndex): merged state must classify exactly like
   * an index rebuilt from scratch over the union, and classification
   * against persisted state must never rescan corpus text.
   */
@@ -25,7 +26,7 @@ class LshIncrementalSpec extends SparkSpec {
     val b2 = docs.filter(col("doc_id") % 3 === 0 && col("doc_id") % 2 =!= 0)
     val state = Files.createTempDirectory("graft_lsh_spec").toString
     val idx0 = persist(Dedup.lshIndex(corpus), s"$state/v0")
-    val idx1 = persist(Dedup.mergeLshIndex(idx0, b1), s"$state/v1")
+    val idx1 = persist(idx0.unionByName(Dedup.lshIndex(b1)), s"$state/v1")
     val viaMerge = Dedup.classifyNearDupIncremental(idx1, b2)
     val viaRebuild = Dedup.classifyNearDupIncremental(
       Dedup.lshIndex(corpus.unionByName(b1)), b2)

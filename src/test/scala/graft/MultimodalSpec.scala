@@ -13,7 +13,7 @@ class MultimodalSpec extends SparkSpec {
 
   test("expression path and codec-template path produce identical features") {
     val expr = Multimodal.extractFeatures(docs)
-    val codec = Multimodal.extractFeaturesWithCodec(docs)(Multimodal.stubCodec)
+    val codec = Multimodal.extractFeaturesWithCodec(docs)(MultimodalSpec.stubCodec)
     // same names+types (nullability flags differ between expression and
     // case-class encoders; the driver compare ignores them too)
     assert(expr.schema.map(f => (f.name, f.dataType)) ==
@@ -26,7 +26,7 @@ class MultimodalSpec extends SparkSpec {
     assert(!plan.contains("MapPartitions") && !plan.contains("DeserializeToObject"))
     // the public entry checkpoints the decoded rows (r18) — the iterator
     // shape is asserted on the pre-materialization core
-    val codecPlan = Multimodal.extractFeaturesWithCodecCore(docs)(Multimodal.stubCodec)
+    val codecPlan = Multimodal.extractFeaturesWithCodecCore(docs)(MultimodalSpec.stubCodec)
       .queryExecution.executedPlan.toString
     assert(codecPlan.contains("MapPartitions")) // the template keeps the iterator shape
   }
@@ -242,5 +242,19 @@ class MultimodalSpec extends SparkSpec {
       }
     }
     zoo.unpersist()
+  }
+}
+
+object MultimodalSpec {
+
+  /** The stub decode [[Multimodal.extractFeatures]] computes as
+    * expressions — fake dimensions from bytes 0/1 of the payload's
+    * sha256 — as a payload→dims codec, for running the stub through the
+    * codec-template path. Lives on the companion object so the codec
+    * closure captures no spec instance.
+    */
+  def stubCodec(payload: Array[Byte]): Option[(Int, Int)] = {
+    val hash = java.security.MessageDigest.getInstance("SHA-256").digest(payload)
+    Some(((hash(0) & 0xff) + 1, (hash(1) & 0xff) + 1))
   }
 }

@@ -101,18 +101,6 @@ class PropertiesSpec extends SparkSpec {
     }
   }
 
-  test("property: S9 append is idempotent for any batch/state pair") {
-    val gen = Gen.listOfN(30, Gen.chooseNum(0L, 20L))
-    (1 to 5).foreach { _ =>
-      val existing = sample(gen, 1).head.distinct.map(k => (k, s"e$k")).toDF("k", "v")
-      val batch = sample(gen, 1).head.distinct.map(k => (k, s"b$k")).toDF("k", "v")
-      val once = graft.streaming.Streams.appendDoNothing(existing, batch, Seq("k"))
-      val twice = graft.streaming.Streams.appendDoNothing(once, batch, Seq("k"))
-      assert(once.count() == twice.count())
-      assert(once.exceptAll(twice).isEmpty)
-    }
-  }
-
   test("property: boilerplate scrub conserves tokens; cleaned text ⊆ original tokens") {
     val word = Gen.oneOf("spark", "join", "scan", "agg", "sort", "merge", "key")
     val gen = Gen.chooseNum(0, 12).flatMap(n => Gen.listOfN(n, word))

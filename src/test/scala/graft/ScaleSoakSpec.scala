@@ -139,7 +139,8 @@ class ScaleSoakSpec extends SparkSpec {
   soak("packed_sequences")(d => TextOps.packedSequences(d))(baseDocs, bigDocs)
   // the two operators rewritten in round 6 — lock their new scale
   // shapes (count-based combinatorics; bloom prefilter + residual join)
-  soak("source_overlap")(Dedup.sourceOverlap)(baseDocs, bigDocs)
+  soak("source_overlap")(d => Dedup.sourceOverlapFrom(Dedup.dedupClusters(d), d))(
+    baseDocs, bigDocs)
   soak("bloom_new_docs")(d => Dedup.bloomNewDocs(
     d.filter(col("doc_id") % 3 =!= 0), d.filter(col("doc_id") % 3 === 0)))(
     baseDocs, bigDocs)
@@ -363,7 +364,7 @@ class ScaleSoakSpec extends SparkSpec {
     val idx0 = Dedup.lshIndex(corpus)
     Dedup.classifyNearDupIncremental(idx0, b1).withColumn("batch_seq", lit(1))
       .unionByName(
-        Dedup.classifyNearDupIncremental(Dedup.mergeLshIndex(idx0, b1), b2)
+        Dedup.classifyNearDupIncremental(idx0.unionByName(Dedup.lshIndex(b1)), b2)
           .withColumn("batch_seq", lit(2)))
   })(baseDocs, bigDocs)
 

@@ -8,17 +8,6 @@ import graft.ml.DemandModel
 class StreamsMlSpec extends SparkSpec {
   import spark.implicits._
 
-  test("S9 appendDoNothing is idempotent (twice ≡ once)") {
-    val existing = Seq((1L, "a"), (2L, "b")).toDF("event_id", "payload")
-    val batch = Seq((2L, "b2"), (3L, "c")).toDF("event_id", "payload")
-    val once = Streams.appendDoNothing(existing, batch, Seq("event_id"))
-    val twice = Streams.appendDoNothing(once, batch, Seq("event_id"))
-    assert(once.count() == 3)
-    assert(twice.count() == 3) // replayed batch adds nothing
-    // conflict keeps the EXISTING payload (DO NOTHING, not DO UPDATE)
-    assert(once.filter(col("event_id") === 2L).select("payload").as[String].head() == "b")
-  }
-
   test("streaming vehicle_hourly equals the batch view on sf0.001") {
     val dir = "/root/testdata/sf0.001"
     val stream = Streams.vehicleHourlyStream(spark, dir)
@@ -117,13 +106,6 @@ class StreamsMlSpec extends SparkSpec {
     val trainHours = train.select("hour_ts").distinct().as[Timestamp].collect().toSet
     val testHours = test.select("hour_ts").distinct().as[Timestamp].collect().toSet
     assert(trainHours.intersect(testHours).isEmpty)
-  }
-
-  test("RF demand model trains and evaluates on sf0.001 (MAE finite)") {
-    val ds = Pipelines.mlDataset(spark, "/root/testdata/sf0.001")
-    val (_, mae, nTrain, nTest) = DemandModel.trainPredict(DemandModel.withLabel(ds), numTrees = 10)
-    assert(!mae.isNaN && mae >= 0.0)
-    assert(nTrain > 0 && nTest > 0)
   }
 
   test("forestSql replays MLlib tree traversal exactly (flatten + CASE codegen)") {

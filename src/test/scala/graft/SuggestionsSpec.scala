@@ -99,7 +99,8 @@ class SuggestionsSpec extends SparkSpec {
       // default headway 12 → 5 trips/h; pred 150 → ppt 30 ∈ [24,45] → keep
       // → dropped by onlyChanges → needs_data in the export
       kpiRow("r_nd", 150.0, 0L, null, 0.0, 0)))
-    val rows = Export.exportRows(k, Suggestions.suggest(k))
+    val sugg = Suggestions.suggest(k)
+    val rows = Export.exportRows(k, sugg)
     val byRoute = rows.collect().map(r => r.getAs[String]("route_id") -> r).toMap
 
     val inc = byRoute("r_inc")
@@ -121,15 +122,17 @@ class SuggestionsSpec extends SparkSpec {
     assert(nd.getAs[Double]("priority_score") == 0.0)
     assert(nd.getAs[Double]("confidence") == 0.0)
 
-    // nested twin: same leaves under {kpi{}, suggestion{}}
-    val nested = Export.exportRowsNested(rows)
-    assert(nested.schema.fieldNames.toSeq == Seq("route_id", "hour_ts", "kpi", "suggestion"))
-    val nrow = nested.filter(col("route_id") === "r_inc").collect().head
-    val sug = nrow.getStruct(nrow.fieldIndex("suggestion"))
-    assert(sug.getAs[String]("status") == "ok")
-    assert(sug.getAs[Double]("recommended_headway_min") == inc.getAs[Double]("recommended_headway_min"))
-    val kpiStruct = nrow.getStruct(nrow.fieldIndex("kpi"))
-    assert(kpiStruct.getAs[Long]("active_vehicles") == 5L)
+    // nested payload: same leaves under {kpi{}, suggestion{}}
+    val payload = Export.routeRowsJson(rows, sugg)
+      .filter(col("route_id") === "r_inc").select("payload_json")
+    val keys = payload.select(expr("json_object_keys(payload_json)")).as[Seq[String]].head()
+    assert(keys == Seq("route_id", "hour_ts", "kpi", "suggestion"))
+    def leaf(path: String) =
+      payload.select(get_json_object(col("payload_json"), path)).as[String].head()
+    assert(leaf("$.suggestion.status") == "ok")
+    assert(leaf("$.suggestion.recommended_headway_min").toDouble ==
+      inc.getAs[Double]("recommended_headway_min"))
+    assert(leaf("$.kpi.active_vehicles") == "5")
   }
 
   test("D8 summary top: needs_data excluded, priority-desc order, capped at n") {
