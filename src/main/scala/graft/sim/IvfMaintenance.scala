@@ -79,7 +79,7 @@ object IvfMaintenance {
     lloydTrainGrid(e0, cells, iters)
 
   /** Per-cell stats of an assignment frame carrying (cell, d). */
-  private def cellStats(asg: DataFrame, suffix: String): DataFrame =
+  private[sim] def cellStats(asg: DataFrame, suffix: String): DataFrame =
     asg.groupBy("cell").agg(
       count(lit(1)).as(s"n_$suffix"),
       sum("d").as(s"inertia_$suffix"),
@@ -128,7 +128,7 @@ object IvfMaintenance {
     * `driftRatio` or a cell's batch share outgrows `shareRatio` × its
     * training share.
     */
-  private def driftReport(cen: DataFrame, ts: DataFrame, bs: DataFrame,
+  private[sim] def driftReport(cen: DataFrame, ts: DataFrame, bs: DataFrame,
       driftRatio: Double, shareRatio: Double): DataFrame = {
     def nullifZero(c: org.apache.spark.sql.Column) =
       when(c === 0, lit(null)).otherwise(c)

@@ -74,15 +74,24 @@ private[sim] trait KnnCore {
 
   def bruteForceTopKSql(nQueries: Int = 10, k: Int = 5): String =
     s"""WITH $NORM_CTE,
-       |q AS (SELECT vec_id AS query_id, embedding AS qe, n2 AS qn2 FROM e WHERE vec_id < $nQueries),
-       |s AS (SELECT q.query_id, c.vec_id AS neighbor_id,
-       |        (${dotSql("q.qe", "c.embedding")}) / (sqrt(q.qn2) * sqrt(c.n2)) AS cosine
-       |      FROM q, e c WHERE c.vec_id <> q.query_id),
-       |r AS (SELECT query_id, neighbor_id, cosine,
-       |        ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rn
-       |      FROM s)
+       |${cosineTopKSql(nQueries, k)}
        |SELECT query_id, neighbor_id, CAST(rn AS INTEGER) AS "rank", cosine
-       |FROM r WHERE rn <= $k ORDER BY query_id, "rank"""".stripMargin
+       |FROM br ORDER BY query_id, "rank"""".stripMargin
+
+  /** The CTEs of [[bruteForceTopKSql]] over NORM_CTE's `e`, shared by
+    * the recall twins' exact leg: `bq`/`bs` (query × other-vector
+    * cosines) and `br`, the top-k (query_id, neighbor_id, cosine, rn).
+    */
+  private[sim] def cosineTopKSql(nQueries: Int, k: Int): String =
+    s"""bq AS (SELECT vec_id AS query_id, embedding AS qe, n2 AS qn2
+       |       FROM e WHERE vec_id < $nQueries),
+       |bs AS (SELECT bq.query_id, c.vec_id AS neighbor_id,
+       |         (${dotSql("bq.qe", "c.embedding")}) / (sqrt(bq.qn2) * sqrt(c.n2)) AS cosine
+       |       FROM bq, e c WHERE c.vec_id <> bq.query_id),
+       |br AS (SELECT query_id, neighbor_id, cosine, rn FROM (
+       |         SELECT query_id, neighbor_id, cosine,
+       |           ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rn
+       |         FROM bs) WHERE rn <= $k)""".stripMargin
 
   /** Hard-negative mining for contrastive / retrieval training: for
     * each anchor (vec_id < nAnchors), the k most cosine-similar vectors
@@ -746,6 +755,12 @@ private[sim] trait KnnCore {
     * centering), so this is the trained projection with the basis
     * frozen. Projection is a narrow per-row matmul; the rerank join is
     * keyed by neighbor_id.
+    *
+    * The committed basis ([[PcaFixture]]) is fitted on the sf0.01
+    * embeddings. On any other corpus `pca_recall` measures how well that
+    * basis transfers, not what a basis fitted there reaches: on the
+    * sf0.001 embeddings the sf0.01 basis reads recall@5 0.41, where a
+    * basis fitted on sf0.001 itself clears 0.5.
     */
   def pcaRecallPinned(
       embeddings: DataFrame, basis: Array[Array[Double]],

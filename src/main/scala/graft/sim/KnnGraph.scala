@@ -52,7 +52,8 @@ import org.apache.spark.sql.functions._
   */
 object KnnGraph {
   import Knn.{Dim, lloydQuantized, lloydTrainGrid, lloydAssignGrid,
-    lloydSqlCtes}
+    lloydSqlCtes, ivfCoarseOf, ivfCandidates, intL2TopK, exactIntTopK,
+    recallRow, ivfCoarseSql, ivfSearchSql, exactSql, recallRowSql}
 
   /** How many nearest entry points the first beam keeps. */
   val EnterW = 2
@@ -475,76 +476,35 @@ object KnnGraph {
       beamW: Int = 8, hops: Int = 4, routeCells: Int = 8,
       cells: Int = 16, iters: Int = 2, nprobe: Int = 2): DataFrame = {
     val e0 = lloydQuantized(embeddings)
-    val intDist =
-      aggregate(zip_with(col("qq"), col("q"), (x, y) => (x - y) * (x - y)),
-        lit(0L), _ + _)
-    val w = Window.partitionBy("query_id").orderBy(col("d"), col("vec_id"))
-    val qset = e0.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("q").as("qq"))
-      .localCheckpoint()
-    val exact = e0.select("vec_id", "q").crossJoin(broadcast(qset))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("d", intDist)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"))
-      .localCheckpoint()
+    val exact = exactIntTopK(e0, nQueries, k).localCheckpoint()
     // ── graph leg
+    val qset = e0.filter(col("vec_id") < nQueries)
+      .select(col("vec_id").as("qid"), col("q").as("qq"))
+      .localCheckpoint()
     val (adj, entries) =
       buildGraph(e0, seedSize, rounds, m, beamW, hops, routeCells, iters)
-    val (beam, visited) = beamSearch(
-      qset.select(col("query_id").as("qid"), col("qq")),
+    val (beam, visited) = beamSearch(qset,
       adj, e0, entriesWithVecs(entries, e0),
       beamW, hops, withVisited = true)
     val gTop = beam.filter(col("cand") =!= col("qid"))
       .withColumn("rank", row_number().over(
         Window.partitionBy("qid").orderBy(col("d"), col("cand"))))
       .filter(col("rank") <= k)
-      .select(col("qid").as("query_id"), col("cand").as("neighbor_id"),
-        lit(1).as("hit"))
+      .select(col("qid").as("query_id"), col("cand").as("neighbor_id"))
     val gBudget = visited.filter(col("cand") =!= col("qid"))
       .groupBy("qid").agg(count(lit(1)).as("nc"))
       .agg(avg("nc").as("avg_candidates"))
-    val gRow = exact.join(gTop, Seq("query_id", "neighbor_id"), "left")
-      .agg(count(lit(1)).as("n_exact"),
-        sum(coalesce(col("hit"), lit(0))).as("hits"))
-      .crossJoin(gBudget)
-      .select(lit("graph").as("method"), col("avg_candidates"),
-        col("n_exact"), col("hits"),
-        (col("hits").cast("double") / col("n_exact")).as("recall"))
     // ── IVF leg (the ivfLloydRecall machinery at the same corpus)
-    val ivfGrid = lloydTrainGrid(e0, cells, iters)
-    val asg = lloydAssignGrid(e0, ivfGrid)
-      .select(col("vec_id"), col("j").as("cell"), col("q"))
-      .localCheckpoint()
-    val probes = lloydAssignGrid(e0.filter(col("vec_id") < nQueries), ivfGrid)
-      .select(col("vec_id").as("query_id"), col("q").as("qq"),
-        posexplode(col("ds")).as(Seq("cell", "cd")))
-      .withColumn("pr", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("cd"), col("cell"))))
-      .filter(col("pr") <= nprobe)
-      .select("query_id", "qq", "cell")
-      .localCheckpoint()
-    e0.unpersist(blocking = false)
-    val cand = asg.join(broadcast(probes), Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .localCheckpoint()
-    val iTop = cand
-      .withColumn("d", intDist)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        lit(1).as("hit"))
+    val cand = ivfCandidates(ivfCoarseOf(e0, e0.filter(col("vec_id") < nQueries),
+      cells, iters, nprobe)).localCheckpoint()
     val iBudget = cand.groupBy("query_id").agg(count(lit(1)).as("nc"))
       .agg(avg("nc").as("avg_candidates"))
-    val iRow = exact.join(iTop, Seq("query_id", "neighbor_id"), "left")
-      .agg(count(lit(1)).as("n_exact"),
-        sum(coalesce(col("hit"), lit(0))).as("hits"))
-      .crossJoin(iBudget)
-      .select(lit("ivf").as("method"), col("avg_candidates"),
-        col("n_exact"), col("hits"),
-        (col("hits").cast("double") / col("n_exact")).as("recall"))
-    gRow.unionByName(iRow).orderBy("method")
+    def row(method: String, top: DataFrame, budget: DataFrame): DataFrame =
+      recallRow(exact, top, lit(method).as("method")).crossJoin(budget)
+        .select("method", "avg_candidates", "n_exact", "hits", "recall")
+    row("graph", gTop, gBudget)
+      .unionByName(row("ivf", intL2TopK(cand, k), iBudget))
+      .orderBy("method")
   }
 
   /** DuckDB twin of [[graphRecall]]: the Lloyd prefix supplies the
@@ -557,77 +517,35 @@ object KnnGraph {
       beamW: Int = 8, hops: Int = 4, routeCells: Int = 8,
       cells: Int = 16, iters: Int = 2, nprobe: Int = 2,
       prelude: String = ""): String = {
-    val d1 = Dim + 1
+    def row(method: String, top: String, budget: String) = recallRowSql(
+      s"'$method' AS method, (SELECT avg_candidates FROM $budget) AS avg_candidates",
+      "br", top)
     s"""WITH $prelude${lloydSqlCtes(cells, iters)},
        |${lloydSqlCtes(routeCells, iters, prefix = "rt", includeNorm = false)},
-       |ex AS MATERIALIZED (
-       |  SELECT query_id, neighbor_id FROM (
-       |    SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-       |      ROW_NUMBER() OVER (PARTITION BY q.vec_id
-       |        ORDER BY ${pdistSql("q.q", "c.q")}, c.vec_id) AS rn
-       |    FROM e0 q JOIN e0 c ON c.vec_id <> q.vec_id
-       |    WHERE q.vec_id < $nQueries)
-       |  WHERE rn <= $k),
+       |${exactSql(nQueries, k)},
        |${buildSql("e0", s"rtc$iters", seedSize, rounds, m, beamW, hops)},
        |qs AS (SELECT vec_id AS qid, q AS qq FROM e0 WHERE vec_id < $nQueries),
        |${beamSeedSql("s_", "qs", "e0", beamW)},
        |${beamHopsSql("s_", "qs", s"au$rounds", "e0", beamW, hops)},
        |gtop AS (
-       |  SELECT qid AS query_id, cand AS neighbor_id, 1 AS hit FROM (
+       |  SELECT qid AS query_id, cand AS neighbor_id FROM (
        |    SELECT qid, cand,
        |      ROW_NUMBER() OVER (PARTITION BY qid ORDER BY d, cand) AS rk
        |    FROM s_bm$hops WHERE cand <> qid)
        |  WHERE rk <= $k),
-       |gvis AS (
-       |  SELECT qid, COUNT(*) AS nc FROM s_dc$hops
-       |  WHERE cand <> qid GROUP BY 1),
-       |gbud AS (SELECT AVG(nc) AS avg_candidates FROM gvis),
-       |grow AS (
-       |  SELECT 'graph' AS method, b.avg_candidates,
-       |    COUNT(*) AS n_exact,
-       |    CAST(SUM(COALESCE(g.hit, 0)) AS BIGINT) AS hits,
-       |    CAST(SUM(COALESCE(g.hit, 0)) AS DOUBLE) / COUNT(*) AS recall
-       |  FROM ex LEFT JOIN gtop g USING (query_id, neighbor_id)
-       |    CROSS JOIN gbud b
-       |  GROUP BY 1, 2),
-       |fcx AS (
-       |  SELECT e.vec_id, c.j, SUM((e.q[t.i] - c.cd) * (e.q[t.i] - c.cd)) AS d
-       |  FROM e0 e CROSS JOIN range(1, $d1) t(i) JOIN c$iters c ON c.i = t.i
-       |  GROUP BY 1, 2),
-       |fca AS (
-       |  SELECT vec_id, j AS cell FROM (
-       |    SELECT vec_id, j,
-       |      ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d, j) AS rk
-       |    FROM fcx) WHERE rk = 1),
-       |pr AS (
-       |  SELECT vec_id AS query_id, j AS cell FROM (
-       |    SELECT vec_id, j,
-       |      ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d, j) AS rk
-       |    FROM fcx WHERE vec_id < $nQueries) WHERE rk <= $nprobe),
-       |icand AS MATERIALIZED (
-       |  SELECT p.query_id, a.vec_id AS neighbor_id
-       |  FROM pr p JOIN fca a ON a.cell = p.cell AND a.vec_id <> p.query_id),
-       |itop AS (
-       |  SELECT query_id, neighbor_id, 1 AS hit FROM (
-       |    SELECT c.query_id, c.neighbor_id,
-       |      ROW_NUMBER() OVER (PARTITION BY c.query_id
-       |        ORDER BY ${pdistSql("qe.q", "ce.q")}, c.neighbor_id) AS rn
-       |    FROM icand c
-       |      JOIN e0 qe ON qe.vec_id = c.query_id
-       |      JOIN e0 ce ON ce.vec_id = c.neighbor_id)
-       |  WHERE rn <= $k),
+       |gbud AS (
+       |  SELECT AVG(nc) AS avg_candidates FROM (
+       |    SELECT qid, COUNT(*) AS nc FROM s_dc$hops
+       |    WHERE cand <> qid GROUP BY 1)),
+       |${ivfCoarseSql(s"c$iters", "e0", s"vec_id < $nQueries", nprobe)},
+       |${ivfSearchSql("e0", k)},
        |ibud AS (
        |  SELECT AVG(nc) AS avg_candidates FROM (
-       |    SELECT query_id, COUNT(*) AS nc FROM icand GROUP BY 1)),
-       |irow AS (
-       |  SELECT 'ivf' AS method, b.avg_candidates,
-       |    COUNT(*) AS n_exact,
-       |    CAST(SUM(COALESCE(g.hit, 0)) AS BIGINT) AS hits,
-       |    CAST(SUM(COALESCE(g.hit, 0)) AS DOUBLE) / COUNT(*) AS recall
-       |  FROM ex LEFT JOIN itop g USING (query_id, neighbor_id)
-       |    CROSS JOIN ibud b
-       |  GROUP BY 1, 2)
-       |SELECT * FROM (SELECT * FROM grow UNION ALL SELECT * FROM irow)
+       |    SELECT query_id, COUNT(*) AS nc FROM cand GROUP BY 1))
+       |SELECT * FROM (
+       |${row("graph", "gtop", "gbud")}
+       |UNION ALL
+       |${row("ivf", "ar", "ibud")})
        |ORDER BY method""".stripMargin
   }
 }

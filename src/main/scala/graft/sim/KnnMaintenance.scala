@@ -1,7 +1,6 @@
 package graft.sim
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 
@@ -32,41 +31,33 @@ private[sim] trait KnnMaintenance extends KnnQuant {
   def ivfAttachIncremental(
       embeddings: DataFrame, cells: Int = 8, iters: Int = 2,
       nprobe: Int = 2, k: Int = 3): DataFrame = {
-    // the same corpus/batch carve the LSH incremental twin uses
-    val corpus = embeddings.filter(col("vec_id") % 3 =!= 0)
-    val batch = embeddings.filter(col("vec_id") % 3 === 0)
-    val e0 = lloydQuantized(corpus)
-    val grid = lloydTrainGrid(e0, cells, iters)
-    // the index STATE: cell-keyed corpus vectors under the trained cells
-    val index = lloydAssignGrid(e0, grid)
-      .select(col("vec_id"), col("j").as("cell"), col("q"))
-      .localCheckpoint()
-    val eb = lloydQuantized(batch)
-    // eager: batch × cells rows — probes and home both read it, and once
-    // it is materialized neither quantized cache has a reader (r14 sweep)
-    val ranked = lloydAssignGrid(eb, grid)
-      .select(col("vec_id").as("batch_id"), col("q").as("bq"),
-        posexplode(col("ds")).as(Seq("cell", "cd")))
-      .withColumn("pr", row_number().over(
-        Window.partitionBy("batch_id").orderBy(col("cd"), col("cell"))))
-      .localCheckpoint()
-    e0.unpersist(blocking = false)
+    // the same corpus/batch carve the LSH incremental twin uses; the index
+    // STATE is the coarse home assignment of the corpus, and each batch
+    // vector's probe sets are its nprobe nearest existing cells, its home
+    // cell first (batch × nprobe rows, eager — once they are materialized
+    // neither quantized cache has a reader)
+    val e0 = lloydQuantized(embeddings.filter(col("vec_id") % 3 =!= 0))
+    val eb = lloydQuantized(embeddings.filter(col("vec_id") % 3 === 0))
+    val coarse = ivfCoarseOf(e0, eb, cells, iters, nprobe)
     eb.unpersist(blocking = false)
-    val probes = ranked.filter(col("pr") <= nprobe).select("batch_id", "bq", "cell")
-    val home = ranked.filter(col("pr") === 1)
-      .select(col("batch_id"), col("cell").as("home_cell"))
-    val w = Window.partitionBy("batch_id").orderBy(col("d"), col("vec_id"))
-    index.join(broadcast(probes), Seq("cell"))
-      .withColumn("d",
-        aggregate(zip_with(col("bq"), col("q"), (x, y) => (x - y) * (x - y)),
-          lit(0L), _ + _))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .join(broadcast(home), Seq("batch_id"))
-      .select(col("batch_id"), col("home_cell"),
-        col("vec_id").as("neighbor_id"), col("rank"), col("d"))
+    val home = coarse.qprobes.filter(col("pr") === 1)
+      .select(col("query_id"), col("cell").as("home_cell"))
+    intL2TopK(ivfCandidates(coarse), k)
+      .join(broadcast(home), Seq("query_id"))
+      .select(col("query_id").as("batch_id"), col("home_cell"),
+        col("neighbor_id"), col("rank"), col("d"))
       .orderBy("batch_id", "rank")
   }
+
+  /** The standard carve's batch (vec_id % 3 = 0), quantized as e0 is:
+    * the `e0b` CTE of the maintenance twins.
+    */
+  private val CARVE_BATCH_CTE =
+    s"""e0b AS (
+       |  SELECT vec_id,
+       |    list_transform(embedding,
+       |      x -> CAST(floor(CAST(x AS DOUBLE) * $LloydScale.0) AS BIGINT)) AS q
+       |  FROM e WHERE vec_id % 3 = 0)""".stripMargin
 
   /** DuckDB twin of [[ivfAttachIncremental]]: the Lloyd prefix trains on
     * the CORPUS carve only (the `where` filter on e0), the batch
@@ -74,54 +65,15 @@ private[sim] trait KnnMaintenance extends KnnQuant {
     * term.
     */
   def ivfAttachIncrementalSql(
-      cells: Int = 8, iters: Int = 2, nprobe: Int = 2, k: Int = 3): String = {
-    val d1 = Dim + 1
+      cells: Int = 8, iters: Int = 2, nprobe: Int = 2, k: Int = 3): String =
     s"""WITH ${lloydSqlCtes(cells, iters, where = "vec_id % 3 <> 0")},
-       |fcx AS (
-       |  SELECT e.vec_id, c.j, SUM((e.q[t.i] - c.cd) * (e.q[t.i] - c.cd)) AS d
-       |  FROM e0 e CROSS JOIN range(1, $d1) t(i) JOIN c$iters c ON c.i = t.i
-       |  GROUP BY 1, 2),
-       |fca AS (
-       |  SELECT vec_id, j AS cell FROM (
-       |    SELECT vec_id, j,
-       |      ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d, j) AS rk
-       |    FROM fcx) WHERE rk = 1),
-       |e0b AS (
-       |  SELECT vec_id,
-       |    list_transform(embedding,
-       |      x -> CAST(floor(CAST(x AS DOUBLE) * $LloydScale.0) AS BIGINT)) AS q
-       |  FROM e WHERE vec_id % 3 = 0),
-       |bx AS (
-       |  SELECT b.vec_id AS batch_id, c.j, SUM((b.q[t.i] - c.cd) * (b.q[t.i] - c.cd)) AS d
-       |  FROM e0b b CROSS JOIN range(1, $d1) t(i) JOIN c$iters c ON c.i = t.i
-       |  GROUP BY 1, 2),
-       |br AS (
-       |  SELECT batch_id, j AS cell,
-       |    ROW_NUMBER() OVER (PARTITION BY batch_id ORDER BY d, j) AS pr
-       |  FROM bx),
-       |home AS (SELECT batch_id, cell AS home_cell FROM br WHERE pr = 1),
-       |cand AS (
-       |  SELECT p.batch_id, a.vec_id AS neighbor_id
-       |  FROM br p JOIN fca a ON a.cell = p.cell
-       |  WHERE p.pr <= $nprobe),
-       |sc AS (
-       |  SELECT c.batch_id, c.neighbor_id,
-       |    CAST(SUM((bq.q[t.i] - cq.q[t.i]) * (bq.q[t.i] - cq.q[t.i]))
-       |         AS BIGINT) AS d
-       |  FROM cand c
-       |    JOIN e0b bq ON bq.vec_id = c.batch_id
-       |    JOIN e0 cq ON cq.vec_id = c.neighbor_id
-       |    CROSS JOIN range(1, $d1) t(i)
-       |  GROUP BY 1, 2),
-       |r AS (
-       |  SELECT batch_id, neighbor_id, d,
-       |    ROW_NUMBER() OVER (PARTITION BY batch_id ORDER BY d, neighbor_id) AS rn
-       |  FROM sc)
-       |SELECT r.batch_id, h.home_cell, r.neighbor_id,
+       |$CARVE_BATCH_CTE,
+       |${ivfCoarseSql(s"c$iters", "e0b", "TRUE", nprobe)},
+       |${ivfSearchSql("e0b", k)}
+       |SELECT r.query_id AS batch_id, h.cell AS home_cell, r.neighbor_id,
        |  CAST(r.rn AS INTEGER) AS "rank", r.d
-       |FROM r JOIN home h ON h.batch_id = r.batch_id
-       |WHERE r.rn <= $k ORDER BY r.batch_id, "rank"""".stripMargin
-  }
+       |FROM ar r JOIN pr h ON h.query_id = r.query_id AND h.pr = 1
+       |ORDER BY batch_id, "rank"""".stripMargin
 
   // ────────── IVF drift report: the retrain decision (r14) ─────────────
 
@@ -151,57 +103,22 @@ private[sim] trait KnnMaintenance extends KnnQuant {
   def ivfDriftReport(
       corpus: DataFrame, batch: DataFrame, cells: Int = 8, iters: Int = 2,
       driftRatio: Double = 1.5, shareRatio: Double = 2.0): DataFrame = {
-    def nullifZero(c: Column): Column =
-      when(c === 0, lit(null)).otherwise(c)
     val e0 = lloydQuantized(corpus)
     val grid = lloydTrainGrid(e0, cells, iters)
-    val trainAsg = lloydAssignGrid(e0, grid)
-      .withColumn("d", array_min(col("ds")))
-      .select(col("vec_id"), col("j").as("cell"), col("d"))
-      .localCheckpoint()
-    e0.unpersist(blocking = false)
-    val eb = lloydQuantized(batch)
-    val batchAsg = lloydAssignGrid(eb, grid)
-      .withColumn("d", array_min(col("ds")))
-      .select(col("vec_id"), col("j").as("cell"), col("d"))
-      .localCheckpoint()
-    eb.unpersist(blocking = false)
-    val ts = trainAsg.groupBy("cell").agg(
-      count(lit(1)).as("n_train"), sum("d").as("inertia_train"),
-      max("d").as("radius_train"))
-    val bs = batchAsg.groupBy("cell").agg(
-      count(lit(1)).as("n_batch"), sum("d").as("inertia_batch"),
-      max("d").as("radius_batch"))
-    // 1-row totals, broadcast (the trailing_context crossJoin rule)
-    val totals = trainAsg.agg(count(lit(1)).as("nt_total"))
-      .crossJoin(batchAsg.agg(count(lit(1)).as("nb_total")))
-    lloydCenFrame(corpus.sparkSession, grid).select(col("j").as("cell"))
-      .join(ts, Seq("cell"), "left")
-      .join(bs, Seq("cell"), "left")
-      .crossJoin(broadcast(totals))
-      .select(col("cell"),
-        coalesce(col("n_train"), lit(0L)).as("n_train"),
-        coalesce(col("n_batch"), lit(0L)).as("n_batch"),
-        coalesce(col("inertia_train"), lit(0L)).as("inertia_train"),
-        coalesce(col("inertia_batch"), lit(0L)).as("inertia_batch"),
-        coalesce(col("radius_train"), lit(0L)).as("radius_train"),
-        coalesce(col("radius_batch"), lit(0L)).as("radius_batch"),
-        col("nt_total"), col("nb_total"))
-      .withColumn("mean_d_train",
-        col("inertia_train").cast("double") / nullifZero(col("n_train")))
-      .withColumn("mean_d_batch",
-        col("inertia_batch").cast("double") / nullifZero(col("n_batch")))
-      .withColumn("share_train",
-        col("n_train").cast("double") / nullifZero(col("nt_total")))
-      .withColumn("share_batch",
-        col("n_batch").cast("double") / nullifZero(col("nb_total")))
-      .withColumn("drift_ratio",
-        col("mean_d_batch") / nullifZero(col("mean_d_train")))
-      .withColumn("retrain_due",
-        coalesce(col("drift_ratio") > lit(driftRatio), lit(false)) ||
-          coalesce(col("share_batch") > lit(shareRatio) * col("share_train"),
-            lit(false)))
-      .drop("nt_total", "nb_total")
+    // per-cell stats of a quantized frame's home assignment under the
+    // trained cells; the assignment checkpoints, so the cache can go
+    def homeStats(eq: DataFrame, suffix: String): DataFrame = {
+      val asg = lloydAssignGrid(eq, grid)
+        .withColumn("d", array_min(col("ds")))
+        .select(col("vec_id"), col("j").as("cell"), col("d"))
+        .localCheckpoint()
+      eq.unpersist(blocking = false)
+      IvfMaintenance.cellStats(asg, suffix)
+    }
+    val ts = homeStats(e0, "train")
+    val bs = homeStats(lloydQuantized(batch), "batch")
+    IvfMaintenance.driftReport(lloydCenFrame(corpus.sparkSession, grid),
+        ts, bs, driftRatio, shareRatio)
       .orderBy("cell")
   }
 
@@ -224,42 +141,20 @@ private[sim] trait KnnMaintenance extends KnnQuant {
   def ivfDriftReportCarveSql(
       cells: Int = 8, iters: Int = 2,
       driftRatio: Double = 1.5, shareRatio: Double = 2.0): String = {
-    val d1 = Dim + 1
+    // fca is the corpus home assignment; pr at nprobe 1 the batch's
+    def stats(src: String, suffix: String): String =
+      s"""SELECT cell, COUNT(*) AS n_$suffix,
+         |    CAST(SUM(d) AS BIGINT) AS inertia_$suffix,
+         |    CAST(MAX(d) AS BIGINT) AS radius_$suffix
+         |  FROM $src GROUP BY 1""".stripMargin
     s"""WITH ${lloydSqlCtes(cells, iters, where = "vec_id % 3 <> 0")},
-       |fcx AS (
-       |  SELECT e.vec_id, c.j, SUM((e.q[t.i] - c.cd) * (e.q[t.i] - c.cd)) AS d
-       |  FROM e0 e CROSS JOIN range(1, $d1) t(i) JOIN c$iters c ON c.i = t.i
-       |  GROUP BY 1, 2),
-       |fa AS (
-       |  SELECT vec_id, j AS cell, d FROM (
-       |    SELECT vec_id, j, d,
-       |      ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d, j) AS rk
-       |    FROM fcx) WHERE rk = 1),
-       |e0b AS (
-       |  SELECT vec_id,
-       |    list_transform(embedding,
-       |      x -> CAST(floor(CAST(x AS DOUBLE) * $LloydScale.0) AS BIGINT)) AS q
-       |  FROM e WHERE vec_id % 3 = 0),
-       |bx AS (
-       |  SELECT b.vec_id, c.j, SUM((b.q[t.i] - c.cd) * (b.q[t.i] - c.cd)) AS d
-       |  FROM e0b b CROSS JOIN range(1, $d1) t(i) JOIN c$iters c ON c.i = t.i
-       |  GROUP BY 1, 2),
-       |ba AS (
-       |  SELECT vec_id, j AS cell, d FROM (
-       |    SELECT vec_id, j, d,
-       |      ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d, j) AS rk
-       |    FROM bx) WHERE rk = 1),
-       |ts AS (
-       |  SELECT cell, COUNT(*) AS n_train, CAST(SUM(d) AS BIGINT) AS inertia_train,
-       |    CAST(MAX(d) AS BIGINT) AS radius_train
-       |  FROM fa GROUP BY 1),
-       |bsx AS (
-       |  SELECT cell, COUNT(*) AS n_batch, CAST(SUM(d) AS BIGINT) AS inertia_batch,
-       |    CAST(MAX(d) AS BIGINT) AS radius_batch
-       |  FROM ba GROUP BY 1),
+       |$CARVE_BATCH_CTE,
+       |${ivfCoarseSql(s"c$iters", "e0b", "TRUE", 1)},
+       |ts AS (${stats("fca", "train")}),
+       |bsx AS (${stats("pr", "batch")}),
        |cl AS (SELECT DISTINCT j AS cell FROM c$iters),
-       |tot AS (SELECT (SELECT COUNT(*) FROM fa) AS nt_total,
-       |               (SELECT COUNT(*) FROM ba) AS nb_total),
+       |tot AS (SELECT (SELECT COUNT(*) FROM fca) AS nt_total,
+       |               (SELECT COUNT(*) FROM pr) AS nb_total),
        |rep AS (
        |  SELECT c.cell,
        |    COALESCE(ts.n_train, 0) AS n_train,

@@ -58,11 +58,16 @@ private[sim] trait KnnQuant extends KnnCore {
   /** Quantized corpus (vec_id, q: 64 BIGINT micro-units), persisted — it
     * feeds every iteration's assign + update legs and the final report.
     */
-  private[graft] def lloydQuantized(embeddings: DataFrame): DataFrame = {
-    val quant = expr(
+  private[graft] def lloydQuantized(embeddings: DataFrame): DataFrame =
+    quantized(embeddings).persist()
+
+  /** The same (vec_id, q) frame uncached — for the legs that read the
+    * corpus once (the exact rescore and ground-truth scans).
+    */
+  private[sim] def quantized(embeddings: DataFrame): DataFrame =
+    withNorm(embeddings).select(col("vec_id"), expr(
       s"transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * $LloydScale.0) AS BIGINT))")
-    withNorm(embeddings).select(col("vec_id"), quant.as("q")).persist()
-  }
+      .as("q"))
 
   // ─────────── r18: the training loop fused to 1 job/iteration ───────────
 
@@ -310,6 +315,190 @@ private[sim] trait KnnQuant extends KnnCore {
        |ORDER BY iter""".stripMargin
   }
 
+  // ─────── the Lloyd-IVF family's shared stages, one per engine ───────
+  //
+  // Every IVF/ANN query below is one filter-and-refine search: a coarse
+  // leg (home cells + per-query probe sets under trained Lloyd cells),
+  // an integer-L2 ranking of the surviving candidates, and — for the
+  // recall experiments — the exhaustive ground truth and one
+  // exact LEFT JOIN approx row. Each stage is written once per engine
+  // here; the queries compose them.
+
+  /** Exact integer squared L2 of two BIGINT micro-unit vectors. */
+  private[sim] def intL2(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0L), _ + _)
+
+  /** Integer-L2 top-k per query of a candidate frame carrying
+    * (query_id, qq, vec_id, q): (query_id, neighbor_id, rank, d), ties to
+    * the lower vec_id. Unordered — callers sort or aggregate.
+    */
+  private[sim] def intL2TopK(cand: DataFrame, k: Int): DataFrame =
+    cand.withColumn("d", intL2(col("qq"), col("q")))
+      .withColumn("rank", row_number().over(
+        Window.partitionBy("query_id").orderBy(col("d"), col("vec_id"))))
+      .filter(col("rank") <= k)
+      .select(col("query_id"), col("vec_id").as("neighbor_id"),
+        col("rank"), col("d"))
+
+  /** The recall experiments' ground truth: the exact integer-L2 top-k of
+    * each query (vec_id < nQueries) against every other row of a
+    * (vec_id, q) frame — (query_id, neighbor_id). The bounded query set
+    * broadcasts; nothing is cached here.
+    */
+  private[sim] def exactIntTopK(eq: DataFrame, nQueries: Int,
+      k: Int): DataFrame = {
+    val qset = eq.filter(col("vec_id") < nQueries)
+      .select(col("vec_id").as("query_id"), col("q").as("qq"))
+    intL2TopK(eq.select("vec_id", "q").crossJoin(broadcast(qset))
+        .filter(col("vec_id") =!= col("query_id")), k)
+      .select("query_id", "neighbor_id")
+  }
+
+  /** One recall@k row: `exact` LEFT JOIN `approx` (both carrying
+    * query_id, neighbor_id) → the caller's `labels`, then n_exact, hits
+    * and recall = hits / n_exact — all in-plan, no driver counts.
+    */
+  private[sim] def recallRow(exact: DataFrame, approx: DataFrame,
+      labels: Column*): DataFrame =
+    exact.join(
+        approx.select(col("query_id"), col("neighbor_id"), lit(1).as("hit")),
+        Seq("query_id", "neighbor_id"), "left")
+      .agg(count(lit(1)).as("n_exact"),
+        sum(coalesce(col("hit"), lit(0))).as("hits"))
+      .select(labels ++ Seq(col("n_exact"), col("hits"),
+        (col("hits").cast("double") / col("n_exact")).as("recall")): _*)
+
+  /** The IVF probe sets: each (vec_id, q) row of `queries` against every
+    * cell of `grid` (the assignment argmin's distance list), nearest first
+    * with ties to the lower cell, cut at nprobe — (query_id, qq, cell,
+    * pr); pr = 1 is the row's home cell. Eager: |queries| × nprobe rows,
+    * after which the quantized caches it read have no reader.
+    */
+  private[sim] def ivfProbes(queries: DataFrame, grid: Seq[Seq[Long]],
+      nprobe: Int): DataFrame =
+    lloydAssignGrid(queries, grid)
+      .select(col("vec_id").as("query_id"), col("q").as("qq"),
+        posexplode(col("ds")).as(Seq("cell", "cd")))
+      .withColumn("pr", row_number().over(
+        Window.partitionBy("query_id").orderBy(col("cd"), col("cell"))))
+      .filter(col("pr") <= nprobe)
+      .select("query_id", "qq", "cell", "pr")
+      .localCheckpoint()
+
+  /** Coarse IVF state: the trained centroid frame (j, c), the
+    * checkpointed home assignment (vec_id, cell, q) and the query
+    * [[ivfProbes]]. One coarse train feeds every leg that reads it — the
+    * residual-PQ recall query's two variants share one.
+    */
+  private[sim] final case class IvfCoarse(
+      cen: DataFrame, asg: DataFrame, qprobes: DataFrame)
+
+  /** [[IvfCoarse]] of the quantized corpus `e0` (a [[lloydQuantized]]
+    * frame), with probe sets for `queries` (vec_id, q): e0's own query
+    * range, or an attached batch. Once both legs are checkpointed e0's
+    * cache has no reader and unpersists.
+    */
+  private[sim] def ivfCoarseOf(e0: DataFrame, queries: DataFrame,
+      cells: Int, iters: Int, nprobe: Int): IvfCoarse = {
+    val grid = lloydTrainGrid(e0, cells, iters)
+    val asg = lloydAssignGrid(e0, grid)
+      .select(col("vec_id"), col("j").as("cell"), col("q"))
+      .localCheckpoint()
+    val qprobes = ivfProbes(queries, grid, nprobe)
+    e0.unpersist(blocking = false)
+    IvfCoarse(lloydCenFrame(e0.sparkSession, grid), asg, qprobes)
+  }
+
+  /** The cell-pruned candidates: every vector homed in one of a query's
+    * probed cells, the query itself excluded — (cell, vec_id, q,
+    * query_id, qq, pr), one equality join with the probe sets broadcast.
+    */
+  private[sim] def ivfCandidates(c: IvfCoarse): DataFrame =
+    c.asg.join(broadcast(c.qprobes), Seq("cell"))
+      .filter(col("vec_id") =!= col("query_id"))
+
+  /** DuckDB twin of [[ivfCoarseOf]]'s two rankings against the trained
+    * cells `cen` (j, i, cd): `fca` — each e0 vector's home cell and its
+    * distance (vec_id, cell, d); `pr` — each row of `qsrc` (a (vec_id, q)
+    * relation) passing `qwhere`, with its nprobe nearest cells
+    * (query_id, cell, d, pr). Both rank by (d, j), the argmin's
+    * ties-to-the-lower-cell rule. Both are MATERIALIZED: the residual-PQ
+    * blocks read them many times (see [[pqResidualCtes]]).
+    */
+  private[sim] def ivfCoarseSql(cen: String, qsrc: String, qwhere: String,
+      nprobe: Int): String = {
+    def ranked(src: String, where: String): String =
+      s"""SELECT vec_id, j AS cell, d,
+         |    ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d, j) AS rk
+         |  FROM (
+         |    SELECT e.vec_id, c.j, SUM((e.q[t.i] - c.cd) * (e.q[t.i] - c.cd)) AS d
+         |    FROM $src e CROSS JOIN range(1, ${Dim + 1}) t(i) JOIN $cen c ON c.i = t.i
+         |    WHERE $where
+         |    GROUP BY 1, 2)""".stripMargin
+    s"""fcx AS (
+       |  ${ranked("e0", "TRUE")}),
+       |fca AS MATERIALIZED (SELECT vec_id, cell, d FROM fcx WHERE rk = 1),
+       |pr AS MATERIALIZED (
+       |  SELECT vec_id AS query_id, cell, d, rk AS pr FROM (
+       |  ${ranked(qsrc, qwhere)})
+       |  WHERE rk <= $nprobe)""".stripMargin
+  }
+
+  /** DuckDB twin of [[intL2TopK]] over a (query_id, neighbor_id) pair
+    * relation: (query_id, neighbor_id, d, rn ≤ k), query vectors from
+    * `qsrc`, candidates from e0, ties to the lower neighbor_id.
+    */
+  private[sim] def intL2TopKSql(pairs: String, qsrc: String, k: Int): String =
+    s"""SELECT query_id, neighbor_id, d, rn FROM (
+       |    SELECT query_id, neighbor_id, d,
+       |      ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY d, neighbor_id) AS rn
+       |    FROM (
+       |      SELECT p.query_id, p.neighbor_id,
+       |        CAST(SUM((qe.q[t.i] - ce.q[t.i]) * (qe.q[t.i] - ce.q[t.i])) AS BIGINT) AS d
+       |      FROM $pairs p JOIN $qsrc qe ON qe.vec_id = p.query_id
+       |        JOIN e0 ce ON ce.vec_id = p.neighbor_id
+       |        CROSS JOIN range(1, ${Dim + 1}) t(i)
+       |      GROUP BY 1, 2))
+       |  WHERE rn <= $k""".stripMargin
+
+  /** DuckDB twin of [[ivfCandidates]] + [[intL2TopK]] over
+    * [[ivfCoarseSql]]'s `fca`/`pr`: `cand` (query_id, neighbor_id) and
+    * its top-k `ar` (query_id, neighbor_id, d, rn). `cand` is
+    * MATERIALIZED for the twin that also counts it (the candidate budget).
+    */
+  private[sim] def ivfSearchSql(qsrc: String, k: Int): String =
+    s"""cand AS MATERIALIZED (
+       |  SELECT p.query_id, a.vec_id AS neighbor_id
+       |  FROM pr p JOIN fca a ON a.cell = p.cell AND a.vec_id <> p.query_id),
+       |ar AS (
+       |  ${intL2TopKSql("cand", qsrc, k)})""".stripMargin
+
+  /** DuckDB twin of [[exactIntTopK]] over e0: `bscore` (every query ×
+    * other-vector pair) and `br`, its integer-L2 top-k (query_id,
+    * neighbor_id, d, rn) — MATERIALIZED, since the twins with two
+    * approximate legs join it twice.
+    */
+  private[sim] def exactSql(nQueries: Int, k: Int): String =
+    s"""bscore AS (
+       |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id
+       |  FROM e0 q JOIN e0 c ON c.vec_id <> q.vec_id
+       |  WHERE q.vec_id < $nQueries),
+       |br AS MATERIALIZED (
+       |  ${intL2TopKSql("bscore", "e0", k)})""".stripMargin
+
+  /** DuckDB twin of [[recallRow]]: `exact` LEFT JOIN `approx` (relations
+    * carrying query_id, neighbor_id) as one SELECT — `labels`, then
+    * n_exact, hits, recall.
+    */
+  private[sim] def recallRowSql(labels: String, exact: String,
+      approx: String): String =
+    s"""SELECT $labels,
+       |  COUNT(*) AS n_exact,
+       |  COUNT(a.query_id) AS hits,
+       |  CAST(COUNT(a.query_id) AS DOUBLE) / COUNT(*) AS recall
+       |FROM $exact b LEFT JOIN $approx a
+       |  ON a.query_id = b.query_id AND a.neighbor_id = b.neighbor_id""".stripMargin
+
   /** IVF search whose coarse quantizer is the IN-ENGINE Lloyd trainer —
     * the whole trained-ANN pipeline (training included) inside the hash
     * gate, at a genuinely PRUNED operating point. [[ivfTopK]]'s MLlib
@@ -328,80 +517,23 @@ private[sim] trait KnnQuant extends KnnCore {
       embeddings: DataFrame, nQueries: Int = 10, k: Int = 5,
       cells: Int = 16, iters: Int = 2, nprobe: Int = 2): DataFrame = {
     val e0 = lloydQuantized(embeddings)
-    val grid = lloydTrainGrid(e0, cells, iters)
-    // corpus → cell assignment under the final centroids, materialized:
-    // it feeds the candidate side of every probe
-    val asg = lloydAssignGrid(e0, grid)
-      .select(col("vec_id"), col("j").as("cell"), col("q"))
-      .localCheckpoint()
-    // each query probes its nprobe nearest cells (same distance list
-    // the assignment argmin reads; ties to the lower cell id) — eager
-    // checkpoint (nQueries × nprobe rows), after which the quantized
-    // corpus cache has no remaining reader and unpersists (r14 sweep)
-    val probes = lloydAssignGrid(e0.filter(col("vec_id") < nQueries), grid)
-      .select(col("vec_id").as("query_id"), col("q").as("qq"),
-        posexplode(col("ds")).as(Seq("cell", "cd")))
-      .withColumn("pr", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("cd"), col("cell"))))
-      .filter(col("pr") <= nprobe)
-      .select("query_id", "qq", "cell")
-      .localCheckpoint()
-    e0.unpersist(blocking = false)
-    val w = Window.partitionBy("query_id").orderBy(col("d"), col("vec_id"))
-    asg.join(broadcast(probes), Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("d",
-        aggregate(zip_with(col("qq"), col("q"), (x, y) => (x - y) * (x - y)),
-          lit(0L), _ + _))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        col("rank"), col("d"))
+    intL2TopK(ivfCandidates(ivfCoarseOf(e0,
+        e0.filter(col("vec_id") < nQueries), cells, iters, nprobe)), k)
       .orderBy("query_id", "rank")
   }
 
-  /** DuckDB twin of [[ivfLloydTopK]]: the shared Lloyd CTE prefix, a
-    * final-centroid distance block, probe ranking, the cell-key
-    * candidate join, and the integer L2 rank — term for term.
+  /** DuckDB twin of [[ivfLloydTopK]]: the shared Lloyd CTE prefix, the
+    * coarse rankings, the cell-key candidate join and the integer L2
+    * rank — term for term.
     */
   def ivfLloydTopKSql(
       nQueries: Int = 10, k: Int = 5,
-      cells: Int = 16, iters: Int = 2, nprobe: Int = 2): String = {
-    val d1 = Dim + 1
+      cells: Int = 16, iters: Int = 2, nprobe: Int = 2): String =
     s"""WITH ${lloydSqlCtes(cells, iters)},
-       |fcx AS (
-       |  SELECT e.vec_id, c.j, SUM((e.q[t.i] - c.cd) * (e.q[t.i] - c.cd)) AS d
-       |  FROM e0 e CROSS JOIN range(1, $d1) t(i) JOIN c$iters c ON c.i = t.i
-       |  GROUP BY 1, 2),
-       |fca AS (
-       |  SELECT vec_id, j AS cell FROM (
-       |    SELECT vec_id, j,
-       |      ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d, j) AS rk
-       |    FROM fcx) WHERE rk = 1),
-       |pr AS (
-       |  SELECT vec_id AS query_id, j AS cell FROM (
-       |    SELECT vec_id, j,
-       |      ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d, j) AS rk
-       |    FROM fcx WHERE vec_id < $nQueries) WHERE rk <= $nprobe),
-       |cand AS (
-       |  SELECT p.query_id, a.vec_id AS neighbor_id
-       |  FROM pr p JOIN fca a ON a.cell = p.cell AND a.vec_id <> p.query_id),
-       |sc AS (
-       |  SELECT c.query_id, c.neighbor_id,
-       |    CAST(SUM((qe.q[t.i] - ce.q[t.i]) * (qe.q[t.i] - ce.q[t.i]))
-       |         AS BIGINT) AS d
-       |  FROM cand c
-       |    JOIN e0 qe ON qe.vec_id = c.query_id
-       |    JOIN e0 ce ON ce.vec_id = c.neighbor_id
-       |    CROSS JOIN range(1, $d1) t(i)
-       |  GROUP BY 1, 2),
-       |r AS (
-       |  SELECT query_id, neighbor_id, d,
-       |    ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY d, neighbor_id) AS rn
-       |  FROM sc)
+       |${ivfCoarseSql(s"c$iters", "e0", s"vec_id < $nQueries", nprobe)},
+       |${ivfSearchSql("e0", k)}
        |SELECT query_id, neighbor_id, CAST(rn AS INTEGER) AS "rank", d
-       |FROM r WHERE rn <= $k ORDER BY query_id, "rank"""".stripMargin
-  }
+       |FROM ar ORDER BY query_id, "rank"""".stripMargin
 
   /** The nprobe-operating-point experiment for the Lloyd IVF: recall@k
     * of the PRUNED search against the exhaustive integer-L2 ranking over
@@ -413,107 +545,28 @@ private[sim] trait KnnQuant extends KnnCore {
       embeddings: DataFrame, nQueries: Int = 10, k: Int = 5,
       cells: Int = 16, iters: Int = 2, nprobe: Int = 2): DataFrame = {
     val e0 = lloydQuantized(embeddings)
-    val grid = lloydTrainGrid(e0, cells, iters)
-    val asg = lloydAssignGrid(e0, grid)
-      .select(col("vec_id"), col("j").as("cell"), col("q"))
-      .localCheckpoint()
-    val probes = lloydAssignGrid(e0.filter(col("vec_id") < nQueries), grid)
-      .select(col("vec_id").as("query_id"), col("q").as("qq"),
-        posexplode(col("ds")).as(Seq("cell", "cd")))
-      .withColumn("pr", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("cd"), col("cell"))))
-      .filter(col("pr") <= nprobe)
-      .select("query_id", "qq", "cell")
-      .localCheckpoint()
-    // bounded query frames checkpoint eagerly; the corpus cache then has
-    // no remaining reader (asg holds the vectors) and unpersists (r14)
-    val qset = e0.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("q").as("qq"))
-      .localCheckpoint()
-    e0.unpersist(blocking = false)
-    val intDist =
-      aggregate(zip_with(col("qq"), col("q"), (x, y) => (x - y) * (x - y)),
-        lit(0L), _ + _)
-    val w = Window.partitionBy("query_id").orderBy(col("d"), col("vec_id"))
-    val approx = asg.join(broadcast(probes), Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("d", intDist)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), lit(1).as("hit"))
-    val exact = asg.select("vec_id", "q").crossJoin(broadcast(qset))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("d", intDist)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"))
-    exact.join(approx, Seq("query_id", "neighbor_id"), "left")
-      .agg(count(lit(1)).as("n_exact"),
-        sum(coalesce(col("hit"), lit(0))).as("hits"))
-      .select(lit(k).as("k"), lit(nprobe).as("nprobe"), lit(cells).as("cells"),
-        col("n_exact"), col("hits"),
-        (col("hits").cast("double") / col("n_exact")).as("recall"))
+    val coarse = ivfCoarseOf(e0, e0.filter(col("vec_id") < nQueries),
+      cells, iters, nprobe)
+    recallRow(exactIntTopK(coarse.asg, nQueries, k),
+      intL2TopK(ivfCandidates(coarse), k),
+      lit(k).as("k"), lit(nprobe).as("nprobe"), lit(cells).as("cells"))
   }
 
   /** DuckDB twin of [[ivfLloydRecall]]: the shared Lloyd prefix, the
-    * pruned leg exactly as in [[ivfLloydTopKSql]], the exhaustive leg a
-    * plain integer-L2 rank over e0, one LEFT-JOIN aggregate row.
+    * pruned leg exactly as in [[ivfLloydTopKSql]], the exhaustive leg,
+    * one LEFT-JOIN aggregate row.
     */
   def ivfLloydRecallSql(
       nQueries: Int = 10, k: Int = 5,
       cells: Int = 16, iters: Int = 2, nprobe: Int = 2,
-      prelude: String = ""): String = {
-    val d1 = Dim + 1
+      prelude: String = ""): String =
     s"""WITH $prelude${lloydSqlCtes(cells, iters)},
-       |fcx AS (
-       |  SELECT e.vec_id, c.j, SUM((e.q[t.i] - c.cd) * (e.q[t.i] - c.cd)) AS d
-       |  FROM e0 e CROSS JOIN range(1, $d1) t(i) JOIN c$iters c ON c.i = t.i
-       |  GROUP BY 1, 2),
-       |fca AS (
-       |  SELECT vec_id, j AS cell FROM (
-       |    SELECT vec_id, j,
-       |      ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d, j) AS rk
-       |    FROM fcx) WHERE rk = 1),
-       |pr AS (
-       |  SELECT vec_id AS query_id, j AS cell FROM (
-       |    SELECT vec_id, j,
-       |      ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d, j) AS rk
-       |    FROM fcx WHERE vec_id < $nQueries) WHERE rk <= $nprobe),
-       |ascore AS (
-       |  SELECT p.query_id, a.vec_id AS neighbor_id,
-       |    SUM((qe.q[t.i] - ce.q[t.i]) * (qe.q[t.i] - ce.q[t.i])) AS d
-       |  FROM pr p JOIN fca a ON a.cell = p.cell AND a.vec_id <> p.query_id
-       |    JOIN e0 qe ON qe.vec_id = p.query_id
-       |    JOIN e0 ce ON ce.vec_id = a.vec_id
-       |    CROSS JOIN range(1, $d1) t(i)
-       |  GROUP BY 1, 2),
-       |ar AS (
-       |  SELECT query_id, neighbor_id FROM (
-       |    SELECT query_id, neighbor_id,
-       |      ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY d, neighbor_id) AS rn
-       |    FROM ascore) WHERE rn <= $k),
-       |bscore AS (
-       |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-       |    SUM((q.q[t.i] - c.q[t.i]) * (q.q[t.i] - c.q[t.i])) AS d
-       |  FROM e0 q JOIN e0 c ON c.vec_id <> q.vec_id
-       |    CROSS JOIN range(1, $d1) t(i)
-       |  WHERE q.vec_id < $nQueries
-       |  GROUP BY 1, 2),
-       |br AS (
-       |  SELECT query_id, neighbor_id FROM (
-       |    SELECT query_id, neighbor_id,
-       |      ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY d, neighbor_id) AS rn
-       |    FROM bscore) WHERE rn <= $k),
-       |agg AS (
-       |  SELECT COUNT(*) AS n_exact,
-       |    CAST(SUM(CASE WHEN ar.query_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS hits
-       |  FROM br LEFT JOIN ar
-       |    ON ar.query_id = br.query_id AND ar.neighbor_id = br.neighbor_id)
-       |SELECT CAST($k AS INTEGER) AS k, CAST($nprobe AS INTEGER) AS nprobe,
-       |  CAST($cells AS INTEGER) AS cells,
-       |  n_exact, hits, CAST(hits AS DOUBLE) / n_exact AS recall
-       |FROM agg""".stripMargin
-  }
+       |${ivfCoarseSql(s"c$iters", "e0", s"vec_id < $nQueries", nprobe)},
+       |${ivfSearchSql("e0", k)},
+       |${exactSql(nQueries, k)}
+       |${recallRowSql(s"CAST($k AS INTEGER) AS k, " +
+           s"CAST($nprobe AS INTEGER) AS nprobe, CAST($cells AS INTEGER) AS cells",
+         "br", "ar")}""".stripMargin
 
   // ─────────────────────── SQ8 scalar-quantized ANN ──────────────────────────
 
@@ -573,34 +626,37 @@ private[sim] trait KnnQuant extends KnnCore {
     * Both legs are the registered operators themselves, so the measured
     * number is the production code path's recall, not a simulation's.
     */
-  def sq8Recall(embeddings: DataFrame, nQueries: Int = 10, k: Int = 5): DataFrame = {
-    val approx = sq8TopK(embeddings, nQueries, k)
-      .select(col("query_id"), col("neighbor_id"), lit(1).as("hit"))
-    val exact = bruteForceTopK(embeddings, nQueries, k)
-      .select("query_id", "neighbor_id")
-    exact.join(approx, Seq("query_id", "neighbor_id"), "left")
-      .agg(count(lit(1)).as("n_exact"),
-        sum(coalesce(col("hit"), lit(0))).as("hits"))
-      .select(lit(k).as("k"), lit(nQueries).as("n_queries"),
-        col("n_exact"), col("hits"),
-        (col("hits").cast("double") / col("n_exact")).as("recall"))
-  }
+  def sq8Recall(embeddings: DataFrame, nQueries: Int = 10, k: Int = 5): DataFrame =
+    recallRow(bruteForceTopK(embeddings, nQueries, k),
+      sq8TopK(embeddings, nQueries, k),
+      lit(k).as("k"), lit(nQueries).as("n_queries"))
 
-  /** DuckDB twin of [[sq8Recall]]: both legs' pipelines inlined under one
-    * WITH (brute-force CTEs prefixed b_, SQ8 CTEs prefixed s_).
+  /** DuckDB twin of [[sq8Recall]]: both legs' pipelines under one WITH
+    * ([[cosineTopKSql]] and [[sq8TopKCtes]]), one recall row.
     */
   def sq8RecallSql(nQueries: Int = 10, k: Int = 5, prelude: String = ""): String =
     s"""WITH $prelude$NORM_CTE,
-       |bq AS (SELECT vec_id AS query_id, embedding AS qe, n2 AS qn2
-       |       FROM e WHERE vec_id < $nQueries),
-       |bs AS (SELECT bq.query_id, c.vec_id AS neighbor_id,
-       |         (${dotSql("bq.qe", "c.embedding")}) / (sqrt(bq.qn2) * sqrt(c.n2)) AS cosine
-       |       FROM bq, e c WHERE c.vec_id <> bq.query_id),
-       |br AS (SELECT query_id, neighbor_id FROM (
-       |         SELECT query_id, neighbor_id,
-       |           ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rn
-       |         FROM bs) WHERE rn <= $k),
-       |cd AS (
+       |${cosineTopKSql(nQueries, k)},
+       |${sq8TopKCtes(nQueries, k)}
+       |${recallRowSql(
+           s"CAST($k AS INTEGER) AS k, CAST($nQueries AS INTEGER) AS n_queries",
+           "br", "sr")}""".stripMargin
+
+  /** DuckDB twin of [[sq8TopK]]. */
+  def sq8TopKSql(nQueries: Int = 10, k: Int = 5): String =
+    s"""WITH $NORM_CTE,
+       |${sq8TopKCtes(nQueries, k)}
+       |SELECT query_id, neighbor_id, CAST(rn AS INTEGER) AS "rank", score
+       |FROM sr ORDER BY query_id, "rank"""".stripMargin
+
+  /** The CTEs of [[sq8TopKSql]], shared by the SQ8 recall twins:
+    * symmetric int8 codes in long form `cd` (vec_id, i, code), the score
+    * join `ss` grouping the 64 per-dimension int products back into one
+    * BIGINT per (query, candidate) pair, and `sr`, its top-k (query_id,
+    * neighbor_id, score, rn).
+    */
+  private def sq8TopKCtes(nQueries: Int, k: Int): String =
+    s"""cd AS (
        |  SELECT e.vec_id, t.i,
        |    CAST(floor((CAST(e.embedding[t.i] AS DOUBLE) / sqrt(e.n2))
        |               * 127.0 + 0.5) AS INTEGER) AS code
@@ -611,42 +667,10 @@ private[sim] trait KnnQuant extends KnnCore {
        |  FROM cd q JOIN cd c ON c.i = q.i AND c.vec_id <> q.vec_id
        |  WHERE q.vec_id < $nQueries
        |  GROUP BY 1, 2),
-       |sr AS (SELECT query_id, neighbor_id FROM (
-       |         SELECT query_id, neighbor_id,
+       |sr AS (SELECT query_id, neighbor_id, score, rn FROM (
+       |         SELECT query_id, neighbor_id, score,
        |           ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id) AS rn
-       |         FROM ss) WHERE rn <= $k),
-       |agg AS (
-       |  SELECT COUNT(*) AS n_exact,
-       |    CAST(SUM(CASE WHEN sr.query_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS hits
-       |  FROM br LEFT JOIN sr
-       |    ON sr.query_id = br.query_id AND sr.neighbor_id = br.neighbor_id)
-       |SELECT CAST($k AS INTEGER) AS k, CAST($nQueries AS INTEGER) AS n_queries,
-       |  n_exact, hits, CAST(hits AS DOUBLE) / n_exact AS recall
-       |FROM agg""".stripMargin
-
-  /** DuckDB twin of [[sq8TopK]] — symmetric int8 codes in long form
-    * (vec_id, i, code), the score join groups the 64 per-dimension int
-    * products back into one BIGINT per (query, candidate) pair.
-    */
-  def sq8TopKSql(nQueries: Int = 10, k: Int = 5): String =
-    s"""WITH $NORM_CTE,
-       |cd AS (
-       |  SELECT e.vec_id, t.i,
-       |    CAST(floor((CAST(e.embedding[t.i] AS DOUBLE) / sqrt(e.n2))
-       |               * 127.0 + 0.5) AS INTEGER) AS code
-       |  FROM e CROSS JOIN range(1, ${Dim + 1}) t(i)),
-       |s AS (
-       |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-       |    CAST(SUM(CAST(q.code AS BIGINT) * c.code) AS BIGINT) AS score
-       |  FROM cd q JOIN cd c ON c.i = q.i AND c.vec_id <> q.vec_id
-       |  WHERE q.vec_id < $nQueries
-       |  GROUP BY 1, 2),
-       |r AS (
-       |  SELECT query_id, neighbor_id, score,
-       |    ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id) AS rn
-       |  FROM s)
-       |SELECT query_id, neighbor_id, CAST(rn AS INTEGER) AS "rank", score
-       |FROM r WHERE rn <= $k ORDER BY query_id, "rank"""".stripMargin
+       |         FROM ss) WHERE rn <= $k)""".stripMargin
 
   // ───────────── SQ8 two-stage serving: int8 retrieve + rescore ─────────
 
@@ -698,18 +722,10 @@ private[sim] trait KnnQuant extends KnnCore {
     */
   def sq8RescoreRecall(
       embeddings: DataFrame, nQueries: Int = 10, k: Int = 5,
-      rescoreR: Int = 100): DataFrame = {
-    val approx = sq8RescoreTopK(embeddings, nQueries, k, rescoreR)
-      .select(col("query_id"), col("neighbor_id"), lit(1).as("hit"))
-    val exact = bruteForceTopK(embeddings, nQueries, k)
-      .select("query_id", "neighbor_id")
-    exact.join(approx, Seq("query_id", "neighbor_id"), "left")
-      .agg(count(lit(1)).as("n_exact"),
-        sum(coalesce(col("hit"), lit(0))).as("hits"))
-      .select(lit(k).as("k"), lit(rescoreR).as("rescore_r"),
-        col("n_exact"), col("hits"),
-        (col("hits").cast("double") / col("n_exact")).as("recall"))
-  }
+      rescoreR: Int = 100): DataFrame =
+    recallRow(bruteForceTopK(embeddings, nQueries, k),
+      sq8RescoreTopK(embeddings, nQueries, k, rescoreR),
+      lit(k).as("k"), lit(rescoreR).as("rescore_r"))
 
   /** DuckDB twin of [[sq8RescoreRecall]]: int8 stage (cd/ss/sr at rn ≤
     * rescoreR), full-precision rescore of exactly those candidates, and
@@ -719,21 +735,7 @@ private[sim] trait KnnQuant extends KnnCore {
       nQueries: Int = 10, k: Int = 5, rescoreR: Int = 100,
       prelude: String = ""): String =
     s"""WITH $prelude$NORM_CTE,
-       |cd AS (
-       |  SELECT e.vec_id, t.i,
-       |    CAST(floor((CAST(e.embedding[t.i] AS DOUBLE) / sqrt(e.n2))
-       |               * 127.0 + 0.5) AS INTEGER) AS code
-       |  FROM e CROSS JOIN range(1, ${Dim + 1}) t(i)),
-       |ss AS (
-       |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-       |    CAST(SUM(CAST(q.code AS BIGINT) * c.code) AS BIGINT) AS score
-       |  FROM cd q JOIN cd c ON c.i = q.i AND c.vec_id <> q.vec_id
-       |  WHERE q.vec_id < $nQueries
-       |  GROUP BY 1, 2),
-       |sr AS (SELECT query_id, neighbor_id FROM (
-       |         SELECT query_id, neighbor_id,
-       |           ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id) AS rn
-       |         FROM ss) WHERE rn <= $rescoreR),
+       |${sq8TopKCtes(nQueries, rescoreR)},
        |rs AS (
        |  SELECT s.query_id, s.neighbor_id,
        |    (${dotSql("q.embedding", "c.embedding")}) / (sqrt(q.n2) * sqrt(c.n2)) AS cosine
@@ -744,23 +746,10 @@ private[sim] trait KnnQuant extends KnnCore {
        |         SELECT query_id, neighbor_id,
        |           ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rn
        |         FROM rs) WHERE rn <= $k),
-       |bq AS (SELECT vec_id AS query_id, embedding AS qe, n2 AS qn2
-       |       FROM e WHERE vec_id < $nQueries),
-       |bs AS (SELECT bq.query_id, c.vec_id AS neighbor_id,
-       |         (${dotSql("bq.qe", "c.embedding")}) / (sqrt(bq.qn2) * sqrt(c.n2)) AS cosine
-       |       FROM bq, e c WHERE c.vec_id <> bq.query_id),
-       |br AS (SELECT query_id, neighbor_id FROM (
-       |         SELECT query_id, neighbor_id,
-       |           ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rn
-       |         FROM bs) WHERE rn <= $k),
-       |agg AS (
-       |  SELECT COUNT(*) AS n_exact,
-       |    CAST(SUM(CASE WHEN rr.query_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS hits
-       |  FROM br LEFT JOIN rr
-       |    ON rr.query_id = br.query_id AND rr.neighbor_id = br.neighbor_id)
-       |SELECT CAST($k AS INTEGER) AS k, CAST($rescoreR AS INTEGER) AS rescore_r,
-       |  n_exact, hits, CAST(hits AS DOUBLE) / n_exact AS recall
-       |FROM agg""".stripMargin
+       |${cosineTopKSql(nQueries, k)}
+       |${recallRowSql(
+           s"CAST($k AS INTEGER) AS k, CAST($rescoreR AS INTEGER) AS rescore_r",
+           "br", "rr")}""".stripMargin
 
   // ───────────── IVF-PQ: coarse pruning × compressed scoring (r13) ──────
 
@@ -786,20 +775,14 @@ private[sim] trait KnnQuant extends KnnCore {
       nQueries: Int = 10, k: Int = 5,
       cells: Int = 8, iters: Int = 2, nprobe: Int = 2): DataFrame = {
     val m = codebooks.length
-    // coarse leg: Lloyd cells + per-query probe sets (integer domain)
+    // coarse leg: Lloyd cells + per-query probe sets (integer domain);
+    // the home assignment drops q — this query caches codes, not vectors
     val e0 = lloydQuantized(embeddings)
     val grid = lloydTrainGrid(e0, cells, iters)
     val asg = lloydAssignGrid(e0, grid)
       .select(col("vec_id"), col("j").as("cell")).localCheckpoint()
-    val probes = lloydAssignGrid(e0.filter(col("vec_id") < nQueries), grid)
-      .select(col("vec_id").as("query_id"), posexplode(col("ds")).as(Seq("cell", "cd")))
-      .withColumn("pr", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("cd"), col("cell"))))
-      .filter(col("pr") <= nprobe)
+    val probes = ivfProbes(e0.filter(col("vec_id") < nQueries), grid, nprobe)
       .select("query_id", "cell")
-      // eager: nQueries × cells rows — after this the coarse leg is fully
-      // materialized (asg/cen already checkpoint) and e0's cache can go
-      .localCheckpoint()
     e0.unpersist(blocking = false)
     // compressed leg (r14, VERDICT item 7): the 256 B/row float corpus is
     // NEVER cached — at 100 TB the thing to keep hot is the m-byte codes,
@@ -834,8 +817,8 @@ private[sim] trait KnnQuant extends KnnCore {
       .orderBy("query_id", "rank")
   }
 
-  /** DuckDB twin of [[ivfPqTopK]]: the Lloyd CTE prefix + probe/cell
-    * blocks verbatim from [[ivfLloydTopKSql]], the PQ encode blocks
+  /** DuckDB twin of [[ivfPqTopK]]: the Lloyd CTE prefix + the coarse
+    * rankings of [[ivfCoarseSql]], the PQ encode blocks
     * verbatim from [[pqTopKSql]] (VARCHAR→DOUBLE centroid literals — the
     * decimal-ceiling gotcha), joined on the pruned candidate set.
     */
@@ -845,7 +828,6 @@ private[sim] trait KnnQuant extends KnnCore {
       cells: Int = 8, iters: Int = 2, nprobe: Int = 2): String = {
     val m = codebooks.length
     val subDim = Dim / m
-    val d1 = Dim + 1
     def distExpr(j: Int, c: Int): String =
       (0 until subDim).map { t =>
         val x = s"CAST(embedding[${j * subDim + t + 1}] AS DOUBLE)"
@@ -867,20 +849,7 @@ private[sim] trait KnnQuant extends KnnCore {
       s"(CASE c.code_$j $whens END)"
     }.mkString(" + ")
     s"""WITH ${lloydSqlCtes(cells, iters)},
-       |fcx AS (
-       |  SELECT e.vec_id, c.j, SUM((e.q[t.i] - c.cd) * (e.q[t.i] - c.cd)) AS d
-       |  FROM e0 e CROSS JOIN range(1, $d1) t(i) JOIN c$iters c ON c.i = t.i
-       |  GROUP BY 1, 2),
-       |fca AS (
-       |  SELECT vec_id, j AS cell FROM (
-       |    SELECT vec_id, j,
-       |      ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d, j) AS rk
-       |    FROM fcx) WHERE rk = 1),
-       |pr AS (
-       |  SELECT vec_id AS query_id, j AS cell FROM (
-       |    SELECT vec_id, j,
-       |      ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d, j) AS rk
-       |    FROM fcx WHERE vec_id < $nQueries) WHERE rk <= $nprobe),
+       |${ivfCoarseSql(s"c$iters", "e0", s"vec_id < $nQueries", nprobe)},
        |pqd AS (
        |  SELECT vec_id,
        |    $cdCols
@@ -950,43 +919,16 @@ private[sim] trait KnnQuant extends KnnCore {
     * never cached (codes and bounded probe/LUT frames are the only
     * reused state — the [[ivfPqTopK]] r14 rule).
     */
-  /** Coarse IVF state shared across the residual-PQ variants (r17): the
-    * trained centroid frame, the checkpointed home assignment, and the
-    * checkpointed query probe sets. Extracting it lets the
-    * recall-comparison query train the coarse quantizer ONCE for its two
-    * PQ variants instead of running the identical Lloyd chain twice.
-    */
-  private[sim] final case class IvfCoarse(
-      cen: DataFrame, asg: DataFrame, qprobes: DataFrame)
-
-  private[sim] def ivfCoarseOf(embeddings: DataFrame, nQueries: Int,
-      cells: Int, iters: Int, nprobe: Int): IvfCoarse = {
-    val e0 = lloydQuantized(embeddings)
-    val grid = lloydTrainGrid(e0, cells, iters)
-    val cen = lloydCenFrame(embeddings.sparkSession, grid)
-    val asg = lloydAssignGrid(e0, grid)
-      .select(col("vec_id"), col("j").as("cell"), col("q"))
-      .localCheckpoint()
-    val qprobes = lloydAssignGrid(e0.filter(col("vec_id") < nQueries), grid)
-      .select(col("vec_id").as("query_id"), col("q").as("qq"),
-        posexplode(col("ds")).as(Seq("cell", "cd")))
-      .withColumn("pr", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("cd"), col("cell"))))
-      .filter(col("pr") <= nprobe)
-      .select("query_id", "qq", "cell")
-      .localCheckpoint()
-    e0.unpersist(blocking = false)
-    IvfCoarse(cen, asg, qprobes)
-  }
-
   def ivfPqResidualTopK(
       embeddings: DataFrame, nQueries: Int = 10, k: Int = 5,
       cells: Int = 8, iters: Int = 2, nprobe: Int = 2,
       m: Int = 16, nC: Int = 16, pqIters: Int = 3,
-      residual: Boolean = true): DataFrame =
+      residual: Boolean = true): DataFrame = {
+    val e0 = lloydQuantized(embeddings)
     ivfPqResidualTopKFrom(
-      ivfCoarseOf(embeddings, nQueries, cells, iters, nprobe),
+      ivfCoarseOf(e0, e0.filter(col("vec_id") < nQueries), cells, iters, nprobe),
       k, nprobe, m, nC, pqIters, residual)
+  }
 
   /** [[ivfPqResidualTopK]] over a prebuilt coarse state. */
   private[sim] def ivfPqResidualTopKFrom(
@@ -1010,6 +952,7 @@ private[sim] trait KnnQuant extends KnnCore {
       .select(col("vec_id"), posexplode(subSplit(resArr)).as(Seq("sub", "rs")))
       .localCheckpoint()
     // ---- per-subspace Lloyd codebooks (sub, cidx, pc) ----------------
+    // unpartitioned, but over the LIMIT-nC seed frame: nC rows at most
     val seedW = Window.orderBy("h", "vec_id")
     val seedIds = asg.select("vec_id")
       .withColumn("h", md5(col("vec_id").cast("string")))
@@ -1085,48 +1028,6 @@ private[sim] trait KnnQuant extends KnnCore {
       .orderBy("query_id", "rank")
   }
 
-  /** Exact integer-L2 top-k over the quantized domain, no cache (one
-    * corpus scan plus a pushdown-filtered query scan) — the recall
-    * experiments' ground-truth leg.
-    */
-  private def exactIntTopK(embeddings: DataFrame,
-      nQueries: Int, k: Int): DataFrame = {
-    val quant = expr(
-      s"transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * $LloydScale.0) AS BIGINT))")
-    val eq = withNorm(embeddings).select(col("vec_id"), quant.as("q"))
-    val qset = eq.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("q").as("qq"))
-    val w = Window.partitionBy("query_id").orderBy(col("d"), col("vec_id"))
-    eq.crossJoin(broadcast(qset))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("d",
-        aggregate(zip_with(col("qq"), col("q"), (x, y) => (x - y) * (x - y)),
-          lit(0L), _ + _))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"))
-  }
-
-  /** One recall row for one PQ variant against a prebuilt coarse state
-    * and exact ranking.
-    */
-  private def ivfPqResidualRecallRow(coarse: IvfCoarse, exact: DataFrame,
-      k: Int, cells: Int, nprobe: Int, m: Int, nC: Int, pqIters: Int,
-      residual: Boolean): DataFrame = {
-    val approx = ivfPqResidualTopKFrom(coarse, k, nprobe, m, nC, pqIters,
-      residual)
-      .select(col("query_id"), col("neighbor_id"), lit(1).as("hit"))
-    exact.join(approx, Seq("query_id", "neighbor_id"), "left")
-      .agg(count(lit(1)).as("n_exact"),
-        sum(coalesce(col("hit"), lit(0))).as("hits"))
-      .select(
-        lit(if (residual) "residual" else "no_residual").as("variant"),
-        lit(k).as("k"), lit(nprobe).as("nprobe"), lit(cells).as("cells"),
-        lit(m).as("m"), lit(nC).as("code_k"),
-        col("n_exact"), col("hits"),
-        (col("hits").cast("double") / col("n_exact")).as("recall"))
-  }
-
   /** recall@k of [[ivfPqResidualTopK]] against the exact integer-L2
     * ranking over the same quantized domain (the [[ivfLloydRecall]]
     * exact leg) — one row per variant, labeled so the residual and
@@ -1140,12 +1041,16 @@ private[sim] trait KnnQuant extends KnnCore {
       embeddings: DataFrame, nQueries: Int = 10, k: Int = 5,
       cells: Int = 8, iters: Int = 2, nprobe: Int = 2,
       m: Int = 16, nC: Int = 16, pqIters: Int = 3): DataFrame = {
-    val coarse = ivfCoarseOf(embeddings, nQueries, cells, iters, nprobe)
-    val exact = exactIntTopK(embeddings, nQueries, k).localCheckpoint()
-    ivfPqResidualRecallRow(coarse, exact, k, cells, nprobe, m, nC, pqIters,
-        residual = true)
-      .unionByName(ivfPqResidualRecallRow(coarse, exact, k, cells, nprobe,
-        m, nC, pqIters, residual = false))
+    val e0 = lloydQuantized(embeddings)
+    val coarse = ivfCoarseOf(e0, e0.filter(col("vec_id") < nQueries),
+      cells, iters, nprobe)
+    val exact = exactIntTopK(coarse.asg, nQueries, k).localCheckpoint()
+    def row(residual: Boolean): DataFrame = recallRow(exact,
+      ivfPqResidualTopKFrom(coarse, k, nprobe, m, nC, pqIters, residual),
+      lit(if (residual) "residual" else "no_residual").as("variant"),
+      lit(k).as("k"), lit(nprobe).as("nprobe"), lit(cells).as("cells"),
+      lit(m).as("m"), lit(nC).as("code_k"))
+    row(residual = true).unionByName(row(residual = false))
   }
 
   /** The COMPLETE production serving stack — FAISS's IndexIVFPQ +
@@ -1168,23 +1073,13 @@ private[sim] trait KnnQuant extends KnnCore {
       rescoreR: Int = 50): DataFrame = {
     val cand = ivfPqResidualTopK(embeddings, nQueries, rescoreR, cells,
       iters, nprobe, m, nC, pqIters)
-      .select(col("query_id"), col("neighbor_id"))
+      .select(col("query_id"), col("neighbor_id").as("vec_id"))
     // exact stage in the quantized integer domain — no cache, one narrow
     // corpus scan keyed into by the bounded candidate list
-    val quant = expr(
-      s"transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * $LloydScale.0) AS BIGINT))")
-    val eq = withNorm(embeddings).select(col("vec_id"), quant.as("q"))
+    val eq = quantized(embeddings)
     val q = eq.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("q").as("qq"))
-    val c = eq.select(col("vec_id").as("neighbor_id"), col("q").as("cq"))
-    val w = Window.partitionBy("query_id").orderBy(col("d"), col("neighbor_id"))
-    cand.join(broadcast(q), Seq("query_id")).join(c, Seq("neighbor_id"))
-      .withColumn("d",
-        aggregate(zip_with(col("qq"), col("cq"), (x, y) => (x - y) * (x - y)),
-          lit(0L), _ + _))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"), col("d"))
+    intL2TopK(cand.join(broadcast(q), Seq("query_id")).join(eq, Seq("vec_id")), k)
       .orderBy("query_id", "rank")
   }
 
@@ -1195,32 +1090,12 @@ private[sim] trait KnnQuant extends KnnCore {
       embeddings: DataFrame, nQueries: Int = 10, k: Int = 5,
       cells: Int = 8, iters: Int = 2, nprobe: Int = 2,
       m: Int = 16, nC: Int = 16, pqIters: Int = 3,
-      rescoreR: Int = 50): DataFrame = {
-    val approx = ivfPqResidualRescoreTopK(embeddings, nQueries, k, cells,
-      iters, nprobe, m, nC, pqIters, rescoreR)
-      .select(col("query_id"), col("neighbor_id"), lit(1).as("hit"))
-    val quant = expr(
-      s"transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * $LloydScale.0) AS BIGINT))")
-    val eq = withNorm(embeddings).select(col("vec_id"), quant.as("q"))
-    val qset = eq.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("q").as("qq"))
-    val w = Window.partitionBy("query_id").orderBy(col("d"), col("vec_id"))
-    val exact = eq.crossJoin(broadcast(qset))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("d",
-        aggregate(zip_with(col("qq"), col("q"), (x, y) => (x - y) * (x - y)),
-          lit(0L), _ + _))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"))
-    exact.join(approx, Seq("query_id", "neighbor_id"), "left")
-      .agg(count(lit(1)).as("n_exact"),
-        sum(coalesce(col("hit"), lit(0))).as("hits"))
-      .select(lit(k).as("k"), lit(rescoreR).as("rescore_r"),
-        lit(nprobe).as("nprobe"), lit(cells).as("cells"),
-        col("n_exact"), col("hits"),
-        (col("hits").cast("double") / col("n_exact")).as("recall"))
-  }
+      rescoreR: Int = 50): DataFrame =
+    recallRow(exactIntTopK(quantized(embeddings), nQueries, k),
+      ivfPqResidualRescoreTopK(embeddings, nQueries, k, cells,
+        iters, nprobe, m, nC, pqIters, rescoreR),
+      lit(k).as("k"), lit(rescoreR).as("rescore_r"),
+      lit(nprobe).as("nprobe"), lit(cells).as("cells"))
 
   /** DuckDB twin of [[ivfPqResidualRescoreTopK]]: the residual block's
     * ranked frame sliced at rescoreR, then the exact integer-L2 rescore
@@ -1229,78 +1104,37 @@ private[sim] trait KnnQuant extends KnnCore {
   def ivfPqResidualRescoreTopKSql(
       nQueries: Int = 10, k: Int = 5, cells: Int = 8, iters: Int = 2,
       nprobe: Int = 2, m: Int = 16, nC: Int = 16, pqIters: Int = 3,
-      rescoreR: Int = 50, prelude: String = ""): String = {
-    val d1 = Dim + 1
+      rescoreR: Int = 50, prelude: String = ""): String =
     s"""WITH ${ivfPqResidualPrefix(nQueries, cells, iters, nprobe, prelude)},
        |${pqResidualCtes("", residual = true, m, nC, pqIters)},
        |rsq AS (SELECT query_id, neighbor_id FROM rr WHERE rn <= $rescoreR),
-       |fsc AS (
-       |  SELECT s.query_id, s.neighbor_id,
-       |    CAST(SUM((q.q[t.i] - c.q[t.i]) * (q.q[t.i] - c.q[t.i])) AS BIGINT) AS d
-       |  FROM rsq s
-       |    JOIN e0 q ON q.vec_id = s.query_id
-       |    JOIN e0 c ON c.vec_id = s.neighbor_id
-       |    CROSS JOIN range(1, $d1) t(i)
-       |  GROUP BY 1, 2),
-       |frk AS (
-       |  SELECT query_id, neighbor_id, d,
-       |    ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY d, neighbor_id) AS rn
-       |  FROM fsc)
+       |fr AS (
+       |  ${intL2TopKSql("rsq", "e0", k)})
        |SELECT query_id, neighbor_id, CAST(rn AS INTEGER) AS "rank", d
-       |FROM frk WHERE rn <= $k ORDER BY query_id, "rank"""".stripMargin
-  }
+       |FROM fr ORDER BY query_id, "rank"""".stripMargin
 
   /** DuckDB twin of [[ivfPqResidualRescoreRecall]]. */
   def ivfPqResidualRescoreRecallSql(
       nQueries: Int = 10, k: Int = 5, cells: Int = 8, iters: Int = 2,
       nprobe: Int = 2, m: Int = 16, nC: Int = 16, pqIters: Int = 3,
-      rescoreR: Int = 50, prelude: String = ""): String = {
-    val d1 = Dim + 1
+      rescoreR: Int = 50, prelude: String = ""): String =
     s"""WITH ${ivfPqResidualPrefix(nQueries, cells, iters, nprobe, prelude)},
        |${pqResidualCtes("", residual = true, m, nC, pqIters)},
        |rsq AS (SELECT query_id, neighbor_id FROM rr WHERE rn <= $rescoreR),
-       |fsc AS (
-       |  SELECT s.query_id, s.neighbor_id,
-       |    SUM((q.q[t.i] - c.q[t.i]) * (q.q[t.i] - c.q[t.i])) AS d
-       |  FROM rsq s
-       |    JOIN e0 q ON q.vec_id = s.query_id
-       |    JOIN e0 c ON c.vec_id = s.neighbor_id
-       |    CROSS JOIN range(1, $d1) t(i)
-       |  GROUP BY 1, 2),
        |fr AS (
-       |  SELECT query_id, neighbor_id FROM (
-       |    SELECT query_id, neighbor_id,
-       |      ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY d, neighbor_id) AS rn
-       |    FROM fsc) WHERE rn <= $k),
-       |bscore AS (
-       |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-       |    SUM((q.q[t.i] - c.q[t.i]) * (q.q[t.i] - c.q[t.i])) AS d
-       |  FROM e0 q JOIN e0 c ON c.vec_id <> q.vec_id
-       |    CROSS JOIN range(1, $d1) t(i)
-       |  WHERE q.vec_id < $nQueries
-       |  GROUP BY 1, 2),
-       |br AS (
-       |  SELECT query_id, neighbor_id FROM (
-       |    SELECT query_id, neighbor_id,
-       |      ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY d, neighbor_id) AS rn
-       |    FROM bscore) WHERE rn <= $k),
-       |agg AS (
-       |  SELECT COUNT(*) AS n_exact,
-       |    CAST(SUM(CASE WHEN fr.query_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS hits
-       |  FROM br LEFT JOIN fr
-       |    ON fr.query_id = br.query_id AND fr.neighbor_id = br.neighbor_id)
-       |SELECT CAST($k AS INTEGER) AS k, CAST($rescoreR AS INTEGER) AS rescore_r,
-       |  CAST($nprobe AS INTEGER) AS nprobe, CAST($cells AS INTEGER) AS cells,
-       |  n_exact, hits, CAST(hits AS DOUBLE) / n_exact AS recall
-       |FROM agg""".stripMargin
-  }
+       |  ${intL2TopKSql("rsq", "e0", k)}),
+       |${exactSql(nQueries, k)}
+       |${recallRowSql(s"CAST($k AS INTEGER) AS k, " +
+           s"CAST($rescoreR AS INTEGER) AS rescore_r, " +
+           s"CAST($nprobe AS INTEGER) AS nprobe, CAST($cells AS INTEGER) AS cells",
+         "br", "fr")}""".stripMargin
 
   /** The variant CTE block of the residual-IVF-PQ twins: residual (or
     * raw) long form, per-subspace Lloyd training unrolled per iteration
     * (px/pa/ps/pu/p — the [[lloydSqlCtes]] scheme with a (sub, c) state
     * key instead of j), final encode, per-(query, probe) LUTs, and the
-    * ADC score/rank. Shares the coarse CTEs (e0, c{iters}, fcx, fca,
-    * pr, psd) emitted by the callers.
+    * ADC score/rank. Shares the coarse CTEs (e0, cfin, fca, pr, psd)
+    * emitted by [[ivfPqResidualPrefix]].
     */
   private[sim] def pqResidualCtes(
       p: String, residual: Boolean, m: Int, nC: Int, pqIters: Int): String = {
@@ -1395,38 +1229,24 @@ private[sim] trait KnnQuant extends KnnCore {
   }
 
   /** The shared coarse prefix of the residual-IVF-PQ twins: the Lloyd
-    * CTEs plus final cells (fcx/fca), probe sets (pr) and the global
-    * md5 seed ranking (psd) both variants and both query shapes read.
+    * CTEs plus the coarse rankings of [[ivfCoarseSql]] (fca, pr) and the
+    * global md5 seed ranking (psd) both variants and both query shapes
+    * read.
     */
   private[sim] def ivfPqResidualPrefix(
       nQueries: Int, cells: Int, iters: Int, nprobe: Int,
-      prelude: String = ""): String = {
-    val d1 = Dim + 1
+      prelude: String = ""): String =
     // cfin pins the trained coarse centroids behind ONE materialization:
     // the variant blocks reference the centroid state repeatedly, and
     // every inlined reference would otherwise replay the whole unrolled
     // Lloyd chain (see the MATERIALIZED note in pqResidualCtes)
     s"""$prelude${lloydSqlCtes(cells, iters)},
        |cfin AS MATERIALIZED (SELECT j, i, cd FROM c$iters),
-       |fcx AS (
-       |  SELECT e.vec_id, c.j, SUM((e.q[t.i] - c.cd) * (e.q[t.i] - c.cd)) AS d
-       |  FROM e0 e CROSS JOIN range(1, $d1) t(i) JOIN cfin c ON c.i = t.i
-       |  GROUP BY 1, 2),
-       |fca AS MATERIALIZED (
-       |  SELECT vec_id, j AS cell FROM (
-       |    SELECT vec_id, j,
-       |      ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d, j) AS rk
-       |    FROM fcx) WHERE rk = 1),
-       |pr AS MATERIALIZED (
-       |  SELECT vec_id AS query_id, j AS cell FROM (
-       |    SELECT vec_id, j,
-       |      ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d, j) AS rk
-       |    FROM fcx WHERE vec_id < $nQueries) WHERE rk <= $nprobe),
+       |${ivfCoarseSql("cfin", "e0", s"vec_id < $nQueries", nprobe)},
        |psd AS MATERIALIZED (
        |  SELECT vec_id,
        |    ROW_NUMBER() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rn
        |  FROM e0)""".stripMargin
-  }
 
   /** DuckDB twin of [[ivfPqResidualTopK]]. */
   def ivfPqResidualTopKSql(
@@ -1446,36 +1266,19 @@ private[sim] trait KnnQuant extends KnnCore {
       nQueries: Int = 10, k: Int = 5, cells: Int = 8, iters: Int = 2,
       nprobe: Int = 2, m: Int = 16, nC: Int = 16, pqIters: Int = 3,
       prelude: String = ""): String = {
-    val d1 = Dim + 1
-    def aggLeg(p: String, variant: String) =
-      s"""SELECT '$variant' AS variant, CAST($k AS INTEGER) AS k,
-         |  CAST($nprobe AS INTEGER) AS nprobe, CAST($cells AS INTEGER) AS cells,
-         |  CAST($m AS INTEGER) AS m, CAST($nC AS INTEGER) AS code_k,
-         |  COUNT(*) AS n_exact,
-         |  CAST(SUM(CASE WHEN a.query_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS hits,
-         |  CAST(SUM(CASE WHEN a.query_id IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE)
-         |    / COUNT(*) AS recall
-         |FROM br b LEFT JOIN (SELECT query_id, neighbor_id FROM ${p}rr WHERE rn <= $k) a
-         |  ON a.query_id = b.query_id AND a.neighbor_id = b.neighbor_id""".stripMargin
+    def leg(p: String, variant: String) = recallRowSql(
+      s"'$variant' AS variant, CAST($k AS INTEGER) AS k, " +
+        s"CAST($nprobe AS INTEGER) AS nprobe, CAST($cells AS INTEGER) AS cells, " +
+        s"CAST($m AS INTEGER) AS m, CAST($nC AS INTEGER) AS code_k",
+      "br", s"(SELECT query_id, neighbor_id FROM ${p}rr WHERE rn <= $k)")
     s"""WITH ${ivfPqResidualPrefix(nQueries, cells, iters, nprobe, prelude)},
-       |bscore AS (
-       |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-       |    SUM((q.q[t.i] - c.q[t.i]) * (q.q[t.i] - c.q[t.i])) AS d
-       |  FROM e0 q JOIN e0 c ON c.vec_id <> q.vec_id
-       |    CROSS JOIN range(1, $d1) t(i)
-       |  WHERE q.vec_id < $nQueries
-       |  GROUP BY 1, 2),
-       |br AS MATERIALIZED (
-       |  SELECT query_id, neighbor_id FROM (
-       |    SELECT query_id, neighbor_id,
-       |      ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY d, neighbor_id) AS rn
-       |    FROM bscore) WHERE rn <= $k),
+       |${exactSql(nQueries, k)},
        |${pqResidualCtes("r_", residual = true, m, nC, pqIters)},
        |${pqResidualCtes("n_", residual = false, m, nC, pqIters)}
        |SELECT * FROM (
-       |${aggLeg("r_", "residual")}
+       |${leg("r_", "residual")}
        |UNION ALL
-       |${aggLeg("n_", "no_residual")})
+       |${leg("n_", "no_residual")})
        |ORDER BY variant""".stripMargin
   }
 

@@ -159,12 +159,6 @@ object GraftQueue {
     LogSnapshot(truncStamp, base, live.sortBy(stampOf))
   }
 
-  /** Live segment files in offset order (one fresh snapshot). Planning
-    * paths should call [[snapshot]] ONCE instead and reuse it.
-    */
-  private[sources] def segments(path: String, topic: String): Seq[File] =
-    snapshot(path, topic).segs
-
   /** Log start offset: the absolute offset of the first surviving record
     * (0 until retention runs). All offset arithmetic — batch scan starts,
     * micro-batch planning, totals — is based at this value, so committed
@@ -249,7 +243,7 @@ object GraftQueue {
     *
     * Crash-safety: the marker is created atomically FIRST, then segment
     * files are deleted. A crash between the two leaves files that every
-    * reader already skips (segments() filters stamp <= marker), and a
+    * reader already skips (snapshot() filters stamp <= marker), and a
     * re-run finishes the deletes. Like Kafka, retention is cooperative:
     * calling it with an offset above a live consumer's position makes
     * that consumer's next fetch fail (its range no longer exists) — the
@@ -1033,7 +1027,7 @@ private case class QueueWriterFactory(path: String, topic: String) extends DataW
       private val dir = GraftQueue.topicDir(path, topic)
       dir.mkdirs()
       // "inflight-" prefix keeps uncommitted files OUT of the
-      // "segment-" namespace that segments()/nextStamp scan — the old
+      // "segment-" namespace that snapshot()/nextStamp scan — the old
       // "segment-inflight-" prefix could race into a concurrent
       // committer's stamp scan (and, in principle, a reader's listing)
       private val tmp = File.createTempFile("inflight-segment-", "", dir)

@@ -107,6 +107,24 @@ class IvfMaintenanceSpec extends SparkSpec {
       "graftqueue maintenance verdicts differ from the batch twin")
   }
 
+  test("in-plan drift report ≡ the batch-0 verdict rows the maintenance step persists") {
+    // the step totals the persisted per-cell stats; the report reads the
+    // same assignment in-plan — both must give the same rows
+    val root = Files.createTempDirectory("graft_ivf_report").toString
+    val (corpus, b1, _) = IvfMaintenance.carve(emb)
+    IvfMaintenance.maintenanceStep(spark, corpus, s"$root/state",
+      s"$root/verdicts", b1, 0L, cells = 8, iters = 2,
+      driftRatio = 1.5, shareRatio = 2.0)
+    val verdicts = spark.read.parquet(s"$root/verdicts/b0")
+      .drop("batch_seq").orderBy("cell")
+    val report = graft.sim.Knn.ivfDriftReport(corpus, b1)
+    assert(report.columns.toSeq == verdicts.columns.toSeq)
+    val rows = report.collect().toSeq
+    assert(rows.nonEmpty, "drift report produced no rows")
+    assert(rows == verdicts.collect().toSeq,
+      "in-plan drift report differs from the persisted batch-0 verdicts")
+  }
+
   test("embedding float arrays survive the JSON queue envelope bit-for-bit") {
     val src = emb.select("vec_id", "embedding").orderBy("vec_id").limit(50)
     val wire = org.apache.spark.sql.types.StructType.fromDDL(

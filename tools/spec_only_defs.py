@@ -17,6 +17,12 @@ in its own file only. Overrides, ``main``, ``apply`` and ``unapply`` are
 never listed. Each listed def is followed by the spec files whose code
 names it, or by ``(no caller)``.
 
+The scan repeats until nothing changes: a use inside the body of a def
+already listed, or inside the def's own body, does not count, so a def
+whose only callers are listed defs is listed too. A body runs from the
+``def`` line to the next line indented no deeper (a closing bracket
+there still belongs to it).
+
 The match is by name, so it errs towards "called": a def that shares its
 name with another def, a local value or a library method (``fit``,
 ``count``) counts as called wherever that name is used.
@@ -140,6 +146,24 @@ def load(paths):
     return {p: code_only(open(p, encoding="utf-8").read()) for p in paths}
 
 
+def extent(code, pos):
+    """(start, end) offsets of the def whose name starts at pos: from its
+    line to the next non-blank line indented no deeper, a closing
+    bracket on that line included."""
+    start = code.rfind("\n", 0, pos) + 1
+    indent = len(code[start:pos]) - len(code[start:pos].lstrip(" "))
+    i = code.find("\n", pos)
+    while 0 <= i < len(code):
+        j = code.find("\n", i + 1)
+        j = len(code) if j < 0 else j
+        line = code[i + 1:j]
+        stripped = line.lstrip(" ")
+        if stripped and len(line) - len(stripped) <= indent:
+            return (start, j if stripped[0] in "})" else i)
+        i = j
+    return (start, len(code))
+
+
 def owner(code, pos):
     """The top-level object, trait or class a definition sits in."""
     name = None
@@ -179,7 +203,26 @@ def main():
     for path, code in program.items():
         for m in IDENT.finditer(code):
             if (path, m.start()) not in def_sites:
-                uses.setdefault(m.group(0), set()).add(path)
+                uses.setdefault(m.group(0), []).append((path, m.start()))
+    spans = {(path, pos): extent(main_src[path], pos) for path, pos, _, _ in defs}
+
+    def inside(use, key):
+        path, at = use
+        return path == key[0] and spans[key][0] <= at < spans[key][1]
+
+    listed = set()
+    while True:
+        now = set()
+        for path, pos, name, private in defs:
+            key = (path, pos)
+            live = [u for u in uses.get(name, [])
+                    if not inside(u, key) and not any(inside(u, d) for d in listed)
+                    and (u[0] == path or not private)]
+            if not live:
+                now.add(key)
+        if now == listed:
+            break
+        listed = now
     spec_uses = {}
     for path, code in test_src.items():
         for m in IDENT.finditer(code):
@@ -187,8 +230,7 @@ def main():
 
     rows = []
     for path, pos, name, private in defs:
-        callers = uses.get(name, set())
-        if (path in callers) if private else callers:
+        if (path, pos) not in listed:
             continue
         code = main_src[path]
         line = code.count("\n", 0, pos) + 1
