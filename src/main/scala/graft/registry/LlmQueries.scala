@@ -207,7 +207,7 @@ private[graft] trait LlmQueries extends RegistryBase {
       // amortizes the corpus seed across reps (the dedup-stream rule).
       Q("streaming_link_authority",
         (s, d) => graft.streaming.WebGraphStream.webGraphQueueStream(s, d,
-          stateDir = Some(memo(dedupStreamStateDirs)(("wgq", d))(
+          stateDir = Some(dedupStreamStateDirs(("wgq", d))(
             java.nio.file.Files.createTempDirectory("graft_wgq_state").toString))),
         Some(graft.text.WebGraphMaintenance.maintenanceCarveSql())),
       // ...and the retrain-FIRING leg: batch 1 is a spam-burst link
@@ -433,7 +433,7 @@ private[graft] trait LlmQueries extends RegistryBase {
       // queries concurrently and v1+ overwrites must not race.
       Q("streaming_dedup_index_queue",
         (s, d) => graft.streaming.Streams.dedupIndexQueueStream(s, d,
-          stateDir = Some(memo(dedupStreamStateDirs)(("queue", d))(
+          stateDir = Some(dedupStreamStateDirs(("queue", d))(
             java.nio.file.Files.createTempDirectory("graft_dsq_state").toString))),
         Some(BLOOM_INCR_SQL)),
       // the NEAR-dup index under the same continuous-ingest machinery
@@ -444,7 +444,7 @@ private[graft] trait LlmQueries extends RegistryBase {
       // CrashRecoverySpec's LSH leg
       Q("streaming_lsh_index",
         (s, d) => graft.streaming.Streams.lshIndexQueueStream(s, d,
-          stateDir = Some(memo(dedupStreamStateDirs)(("lshq", d))(
+          stateDir = Some(dedupStreamStateDirs(("lshq", d))(
             java.nio.file.Files.createTempDirectory("graft_lshq_state").toString))),
         Some(Dedup.lshIncrementalSql(
           "doc_id % 3 <> 0",
@@ -461,7 +461,7 @@ private[graft] trait LlmQueries extends RegistryBase {
       // across reps (the dedup-stream rule above).
       Q("streaming_ivf_maintenance",
         (s, d) => graft.streaming.IvfStream.ivfIndexQueueStream(s, d,
-          stateDir = Some(memo(dedupStreamStateDirs)(("ivfq", d))(
+          stateDir = Some(dedupStreamStateDirs(("ivfq", d))(
             java.nio.file.Files.createTempDirectory("graft_ivfq_state").toString))),
         Some(graft.sim.IvfMaintenance.maintenanceCarveSql())),
       // Frozen-model STREAMING INFERENCE: the committed quality model
@@ -492,7 +492,7 @@ private[graft] trait LlmQueries extends RegistryBase {
           // what a deployment amortizes across batches — build it once
           // per scale dir so repeated runs time the ATTACH, not the
           // state bootstrap
-          val state = memo(clusterStateDirs)(d)({
+          val state = clusterStateDirs(d)({
             val p = java.nio.file.Files.createTempDirectory("graft_cc_idx").toString
             Dedup.dedupClusters(corpus).select("doc_id", "cluster_id")
               .write.mode("overwrite").parquet(s"$p/labels")

@@ -16,8 +16,7 @@ private[graft] trait RegistryBase {
     * dir per JVM — the amortized corpus state `cluster_attach_incremental`
     * attaches to (see that registration's comment).
     */
-  protected val clusterStateDirs =
-    scala.collection.concurrent.TrieMap.empty[String, Holder[String]]
+  protected val clusterStateDirs = new RunOnce[String, String]
 
   /** One persisted mockflow-generator output per scale dir per JVM:
     * `mockflow_events` and `mockflow_invariants` verify the SAME
@@ -28,8 +27,7 @@ private[graft] trait RegistryBase {
     * oracles see byte-identical events. Same amortization pattern as
     * [[clusterStateDirs]].
     */
-  protected val mockflowDirs =
-    scala.collection.concurrent.TrieMap.empty[String, Holder[String]]
+  protected val mockflowDirs = new RunOnce[String, String]
 
   /** Full-corpus near-dup cluster labels (doc_id, cluster_id,
     * cluster_size), persisted once per scale dir per JVM — shared by the
@@ -38,36 +36,16 @@ private[graft] trait RegistryBase {
     * labels; `dedup_clusters` itself still times the CC pipeline
     * honestly. Deterministic, so the parquet hop is oracle-transparent.
     */
-  protected val fullClusterDirs =
-    scala.collection.concurrent.TrieMap.empty[String, Holder[String]]
+  protected val fullClusterDirs = new RunOnce[String, String]
 
   /** Per-(form, scale dir) state dirs for the two streaming dedup-index
     * queries — v0 seeds once per JVM, runs share the steady state.
     */
-  protected val dedupStreamStateDirs =
-    scala.collection.concurrent.TrieMap.empty[(String, String), Holder[String]]
-
-  /** Per-key run-at-most-once memoization: TrieMap.getOrElseUpdate may
-    * evaluate its thunk MORE THAN ONCE under concurrent first access
-    * (Verify runs queries on an 8-thread pool), and these thunks are
-    * exactly the expensive per-scale-dir seeds — double-running the
-    * full CC pipeline or the ~90k-event generate into a second temp dir
-    * whose result is then discarded wastes work and disk (ADVICE r10).
-    * The holder trick keeps the guarantee PER KEY: the race can at
-    * worst allocate two empty holders (one discarded unevaluated), the
-    * stored holder's `lazy val` runs the seed exactly once, and a slow
-    * seed for one key never blocks lookups or builds for another
-    * (map-wide `synchronized`, the first fix, did).
-    */
-  protected final class Holder[V](thunk: () => V) { lazy val get: V = thunk() }
-
-  protected def memo[K, V](
-      m: scala.collection.concurrent.TrieMap[K, Holder[V]])(k: K)(v: => V): V =
-    m.getOrElseUpdate(k, new Holder(() => v)).get
+  protected val dedupStreamStateDirs = new RunOnce[(String, String), String]
 
   protected def fullClusterLabels(
       s: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
-    val p = memo(fullClusterDirs)(d)({
+    val p = fullClusterDirs(d)({
       val dir = java.nio.file.Files.createTempDirectory("graft_cc_full").toString
       graft.dedup.Dedup.dedupClusters(
         TestdataAdapter.table(s, d, "documents")
@@ -81,7 +59,7 @@ private[graft] trait RegistryBase {
   protected def mockflowGenerated(
       s: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
     import graft.mockflow.MockFlow
-    val p = memo(mockflowDirs)(d)({
+    val p = mockflowDirs(d)({
       val stops = MockFlow.seedBaseDemand(TestdataAdapter.flowEvents(s, d))
       val hours = MockFlow.hoursContext(
         Pipelines.weatherHourly(s, d), Pipelines.delayHourly(s, d))

@@ -42,8 +42,8 @@ import org.apache.spark.sql.functions._
   * any number of folded batches, the Streams.stateBefore rule).
   */
 object IvfMaintenance {
-  import Knn.{lloydQuantized, lloydTrainGrid, lloydAssignGrid,
-    lloydCenFrame, lloydSqlCtes, Dim, LloydScale}
+  import Knn.{lloydQuantized, lloydTrainGrid, lloydAssignD,
+    lloydCenFrame, lloydSqlCtes, quantizeSql, homeCellCtes, Dim}
 
   def cenPath(stateDir: String, v: Long): String = s"$stateDir/centroids_v$v"
   def statsPath(stateDir: String, v: Long): String = s"$stateDir/trainstats_v$v"
@@ -78,6 +78,13 @@ object IvfMaintenance {
   private def train(e0: DataFrame, cells: Int, iters: Int): Seq[Seq[Long]] =
     lloydTrainGrid(e0, cells, iters)
 
+  /** Each row of a quantized (vec_id, q) frame in its home cell under
+    * `grid`: (vec_id, cell, d).
+    */
+  private[sim] def homeCells(eq: DataFrame, grid: Seq[Seq[Long]]): DataFrame =
+    lloydAssignD(eq, grid)
+      .select(col("vec_id"), col("j").as("cell"), col("d"))
+
   /** Per-cell stats of an assignment frame carrying (cell, d). */
   private[sim] def cellStats(asg: DataFrame, suffix: String): DataFrame =
     asg.groupBy("cell").agg(
@@ -93,9 +100,7 @@ object IvfMaintenance {
     if (!exists(cenPath(stateDir, 0))) {
       val e0 = lloydQuantized(corpus)
       val grid = train(e0, cells, iters)
-      val asg = lloydAssignGrid(e0, grid)
-        .withColumn("d", array_min(col("ds")))
-        .select(col("vec_id"), col("j").as("cell"), col("d"))
+      val asg = homeCells(e0, grid)
       lloydCenFrame(corpus.sparkSession, grid)
         .coalesce(1).write.mode("overwrite").parquet(cenPath(stateDir, 0))
       cellStats(asg, "train")
@@ -112,8 +117,7 @@ object IvfMaintenance {
     val eb = lloydQuantized(batch)
     val grid = cen.select("j", "c").collect().sortBy(_.getInt(0))
       .toSeq.map(_.getSeq[Long](1))
-    val out = lloydAssignGrid(eb, grid)
-      .withColumn("d", array_min(col("ds")))
+    val out = lloydAssignD(eb, grid)
       .select(col("vec_id"), col("j").as("cell"), col("d"), col("q"))
       .localCheckpoint()
     eb.unpersist(blocking = false)
@@ -203,9 +207,7 @@ object IvfMaintenance {
             .select("vec_id", "q"))
         .persist()
       val grid2 = train(win, cells, iters)
-      val asg2 = lloydAssignGrid(win, grid2)
-        .withColumn("d", array_min(col("ds")))
-        .select(col("vec_id"), col("j").as("cell"), col("d"))
+      val asg2 = homeCells(win, grid2)
       lloydCenFrame(s, grid2).coalesce(1).write.mode("overwrite")
         .parquet(cenPath(stateDir, batchId + 1))
       cellStats(asg2, "train")
@@ -264,67 +266,45 @@ object IvfMaintenance {
 
   // ───────────────────────── DuckDB twins ──────────────────────────────
 
-  private def d1 = Dim + 1
+  /** [[cellStats]] in SQL over a relation carrying (cell, d). */
+  private[sim] def cellStatsSql(src: String, suffix: String): String =
+    s"""SELECT cell, COUNT(*) AS n_$suffix,
+       |    CAST(SUM(d) AS BIGINT) AS inertia_$suffix,
+       |    CAST(MAX(d) AS BIGINT) AS radius_$suffix
+       |  FROM $src GROUP BY 1""".stripMargin
 
   /** Quantize + assign + per-cell stats for one batch leg, against the
     * centroid CTE `cenCte`, emitting `${p}e0b` / `${p}bx` / `${p}ba` /
     * `${p}bs` (stats named n_batch/inertia_batch/radius_batch).
     */
   private def batchLegSql(p: String, srcWhere: String, cenCte: String): String =
-    s"""${p}e0b AS (
-       |  SELECT vec_id,
-       |    list_transform(embedding,
-       |      x -> CAST(floor(CAST(x AS DOUBLE) * $LloydScale.0) AS BIGINT)) AS q
-       |  FROM e WHERE $srcWhere),
-       |${p}bx AS (
-       |  SELECT b.vec_id, c.j, SUM((b.q[t.i] - c.cd) * (b.q[t.i] - c.cd)) AS d
-       |  FROM ${p}e0b b CROSS JOIN range(1, $d1) t(i) JOIN $cenCte c ON c.i = t.i
-       |  GROUP BY 1, 2),
-       |${p}ba AS (
-       |  SELECT vec_id, j AS cell, d FROM (
-       |    SELECT vec_id, j, d,
-       |      ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d, j) AS rk
-       |    FROM ${p}bx) WHERE rk = 1),
+    s"""${quantizeSql(s"${p}e0b", srcWhere)},
+       |${homeCellCtes(s"${p}bx", s"${p}ba", s"${p}e0b", cenCte)},
        |${p}bs AS MATERIALIZED (
-       |  SELECT cell, COUNT(*) AS n_batch,
-       |    CAST(SUM(d) AS BIGINT) AS inertia_batch,
-       |    CAST(MAX(d) AS BIGINT) AS radius_batch
-       |  FROM ${p}ba GROUP BY 1)""".stripMargin
+       |  ${cellStatsSql(s"${p}ba", "batch")})""".stripMargin
 
   /** Final assignment + per-cell TRAIN stats off a finished Lloyd chain
     * (centroids `$cenCte`, quantized source `${p}src`), emitting
     * `${p}fx` / `${p}fa` / `${p}ts`.
     */
   private def trainStatsSql(p: String, srcCte: String, cenCte: String): String =
-    s"""${p}fx AS (
-       |  SELECT e.vec_id, c.j, SUM((e.q[t.i] - c.cd) * (e.q[t.i] - c.cd)) AS d
-       |  FROM $srcCte e CROSS JOIN range(1, $d1) t(i) JOIN $cenCte c ON c.i = t.i
-       |  GROUP BY 1, 2),
-       |${p}fa AS (
-       |  SELECT vec_id, j AS cell, d FROM (
-       |    SELECT vec_id, j, d,
-       |      ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d, j) AS rk
-       |    FROM ${p}fx) WHERE rk = 1),
+    s"""${homeCellCtes(s"${p}fx", s"${p}fa", srcCte, cenCte)},
        |${p}ts AS MATERIALIZED (
-       |  SELECT cell, COUNT(*) AS n_train,
-       |    CAST(SUM(d) AS BIGINT) AS inertia_train,
-       |    CAST(MAX(d) AS BIGINT) AS radius_train
-       |  FROM ${p}fa GROUP BY 1)""".stripMargin
+       |  ${cellStatsSql(s"${p}fa", "train")})""".stripMargin
 
-  /** The drift-report algebra as one SELECT over cell CTE `cellsCte`,
-    * train stats `$tsCte`, batch stats `$bsCte` — same NULLIF'd ratio /
-    * flag expressions as the Spark side, totals as BIGINT-cast sums of
-    * the per-cell stats.
+  /** [[driftReport]] in SQL: one SELECT over cell CTE `cellsCte`, train
+    * stats `$tsCte`, batch stats `$bsCte` — same NULLIF'd ratio / flag
+    * expressions as the Spark side, totals as BIGINT-cast sums of the
+    * per-cell stats.
     */
-  private def reportSql(cellsCte: String, tsCte: String, bsCte: String,
-      batchSeq: Int, driftRatio: Double, shareRatio: Double): String =
+  private[sim] def driftReportSql(cellsCte: String, tsCte: String,
+      bsCte: String, driftRatio: Double, shareRatio: Double): String =
     s"""SELECT cell, n_train, n_batch, inertia_train, inertia_batch,
        |  radius_train, radius_batch, mean_d_train, mean_d_batch,
        |  share_train, share_batch,
        |  mean_d_batch / NULLIF(mean_d_train, 0.0) AS drift_ratio,
        |  COALESCE(mean_d_batch / NULLIF(mean_d_train, 0.0) > $driftRatio, FALSE)
-       |    OR COALESCE(share_batch > $shareRatio * share_train, FALSE) AS retrain_due,
-       |  CAST($batchSeq AS INTEGER) AS batch_seq
+       |    OR COALESCE(share_batch > $shareRatio * share_train, FALSE) AS retrain_due
        |FROM (
        |  SELECT *,
        |    CAST(inertia_train AS DOUBLE) / NULLIF(n_train, 0) AS mean_d_train,
@@ -345,6 +325,15 @@ object IvfMaintenance {
        |      LEFT JOIN $tsCte t USING (cell)
        |      LEFT JOIN $bsCte b USING (cell)))""".stripMargin
 
+  /** Batch `k`'s verdict rows: the [[driftReportSql]] rows against the
+    * batch stats `b${k}bs`, with their batch_seq, as [[maintenanceStep]]
+    * writes them.
+    */
+  private def verdictSql(k: Int, cellsCte: String, tsCte: String,
+      driftRatio: Double, shareRatio: Double): String =
+    s"""SELECT *, CAST($k AS INTEGER) AS batch_seq FROM (
+       |${driftReportSql(cellsCte, tsCte, s"b${k}bs", driftRatio, shareRatio)})""".stripMargin
+
   /** DuckDB twin of [[maintenanceBatch]] (and of the graftqueue
     * streaming form — same fold, same oracle): Lloyd on the corpus
     * carve, train stats, batch-1 report, then the retrain GATE encoded
@@ -362,25 +351,25 @@ object IvfMaintenance {
        |cl AS (SELECT DISTINCT j AS cell FROM cfin),
        |${batchLegSql("b1", "vec_id % 6 = 0", "cfin")},
        |rep1 AS MATERIALIZED (
-       |${reportSql("cl", "ts", "b1bs", 1, driftRatio, shareRatio)}),
+       |${verdictSql(1, "cl", "ts", driftRatio, shareRatio)}),
        |gate1 AS (SELECT COALESCE(bool_or(retrain_due), FALSE) AS due FROM rep1),
        |cv1 AS MATERIALIZED (SELECT * FROM cfin WHERE NOT (SELECT due FROM gate1)),
        |tsv1 AS MATERIALIZED (SELECT * FROM ts WHERE NOT (SELECT due FROM gate1)),
        |clv1 AS (SELECT DISTINCT j AS cell FROM cv1),
        |${batchLegSql("b2", "vec_id % 6 = 3", "cv1")},
        |rep2 AS (
-       |${reportSql("clv1", "tsv1", "b2bs", 2, driftRatio, shareRatio)})
+       |${verdictSql(2, "clv1", "tsv1", driftRatio, shareRatio)})
        |SELECT * FROM (SELECT * FROM rep1 UNION ALL SELECT * FROM rep2)
        |ORDER BY batch_seq, cell""".stripMargin
 
   // ───────────── the retrain-FIRING leg (clustered + drifted) ──────────
 
-  /** Deterministic mixture segment for the retrain experiment — the
-    * [[Knn.clusteredEmbeddings]] generator with an id range and a
-    * parameterized block magnitude, so a SHIFTED mixture (mag −8 vs the
-    * corpus's +8) is a real distribution change the drift gate must
-    * catch. Same md5-dyadic arithmetic, so the table itself is
-    * oracle-exact (see clusteredEmbeddings' contract).
+  /** The md5-dyadic mixture generator, over an id range at a given
+    * block magnitude: [[Knn.clusteredEmbeddings]] is this at one segment
+    * [0, n) with mag 8, and the retrain experiment draws a SHIFTED
+    * mixture (mag −8 vs the corpus's +8) — a real distribution change the
+    * drift gate must catch. The table itself is oracle-exact (see
+    * clusteredEmbeddings' contract).
     */
   def mixEmbeddings(spark: SparkSession, idLo: Int, idHi: Int,
       kTrue: Int, mag: Double): DataFrame = {
@@ -400,10 +389,19 @@ object IvfMaintenance {
       .select(col("vec_id"), col("embedding"), col("g").as("label"))
   }
 
-  /** DuckDB CTE shadowing `embeddings` with the three-segment mixture:
-    * corpus [0, n) at +mag, batch-1 [n, n+m) and batch-2 [n+m, n+2m) at
-    * −mag (the drifted stream). MATERIALIZED for the same OOM reason as
-    * [[Knn.clusteredEmbeddingsCte]]. Ends with a comma — splice first.
+  /** DuckDB twin of [[mixEmbeddings]], as a WITH prelude that SHADOWS
+    * the `embeddings` table (CTE names take precedence) with the
+    * three-segment mixture: corpus [0, n) at +mag, batch-1 [n, n+m) and
+    * batch-2 [n+m, n+2m) at −mag (the drifted stream); m = 0 is the one
+    * segment of [[Knn.clusteredEmbeddingsCte]]. Ends with a comma —
+    * splice first.
+    *
+    * AS MATERIALIZED is load-bearing: a plain CTE gets INLINED into
+    * every one of the Lloyd chain's ~10 references to the source table,
+    * and DuckDB's optimizer loses the cardinality of the computed
+    * subquery — the inlined plan exhausted memory where the same chain
+    * over a base table runs in seconds. Materializing restores
+    * base-table behavior (measured: OOM → 1.8 s).
     */
   def mixEmbeddingsCte(n: Int, m: Int, kTrue: Int, mag: Double): String = {
     def hexSum(key: String, digits: Int): String =
@@ -469,7 +467,7 @@ object IvfMaintenance {
        |cl AS (SELECT DISTINCT j AS cell FROM cfin),
        |${batchLegSql("b1", s"vec_id >= $n AND vec_id < ${n + m}", "cfin")},
        |rep1 AS MATERIALIZED (
-       |${reportSql("cl", "ts", "b1bs", 1, driftRatio, shareRatio)}),
+       |${verdictSql(1, "cl", "ts", driftRatio, shareRatio)}),
        |gate1 AS (SELECT COALESCE(bool_or(retrain_due), FALSE) AS due FROM rep1),
        |${lloydSqlCtes(cells, iters,
           where = s"vec_id < ${n + m} AND (SELECT due FROM gate1)",
@@ -479,7 +477,7 @@ object IvfMaintenance {
        |rcl AS (SELECT DISTINCT j AS cell FROM rcfin),
        |${batchLegSql("b2", s"vec_id >= ${n + m}", "rcfin")},
        |rep2 AS (
-       |${reportSql("rcl", "rts", "b2bs", 2, driftRatio, shareRatio)})
+       |${verdictSql(2, "rcl", "rts", driftRatio, shareRatio)})
        |SELECT * FROM (SELECT * FROM rep1 UNION ALL SELECT * FROM rep2)
        |ORDER BY batch_seq, cell""".stripMargin
 }

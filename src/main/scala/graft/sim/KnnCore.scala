@@ -52,6 +52,20 @@ private[sim] trait KnnCore {
       s"CASE WHEN $arr[${j + 1}] >= 0 THEN ${1 << j} ELSE 0 END")
       .mkString(" + ")
 
+  /** One recall@k row: `exact` LEFT JOIN `approx` (both carrying
+    * query_id, neighbor_id) → the caller's `labels`, then n_exact, hits
+    * and recall = hits / n_exact — all in-plan, no driver counts.
+    */
+  private[sim] def recallRow(exact: DataFrame, approx: DataFrame,
+      labels: Column*): DataFrame =
+    exact.join(
+        approx.select(col("query_id"), col("neighbor_id"), lit(1).as("hit")),
+        Seq("query_id", "neighbor_id"), "left")
+      .agg(count(lit(1)).as("n_exact"),
+        sum(coalesce(col("hit"), lit(0))).as("hits"))
+      .select(labels ++ Seq(col("n_exact"), col("hits"),
+        (col("hits").cast("double") / col("n_exact")).as("recall")): _*)
+
   /** Brute-force cosine top-k for the query set (vec_id < nQueries over
     * all candidates). The baseline every approximate method is judged
     * against.
@@ -766,49 +780,46 @@ private[sim] trait KnnCore {
       embeddings: DataFrame, basis: Array[Array[Double]],
       explainedVariance: Double, nQueries: Int = 50, k: Int = 5,
       shortlistFactor: Int = 8): DataFrame = {
-    val spark = embeddings.sparkSession
-    import spark.implicits._
     val dimOut = basis.length
-    val e = withNorm(embeddings).persist()
-    try {
-      val bk = typedLit(basis.map(_.toSeq).toSeq)
-      val red = e.select(col("vec_id"),
-        transform(bk, b => aggregate(
-          zip_with(col("embedding"), b, (x, bb) => x.cast("double") * bb),
-          lit(0.0), (a, v) => a + v)).as("re"))
-      val rdot = expr("aggregate(zip_with(qe, ce, (x, y) -> x * y), 0D, (a, x) -> a + x)")
-      val qn = expr("aggregate(zip_with(qe, qe, (x, y) -> x * y), 0D, (a, x) -> a + x)")
-      val cn = expr("aggregate(zip_with(ce, ce, (x, y) -> x * y), 0D, (a, x) -> a + x)")
-      val q = red.filter(col("vec_id") < nQueries)
-        .select(col("vec_id").as("query_id"), col("re").as("qe"))
-      val c = red.select(col("vec_id").as("neighbor_id"), col("re").as("ce"))
-      val wr = Window.partitionBy("query_id").orderBy(col("rcos").desc, col("neighbor_id"))
-      val shortlist = c.crossJoin(broadcast(q))
-        .filter(col("neighbor_id") =!= col("query_id"))
-        .withColumn("rcos", rdot / (sqrt(qn) * sqrt(cn)))
-        .withColumn("srank", row_number().over(wr))
-        .filter(col("srank") <= k * shortlistFactor)
-        .select("query_id", "neighbor_id")
-      // full-space rerank of the shortlist only: two keyed joins to pull
-      // the exact vectors, one bounded per-query window
-      val full = e.select(col("vec_id"), col("embedding"), col("n2"))
-      val reranked = shortlist
-        .join(full.select(col("vec_id").as("query_id"),
-          col("embedding").as("qfe"), col("n2").as("qn2")), Seq("query_id"))
-        .join(full.select(col("vec_id").as("neighbor_id"),
-          col("embedding").as("cfe"), col("n2").as("cn2")), Seq("neighbor_id"))
-        .withColumn("cosine", dot("qfe", "cfe") / (sqrt(col("qn2")) * sqrt(col("cn2"))))
-        .withColumn("rank", row_number().over(
-          Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id"))))
-        .filter(col("rank") <= k)
-        .select("query_id", "neighbor_id")
-      val exact = bruteForceTopK(embeddings, nQueries, k)
-        .select("query_id", "neighbor_id")
-      val hits = reranked.join(exact, Seq("query_id", "neighbor_id")).count()
-      val denom = exact.count()
-      Seq((Dim, dimOut, k * shortlistFactor, explainedVariance, hits.toDouble / denom, denom))
-        .toDF("dim_in", "dim_out", "shortlist", "explained_variance", "recall_at_k", "n_pairs")
-    } finally e.unpersist(blocking = false)
+    val e = withNorm(embeddings)
+    val bk = typedLit(basis.map(_.toSeq).toSeq)
+    val red = e.select(col("vec_id"),
+      transform(bk, b => aggregate(
+        zip_with(col("embedding"), b, (x, bb) => x.cast("double") * bb),
+        lit(0.0), (a, v) => a + v)).as("re"))
+    val rdot = expr("aggregate(zip_with(qe, ce, (x, y) -> x * y), 0D, (a, x) -> a + x)")
+    val qn = expr("aggregate(zip_with(qe, qe, (x, y) -> x * y), 0D, (a, x) -> a + x)")
+    val cn = expr("aggregate(zip_with(ce, ce, (x, y) -> x * y), 0D, (a, x) -> a + x)")
+    val q = red.filter(col("vec_id") < nQueries)
+      .select(col("vec_id").as("query_id"), col("re").as("qe"))
+    val c = red.select(col("vec_id").as("neighbor_id"), col("re").as("ce"))
+    val wr = Window.partitionBy("query_id").orderBy(col("rcos").desc, col("neighbor_id"))
+    val shortlist = c.crossJoin(broadcast(q))
+      .filter(col("neighbor_id") =!= col("query_id"))
+      .withColumn("rcos", rdot / (sqrt(qn) * sqrt(cn)))
+      .withColumn("srank", row_number().over(wr))
+      .filter(col("srank") <= k * shortlistFactor)
+      .select("query_id", "neighbor_id")
+    // full-space rerank of the shortlist only: two keyed joins to pull
+    // the exact vectors, one bounded per-query window
+    val full = e.select(col("vec_id"), col("embedding"), col("n2"))
+    val reranked = shortlist
+      .join(full.select(col("vec_id").as("query_id"),
+        col("embedding").as("qfe"), col("n2").as("qn2")), Seq("query_id"))
+      .join(full.select(col("vec_id").as("neighbor_id"),
+        col("embedding").as("cfe"), col("n2").as("cn2")), Seq("neighbor_id"))
+      .withColumn("cosine", dot("qfe", "cfe") / (sqrt(col("qn2")) * sqrt(col("cn2"))))
+      .withColumn("rank", row_number().over(
+        Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id"))))
+      .filter(col("rank") <= k)
+    // recall against full-space brute force, in-plan (one row out)
+    recallRow(bruteForceTopK(embeddings, nQueries, k), reranked,
+        lit(Dim).as("dim_in"), lit(dimOut).as("dim_out"),
+        lit(k * shortlistFactor).as("shortlist"),
+        lit(explainedVariance).as("explained_variance"))
+      .select(col("dim_in"), col("dim_out"), col("shortlist"),
+        col("explained_variance"), col("recall").as("recall_at_k"),
+        col("n_exact").as("n_pairs"))
   }
 
   /** DuckDB twin of [[pcaRecallPinned]]: unrolled projection sums in

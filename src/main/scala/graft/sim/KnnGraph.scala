@@ -1,6 +1,6 @@
 package graft.sim
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -51,20 +51,13 @@ import org.apache.spark.sql.functions._
   * property graph indexes exist for.
   */
 object KnnGraph {
-  import Knn.{Dim, lloydQuantized, lloydTrainGrid, lloydAssignGrid,
-    lloydSqlCtes, ivfCoarseOf, ivfCandidates, intL2TopK, exactIntTopK,
-    recallRow, ivfCoarseSql, ivfSearchSql, exactSql, recallRowSql}
+  import Knn.{lloydQuantized, lloydTrainGrid, lloydAssignD,
+    lloydSqlCtes, ivfCoarseOf, ivfCandidates, intL2, intL2TopK, exactIntTopK,
+    recallRow, homeCellCtes, ivfCoarseSql, ivfSearchSql, exactSql,
+    recallRowSql, intL2Sql}
 
   /** How many nearest entry points the first beam keeps. */
   val EnterW = 2
-
-  /** Exact integer squared-L2 between two quantized vectors. */
-  private def pdist(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => { val t = x - y; t * t }),
-      lit(0L), _ + _)
-
-  private def pdistSql(a: String, b: String): String =
-    s"CAST(list_sum(list_transform(range(1, ${Dim + 1}), i -> ($a[i]-$b[i])*($a[i]-$b[i]))) AS BIGINT)"
 
   /** md5-ranked seed block — the deterministic unbiased sample the
     * graph bootstraps from (the lloydSeedGrid ranking).
@@ -82,13 +75,23 @@ object KnnGraph {
   private def entriesOf(e0: DataFrame, seed: DataFrame,
       cells: Int, iters: Int): DataFrame = {
     val grid = lloydTrainGrid(e0, cells, iters)
-    lloydAssignGrid(seed, grid)
-      .withColumn("d", array_min(col("ds")))
+    lloydAssignD(seed, grid)
       .withColumn("rk", row_number().over(
         Window.partitionBy("j").orderBy(col("d"), col("vec_id"))))
       .filter(col("rk") === 1)
       .select(col("vec_id").as("cand"))
   }
+
+  /** The entry set with its vectors — (cand, cq), built ONCE per graph
+    * (r18: the entries are frozen at build time, yet every walk
+    * re-joined them against the corpus at hop 0 before this round —
+    * one corpus-side join + broadcast build per walk for a ≤cells-row
+    * frame).
+    */
+  private[graft] def entriesWithVecs(entries: DataFrame, e0: DataFrame): DataFrame =
+    entries.join(e0.select(col("vec_id").as("cand"), col("q").as("cq")), "cand")
+      .select(col("cand"), col("cq"))
+      .localCheckpoint()
 
   /** One beam-search pass for a query frame (qid, qq) over a frozen
     * adjacency (src, dst, d) — the batch form of NSW's ef-search:
@@ -102,17 +105,6 @@ object KnnGraph {
     * scored (the honest candidate-budget accounting for the recall
     * experiment).
     */
-  /** The entry set with its vectors — (cand, cq), built ONCE per graph
-    * (r18: the entries are frozen at build time, yet every walk
-    * re-joined them against the corpus at hop 0 before this round —
-    * one corpus-side join + broadcast build per walk for a ≤cells-row
-    * frame).
-    */
-  private[graft] def entriesWithVecs(entries: DataFrame, e0: DataFrame): DataFrame =
-    entries.join(e0.select(col("vec_id").as("cand"), col("q").as("cq")), "cand")
-      .select(col("cand"), col("cq"))
-      .localCheckpoint()
-
   private[graft] def beamSearch(queries: DataFrame, adj: DataFrame,
       e0: DataFrame, entriesv: DataFrame, beamW: Int, hops: Int,
       withVisited: Boolean = false): (DataFrame, DataFrame) = {
@@ -120,7 +112,7 @@ object KnnGraph {
     val w = Window.partitionBy("qid").orderBy(col("d"), col("cand"))
     def score(cands: DataFrame): DataFrame = cands
       .join(queries, "qid").join(vecs, "cand")
-      .select(col("qid"), col("cand"), pdist(col("qq"), col("cq")).as("d"))
+      .select(col("qid"), col("cand"), intL2(col("qq"), col("cq")).as("d"))
     // discovered = every (query, candidate) scored so far, carrying an
     // `exp` flag — true once the node's adjacency has been walked — AND
     // its rank rk by (d, cand) within the query; the beam is rk ≤ beamW.
@@ -149,7 +141,7 @@ object KnnGraph {
     // already carries qq AND cq, so no corpus join at all here
     var discovered = rankIt(
       queries.crossJoin(broadcast(entriesv))
-      .select(col("qid"), col("cand"), pdist(col("qq"), col("cq")).as("d"))
+      .select(col("qid"), col("cand"), intL2(col("qq"), col("cq")).as("d"))
       .withColumn("exp", lit(false))
       .repartition(col("qid")))
       .localCheckpoint()
@@ -184,6 +176,16 @@ object KnnGraph {
     (beam, if (withVisited) discovered.select("qid", "cand") else beam)
   }
 
+  /** A beam's (qid, cand, d) rows with the query itself dropped, ranked
+    * per query nearest first with ties to the lower cand — `rk`, the
+    * cut every consumer of a walk takes (forward edges, in-link floor,
+    * the served top-k).
+    */
+  private def nearestRanked(beam: DataFrame): DataFrame =
+    beam.filter(col("cand") =!= col("qid"))
+      .withColumn("rk", row_number().over(
+        Window.partitionBy("qid").orderBy(col("d"), col("cand"))))
+
   /** Build the proximity graph over a quantized corpus. Returns
     * (final adjacency — degree ≤ m plus the in-link floor — and the
     * entry set).
@@ -209,7 +211,7 @@ object KnnGraph {
     val pairs = seed.select(col("vec_id").as("src"), col("q").as("sq"))
       .join(seed.select(col("vec_id").as("dst"), col("q").as("dq")),
         col("src") =!= col("dst"))
-      .select(col("src"), col("dst"), pdist(col("sq"), col("dq")).as("d"))
+      .select(col("src"), col("dst"), intL2(col("sq"), col("dq")).as("d"))
       .localCheckpoint()
     // r17 batch 2 (guide §2.4/§5): the pruned adjacency and the in-link
     // floors used to be TWO accumulated frames, each eagerly
@@ -245,9 +247,7 @@ object KnnGraph {
         .localCheckpoint()
       val (beam, _) = beamSearch(batch, adjf.select("src", "dst", "d"), e0,
         entriesv, beamW, hops)
-      val ranked = beam.filter(col("cand") =!= col("qid"))
-        .withColumn("rk", row_number().over(
-          Window.partitionBy("qid").orderBy(col("d"), col("cand"))))
+      val ranked = nearestRanked(beam)
       val fwd = ranked.filter(col("rk") <= m)
         .select(col("qid").as("src"), col("cand").as("dst"), col("d"))
       // inserted-node floor: its nearest found neighbor points back
@@ -287,12 +287,9 @@ object KnnGraph {
     val (beam, _) = beamSearch(queries, adj, e0,
       entriesWithVecs(entries, e0), beamW, hops)
     e0.unpersist(blocking = false)
-    beam.filter(col("cand") =!= col("qid"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("qid").orderBy(col("d"), col("cand"))))
-      .filter(col("rank") <= k)
+    nearestRanked(beam).filter(col("rk") <= k)
       .select(col("qid").as("query_id"), col("cand").as("neighbor_id"),
-        col("rank"), col("d"))
+        col("rk").as("rank"), col("d"))
       .orderBy("query_id", "rank")
   }
 
@@ -321,7 +318,7 @@ object KnnGraph {
          |${p}dc$t AS MATERIALIZED (
          |  SELECT qid, cand, d FROM ${p}dc${t - 1}
          |  UNION ALL
-         |  SELECT n.qid, n.cand, ${pdistSql("q.qq", "v.q")} AS d
+         |  SELECT n.qid, n.cand, ${intL2Sql("q.qq", "v.q")} AS d
          |  FROM ${p}nw$t n
          |    JOIN $qf q ON q.qid = n.qid
          |    JOIN $gq v ON v.vec_id = n.cand),
@@ -340,7 +337,7 @@ object KnnGraph {
   private def beamSeedSql(p: String, qf: String, gq: String,
       beamW: Int): String =
     s"""${p}dc0 AS MATERIALIZED (
-       |  SELECT b.qid, gent.cand, ${pdistSql("b.qq", "v.q")} AS d
+       |  SELECT b.qid, gent.cand, ${intL2Sql("b.qq", "v.q")} AS d
        |  FROM $qf b CROSS JOIN gent
        |    JOIN $gq v ON v.vec_id = gent.cand),
        |${p}bm0 AS (
@@ -351,6 +348,12 @@ object KnnGraph {
        |  WHERE rk <= $EnterW),
        |${p}ex0 AS (SELECT qid, cand FROM ${p}dc0 WHERE 1 = 0)""".stripMargin
 
+  /** [[nearestRanked]] in SQL over a (qid, cand, d) beam relation. */
+  private def nearestRankedSql(beam: String): String =
+    s"""SELECT qid, cand, d,
+       |      ROW_NUMBER() OVER (PARTITION BY qid ORDER BY d, cand) AS rk
+       |    FROM $beam WHERE cand <> qid""".stripMargin
+
   /** The build chain over quantized CTE `$gq` (which must be the
     * lloydSqlCtes `e0`, whose final centroids `c$iters` route the
     * entries): seed block `gsd`, entry set `gent` (per-cell seed
@@ -359,7 +362,6 @@ object KnnGraph {
     */
   private def buildSql(gq: String, cenCte: String, seedSize: Int,
       rounds: Int, m: Int, beamW: Int, hops: Int): String = {
-    val d1 = Dim + 1
     val roundCtes = (1 to rounds).map { r =>
       s"""bt$r AS MATERIALIZED (
          |  SELECT g.vec_id AS qid, g.q AS qq FROM $gq g
@@ -369,15 +371,11 @@ object KnnGraph {
          |${beamHopsSql(s"b${r}_", s"bt$r", s"au${r - 1}", gq, beamW, hops)},
          |fw$r AS MATERIALIZED (
          |  SELECT qid AS src, cand AS dst, d FROM (
-         |    SELECT qid, cand, d,
-         |      ROW_NUMBER() OVER (PARTITION BY qid ORDER BY d, cand) AS rk
-         |    FROM b${r}_bm$hops WHERE cand <> qid)
+         |    ${nearestRankedSql(s"b${r}_bm$hops")})
          |  WHERE rk <= $m),
          |fl$r AS (
          |  SELECT cand AS src, qid AS dst, d FROM (
-         |    SELECT qid, cand, d,
-         |      ROW_NUMBER() OVER (PARTITION BY qid ORDER BY d, cand) AS rk
-         |    FROM b${r}_bm$hops WHERE cand <> qid)
+         |    ${nearestRankedSql(s"b${r}_bm$hops")})
          |  WHERE rk = 1),
          |flacc$r AS MATERIALIZED (
          |  SELECT src, dst, d FROM flacc${r - 1}
@@ -402,23 +400,16 @@ object KnnGraph {
        |      ROW_NUMBER() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rn
        |    FROM $gq)
        |  WHERE rn <= $seedSize),
-       |gsx AS (
-       |  SELECT e.vec_id, c.j, SUM((e.q[t.i] - c.cd) * (e.q[t.i] - c.cd)) AS d
-       |  FROM gsd e CROSS JOIN range(1, $d1) t(i) JOIN $cenCte c ON c.i = t.i
-       |  GROUP BY 1, 2),
+       |${homeCellCtes("gsx", "gsa", "gsd", cenCte)},
        |gent AS MATERIALIZED (
        |  SELECT vec_id AS cand FROM (
-       |    SELECT vec_id, j, d,
-       |      ROW_NUMBER() OVER (PARTITION BY j ORDER BY d, vec_id) AS mrk
-       |    FROM (
-       |      SELECT vec_id, j, d,
-       |        ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d, j) AS ark
-       |      FROM gsx)
-       |    WHERE ark = 1)
+       |    SELECT vec_id,
+       |      ROW_NUMBER() OVER (PARTITION BY cell ORDER BY d, vec_id) AS mrk
+       |    FROM gsa)
        |  WHERE mrk = 1),
        |gpr AS MATERIALIZED (
        |  SELECT a.vec_id AS src, b.vec_id AS dst,
-       |    ${pdistSql("a.q", "b.q")} AS d
+       |    ${intL2Sql("a.q", "b.q")} AS d
        |  FROM gsd a JOIN gsd b ON b.vec_id <> a.vec_id),
        |ad0 AS MATERIALIZED (
        |  SELECT src, dst, d FROM (
@@ -455,10 +446,7 @@ object KnnGraph {
        |${beamHopsSql("s_", "qs", s"au$rounds", "e0", beamW, hops)}
        |SELECT qid AS query_id, cand AS neighbor_id,
        |  CAST(rk AS INTEGER) AS "rank", d
-       |FROM (
-       |  SELECT qid, cand, d,
-       |    ROW_NUMBER() OVER (PARTITION BY qid ORDER BY d, cand) AS rk
-       |  FROM s_bm$hops WHERE cand <> qid)
+       |FROM (${nearestRankedSql(s"s_bm$hops")})
        |WHERE rk <= $k ORDER BY query_id, "rank"""".stripMargin
 
   // ───────── the recall experiment: graph vs IVF, matched budget ───────
@@ -486,10 +474,7 @@ object KnnGraph {
     val (beam, visited) = beamSearch(qset,
       adj, e0, entriesWithVecs(entries, e0),
       beamW, hops, withVisited = true)
-    val gTop = beam.filter(col("cand") =!= col("qid"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("qid").orderBy(col("d"), col("cand"))))
-      .filter(col("rank") <= k)
+    val gTop = nearestRanked(beam).filter(col("rk") <= k)
       .select(col("qid").as("query_id"), col("cand").as("neighbor_id"))
     val gBudget = visited.filter(col("cand") =!= col("qid"))
       .groupBy("qid").agg(count(lit(1)).as("nc"))
@@ -529,9 +514,7 @@ object KnnGraph {
        |${beamHopsSql("s_", "qs", s"au$rounds", "e0", beamW, hops)},
        |gtop AS (
        |  SELECT qid AS query_id, cand AS neighbor_id FROM (
-       |    SELECT qid, cand,
-       |      ROW_NUMBER() OVER (PARTITION BY qid ORDER BY d, cand) AS rk
-       |    FROM s_bm$hops WHERE cand <> qid)
+       |    ${nearestRankedSql(s"s_bm$hops")})
        |  WHERE rk <= $k),
        |gbud AS (
        |  SELECT AVG(nc) AS avg_candidates FROM (

@@ -1,6 +1,6 @@
 package graft.sim
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 
@@ -52,12 +52,7 @@ private[sim] trait KnnMaintenance extends KnnQuant {
   /** The standard carve's batch (vec_id % 3 = 0), quantized as e0 is:
     * the `e0b` CTE of the maintenance twins.
     */
-  private val CARVE_BATCH_CTE =
-    s"""e0b AS (
-       |  SELECT vec_id,
-       |    list_transform(embedding,
-       |      x -> CAST(floor(CAST(x AS DOUBLE) * $LloydScale.0) AS BIGINT)) AS q
-       |  FROM e WHERE vec_id % 3 = 0)""".stripMargin
+  private val CARVE_BATCH_CTE = quantizeSql("e0b", "vec_id % 3 = 0")
 
   /** DuckDB twin of [[ivfAttachIncremental]]: the Lloyd prefix trains on
     * the CORPUS carve only (the `where` filter on e0), the batch
@@ -108,10 +103,7 @@ private[sim] trait KnnMaintenance extends KnnQuant {
     // per-cell stats of a quantized frame's home assignment under the
     // trained cells; the assignment checkpoints, so the cache can go
     def homeStats(eq: DataFrame, suffix: String): DataFrame = {
-      val asg = lloydAssignGrid(eq, grid)
-        .withColumn("d", array_min(col("ds")))
-        .select(col("vec_id"), col("j").as("cell"), col("d"))
-        .localCheckpoint()
+      val asg = IvfMaintenance.homeCells(eq, grid).localCheckpoint()
       eq.unpersist(blocking = false)
       IvfMaintenance.cellStats(asg, suffix)
     }
@@ -134,53 +126,21 @@ private[sim] trait KnnMaintenance extends KnnQuant {
       embeddings.filter(col("vec_id") % 3 === 0), cells, iters)
 
   /** DuckDB twin of [[ivfDriftReportCarve]]: Lloyd prefix on the corpus
-    * carve, train/batch argmin assignments with their min distances,
-    * per-cell integer aggregates, scalar totals, and the same NULLIF'd
-    * ratio/flag algebra.
+    * carve, the corpus home cells (`fca`) and the batch's (`pr` at
+    * nprobe 1) with their distances, then [[IvfMaintenance]]'s own
+    * per-cell stats and drift-report SQL.
     */
   def ivfDriftReportCarveSql(
       cells: Int = 8, iters: Int = 2,
-      driftRatio: Double = 1.5, shareRatio: Double = 2.0): String = {
-    // fca is the corpus home assignment; pr at nprobe 1 the batch's
-    def stats(src: String, suffix: String): String =
-      s"""SELECT cell, COUNT(*) AS n_$suffix,
-         |    CAST(SUM(d) AS BIGINT) AS inertia_$suffix,
-         |    CAST(MAX(d) AS BIGINT) AS radius_$suffix
-         |  FROM $src GROUP BY 1""".stripMargin
+      driftRatio: Double = 1.5, shareRatio: Double = 2.0): String =
     s"""WITH ${lloydSqlCtes(cells, iters, where = "vec_id % 3 <> 0")},
        |$CARVE_BATCH_CTE,
        |${ivfCoarseSql(s"c$iters", "e0b", "TRUE", 1)},
-       |ts AS (${stats("fca", "train")}),
-       |bsx AS (${stats("pr", "batch")}),
-       |cl AS (SELECT DISTINCT j AS cell FROM c$iters),
-       |tot AS (SELECT (SELECT COUNT(*) FROM fca) AS nt_total,
-       |               (SELECT COUNT(*) FROM pr) AS nb_total),
-       |rep AS (
-       |  SELECT c.cell,
-       |    COALESCE(ts.n_train, 0) AS n_train,
-       |    COALESCE(bsx.n_batch, 0) AS n_batch,
-       |    COALESCE(ts.inertia_train, 0) AS inertia_train,
-       |    COALESCE(bsx.inertia_batch, 0) AS inertia_batch,
-       |    COALESCE(ts.radius_train, 0) AS radius_train,
-       |    COALESCE(bsx.radius_batch, 0) AS radius_batch,
-       |    tot.nt_total, tot.nb_total
-       |  FROM cl c LEFT JOIN ts USING (cell) LEFT JOIN bsx USING (cell)
-       |    CROSS JOIN tot),
-       |rep2 AS (
-       |  SELECT *,
-       |    CAST(inertia_train AS DOUBLE) / NULLIF(n_train, 0) AS mean_d_train,
-       |    CAST(inertia_batch AS DOUBLE) / NULLIF(n_batch, 0) AS mean_d_batch,
-       |    CAST(n_train AS DOUBLE) / NULLIF(nt_total, 0) AS share_train,
-       |    CAST(n_batch AS DOUBLE) / NULLIF(nb_total, 0) AS share_batch
-       |  FROM rep)
-       |SELECT cell, n_train, n_batch, inertia_train, inertia_batch,
-       |  radius_train, radius_batch, mean_d_train, mean_d_batch,
-       |  share_train, share_batch,
-       |  mean_d_batch / NULLIF(mean_d_train, 0.0) AS drift_ratio,
-       |  COALESCE(mean_d_batch / NULLIF(mean_d_train, 0.0) > $driftRatio, FALSE)
-       |    OR COALESCE(share_batch > $shareRatio * share_train, FALSE) AS retrain_due
-       |FROM rep2 ORDER BY cell""".stripMargin
-  }
+       |ts AS (${IvfMaintenance.cellStatsSql("fca", "train")}),
+       |bsx AS (${IvfMaintenance.cellStatsSql("pr", "batch")}),
+       |cl AS (SELECT DISTINCT j AS cell FROM c$iters)
+       |${IvfMaintenance.driftReportSql("cl", "ts", "bsx", driftRatio, shareRatio)}
+       |ORDER BY cell""".stripMargin
 
   // ─────────────── clustered-embedding fixture (r13) ───────────────────
 
@@ -207,52 +167,15 @@ private[sim] trait KnnMaintenance extends KnnQuant {
     * queries over it.
     */
   def clusteredEmbeddings(spark: org.apache.spark.sql.SparkSession,
-      n: Int = 500, kTrue: Int = 8): DataFrame = {
-    def u48(key: Column): Column =
-      conv(substring(md5(key), 1, 12), 16, 10).cast("long")
-        .cast("double") / lit((1L << 48).toDouble)
-    spark.range(n).select(col("id").as("vec_id"))
-      .withColumn("g",
-        (conv(substring(md5(concat(lit("cg|"), col("vec_id").cast("string"))), 1, 6), 16, 10)
-          .cast("long") % kTrue).cast("int"))
-      .withColumn("embedding",
-        transform(sequence(lit(0), lit(Dim - 1)), i =>
-          (when(pmod(i, lit(kTrue)) === col("g"), lit(8.0d)).otherwise(lit(0.0d))
-            + (u48(concat(lit("ce|"), col("vec_id").cast("string"),
-                lit("|"), i.cast("string"))) - lit(0.5d)) * lit(0.5d))
-            .cast("float")))
-      .select(col("vec_id"), col("embedding"), col("g").as("label"))
-  }
+      n: Int = 500, kTrue: Int = 8): DataFrame =
+    IvfMaintenance.mixEmbeddings(spark, 0, n, kTrue, 8.0)
 
   /** DuckDB twin of [[clusteredEmbeddings]], as a WITH prelude that
-    * SHADOWS the `embeddings` table (CTE names take precedence), so any
-    * existing oracle SQL runs unchanged over the generated table. Ends
-    * with a comma — splice as the `prelude` of [[ivfLloydRecallSql]] /
-    * [[sq8RecallSql]].
+    * SHADOWS the `embeddings` table, so any existing oracle SQL runs
+    * unchanged over the generated table: [[IvfMaintenance.mixEmbeddingsCte]]
+    * at one segment. Ends with a comma — splice as the `prelude` of
+    * [[ivfLloydRecallSql]] / [[sq8RecallSql]].
     */
-  def clusteredEmbeddingsCte(n: Int = 500, kTrue: Int = 8): String = {
-    def hexSum(key: String, digits: Int): String =
-      (0 until digits).map(j =>
-        s"CAST(${graft.text.TextOps.hexValSql(s"substr(md5($key), ${j + 1}, 1)")} AS BIGINT) * ${1L << (4 * (digits - 1 - j))}")
-        .mkString("(", " + ", ")")
-    def u48(key: String): String =
-      s"(${hexSum(key, 12)} / CAST(${1L << 48} AS DOUBLE))"
-    val gExpr =
-      s"CAST(${hexSum("'cg|' || CAST(t.vec_id AS VARCHAR)", 6)} % $kTrue AS INTEGER)"
-    val dimKey = "'ce|' || CAST(vec_id AS VARCHAR) || '|' || CAST(i AS VARCHAR)"
-    val noise = s"(${u48(dimKey)} - 0.5) * 0.5"
-    // AS MATERIALIZED is load-bearing: a plain CTE gets INLINED into
-    // every one of the Lloyd chain's ~10 references to the source table,
-    // and DuckDB's optimizer loses the cardinality of the computed
-    // subquery — the inlined plan exhausted memory where the same chain
-    // over a base table runs in seconds. Materializing restores
-    // base-table behavior (measured: OOM → 1.8 s).
-    s"""embeddings AS MATERIALIZED (
-       |  SELECT vec_id,
-       |    list_transform(range(0, $Dim), i ->
-       |      CAST((CASE WHEN i % $kTrue = g THEN 8.0 ELSE 0.0 END + $noise) AS REAL)) AS embedding,
-       |    g AS label
-       |  FROM (SELECT t.vec_id, $gExpr AS g FROM range(0, $n) t(vec_id))),
-       |""".stripMargin
-  }
+  def clusteredEmbeddingsCte(n: Int = 500, kTrue: Int = 8): String =
+    IvfMaintenance.mixEmbeddingsCte(n, 0, kTrue, 8.0)
 }

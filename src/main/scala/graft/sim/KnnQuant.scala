@@ -137,6 +137,14 @@ private[sim] trait KnnQuant extends KnnCore {
       .withColumn("j",
         (array_position(col("ds"), array_min(col("ds"))) - 1).cast("int"))
 
+  /** [[lloydAssignGrid]] carrying the home cell's distance `d` (the
+    * argmin's minimum) — the assignment every stats, inertia and medoid
+    * leg reads.
+    */
+  private[graft] def lloydAssignD(e0: DataFrame,
+      grid: Seq[Seq[Long]]): DataFrame =
+    lloydAssignGrid(e0, grid).withColumn("d", array_min(col("ds")))
+
   /** The (j, c) centroid frame of a trained grid, for consumers that keep
     * centroids in-plan (state-dir writes, checksum outputs) — the same
     * k rows/values/types the join-form trainer produced.
@@ -153,8 +161,7 @@ private[sim] trait KnnQuant extends KnnCore {
 
     // final assignment checkpoints eagerly (vec_id, cluster, distance —
     // no vectors), freeing the quantized-corpus cache (r14 sweep)
-    val fin = lloydAssignGrid(e0, grid)
-      .withColumn("d", array_min(col("ds")))
+    val fin = lloydAssignD(e0, grid)
       .select("vec_id", "j", "d")
       .localCheckpoint()
     e0.unpersist(blocking = false)
@@ -186,8 +193,7 @@ private[sim] trait KnnQuant extends KnnCore {
     var prevAsg: Option[DataFrame] = None
     var out: Option[DataFrame] = None
     for (it <- 1 to iters) {
-      val asg = lloydAssignGrid(e0, grid)
-        .withColumn("d", array_min(col("ds")))
+      val asg = lloydAssignD(e0, grid)
         .select("vec_id", "j", "d", "q")
         .localCheckpoint()
       val base = asg.agg(
@@ -215,12 +221,41 @@ private[sim] trait KnnQuant extends KnnCore {
     out.get.orderBy("iter")
   }
 
-  /** DuckDB twin of [[kmeansLloydTrain]]: the trainer loop unrolls into
-    * per-iteration CTE blocks (distance/argmin/per-dim sum/floor-mean/
-    * coalesce), with centroid state in LONG form (j, i, cd) so no list
-    * aggregation is needed. (s − m)/n is exactly divisible, so DuckDB's
-    * double division reproduces the BIGINT floor-mean exactly.
+  /** [[quantized]] in SQL: `$name` = (vec_id, q) over the rows of the
+    * normalized source `e` passing `where`.
     */
+  private[sim] def quantizeSql(name: String, where: String): String =
+    s"""$name AS (
+       |  SELECT vec_id,
+       |    list_transform(embedding,
+       |      x -> CAST(floor(CAST(x AS DOUBLE) * $LloydScale.0) AS BIGINT)) AS q
+       |  FROM e WHERE $where)""".stripMargin
+
+  /** [[lloydAssignGrid]] in SQL: every `src` (vec_id, q) row passing
+    * `where` against every cell of the long-form centroids `cen` (j, i,
+    * cd) — (vec_id, cell, d, rk), rk ranking each row's cells nearest
+    * first with ties to the lower cell (the argmin's rule).
+    */
+  private[sim] def cellRankSql(src: String, cen: String,
+      where: String = "TRUE"): String =
+    s"""SELECT vec_id, j AS cell, d,
+       |    ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d, j) AS rk
+       |  FROM (
+       |    SELECT e.vec_id, c.j, SUM((e.q[t.i] - c.cd) * (e.q[t.i] - c.cd)) AS d
+       |    FROM $src e CROSS JOIN range(1, ${Dim + 1}) t(i) JOIN $cen c ON c.i = t.i
+       |    WHERE $where
+       |    GROUP BY 1, 2)""".stripMargin
+
+  /** [[lloydAssignD]] in SQL, the assign-and-argmin CTE pair: `$x` the
+    * ranked distances of [[cellRankSql]], `$a` each `src` row's home
+    * cell (vec_id, cell, d).
+    */
+  private[sim] def homeCellCtes(x: String, a: String, src: String,
+      cen: String): String =
+    s"""$x AS (
+       |  ${cellRankSql(src, cen)}),
+       |$a AS (SELECT vec_id, cell, d FROM $x WHERE rk = 1)""".stripMargin
+
   /** The shared CTE prefix for the Lloyd twins: quantize, md5 seeds,
     * then per-iteration blocks x/a/s/u/c (distance, argmin WITH its
     * min-distance kept, per-dim sum, floor-mean, coalesce). Centroid
@@ -234,17 +269,9 @@ private[sim] trait KnnQuant extends KnnCore {
     val P = prefix
     val iterCtes = (1 to iters).map { it =>
       val p = it - 1
-      s"""${P}x$it AS (
-         |  SELECT e.vec_id, c.j, SUM((e.q[t.i] - c.cd) * (e.q[t.i] - c.cd)) AS d
-         |  FROM ${P}e0 e CROSS JOIN range(1, $d1) t(i) JOIN ${P}c$p c ON c.i = t.i
-         |  GROUP BY 1, 2),
-         |${P}a$it AS (
-         |  SELECT vec_id, j, d FROM (
-         |    SELECT vec_id, j, d,
-         |      ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d, j) AS rk
-         |    FROM ${P}x$it) WHERE rk = 1),
+      s"""${homeCellCtes(s"${P}x$it", s"${P}a$it", s"${P}e0", s"${P}c$p")},
          |${P}s$it AS (
-         |  SELECT a.j, t.i, SUM(e.q[t.i]) AS s, COUNT(*) AS cnt
+         |  SELECT a.cell AS j, t.i, SUM(e.q[t.i]) AS s, COUNT(*) AS cnt
          |  FROM ${P}a$it a JOIN ${P}e0 e USING (vec_id) CROSS JOIN range(1, $d1) t(i)
          |  GROUP BY 1, 2),
          |${P}u$it AS (
@@ -256,11 +283,7 @@ private[sim] trait KnnQuant extends KnnCore {
          |  FROM ${P}c$p p LEFT JOIN ${P}u$it u ON u.j = p.j AND u.i = p.i)""".stripMargin
     }.mkString(",\n")
     val normPart = if (includeNorm) s"$NORM_CTE,\n" else ""
-    s"""$normPart${P}e0 AS (
-       |  SELECT vec_id,
-       |    list_transform(embedding,
-       |      x -> CAST(floor(CAST(x AS DOUBLE) * $LloydScale.0) AS BIGINT)) AS q
-       |  FROM e WHERE $where),
+    s"""$normPart${quantizeSql(s"${P}e0", where)},
        |${P}sd AS (
        |  SELECT vec_id, q,
        |    ROW_NUMBER() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rn
@@ -271,19 +294,14 @@ private[sim] trait KnnQuant extends KnnCore {
        |$iterCtes""".stripMargin
   }
 
-  def kmeansLloydTrainSql(k: Int = 4, iters: Int = 3): String = {
-    val d1 = Dim + 1
+  /** DuckDB twin of [[kmeansLloydTrain]]: the unrolled trainer of
+    * [[lloydSqlCtes]], the final home assignment, per-cluster size and
+    * inertia, and each centroid's checksum.
+    */
+  def kmeansLloydTrainSql(k: Int = 4, iters: Int = 3): String =
     s"""WITH ${lloydSqlCtes(k, iters)},
-       |fx AS (
-       |  SELECT e.vec_id, c.j, SUM((e.q[t.i] - c.cd) * (e.q[t.i] - c.cd)) AS d
-       |  FROM e0 e CROSS JOIN range(1, $d1) t(i) JOIN c$iters c ON c.i = t.i
-       |  GROUP BY 1, 2),
-       |fa AS (
-       |  SELECT vec_id, j, d FROM (
-       |    SELECT vec_id, j, d,
-       |      ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d, j) AS rk
-       |    FROM fx) WHERE rk = 1),
-       |st AS (SELECT j AS cluster, COUNT(*) AS n,
+       |${homeCellCtes("fx", "fa", "e0", s"c$iters")},
+       |st AS (SELECT cell AS cluster, COUNT(*) AS n,
        |         CAST(SUM(d) AS BIGINT) AS inertia FROM fa GROUP BY 1),
        |cs AS (SELECT j AS cluster, CAST(SUM(cd) AS BIGINT) AS c_sum
        |       FROM c$iters GROUP BY 1)
@@ -291,7 +309,6 @@ private[sim] trait KnnQuant extends KnnCore {
        |  COALESCE(st.inertia, 0) AS inertia, cs.c_sum
        |FROM cs LEFT JOIN st USING (cluster)
        |ORDER BY cs.cluster""".stripMargin
-  }
 
   /** DuckDB twin of [[kmeansLloydTrace]]: one aggregate row per
     * iteration off the shared a{it} assignment CTEs; the movement count
@@ -303,11 +320,11 @@ private[sim] trait KnnQuant extends KnnCore {
         if (it == 1) "CAST(NULL AS BIGINT)"
         else
           s"""(SELECT COUNT(*) FROM a$it x JOIN a${it - 1} p USING (vec_id)
-             |     WHERE x.j <> p.j)""".stripMargin
+             |     WHERE x.cell <> p.cell)""".stripMargin
       s"""SELECT $it AS iter, COUNT(*) AS n_assigned,
          |  $moved AS n_moved,
          |  CAST(SUM(d) AS BIGINT) AS inertia,
-         |  COUNT(DISTINCT j) AS nonempty_clusters
+         |  COUNT(DISTINCT cell) AS nonempty_clusters
          |FROM a$it""".stripMargin
     }.mkString("\nUNION ALL\n")
     s"""WITH ${lloydSqlCtes(k, iters)}
@@ -353,20 +370,6 @@ private[sim] trait KnnQuant extends KnnCore {
         .filter(col("vec_id") =!= col("query_id")), k)
       .select("query_id", "neighbor_id")
   }
-
-  /** One recall@k row: `exact` LEFT JOIN `approx` (both carrying
-    * query_id, neighbor_id) → the caller's `labels`, then n_exact, hits
-    * and recall = hits / n_exact — all in-plan, no driver counts.
-    */
-  private[sim] def recallRow(exact: DataFrame, approx: DataFrame,
-      labels: Column*): DataFrame =
-    exact.join(
-        approx.select(col("query_id"), col("neighbor_id"), lit(1).as("hit")),
-        Seq("query_id", "neighbor_id"), "left")
-      .agg(count(lit(1)).as("n_exact"),
-        sum(coalesce(col("hit"), lit(0))).as("hits"))
-      .select(labels ++ Seq(col("n_exact"), col("hits"),
-        (col("hits").cast("double") / col("n_exact")).as("recall")): _*)
 
   /** The IVF probe sets: each (vec_id, q) row of `queries` against every
     * cell of `grid` (the assignment argmin's distance list), nearest first
@@ -426,23 +429,20 @@ private[sim] trait KnnQuant extends KnnCore {
     * blocks read them many times (see [[pqResidualCtes]]).
     */
   private[sim] def ivfCoarseSql(cen: String, qsrc: String, qwhere: String,
-      nprobe: Int): String = {
-    def ranked(src: String, where: String): String =
-      s"""SELECT vec_id, j AS cell, d,
-         |    ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d, j) AS rk
-         |  FROM (
-         |    SELECT e.vec_id, c.j, SUM((e.q[t.i] - c.cd) * (e.q[t.i] - c.cd)) AS d
-         |    FROM $src e CROSS JOIN range(1, ${Dim + 1}) t(i) JOIN $cen c ON c.i = t.i
-         |    WHERE $where
-         |    GROUP BY 1, 2)""".stripMargin
+      nprobe: Int): String =
     s"""fcx AS (
-       |  ${ranked("e0", "TRUE")}),
+       |  ${cellRankSql("e0", cen)}),
        |fca AS MATERIALIZED (SELECT vec_id, cell, d FROM fcx WHERE rk = 1),
        |pr AS MATERIALIZED (
        |  SELECT vec_id AS query_id, cell, d, rk AS pr FROM (
-       |  ${ranked(qsrc, qwhere)})
+       |  ${cellRankSql(qsrc, cen, qwhere)})
        |  WHERE rk <= $nprobe)""".stripMargin
-  }
+
+  /** [[intL2]] in SQL, over two joined BIGINT lists (the lambda reads
+    * the outer columns — no per-dimension row fan-out).
+    */
+  private[sim] def intL2Sql(a: String, b: String): String =
+    s"CAST(list_sum(list_transform(range(1, ${Dim + 1}), i -> ($a[i]-$b[i])*($a[i]-$b[i]))) AS BIGINT)"
 
   /** DuckDB twin of [[intL2TopK]] over a (query_id, neighbor_id) pair
     * relation: (query_id, neighbor_id, d, rn ≤ k), query vectors from
@@ -453,12 +453,9 @@ private[sim] trait KnnQuant extends KnnCore {
        |    SELECT query_id, neighbor_id, d,
        |      ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY d, neighbor_id) AS rn
        |    FROM (
-       |      SELECT p.query_id, p.neighbor_id,
-       |        CAST(SUM((qe.q[t.i] - ce.q[t.i]) * (qe.q[t.i] - ce.q[t.i])) AS BIGINT) AS d
+       |      SELECT p.query_id, p.neighbor_id, ${intL2Sql("qe.q", "ce.q")} AS d
        |      FROM $pairs p JOIN $qsrc qe ON qe.vec_id = p.query_id
-       |        JOIN e0 ce ON ce.vec_id = p.neighbor_id
-       |        CROSS JOIN range(1, ${Dim + 1}) t(i)
-       |      GROUP BY 1, 2))
+       |        JOIN e0 ce ON ce.vec_id = p.neighbor_id))
        |  WHERE rn <= $k""".stripMargin
 
   /** DuckDB twin of [[ivfCandidates]] + [[intL2TopK]] over

@@ -98,18 +98,10 @@ object EndToEnd {
     * suggestions-e2e and export-e2e queries (and repeated bench runs)
     * share one produce pass instead of re-encoding the feeds each time.
     */
-  // Holder: TrieMap.getOrElseUpdate may run its thunk twice under
-  // concurrent first access; storing a lazy holder makes the expensive
-  // produce pass run at most once PER DIR without a map-wide lock
-  // (same pattern as Registry.memo)
-  private final class Holder[V](thunk: () => V) { lazy val get: V = thunk() }
-
-  private val queueDirs =
-    scala.collection.concurrent.TrieMap.empty[String, Holder[String]]
+  private val queueDirs = new graft.RunOnce[String, String]
 
   private def produce(spark: SparkSession, dir: String): String =
-    queueDirs.getOrElseUpdate(dir,
-      new Holder(() => produceUncached(spark, dir))).get
+    queueDirs(dir)(produceUncached(spark, dir))
 
   /** Produce side: protobuf-decode the vehicle feed, envelope all three
     * topics, and commit them to the queue directory. Returns the queue
@@ -244,15 +236,14 @@ object EndToEnd {
     * block manager for the life of the JVM (ADVICE r10). The round trip
     * is exact (doubles/strings/timestamps), so it is oracle-transparent.
     */
-  private val kpiDirs =
-    scala.collection.concurrent.TrieMap.empty[String, Holder[String]]
+  private val kpiDirs = new graft.RunOnce[String, String]
 
   private def kpiShared(spark: SparkSession, dir: String): DataFrame = {
-    val p = kpiDirs.getOrElseUpdate(dir, new Holder(() => {
+    val p = kpiDirs(dir)({
       val out = Files.createTempDirectory("graft_e2e_kpi").toString
       kpiE2E(spark, dir).write.mode("overwrite").parquet(out)
       out
-    })).get
+    })
     spark.read.parquet(p)
   }
 

@@ -37,9 +37,10 @@ private[streaming] case class OpenSess(startUs: Long, lastUs: Long, n: Long, sum
 object Streams {
 
   // One staged copy per source dir per JVM: repeated stream queries over
-  // the same testdata (Bench runs two streaming queries; Verify may rerun)
-  // must not pay — or time — a fresh multi-GB file copy each call.
-  private val stagedDirs = scala.collection.concurrent.TrieMap.empty[String, String]
+  // the same testdata (Bench runs two streaming queries; Verify may rerun
+  // them concurrently) must not pay — or time, or leak — a fresh multi-GB
+  // file copy each call.
+  private val stagedDirs = new graft.RunOnce[String, String]
 
   /** Streaming read of the events table (schema pinned from a batch read —
     * file streams require an explicit schema).
@@ -50,7 +51,7 @@ object Streams {
     // The file source requires a directory; stage the single parquet file
     // into a temp dir once (a production pipeline streams a landing
     // directory or Kafka — this is test plumbing only).
-    val staged = stagedDirs.getOrElseUpdate(dir, {
+    val staged = stagedDirs(dir)({
       val d = Files.createTempDirectory("graft_events_stream")
       Files.copy(java.nio.file.Paths.get(s"$dir/events.parquet"),
         d.resolve("events.parquet"))

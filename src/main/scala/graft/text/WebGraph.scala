@@ -61,12 +61,6 @@ object WebGraph {
       .orderBy("doc_id", "link_rank")
   }
 
-  /** DuckDB twin of htmlCorpus→[[htmlLinks]]: the expected structure
-    * recomputed from the generator arithmetic — title 'Doc {id}',
-    * canonical host h{id mod 16}, the two nav anchors, then the
-    * [[TextOps.HtmlLinksPerDoc]] related links at
-    * (id·31 + 7j + 3) mod [[TextOps.HtmlLinkMod]].
-    */
   /** SQL for the RAW href the generator writes for related link j —
     * [[TextOps.htmlLinkHref]]'s four spellings replayed (built on one
     * line: these splice into stripMargin builders).
@@ -94,6 +88,12 @@ object WebGraph {
     s"CASE WHEN (doc_id + $j) % 4 = 3 THEN $base || '?a=1&b=2' ELSE $base END"
   }
 
+  /** DuckDB twin of htmlCorpus→[[htmlLinks]]: the expected structure
+    * recomputed from the generator arithmetic — title 'Doc {id}',
+    * canonical host h{id mod 16}, the two nav anchors, then the
+    * [[TextOps.HtmlLinksPerDoc]] related links at
+    * (id·31 + 7j + 3) mod [[TextOps.HtmlLinkMod]].
+    */
   val htmlLinksSql: String = {
     val navRows = Seq(("/", "home", 1), ("/about", "about", 2)).map {
       case (h, a, r) => s"SELECT doc_id, $r AS link_rank, '$h' AS href, '$a' AS anchor FROM d"
@@ -196,11 +196,21 @@ object WebGraph {
     * graph), edge weight = link count.
     */
   def linkHostGraph(links: DataFrame): DataFrame =
-    links.select(col("src_host"), normalizeUrl(col("href")).as("u"))
-      .filter(col("u").startsWith("https://"))
-      .select(col("src_host"),
-        regexp_extract(col("u"), "https://([^/\"]*)/", 1).as("dst_host"))
+    hostLinks(links)
       .groupBy("src_host", "dst_host").agg(count(lit(1)).as("n_links"))
+
+  /** One row per ABSOLUTE link of a link frame: (keys…, src_host,
+    * dst_host) — the href through [[normalizeUrl]], site-relative links
+    * dropped, the canonical host cut out. The `keys` columns ride along
+    * (the incremental query keeps doc_id for its carve flag).
+    */
+  private def hostLinks(links: DataFrame, keys: String*): DataFrame = {
+    val k = keys.map(col)
+    links.select(k :+ col("src_host") :+ normalizeUrl(col("href")).as("u"): _*)
+      .filter(col("u").startsWith("https://"))
+      .select(k :+ col("src_host") :+
+        regexp_extract(col("u"), "https://([^/\"]*)/", 1).as("dst_host"): _*)
+  }
 
   /** Fixed-iteration weighted PageRank over the host graph, entirely in
     * scaled BIGINT: r₀ = S div N; each iteration,
@@ -213,25 +223,32 @@ object WebGraph {
   def linkAuthority(htmlDocs: DataFrame, iters: Int = 5): DataFrame =
     linkAuthorityFromLinks(htmlLinks(htmlDocs), iters)
 
-  /** [[linkAuthority]] off an already-extracted link frame (reused by
-    * the authority-weighted-quality composition).
-    */
   /** Out-weights per source host. */
   private[text] def outsOf(edges: DataFrame): DataFrame =
     edges.groupBy("src_host").agg(sum("n_links").as("out_w"))
 
-  /** r₀ = S div N per host, with the damping base carried as a column. */
-  private[text] def initRanks(edges: DataFrame): DataFrame = {
+  /** The host universe of an edge frame (every src and dst host), each
+    * row carrying the universe size n_hosts.
+    */
+  private[text] def hostsWithN(edges: DataFrame): DataFrame = {
     val hosts = edges.select(col("src_host").as("host"))
       .unionByName(edges.select(col("dst_host").as("host")))
       .distinct()
-    hosts
-      .crossJoin(broadcast(hosts.agg(count(lit(1)).as("n_hosts"))))
-      .select(col("host"),
-        expr(s"${AuthorityScale}L div n_hosts").as("r"),
-        expr(s"(${AuthorityScale}L * 15) div (100 * n_hosts)").as("base"))
-      .localCheckpoint()
+    hosts.crossJoin(broadcast(hosts.agg(count(lit(1)).as("n_hosts"))))
   }
+
+  /** The uniform start rank S div N, over a frame carrying n_hosts. */
+  private[text] def initRank: Column = expr(s"${AuthorityScale}L div n_hosts")
+
+  /** The damping base (S·15) div (100·N), over a frame carrying n_hosts. */
+  private[text] def baseRank: Column =
+    expr(s"(${AuthorityScale}L * 15) div (100 * n_hosts)")
+
+  /** r₀ = S div N per host, with the damping base carried as a column. */
+  private[text] def initRanks(edges: DataFrame): DataFrame =
+    hostsWithN(edges)
+      .select(col("host"), initRank.as("r"), baseRank.as("base"))
+      .localCheckpoint()
 
   /** Edges pre-joined with their source out-weights — (src_host,
     * dst_host, n_links, out_w), hosts²-bounded. r18 (guide §2.4/§1.2):
@@ -288,6 +305,9 @@ object WebGraph {
     r
   }
 
+  /** [[linkAuthority]] off an already-extracted link frame (reused by
+    * the authority-weighted-quality composition).
+    */
   def linkAuthorityFromLinks(links: DataFrame, iters: Int = 5): DataFrame = {
     val edges = linkHostGraph(links).persist()
     val edgesW = edgesWithOuts(edges).localCheckpoint()
@@ -336,13 +356,7 @@ object WebGraph {
     // bEdges ≡ linkHostGraph(links of base docs) exactly: the extraction
     // chain is per-doc row arithmetic, so filtering the aggregate's
     // conditional count equals aggregating the filtered docs.
-    val perDoc = htmlLinks(TextOps.htmlCorpus(full))
-      .select(col("doc_id"), col("src_host"),
-        normalizeUrl(col("href")).as("u"))
-      .filter(col("u").startsWith("https://"))
-      .select(col("doc_id"), col("src_host"),
-        regexp_extract(col("u"), "https://([^/\"]*)/", 1).as("dst_host"))
-    val edgeAgg = perDoc
+    val edgeAgg = hostLinks(htmlLinks(TextOps.htmlCorpus(full)), "doc_id")
       .groupBy("src_host", "dst_host")
       .agg(count(lit(1)).as("n_full"),
         sum(when(col("doc_id") % 3 =!= 0, 1L).otherwise(0L)).as("n_base"))
@@ -375,26 +389,12 @@ object WebGraph {
     * (prefix `b`, %3 carve), the full-graph chain (prefix `f`), and the
     * warm steps written against the full edges starting from `bpr5`.
     */
-  def linkAuthorityIncrementalSql(warmIters: Int = 2, iters: Int = 5): String = {
-    def step(cur: String, prev: String, edges: String, outs: String) =
-      s"""$cur AS MATERIALIZED (
-         |  SELECT h.host,
-         |    CAST(h.base + (85 * COALESCE(s.c, 0)) // 100 AS BIGINT) AS r,
-         |    h.base
-         |  FROM $prev h LEFT JOIN (
-         |    SELECT e.dst_host AS host,
-         |      SUM((p.r * e.n_links) // o.out_w) AS c
-         |    FROM $edges e
-         |      JOIN $prev p ON p.host = e.src_host
-         |      JOIN $outs o ON o.src_host = e.src_host
-         |    GROUP BY 1) s ON s.host = h.host)""".stripMargin
-    val warmCtes = (1 to warmIters).map(t =>
-      step(s"w$t", if (t == 1) s"bpr$iters" else s"w${t - 1}",
-        "fedges", "fouts")).mkString(",\n")
+  def linkAuthorityIncrementalSql(warmIters: Int = 2, iters: Int = 5): String =
     s"""WITH ${linkAuthorityCtes(iters,
           where = "doc_id IS NOT NULL AND doc_id % 3 <> 0", prefix = "b")},
        |${linkAuthorityCtes(iters, prefix = "f")},
-       |$warmCtes
+       |${powerChainSql(t => if (t == 0) s"bpr$iters" else s"w$t", warmIters,
+          "fedges", "fouts")}
        |SELECT b.host,
        |  b.r AS rank_prior_scaled,
        |  w.r AS rank_warm_scaled,
@@ -405,63 +405,97 @@ object WebGraph {
        |  JOIN w$warmIters w ON w.host = b.host
        |  JOIN fpr$iters f ON f.host = b.host
        |ORDER BY b.host""".stripMargin
+
+  // ─────── the authority stages in SQL, shared by every twin ───────────
+
+  /** Generator-arithmetic edge CTEs for a documents slice: `${p}d` →
+    * `${p}lk` (one row per related link) → `${p}edges` (src_host,
+    * dst_host, n_links). The dst_host expression stays on ONE line: this
+    * fragment is spliced into outer stripMargin builders, which would
+    * strip a leading `||` continuation down to `|` (the r13 gotcha).
+    */
+  private[text] def docEdgesSql(p: String, where: String): String = {
+    val rel = (0 until HtmlLinksPerDoc).map(j => s"(${7 * j + 3})").mkString(", ")
+    s"""${p}d AS (SELECT doc_id FROM documents WHERE $where),
+       |${p}lk AS (
+       |  SELECT 'h' || CAST(doc_id % $HtmlHosts AS VARCHAR) || '.example' AS src_host,
+       |    'h' || CAST(((doc_id * 31 + o.v) % $HtmlLinkMod) % $HtmlHosts AS VARCHAR) || '.example' AS dst_host
+       |  FROM ${p}d CROSS JOIN (VALUES $rel) o(v)),
+       |${p}edges AS MATERIALIZED (
+       |  SELECT src_host, dst_host, CAST(COUNT(*) AS BIGINT) AS n_links
+       |  FROM ${p}lk GROUP BY 1, 2)""".stripMargin
   }
 
-  /** DuckDB twin of [[linkAuthority]]: edges from the generator
-    * arithmetic, then the iteration unrolled — each r{t} MATERIALIZED
-    * (iterative chains referencing their predecessor twice explode
-    * exponentially when inlined; the residual-PQ lesson).
+  /** The chain-invariant state of an edge relation `$edges`: `$outs`
+    * (src_host, out_w), the host universe `$hosts` and its size `$nb`
+    * (n_hosts) — the [[edgesWithOuts]]/[[hostsWithN]] frames.
     */
+  private[text] def edgeStateSql(edges: String, outs: String, hosts: String,
+      nb: String): String =
+    s"""$outs AS MATERIALIZED (
+       |  SELECT src_host, CAST(SUM(n_links) AS BIGINT) AS out_w
+       |  FROM $edges GROUP BY 1),
+       |$hosts AS MATERIALIZED (SELECT DISTINCT host FROM (
+       |  SELECT src_host AS host FROM $edges
+       |  UNION ALL SELECT dst_host FROM $edges)),
+       |$nb AS (SELECT COUNT(*) AS n_hosts FROM $hosts)""".stripMargin
+
+  /** [[initRank]] in SQL: S div N over a relation carrying n_hosts. */
+  private[text] val initRankSql = s"CAST($AuthorityScale // n_hosts AS BIGINT)"
+
+  /** [[baseRank]] in SQL: the damping base (S·15) div (100·N). */
+  private[text] val baseRankSql =
+    s"CAST(($AuthorityScale * 15) // (100 * n_hosts) AS BIGINT)"
+
+  /** [[initRanks]] in SQL: `$cur` = (host, r₀, base) over `$hosts`. */
+  private[text] def initRanksSql(cur: String, hosts: String, nb: String): String =
+    s"""$cur AS MATERIALIZED (
+       |  SELECT host, $initRankSql AS r, $baseRankSql AS base
+       |  FROM $hosts CROSS JOIN $nb)""".stripMargin
+
+  /** [[iterStep]] in SQL: `$cur` from `$prev` over `$edges`/`$outs` —
+    * the exact integer update rule, MATERIALIZED (an iterative chain
+    * referencing its predecessor twice explodes exponentially when
+    * inlined; the residual-PQ lesson).
+    */
+  private[text] def powerStepSql(cur: String, prev: String, edges: String,
+      outs: String): String =
+    s"""$cur AS MATERIALIZED (
+       |  SELECT h.host,
+       |    CAST(h.base + (85 * COALESCE(s.c, 0)) // 100 AS BIGINT) AS r,
+       |    h.base
+       |  FROM $prev h LEFT JOIN (
+       |    SELECT e.dst_host AS host,
+       |      SUM((p.r * e.n_links) // o.out_w) AS c
+       |    FROM $edges e
+       |      JOIN $prev p ON p.host = e.src_host
+       |      JOIN $outs o ON o.src_host = e.src_host
+       |    GROUP BY 1) s ON s.host = h.host)""".stripMargin
+
+  /** [[powerChain]] in SQL: steps `name(1)`..`name(steps)`, each from its
+    * predecessor, `name(0)` the start ranks. No trailing comma.
+    */
+  private[text] def powerChainSql(name: Int => String, steps: Int,
+      edges: String, outs: String): String =
+    (1 to steps).map(t => powerStepSql(name(t), name(t - 1), edges, outs))
+      .mkString(",\n")
+
   /** The shared CTE prefix of the authority twins: generator-arithmetic
-    * edges, hosts, out-weights, and the unrolled pr0..pr{iters} chain —
-    * each state MATERIALIZED (iterative chains referencing their
-    * predecessor twice explode exponentially when inlined; the
-    * residual-PQ lesson). No trailing comma.
+    * edges, their state, and the unrolled pr0..pr{iters} chain. No
+    * trailing comma.
     */
   def linkAuthorityCtes(iters: Int = 5,
       where: String = "doc_id IS NOT NULL", prefix: String = ""): String = {
-    val S = AuthorityScale
     val P = prefix
-    val iterCtes = (1 to iters).map { t =>
-      val p = t - 1
-      s"""${P}pr$t AS MATERIALIZED (
-         |  SELECT h.host,
-         |    CAST(h.base + (85 * COALESCE(s.c, 0)) // 100 AS BIGINT) AS r,
-         |    h.base
-         |  FROM ${P}pr$p h LEFT JOIN (
-         |    SELECT e.dst_host AS host,
-         |      SUM((p.r * e.n_links) // o.out_w) AS c
-         |    FROM ${P}edges e
-         |      JOIN ${P}pr$p p ON p.host = e.src_host
-         |      JOIN ${P}outs o ON o.src_host = e.src_host
-         |    GROUP BY 1) s ON s.host = h.host)""".stripMargin
-    }.mkString(",\n")
-    val rel = (0 until HtmlLinksPerDoc).map(j => s"(${7 * j + 3})").mkString(", ")
-    // the dst_host expression stays on ONE line: this fragment is
-    // spliced into outer stripMargin builders, which would strip a
-    // leading `||` continuation down to `|` (the r13 gotcha)
-    s"""${P}d AS (SELECT doc_id FROM documents WHERE $where),
-       |${P}lk AS (
-       |  SELECT 'h' || CAST(doc_id % $HtmlHosts AS VARCHAR) || '.example' AS src_host,
-       |    'h' || CAST(((doc_id * 31 + o.v) % $HtmlLinkMod) % $HtmlHosts AS VARCHAR) || '.example' AS dst_host
-       |  FROM ${P}d CROSS JOIN (VALUES $rel) o(v)),
-       |${P}edges AS MATERIALIZED (
-       |  SELECT src_host, dst_host, COUNT(*) AS n_links FROM ${P}lk GROUP BY 1, 2),
-       |${P}hosts AS MATERIALIZED (
-       |  SELECT DISTINCT host FROM (
-       |    SELECT src_host AS host FROM ${P}edges
-       |    UNION ALL SELECT dst_host FROM ${P}edges)),
-       |${P}outs AS MATERIALIZED (
-       |  SELECT src_host, CAST(SUM(n_links) AS BIGINT) AS out_w
-       |  FROM ${P}edges GROUP BY 1),
-       |${P}nb AS (SELECT COUNT(*) AS n_hosts FROM ${P}hosts),
-       |${P}pr0 AS MATERIALIZED (
-       |  SELECT host, CAST($S // n_hosts AS BIGINT) AS r,
-       |    CAST(($S * 15) // (100 * n_hosts) AS BIGINT) AS base
-       |  FROM ${P}hosts CROSS JOIN ${P}nb),
-       |$iterCtes""".stripMargin
+    s"""${docEdgesSql(P, where)},
+       |${edgeStateSql(s"${P}edges", s"${P}outs", s"${P}hosts", s"${P}nb")},
+       |${initRanksSql(s"${P}pr0", s"${P}hosts", s"${P}nb")},
+       |${powerChainSql(t => s"${P}pr$t", iters, s"${P}edges", s"${P}outs")}""".stripMargin
   }
 
+  /** DuckDB twin of [[linkAuthority]]: edges from the generator
+    * arithmetic, then the iteration unrolled ([[linkAuthorityCtes]]).
+    */
   def linkAuthoritySql(iters: Int = 5): String =
     s"""WITH ${linkAuthorityCtes(iters)},
        |inl AS (SELECT dst_host, CAST(SUM(n_links) AS BIGINT) AS in_w

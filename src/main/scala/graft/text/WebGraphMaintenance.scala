@@ -45,8 +45,9 @@ import org.apache.spark.sql.functions._
   * size except the batch's own link extraction.
   */
 object WebGraphMaintenance {
-  import WebGraph.{AuthorityScale, edgesWithOuts, initRanks, iterStep,
-    powerChain}
+  import WebGraph.{AuthorityScale, edgesWithOuts, hostsWithN, initRank,
+    baseRank, initRanks, iterStep, powerChain, docEdgesSql, edgeStateSql,
+    initRankSql, baseRankSql, initRanksSql, powerStepSql, powerChainSql}
 
   def edgesPath(stateDir: String, v: Long): String = s"$stateDir/edges_v$v"
   def ranksPath(stateDir: String, v: Long): String = s"$stateDir/ranks_v$v"
@@ -104,17 +105,11 @@ object WebGraphMaintenance {
     // warm start: prior ranks re-based on the MERGED host set (a host
     // first seen in this batch cold-starts at the uniform S div N; the
     // damping base always reflects the current N)
-    val hosts = merged.select(col("src_host").as("host"))
-      .unionByName(merged.select(col("dst_host").as("host")))
-      .distinct()
-    val warm0 = hosts
-      .crossJoin(broadcast(hosts.agg(count(lit(1)).as("n_hosts"))))
+    val warm0 = hostsWithN(merged)
       .join(prevRanks.select(col("host"), col("r").as("r_prior")),
         Seq("host"), "left")
-      .select(col("host"),
-        coalesce(col("r_prior"),
-          expr(s"${AuthorityScale}L div n_hosts")).as("r"),
-        expr(s"(${AuthorityScale}L * 15) div (100 * n_hosts)").as("base"))
+      .select(col("host"), coalesce(col("r_prior"), initRank).as("r"),
+        baseRank.as("base"))
       .localCheckpoint()
     val warm = powerChain(warm0, mergedW, warmIters)
     // the gate probe: one step further; the residual is how far the
@@ -218,42 +213,6 @@ object WebGraphMaintenance {
 
   // ───────────────────────── DuckDB twins ──────────────────────────────
 
-  /** One power step: `$cur` from `$prev` over `$edges`/`$outs` — the
-    * exact integer update rule of [[WebGraph.iterStep]] (shared shape
-    * with [[WebGraph.linkAuthorityIncrementalSql]]).
-    */
-  private def stepSql(cur: String, prev: String, edges: String,
-      outs: String): String =
-    s"""$cur AS MATERIALIZED (
-       |  SELECT h.host,
-       |    CAST(h.base + (85 * COALESCE(s.c, 0)) // 100 AS BIGINT) AS r,
-       |    h.base
-       |  FROM $prev h LEFT JOIN (
-       |    SELECT e.dst_host AS host,
-       |      SUM((p.r * e.n_links) // o.out_w) AS c
-       |    FROM $edges e
-       |      JOIN $prev p ON p.host = e.src_host
-       |      JOIN $outs o ON o.src_host = e.src_host
-       |    GROUP BY 1) s ON s.host = h.host)""".stripMargin
-
-  /** Generator-arithmetic edge CTEs for a documents slice: `${p}d` →
-    * `${p}edges` — the same link arithmetic as
-    * [[WebGraph.linkAuthorityCtes]] (dst_host expression on ONE line:
-    * this splices into stripMargin builders — the r13 gotcha).
-    */
-  private def docEdgesSql(p: String, where: String): String = {
-    import TextOps.{HtmlHosts, HtmlLinksPerDoc, HtmlLinkMod}
-    val rel = (0 until HtmlLinksPerDoc).map(j => s"(${7 * j + 3})").mkString(", ")
-    s"""${p}d AS (SELECT doc_id FROM documents WHERE $where),
-       |${p}lk AS (
-       |  SELECT 'h' || CAST(doc_id % $HtmlHosts AS VARCHAR) || '.example' AS src_host,
-       |    'h' || CAST(((doc_id * 31 + o.v) % $HtmlLinkMod) % $HtmlHosts AS VARCHAR) || '.example' AS dst_host
-       |  FROM ${p}d CROSS JOIN (VALUES $rel) o(v)),
-       |${p}edges AS MATERIALIZED (
-       |  SELECT src_host, dst_host, CAST(COUNT(*) AS BIGINT) AS n_links
-       |  FROM ${p}lk GROUP BY 1, 2)""".stripMargin
-  }
-
   /** One fold of the maintenance loop in SQL, batch edges `b${k}edges`
     * merged into `$prevEdges` with prior ranks `$priorRanks`: emits
     * `m$k` (merged edges), `rep$k` (the verdict), and `ranks$k` — the
@@ -263,32 +222,17 @@ object WebGraphMaintenance {
     * fold's prior ranks and fails the hash loudly).
     */
   private def foldSql(k: Int, prevEdges: String, priorRanks: String,
-      warmIters: Int, iters: Int, gapThreshold: Long): String = {
-    val S = AuthorityScale
-    val warmCtes = (1 to warmIters).map(t =>
-      stepSql(s"w${k}_$t", if (t == 1) s"w${k}_0" else s"w${k}_${t - 1}",
-        s"m$k", s"o$k")).mkString(",\n")
-    val fullCtes = (1 to iters).map(t =>
-      stepSql(s"f${k}_$t", if (t == 1) s"f${k}_0" else s"f${k}_${t - 1}",
-        s"m$k", s"o$k")).mkString(",\n")
+      warmIters: Int, iters: Int, gapThreshold: Long): String =
     s"""m$k AS MATERIALIZED (
        |  SELECT src_host, dst_host, CAST(SUM(n_links) AS BIGINT) AS n_links
        |  FROM (SELECT * FROM $prevEdges UNION ALL SELECT * FROM b${k}edges)
        |  GROUP BY 1, 2),
-       |o$k AS MATERIALIZED (
-       |  SELECT src_host, CAST(SUM(n_links) AS BIGINT) AS out_w
-       |  FROM m$k GROUP BY 1),
-       |h$k AS MATERIALIZED (SELECT DISTINCT host FROM (
-       |  SELECT src_host AS host FROM m$k
-       |  UNION ALL SELECT dst_host FROM m$k)),
-       |nb$k AS (SELECT COUNT(*) AS n_hosts FROM h$k),
+       |${edgeStateSql(s"m$k", s"o$k", s"h$k", s"nb$k")},
        |w${k}_0 AS MATERIALIZED (
-       |  SELECT h.host,
-       |    COALESCE(p.r, CAST($S // n_hosts AS BIGINT)) AS r,
-       |    CAST(($S * 15) // (100 * n_hosts) AS BIGINT) AS base
+       |  SELECT h.host, COALESCE(p.r, $initRankSql) AS r, $baseRankSql AS base
        |  FROM h$k h CROSS JOIN nb$k LEFT JOIN $priorRanks p ON p.host = h.host),
-       |$warmCtes,
-       |${stepSql(s"probe$k", s"w${k}_$warmIters", s"m$k", s"o$k")},
+       |${powerChainSql(t => s"w${k}_$t", warmIters, s"m$k", s"o$k")},
+       |${powerStepSql(s"probe$k", s"w${k}_$warmIters", s"m$k", s"o$k")},
        |g$k AS MATERIALIZED (
        |  SELECT w.host, w0.r AS rank_prior_scaled, w.r AS rank_warm_scaled,
        |    p.r AS rank_probe_scaled,
@@ -304,16 +248,12 @@ object WebGraphMaintenance {
        |    r.residual_max > $gapThreshold AS retrain_due
        |  FROM g$k g CROSS JOIN rm$k r),
        |gate$k AS (SELECT COALESCE(bool_or(retrain_due), FALSE) AS due FROM rep$k),
-       |f${k}_0 AS MATERIALIZED (
-       |  SELECT host, CAST($S // n_hosts AS BIGINT) AS r,
-       |    CAST(($S * 15) // (100 * n_hosts) AS BIGINT) AS base
-       |  FROM h$k CROSS JOIN nb$k),
-       |$fullCtes,
+       |${initRanksSql(s"f${k}_0", s"h$k", s"nb$k")},
+       |${powerChainSql(t => s"f${k}_$t", iters, s"m$k", s"o$k")},
        |ranks$k AS MATERIALIZED (
        |  SELECT * FROM w${k}_$warmIters WHERE NOT (SELECT due FROM gate$k)
        |  UNION ALL
        |  SELECT * FROM f${k}_$iters WHERE (SELECT due FROM gate$k))""".stripMargin
-  }
 
   /** DuckDB twin of [[maintenanceBatch]] (and of the graftqueue
     * streaming form — same fold, same oracle): the corpus chain seeds

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.text.{TextOps, WebGraph}
+import graft.text.{TextOps, WebGraph, WebGraphMaintenance}
 
 /** Web-graph extraction + authority (r15, VERDICT r14 item 2). The
   * oracles prove the generator round trips at sf0.01; these specs pin
@@ -83,6 +83,30 @@ class WebGraphSpec extends SparkSpec {
     assert(gp > 0L, "the delta batch should move the ranks")
     assert(gw * 10 < gp,
       s"2 warm steps must contract the gap by far more than 10x: prior=$gp warm=$gw")
+  }
+
+  test("in-plan incremental ≡ the maintained seeds: prior = carve's ranks_v0, full = corpus seed") {
+    // the in-plan query extracts its edges once with a carve flag; the
+    // maintained state seeds each slice through edgesOf — per host, both
+    // must give the same converged ranks
+    val docs = TestdataAdapter.table(spark, "/root/testdata/sf0.001", "documents")
+    val rep = WebGraph.linkAuthorityIncremental(docs).collect()
+    assert(rep.nonEmpty)
+    val root = java.nio.file.Files.createTempDirectory("graft_wg_seed").toString
+    def seeded(tag: String, d: org.apache.spark.sql.DataFrame): Map[String, Long] = {
+      WebGraphMaintenance.seedIfAbsent(WebGraphMaintenance.edgesOf(d),
+        s"$root/$tag", iters = 5)
+      spark.read.parquet(WebGraphMaintenance.ranksPath(s"$root/$tag", 0))
+        .collect().map(r => r.getAs[String]("host") -> r.getAs[Long]("r")).toMap
+    }
+    def ranks(name: String): Map[String, Long] =
+      rep.map(r => r.getAs[String]("host") -> r.getAs[Long](name)).toMap
+    val (corpus, _, _) = WebGraphMaintenance.carve(docs)
+    assert(ranks("rank_prior_scaled") == seeded("carve", corpus),
+      "rank_prior_scaled differs from the %3 carve's seeded ranks_v0")
+    assert(ranks("rank_full_scaled") ==
+      seeded("full", docs.filter(col("doc_id").isNotNull)),
+      "rank_full_scaled differs from the uncarved corpus seed")
   }
 
   test("authority weighting preserves the quality ordering within a host") {

@@ -6,8 +6,12 @@ with graft.Verify output + DuckDB so mismatches surface before round end).
 Usage:
   python3 tools/local_verify.py [sfdir] [outdir]
 where outdir is what `sbt "runMain graft.Verify <sfdir> <outdir>"` wrote.
+
+Each oracle line carries the seconds DuckDB took to run that oracle's
+SQL (execute + fetch), and the summary prints their total, so a change
+to oracle SQL shows what its twins cost.
 """
-import sys, json, glob
+import sys, json, glob, time
 
 import duckdb
 import pandas as pd
@@ -28,6 +32,7 @@ def main():
 
     oracle = json.load(open(f"{outdir}/oracle_sql.json"))
     n_ok = n_bad = 0
+    duck_s = 0.0
     for name in sorted(oracle):
         sql = oracle[name]
         try:
@@ -36,37 +41,41 @@ def main():
             print(f"FAIL {name}: spark output unreadable: {e}")
             n_bad += 1
             continue
+        t0 = time.perf_counter()
         try:
             ddf = con.execute(sql).fetchdf()
         except Exception as e:
             print(f"FAIL {name}: oracle SQL error: {type(e).__name__}: {e}")
             n_bad += 1
             continue
+        secs = time.perf_counter() - t0
+        duck_s += secs
+        took = f"duckdb {secs:.3f} s"
         sdf = sdf[sorted(sdf.columns)].reset_index(drop=True)
         ddf = ddf[sorted(ddf.columns)].reset_index(drop=True)
         if list(sdf.columns) != list(ddf.columns):
-            print(f"FAIL {name}: columns spark={list(sdf.columns)} duck={list(ddf.columns)}")
+            print(f"FAIL {name}: columns spark={list(sdf.columns)} duck={list(ddf.columns)} [{took}]")
             n_bad += 1
             continue
         if len(sdf) != len(ddf):
-            print(f"FAIL {name}: rows spark={len(sdf)} duck={len(ddf)}")
+            print(f"FAIL {name}: rows spark={len(sdf)} duck={len(ddf)} [{took}]")
             n_bad += 1
             continue
         try:
             pdt.assert_frame_equal(sdf, ddf, check_dtype=True, check_exact=True)
-            print(f"OK   {name} ({len(sdf)} rows)")
+            print(f"OK   {name} ({len(sdf)} rows) [{took}]")
             n_ok += 1
         except AssertionError:
             try:
                 pdt.assert_frame_equal(sdf, ddf, check_dtype=False, check_exact=True)
-                print(f"OK~  {name} ({len(sdf)} rows) [dtype skew only]")
+                print(f"OK~  {name} ({len(sdf)} rows) [dtype skew only] [{took}]")
                 for c in sdf.columns:
                     if str(sdf[c].dtype) != str(ddf[c].dtype):
                         print(f"      {c}: spark={sdf[c].dtype} duck={ddf[c].dtype}")
                 n_ok += 1
             except AssertionError as e:
                 first = [l for l in str(e).splitlines() if l.strip()][:6]
-                print(f"FAIL {name}: value mismatch:")
+                print(f"FAIL {name}: value mismatch: [{took}]")
                 for l in first:
                     print(f"      {l}")
                 # show first differing column/row for debugging
@@ -92,6 +101,7 @@ def main():
             print(f"FAIL {name}: rows-only output unreadable: {e}")
             n_bad += 1
     print(f"\n{n_ok} ok, {n_bad} failed, {len(rows_only)} rows-only")
+    print(f"duckdb oracle seconds total: {duck_s:.3f}")
     # exact counts block to paste into README/COVERAGE/SKILL — regenerate
     # the docs from THIS, never by hand (doc drift recurred in r6/r7)
     total = len(oracle) + len(rows_only)
