@@ -14,19 +14,17 @@ private[graft] trait DedupClusters extends DedupSketch {
     * row per distinct content (P4-style dropDuplicates but deterministic —
     * min doc_id wins, not "whichever partition arrives first").
     */
-  def dedupKeep(documents: DataFrame): DataFrame = {
-    val w = Window.partitionBy(md5(col("text"))).orderBy(col("doc_id"))
+  def dedupKeep(documents: DataFrame): DataFrame =
     documents
-      .withColumn("rn", row_number().over(w))
+      .withColumn("rn", firstByContent)
       .filter(col("rn") === 1)
       .select("doc_id", "lang", "source", "n_chars")
       .orderBy("doc_id")
-  }
 
   val dedupKeepSql: String =
-    """SELECT doc_id, lang, source, n_chars FROM (
+    s"""SELECT doc_id, lang, source, n_chars FROM (
       |  SELECT doc_id, lang, source, n_chars,
-      |    ROW_NUMBER() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn
+      |    $FIRST_BY_CONTENT_SQL AS rn
       |  FROM documents) WHERE rn = 1 ORDER BY doc_id""".stripMargin
 
   /** Connected components over an undirected edge list via distributed
@@ -126,18 +124,8 @@ private[graft] trait DedupClusters extends DedupSketch {
     */
   def contaminationReportNgram(
       training: DataFrame, benchmark: DataFrame, n: Int = 13): DataFrame = {
-    def hashedGrams(df: DataFrame): DataFrame = {
-      val w = TextOps.toks(col("text"))
-      df.select(col("doc_id"), w.as("w"))
-        .withColumn("i", explode(
-          when(size(col("w")) >= n, sequence(lit(1), size(col("w")) - (n - 1)))
-            .otherwise(array().cast("array<int>"))))
-        .select(col("doc_id"),
-          md5(array_join(slice(col("w"), col("i"), lit(n)), " ")).as("h"))
-        .distinct()
-    }
-    val tr = hashedGrams(training)
-    val ev = hashedGrams(benchmark).select("h").distinct()
+    val tr = spanStarts(training, n).select("doc_id", "h").distinct()
+    val ev = spanStarts(benchmark, n).select("h").distinct()
     tr.join(broadcast(ev), "h")
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_shared_ngrams"))
@@ -148,11 +136,7 @@ private[graft] trait DedupClusters extends DedupSketch {
     * benchmark stand-in slice as the 3-gram form).
     */
   def contaminationReportNgramSql(n: Int = 13): String =
-    raw"""WITH toks AS (SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS w
-       |              FROM documents),
-       |gs AS (SELECT doc_id, md5(array_to_string(w[i:i+${n - 1}], ' ')) AS h
-       |       FROM (SELECT doc_id, w, unnest(generate_series(1, len(w) - ${n - 1})) AS i
-       |             FROM toks)),
+    raw"""WITH ${gramHashSqlCtes(n)},
        |g AS (SELECT DISTINCT doc_id, h FROM gs),
        |ev AS (SELECT DISTINCT h FROM g WHERE doc_id % 100 = 7),
        |tr AS (SELECT doc_id, h FROM g WHERE doc_id % 100 <> 7)
@@ -177,18 +161,26 @@ private[graft] trait DedupClusters extends DedupSketch {
       .orderBy("doc_id")
   }
 
-  /** DuckDB twin of [[dedupClusters]]: transitive closure as a recursive
-    * CTE (per-node set of reaching roots; MIN root = component id).
+  /** The closure chain every cluster twin opens its `WITH RECURSIVE`
+    * with: the LSH pairs, `e` (both edge directions), `reach` (per-node
+    * set of reaching roots), `lab` (doc_id, cluster_id = MIN root) and
+    * `cs` (cluster_id, cluster_size).
     */
-  val dedupClustersSql: String =
-    s"""WITH RECURSIVE $PAIRS_CTE,
+  private[dedup] val CLOSURE_CTES: String =
+    s"""$PAIRS_CTE,
        |e AS (SELECT doc_a AS a, doc_b AS b FROM cand UNION ALL SELECT doc_b, doc_a FROM cand),
        |reach AS (
        |  SELECT doc_id AS node, doc_id AS root FROM documents
        |  UNION
        |  SELECT e.b, reach.root FROM reach JOIN e ON e.a = reach.node),
        |lab AS (SELECT node AS doc_id, MIN(root) AS cluster_id FROM reach GROUP BY 1),
-       |cs AS (SELECT cluster_id, COUNT(*) AS cluster_size FROM lab GROUP BY 1)
+       |cs AS (SELECT cluster_id, COUNT(*) AS cluster_size FROM lab GROUP BY 1)""".stripMargin
+
+  /** DuckDB twin of [[dedupClusters]]: transitive closure as a recursive
+    * CTE (per-node set of reaching roots; MIN root = component id).
+    */
+  val dedupClustersSql: String =
+    s"""WITH RECURSIVE $CLOSURE_CTES
        |SELECT l.doc_id, l.cluster_id, cs.cluster_size
        |FROM lab l JOIN cs USING (cluster_id)
        |ORDER BY doc_id""".stripMargin
@@ -218,7 +210,7 @@ private[graft] trait DedupClusters extends DedupSketch {
     labels
       .select(col("doc_id"), col("cluster_id"), col("cluster_size"),
         b.as("bucket"),
-        when(b < 80, "train").when(b < 90, "val").otherwise("test").as("split"))
+        graft.ml.HashSplit.splitOf(b).as("split"))
       .orderBy("doc_id")
   }
 
@@ -230,7 +222,7 @@ private[graft] trait DedupClusters extends DedupSketch {
     val b = graft.ml.HashSplit.hashBucketSql("cluster_id", 100)
     s"WITH cl AS (SELECT * FROM ($dedupClustersSql))\n" +
       s"SELECT doc_id, cluster_id, cluster_size, $b AS bucket,\n" +
-      s"  CASE WHEN $b < 80 THEN 'train' WHEN $b < 90 THEN 'val' ELSE 'test' END AS split\n" +
+      s"  ${graft.ml.HashSplit.splitSql(b)} AS split\n" +
       "FROM cl ORDER BY doc_id"
   }
 

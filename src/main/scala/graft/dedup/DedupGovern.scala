@@ -53,7 +53,7 @@ private[graft] trait DedupGovern extends DedupClusters {
       raw"""per AS (
         |  SELECT doc_id, source, lang, md5(text) AS h,
         |    round(${TextOps.qualityScoreSqlExpr}, 6) AS q,
-        |    CAST(len(string_split_regex(trim(lower(text)), '\s+')) AS BIGINT) AS toks
+        |    CAST(len(${TextOps.toksSql()}) AS BIGINT) AS toks
         |  FROM documents),
         |hc AS (SELECT h, COUNT(*) AS h_count FROM per GROUP BY 1)
         |SELECT per.source,
@@ -141,7 +141,7 @@ private[graft] trait DedupGovern extends DedupClusters {
         |  FROM cl JOIN q USING (doc_id)),
         |el AS (
         |  SELECT bk.doc_id, bk.qs, d.source,
-        |    CAST(len(string_split_regex(trim(lower(d.text)), '\s+')) AS BIGINT) AS n_toks
+        |    CAST(len(${TextOps.toksSql("d.text")}) AS BIGINT) AS n_toks
         |  FROM bk JOIN documents d USING (doc_id) WHERE bk.rn = 1),
         |st AS (SELECT source, SUM(n_toks) AS src_toks FROM el GROUP BY 1),
         |tt AS (SELECT SUM(src_toks) AS total_toks FROM st),
@@ -199,14 +199,7 @@ private[graft] trait DedupGovern extends DedupClusters {
   }
 
   val sourceOverlapSql: String =
-    s"""WITH RECURSIVE $PAIRS_CTE,
-       |e AS (SELECT doc_a AS a, doc_b AS b FROM cand UNION ALL SELECT doc_b, doc_a FROM cand),
-       |reach AS (
-       |  SELECT doc_id AS node, doc_id AS root FROM documents
-       |  UNION
-       |  SELECT e.b, reach.root FROM reach JOIN e ON e.a = reach.node),
-       |lab AS (SELECT node AS doc_id, MIN(root) AS cluster_id FROM reach GROUP BY 1),
-       |cs AS (SELECT cluster_id, COUNT(*) AS cluster_size FROM lab GROUP BY 1),
+    s"""WITH RECURSIVE $CLOSURE_CTES,
        |m AS (
        |  SELECT l.doc_id, l.cluster_id, d.source
        |  FROM lab l JOIN cs USING (cluster_id) JOIN documents d USING (doc_id)
@@ -227,8 +220,18 @@ private[graft] trait DedupGovern extends DedupClusters {
     */
   def corpusFilter(
       documents: DataFrame, minQuality: Double = 0.2,
-      langs: Seq[String] = Seq("en")): DataFrame = {
-    val w = Window.partitionBy(md5(col("text"))).orderBy(col("doc_id"))
+      langs: Seq[String] = Seq("en")): DataFrame =
+    scoredKeepFirst(documents, Seq("source", "n_chars"), minQuality, langs)
+
+  /** The scored keep-first tail of [[corpusFilter]] and
+    * [[graft.dedup.Dedup.curateCorpus]] over `docs` (doc_id, text and the
+    * `carry` columns): the [[firstByContent]] representative, its token
+    * count and quality score, kept when it clears the quality floor and
+    * the language allowlist.
+    */
+  private[dedup] def scoredKeepFirst(
+      docs: DataFrame, carry: Seq[String], minQuality: Double,
+      langs: Seq[String]): DataFrame = {
     val scores = TextOps.langScoreCols(col("text"))
     // every text-derived value materializes in ONE projection BELOW the
     // dedup window: the filter above then references plain attributes,
@@ -237,18 +240,42 @@ private[graft] trait DedupGovern extends DedupClusters {
     // trees back into the Filter and every regex count evaluates two to
     // three times per row (and, pre-factoring, overflowed Janino's
     // method limit entirely — see TextOps.langScoreCols)
-    documents
+    docs
       .select(
-        col("doc_id") +: col("text") +: col("source") +: col("n_chars") +:
-          size(TextOps.toks(col("text"))).cast("long").as("n_tokens") +:
-          TextOps.qualityScore(col("text")).as("quality_score") +:
-          scores.map { case (n, c) => c.cast("long").as("__" + n) }: _*)
-      .withColumn("rn", row_number().over(w))
+        (col("doc_id") +: col("text") +: carry.map(col)) ++
+          (size(TextOps.toks(col("text"))).cast("long").as("n_tokens") +:
+            TextOps.qualityScore(col("text")).as("quality_score") +:
+            scores.map { case (n, c) => c.cast("long").as("__" + n) }): _*)
+      .withColumn("rn", firstByContent)
       .withColumn("predicted_lang", TextOps.langCaseFromScores("__"))
       .filter(col("rn") === 1 && col("quality_score") >= minQuality &&
         col("predicted_lang").isInCollection(langs))
       .drop("text" +: "rn" +: scores.map("__" + _._1): _*)
       .orderBy("doc_id")
+  }
+
+  /** DuckDB twin of [[scoredKeepFirst]] over relation `from`: the CTEs
+    * and final SELECT that finish a WITH chain. `carry` is the
+    * comma-separated column list carried through.
+    */
+  private[dedup] def scoredKeepFirstSql(
+      from: String, carry: String, minQuality: Double, langs: Seq[String]): String = {
+    val langList = langs.map(l => s"'$l'").mkString(", ")
+    raw"""kept AS (
+       |  SELECT doc_id, text, $carry FROM (
+       |    SELECT *, $FIRST_BY_CONTENT_SQL AS rn
+       |    FROM $from) WHERE rn = 1),
+       |sc AS (SELECT doc_id, $carry,
+       |  CAST(len(${TextOps.toksSql()}) AS BIGINT) AS n_tokens,
+       |  ${TextOps.qualityScoreSqlExpr} AS quality_score,
+       |  ${TextOps.langScoreColsSql}
+       |FROM kept)
+       |SELECT doc_id, $carry, n_tokens, quality_score,
+       |  ${TextOps.langCaseSql} AS predicted_lang
+       |FROM sc
+       |WHERE quality_score >= $minQuality
+       |  AND (${TextOps.langCaseSql}) IN ($langList)
+       |ORDER BY doc_id""".stripMargin
   }
 
   /** Boilerplate / duplicated-span hotspot report: the word 3-grams that
@@ -298,14 +325,7 @@ private[graft] trait DedupGovern extends DedupClusters {
       .orderBy("doc_id")
 
   val nearDedupKeepSql: String =
-    s"""WITH RECURSIVE $PAIRS_CTE,
-       |e AS (SELECT doc_a AS a, doc_b AS b FROM cand UNION ALL SELECT doc_b, doc_a FROM cand),
-       |reach AS (
-       |  SELECT doc_id AS node, doc_id AS root FROM documents
-       |  UNION
-       |  SELECT e.b, reach.root FROM reach JOIN e ON e.a = reach.node),
-       |lab AS (SELECT node AS doc_id, MIN(root) AS cluster_id FROM reach GROUP BY 1),
-       |cs AS (SELECT cluster_id, COUNT(*) AS cluster_size FROM lab GROUP BY 1)
+    s"""WITH RECURSIVE $CLOSURE_CTES
        |SELECT l.doc_id, cs.cluster_size
        |FROM lab l JOIN cs USING (cluster_id)
        |WHERE l.doc_id = l.cluster_id

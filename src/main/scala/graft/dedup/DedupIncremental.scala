@@ -197,24 +197,8 @@ private[graft] trait DedupIncremental extends DedupGovern {
        |FROM b LEFT JOIN c USING (h)
        |ORDER BY doc_id""".stripMargin
 
-  def corpusFilterSql(minQuality: Double = 0.2, langs: Seq[String] = Seq("en")): String = {
-    val langList = langs.map(l => s"'$l'").mkString(", ")
-    raw"""WITH kept AS (
-       |  SELECT doc_id, text, source, n_chars FROM (
-       |    SELECT *, ROW_NUMBER() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn
-       |    FROM documents) WHERE rn = 1),
-       |s AS (SELECT doc_id, source, n_chars,
-       |  CAST(len(string_split_regex(trim(lower(text)), '\s+')) AS BIGINT) AS n_tokens,
-       |  ${TextOps.qualityScoreSqlExpr} AS quality_score,
-       |  ${TextOps.langScoreColsSql}
-       |FROM kept)
-       |SELECT doc_id, source, n_chars, n_tokens, quality_score,
-       |  ${TextOps.langCaseSql} AS predicted_lang
-       |FROM s
-       |WHERE quality_score >= $minQuality
-       |  AND (${TextOps.langCaseSql}) IN ($langList)
-       |ORDER BY doc_id""".stripMargin
-  }
+  def corpusFilterSql(minQuality: Double = 0.2, langs: Seq[String] = Seq("en")): String =
+    "WITH " + scoredKeepFirstSql("documents", "source, n_chars", minQuality, langs)
 
   // ---- incremental NEAR-dup: the LSH signature table as running state
   //      (the near-dup sibling of the exact-hash DedupIndex above) ----
@@ -250,16 +234,8 @@ private[graft] trait DedupIncremental extends DedupGovern {
     val nAgree = (0 until NumHashes)
       .map(k => when(col(s"x.mh$k") === col(s"y.mh$k"), 1).otherwise(0))
       .reduce(_ + _)
-    // broadcast the BATCH side: an incremental batch is bounded by
-    // contract while the index is corpus-sized — the index must never
-    // shuffle on band keys, and the explicit hint keeps the plan
-    // broadcast-stable at every scale (soak-asserted)
-    val cand = (0 until Bands).map { j =>
-      broadcast(bsig).as("x")
-        .join(index.as("y"), col(s"x.band$j") === col(s"y.band$j"))
-        .select(col("x.doc_id").as("doc_id"), col("y.doc_id").as("match_id"),
-          nAgree.as("n_agree"))
-    }.reduce(_ unionByName _).distinct()
+    val cand = bandJoinIndex(bsig, index,
+      col("x.doc_id").as("doc_id"), col("y.doc_id").as("match_id"), nAgree.as("n_agree"))
     val part = Window.partitionBy("doc_id")
     val ranked = cand
       .withColumn("n_candidates", count(lit(1)).over(part))
@@ -276,6 +252,20 @@ private[graft] trait DedupIncremental extends DedupGovern {
         col("match_id").isNotNull.as("is_near_dup"))
       .orderBy("doc_id")
   }
+
+  /** Batch signatures `bsig` (as `x`) band-joined against the signature
+    * index (as `y`): the rows of any band collision, projected to `cols`,
+    * deduplicated. The BATCH side broadcasts: an incremental batch is
+    * bounded by contract while the index is corpus-sized — the index must
+    * never shuffle on band keys, and the explicit hint keeps the plan
+    * broadcast-stable at every scale (soak-asserted).
+    */
+  private def bandJoinIndex(bsig: DataFrame, index: DataFrame, cols: Column*): DataFrame =
+    (0 until Bands).map { j =>
+      broadcast(bsig).as("x")
+        .join(index.as("y"), col(s"x.band$j") === col(s"y.band$j"))
+        .select(cols: _*)
+    }.reduce(_ unionByName _).distinct()
 
   /** Incremental TRANSITIVE-cluster maintenance — the last leg of the
     * maintained-index family (exact: [[DedupIndex]]; near-dup pairs:
@@ -306,11 +296,8 @@ private[graft] trait DedupIncremental extends DedupGovern {
   def attachToClusters(
       labels: DataFrame, index: DataFrame, batch: DataFrame): DataFrame = {
     val bsig = minhashSignaturesFrom(hashedShingles(batch)).persist()
-    val cross = (0 until Bands).map { j =>
-      broadcast(bsig).as("x")
-        .join(index.as("y"), col(s"x.band$j") === col(s"y.band$j"))
-        .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-    }.reduce(_ unionByName _).distinct()
+    val cross = bandJoinIndex(bsig, index,
+      col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
     val crossToRep = cross
       .join(labels.select(col("doc_id").as("doc_b"), col("cluster_id")), Seq("doc_b"))
       .select(col("doc_a"), col("cluster_id").as("doc_b"))
@@ -348,7 +335,7 @@ private[graft] trait DedupIncremental extends DedupGovern {
   private[dedup] def sigCtesSql(n: String, pred: String): String = {
     val mh = (0 until NumHashes).map(k => s"MIN(${permSql(k)}) AS mh$k").mkString(", ")
     val bands = (0 until Bands).map(j => s"mh${2 * j} || mh${2 * j + 1} AS band$j").mkString(", ")
-    raw"""${n}_toks AS (SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS w
+    raw"""${n}_toks AS (SELECT doc_id, ${TextOps.toksSql()} AS w
        |            FROM documents WHERE $pred),
        |${n}_hs AS (SELECT DISTINCT doc_id, md5(w[i] || ' ' || w[i+1] || ' ' || w[i+2]) AS h
        |          FROM (SELECT doc_id, w, unnest(generate_series(1, len(w) - 2)) AS i FROM ${n}_toks)),

@@ -27,6 +27,18 @@ private[graft] trait DedupSketch extends Serializable {
     """SELECT md5(text) AS content_md5, MIN(doc_id) AS keep_doc_id, COUNT(*) AS n_copies
       |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin
 
+  /** Keep-first by content: each row's rank among the rows with its
+    * exact text, lowest doc_id first — rank 1 is the copy every exact
+    * dedup keeps (min doc_id wins, not "whichever partition arrives
+    * first").
+    */
+  private[dedup] def firstByContent: Column =
+    row_number().over(Window.partitionBy(md5(col("text"))).orderBy(col("doc_id")))
+
+  /** DuckDB twin of [[firstByContent]] over a relation with `text` and `doc_id`. */
+  private[dedup] val FIRST_BY_CONTENT_SQL =
+    "ROW_NUMBER() OVER (PARTITION BY md5(text) ORDER BY doc_id)"
+
   /** doc_id → exploded 3-word shingles (docs with ≥3 tokens). */
   def shingles(documents: DataFrame): DataFrame =
     documents
@@ -45,7 +57,7 @@ private[graft] trait DedupSketch extends Serializable {
     shingles(documents).distinct().withColumn("h", md5(col("shingle")))
 
   private[dedup] val RAW_SHINGLES_CTE =
-    """toks AS (SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS w FROM documents),
+    s"""toks AS (SELECT doc_id, ${TextOps.toksSql()} AS w FROM documents),
       |sh AS (SELECT doc_id, w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS shingle
       |       FROM (SELECT doc_id, w, unnest(generate_series(1, len(w) - 2)) AS i FROM toks))""".stripMargin
 
@@ -53,6 +65,29 @@ private[graft] trait DedupSketch extends Serializable {
     s"""$RAW_SHINGLES_CTE,
        |hs AS (SELECT doc_id, shingle, md5(shingle) AS h
        |       FROM (SELECT DISTINCT doc_id, shingle FROM sh))""".stripMargin
+
+  /** All n-gram span starts: (doc_id, start position i, gram hash) — the
+    * one n-gram hasher, shared by span dedup and the n-gram
+    * decontamination report.
+    */
+  private[dedup] def spanStarts(documents: DataFrame, n: Int): DataFrame = {
+    val w = TextOps.toks(col("text"))
+    documents.select(col("doc_id"), w.as("w"))
+      .withColumn("i", explode(
+        when(size(col("w")) >= n, sequence(lit(1), size(col("w")) - (n - 1)))
+          .otherwise(array().cast("array<int>"))))
+      .select(col("doc_id"), col("i"),
+        md5(array_join(slice(col("w"), col("i"), lit(n)), " ")).as("h"))
+  }
+
+  /** SQL twin of [[spanStarts]]: `toks` (doc_id, w) and `gs` (doc_id, i, h). */
+  private[dedup] def gramHashSqlCtes(n: Int): String =
+    raw"""toks AS (SELECT doc_id, ${TextOps.toksSql()} AS w
+       |          FROM documents),
+       |gs AS (SELECT doc_id, CAST(i AS INTEGER) AS i,
+       |         md5(array_to_string(w[i:i+${n - 1}], ' ')) AS h
+       |       FROM (SELECT doc_id, w, unnest(generate_series(1, len(w) - ${n - 1})) AS i
+       |             FROM toks))""".stripMargin
 
   /** Permutation k of a 32-hex-char md5: rotate left by 4k characters.
     * One md5 per shingle; the 8 orderings come from these rotations.
@@ -240,17 +275,6 @@ private[graft] trait DedupSketch extends Serializable {
        |SELECT * FROM ($legs) u ORDER BY bands DESC""".stripMargin
   }
 
-  /** n-gram Jaccard similarity for LSH candidate pairs, computed over ONE
-    * shared lineage: the persisted hashed-shingle frame feeds the
-    * signatures (→ candidates) AND the per-doc shingle sets. The
-    * intersection is size(array_intersect) over the two docs' collected
-    * hash sets — two narrow joins of compact arrays onto the candidate
-    * frame — instead of re-exploding every shingle of every candidate
-    * doc through a (doc, shingle)-keyed shuffle (which materializes
-    * |pairs|×|shingles/doc| rows and was the measured cost center). Set
-    * sizes are bounded by document length, candidates are near-linear,
-    * so nothing here scales super-linearly in the corpus.
-    */
   /** Shared pair-scoring block for the shingle-set operators
     * ([[ngramJaccard]], [[containmentPairs]]): join each (doc_a, doc_b)
     * candidate onto per-doc collect_set arrays — one compact array per
@@ -273,6 +297,17 @@ private[graft] trait DedupSketch extends Serializable {
         col("n_inter").cast("double") / (col("n_a") + col("n_b") - col("n_inter")))
   }
 
+  /** n-gram Jaccard similarity for LSH candidate pairs, computed over ONE
+    * shared lineage: the persisted hashed-shingle frame feeds the
+    * signatures (→ candidates) AND the per-doc shingle sets. The
+    * intersection is size(array_intersect) over the two docs' collected
+    * hash sets — two narrow joins of compact arrays onto the candidate
+    * frame — instead of re-exploding every shingle of every candidate
+    * doc through a (doc, shingle)-keyed shuffle (which materializes
+    * |pairs|×|shingles/doc| rows and was the measured cost center). Set
+    * sizes are bounded by document length, candidates are near-linear,
+    * so nothing here scales super-linearly in the corpus.
+    */
   def ngramJaccard(documents: DataFrame): DataFrame = {
     val ss = hashedShingles(documents).persist()
     val cand = minhashPairsFrom(minhashSignaturesFrom(ss).persist())
@@ -329,13 +364,7 @@ private[graft] trait DedupSketch extends Serializable {
        |post AS (SELECT doc_id, h FROM hs WHERE h IN (SELECT h FROM rare)),
        |cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
        |         FROM post a JOIN post b ON a.h = b.h AND a.doc_id < b.doc_id),
-       |sz AS (SELECT doc_id, COUNT(*) AS nsh FROM hs GROUP BY 1),
-       |inter AS (
-       |  SELECT c.doc_a, c.doc_b, COUNT(*) AS n_inter
-       |  FROM cand c
-       |  JOIN hs a ON a.doc_id = c.doc_a
-       |  JOIN hs b ON b.doc_id = c.doc_b AND b.h = a.h
-       |  GROUP BY 1, 2),
+       |${pairInterSqlCtes("h")},
        |j AS (
        |  SELECT i.doc_a, i.doc_b, i.n_inter, sa.nsh AS n_a, sb.nsh AS n_b,
        |    CAST(i.n_inter AS DOUBLE) / (sa.nsh + sb.nsh - i.n_inter) AS jaccard,
@@ -348,15 +377,23 @@ private[graft] trait DedupSketch extends Serializable {
        |FROM j WHERE overlap >= $minOverlap
        |ORDER BY doc_a, doc_b""".stripMargin
 
-  val ngramJaccardSql: String =
-    s"""WITH $PAIRS_CTE,
-       |sz AS (SELECT doc_id, COUNT(*) AS nsh FROM hs GROUP BY 1),
+  /** SQL twin of [[pairSetScores]]'s counts over the `hs` and `cand`
+    * CTEs: `sz` (doc_id, nsh) and `inter` (doc_a, doc_b, n_inter), the
+    * two sides' shingles matched on column `key` (`shingle` or its md5
+    * `h` — one per distinct shingle either way).
+    */
+  private[dedup] def pairInterSqlCtes(key: String): String =
+    s"""sz AS (SELECT doc_id, COUNT(*) AS nsh FROM hs GROUP BY 1),
        |inter AS (
        |  SELECT c.doc_a, c.doc_b, COUNT(*) AS n_inter
        |  FROM cand c
        |  JOIN hs a ON a.doc_id = c.doc_a
-       |  JOIN hs b ON b.doc_id = c.doc_b AND b.shingle = a.shingle
-       |  GROUP BY 1, 2)
+       |  JOIN hs b ON b.doc_id = c.doc_b AND b.$key = a.$key
+       |  GROUP BY 1, 2)""".stripMargin
+
+  val ngramJaccardSql: String =
+    s"""WITH $PAIRS_CTE,
+       |${pairInterSqlCtes("shingle")}
        |SELECT i.doc_a, i.doc_b, i.n_inter, sa.nsh AS n_a, sb.nsh AS n_b,
        |  CAST(i.n_inter AS DOUBLE) / (sa.nsh + sb.nsh - i.n_inter) AS jaccard
        |FROM inter i
@@ -382,50 +419,20 @@ private[graft] trait DedupSketch extends Serializable {
     val dups = ngramJaccard(documents)
       .filter(col("jaccard") >= minJaccard)
       .select("doc_a", "doc_b")
-    val splits = graft.ml.HashSplit.splitAssign(documents)
-      .select(col("doc_id"), col("split"))
-    dups
-      .join(splits.select(col("doc_id").as("doc_a"), col("split").as("sa")), Seq("doc_a"))
-      .join(splits.select(col("doc_id").as("doc_b"), col("split").as("sb")), Seq("doc_b"))
-      .select(
-        least(col("sa"), col("sb")).as("split_x"),
-        greatest(col("sa"), col("sb")).as("split_y"))
-      .groupBy("split_x", "split_y")
-      .agg(count(lit(1)).as("n_pairs"))
-      .withColumn("leaks", col("split_x") =!= col("split_y"))
-      .orderBy("split_x", "split_y")
+    graft.ml.HashSplit.leakRollup(dups, documents, "doc")
   }
 
   /** DuckDB twin of [[splitLeakage]]. */
-  def splitLeakageSql(minJaccard: Double = 0.5): String = {
-    val b = graft.ml.HashSplit.hashBucketSql("doc_id", 100)
+  def splitLeakageSql(minJaccard: Double = 0.5): String =
     s"""WITH $PAIRS_CTE,
-       |sz AS (SELECT doc_id, COUNT(*) AS nsh FROM hs GROUP BY 1),
-       |inter AS (
-       |  SELECT c.doc_a, c.doc_b, COUNT(*) AS n_inter
-       |  FROM cand c
-       |  JOIN hs a ON a.doc_id = c.doc_a
-       |  JOIN hs b ON b.doc_id = c.doc_b AND b.shingle = a.shingle
-       |  GROUP BY 1, 2),
+       |${pairInterSqlCtes("shingle")},
        |dup AS (
        |  SELECT i.doc_a, i.doc_b
        |  FROM inter i
        |  JOIN sz sa ON sa.doc_id = i.doc_a
        |  JOIN sz sb ON sb.doc_id = i.doc_b
        |  WHERE CAST(i.n_inter AS DOUBLE) / (sa.nsh + sb.nsh - i.n_inter) >= $minJaccard),
-       |sp AS (
-       |  SELECT doc_id,
-       |    CASE WHEN ($b) < 80 THEN 'train' WHEN ($b) < 90 THEN 'val' ELSE 'test' END AS split
-       |  FROM documents)
-       |SELECT LEAST(pa.split, pb.split) AS split_x,
-       |  GREATEST(pa.split, pb.split) AS split_y,
-       |  CAST(COUNT(*) AS BIGINT) AS n_pairs,
-       |  LEAST(pa.split, pb.split) <> GREATEST(pa.split, pb.split) AS leaks
-       |FROM dup d
-       |JOIN sp pa ON pa.doc_id = d.doc_a
-       |JOIN sp pb ON pb.doc_id = d.doc_b
-       |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
-  }
+       |${graft.ml.HashSplit.leakRollupSql("dup", "documents", "doc")}""".stripMargin
 
   /** SimHash near-dup candidates via 16-bit banding of the 64-bit
     * signature: docs sharing any of the four 16-bit bands are candidates

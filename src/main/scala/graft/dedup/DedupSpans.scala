@@ -45,25 +45,8 @@ private[graft] trait DedupSpans extends DedupIncremental {
       .agg(countDistinct(col("doc_id")).as("n_docs"))
       .filter(col("n_docs") >= minDocs)
       .select("shingle")
-    // covered positions = union of [i, i+2] over duplicated-shingle starts;
-    // collect_set dedups overlapping spans inside the aggregation buffers
-    val cov = st.join(dup, "shingle")
-      .select(col("doc_id"), explode(expr("sequence(i, i + 2)")).as("p"))
-      .groupBy("doc_id")
-      .agg(collect_set(col("p")).as("cov"))
-    documents.select(col("doc_id"), TextOps.toks(col("text")).as("w"))
-      .join(cov, Seq("doc_id"), "left")
-      .withColumn("cov", coalesce(col("cov"), expr("CAST(array() AS ARRAY<INT>)")))
-      .select(
-        col("doc_id"),
-        size(col("w")).cast("long").as("n_toks"),
-        size(col("cov")).cast("long").as("n_removed"),
-        (size(col("w")) - size(col("cov"))).cast("long").as("n_kept"),
-        expr("""array_join(
-                 filter(
-                   transform(sequence(1, size(w)),
-                     p -> IF(array_contains(cov, p), CAST(NULL AS STRING), element_at(w, p))),
-                   t -> t IS NOT NULL), ' ')""").as("cleaned_text"))
+    // covered positions = union of [i, i+2] over duplicated-shingle starts
+    rebuild(documents, coverage(st.join(dup, "shingle"), "i", "i + 2"))
       // r18 (guide §1.2): the reconstruction projection is the expensive
       // leg and sits map-side under the final sort — materialize it once
       // so the range sampler (and curateCorpus's window on top) read a
@@ -72,10 +55,7 @@ private[graft] trait DedupSpans extends DedupIncremental {
       .orderBy("doc_id")
   }
 
-  /** DuckDB twin of [[boilerplateScrub]] (string_agg reconstruction;
-    * COALESCE('') matches Spark's empty-array → '' join for fully-scrubbed
-    * docs).
-    */
+  /** DuckDB twin of [[boilerplateScrub]] (string_agg reconstruction). */
   def boilerplateScrubSql(minDocs: Int = 2): String =
     raw"""WITH $RAW_SHINGLES_CTE,
        |stp AS (SELECT doc_id, w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS shingle, i
@@ -84,21 +64,29 @@ private[graft] trait DedupSpans extends DedupIncremental {
        |cov AS (SELECT DISTINCT stp.doc_id, stp.i + d.d AS p
        |        FROM stp JOIN dup USING (shingle)
        |        CROSS JOIN (SELECT unnest([0, 1, 2]) AS d) d),
-       |covn AS (SELECT doc_id, COUNT(*) AS n_removed FROM cov GROUP BY 1),
-       |pos AS (SELECT doc_id, w, unnest(generate_series(1, len(w))) AS p FROM toks),
-       |kept AS (SELECT pos.doc_id, pos.p, pos.w[pos.p] AS tok
-       |         FROM pos LEFT JOIN cov ON pos.doc_id = cov.doc_id AND pos.p = cov.p
-       |         WHERE cov.p IS NULL),
-       |cleaned AS (SELECT doc_id, string_agg(tok, ' ' ORDER BY p) AS cleaned_text
-       |            FROM kept GROUP BY 1)
-       |SELECT t.doc_id, CAST(len(t.w) AS BIGINT) AS n_toks,
-       |  CAST(COALESCE(c.n_removed, 0) AS BIGINT) AS n_removed,
-       |  CAST(len(t.w) - COALESCE(c.n_removed, 0) AS BIGINT) AS n_kept,
-       |  COALESCE(cl.cleaned_text, '') AS cleaned_text
-       |FROM toks t
-       |LEFT JOIN covn c USING (doc_id)
-       |LEFT JOIN cleaned cl USING (doc_id)
-       |ORDER BY t.doc_id""".stripMargin
+       |$REBUILD_SQL""".stripMargin
+
+  /** SQL twin of [[rebuild]]: the tail after a `toks` (doc_id, w) CTE
+    * and a `cov` (doc_id, p) CTE of distinct covered positions — per-doc
+    * removed counts, uncovered tokens re-joined in order (COALESCE('')
+    * matches Spark's empty-array → '' join for fully-scrubbed docs).
+    */
+  private val REBUILD_SQL =
+    """covn AS (SELECT doc_id, COUNT(*) AS n_removed FROM cov GROUP BY 1),
+      |pos AS (SELECT doc_id, w, unnest(generate_series(1, len(w))) AS p FROM toks),
+      |kept AS (SELECT pos.doc_id, pos.p, pos.w[pos.p] AS tok
+      |         FROM pos LEFT JOIN cov ON pos.doc_id = cov.doc_id AND pos.p = cov.p
+      |         WHERE cov.p IS NULL),
+      |cleaned AS (SELECT doc_id, string_agg(tok, ' ' ORDER BY p) AS cleaned_text
+      |            FROM kept GROUP BY 1)
+      |SELECT t.doc_id, CAST(len(t.w) AS BIGINT) AS n_toks,
+      |  CAST(COALESCE(c.n_removed, 0) AS BIGINT) AS n_removed,
+      |  CAST(len(t.w) - COALESCE(c.n_removed, 0) AS BIGINT) AS n_kept,
+      |  COALESCE(cl.cleaned_text, '') AS cleaned_text
+      |FROM toks t
+      |LEFT JOIN covn c USING (doc_id)
+      |LEFT JOIN cleaned cl USING (doc_id)
+      |ORDER BY t.doc_id""".stripMargin
 
   /** Headline corpus accounting — the one-row report a curation run
     * prints before/after shipping: document and token mass, how much of
@@ -110,10 +98,9 @@ private[graft] trait DedupSpans extends DedupIncremental {
   def corpusStats(
       documents: DataFrame, minQuality: Double = 0.2,
       langs: Seq[String] = Seq("en")): DataFrame = {
-    val w = Window.partitionBy(md5(col("text"))).orderBy(col("doc_id"))
     val scores = TextOps.langScoreCols(col("text"))
     documents
-      .withColumn("rn", row_number().over(w))
+      .withColumn("rn", firstByContent)
       .select(
         col("doc_id") +:
           size(TextOps.toks(col("text"))).cast("long").as("n_toks") +:
@@ -140,8 +127,8 @@ private[graft] trait DedupSpans extends DedupIncremental {
     val langList = langs.map(l => s"'$l'").mkString(", ")
     raw"""WITH d AS (
        |  SELECT doc_id, text,
-       |    CAST(len(string_split_regex(trim(lower(text)), '\s+')) AS BIGINT) AS n_toks,
-       |    ROW_NUMBER() OVER (PARTITION BY md5(text) ORDER BY doc_id) = 1 AS is_rep
+       |    CAST(len(${TextOps.toksSql()}) AS BIGINT) AS n_toks,
+       |    $FIRST_BY_CONTENT_SQL = 1 AS is_rep
        |  FROM documents),
        |f AS (
        |  SELECT doc_id, n_toks, is_rep,
@@ -186,22 +173,7 @@ private[graft] trait DedupSpans extends DedupIncremental {
       .filter(col("n_kept") >= minTokens)
       .join(documents.select(col("doc_id"), col("source")), Seq("doc_id"))
       .select(col("doc_id"), col("cleaned_text").as("text"), col("source"))
-    val w = Window.partitionBy(md5(col("text"))).orderBy(col("doc_id"))
-    val scores = TextOps.langScoreCols(col("text"))
-    // same plan shape as corpusFilter: one text-derived projection below
-    // the dedup window, attribute-only filter above (see the note there)
-    cleaned
-      .select(
-        col("doc_id") +: col("text") +: col("source") +:
-          size(TextOps.toks(col("text"))).cast("long").as("n_tokens") +:
-          TextOps.qualityScore(col("text")).as("quality_score") +:
-          scores.map { case (n, c) => c.cast("long").as("__" + n) }: _*)
-      .withColumn("rn", row_number().over(w))
-      .withColumn("predicted_lang", TextOps.langCaseFromScores("__"))
-      .filter(col("rn") === 1 && col("quality_score") >= minQuality &&
-        col("predicted_lang").isInCollection(langs))
-      .drop("text" +: "rn" +: scores.map("__" + _._1): _*)
-      .orderBy("doc_id")
+    scoredKeepFirst(cleaned, Seq("source"), minQuality, langs)
   }
 
   /** DuckDB twin of [[curateCorpus]] — the scrub oracle nested as a CTE,
@@ -211,41 +183,15 @@ private[graft] trait DedupSpans extends DedupIncremental {
   def curateCorpusSql(
       minQuality: Double = 0.2, langs: Seq[String] = Seq("en"),
       minTokens: Int = 5, minDocs: Int = 2): String = {
-    val langList = langs.map(l => s"'$l'").mkString(", ")
     raw"""WITH scrub AS (${boilerplateScrubSql(minDocs)}),
        |cl AS (
        |  SELECT s.doc_id, s.cleaned_text AS text, d.source
        |  FROM scrub s JOIN documents d USING (doc_id)
        |  WHERE s.n_kept >= $minTokens),
-       |kept AS (
-       |  SELECT doc_id, text, source FROM (
-       |    SELECT *, ROW_NUMBER() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn
-       |    FROM cl) WHERE rn = 1),
-       |sc AS (SELECT doc_id, source,
-       |  CAST(len(string_split_regex(trim(lower(text)), '\s+')) AS BIGINT) AS n_tokens,
-       |  ${TextOps.qualityScoreSqlExpr} AS quality_score,
-       |  ${TextOps.langScoreColsSql}
-       |FROM kept)
-       |SELECT doc_id, source, n_tokens, quality_score,
-       |  ${TextOps.langCaseSql} AS predicted_lang
-       |FROM sc
-       |WHERE quality_score >= $minQuality
-       |  AND (${TextOps.langCaseSql}) IN ($langList)
-       |ORDER BY doc_id""".stripMargin
+       |${scoredKeepFirstSql("cl", "source", minQuality, langs)}""".stripMargin
   }
 
   // ---- exact duplicate-SPAN dedup (substring-level, keep-first) -----
-
-  /** All n-gram span starts: (doc_id, start position i, gram hash). */
-  private[dedup] def spanStarts(documents: DataFrame, n: Int): DataFrame = {
-    val w = TextOps.toks(col("text"))
-    documents.select(col("doc_id"), w.as("w"))
-      .withColumn("i", explode(
-        when(size(col("w")) >= n, sequence(lit(1), size(col("w")) - (n - 1)))
-          .otherwise(array().cast("array<int>"))))
-      .select(col("doc_id"), col("i"),
-        md5(array_join(slice(col("w"), col("i"), lit(n)), " ")).as("h"))
-  }
 
   /** Removable span starts — every occurrence of a duplicated n-gram
     * EXCEPT the corpus-first one, first = (doc_id, position)
@@ -262,12 +208,7 @@ private[graft] trait DedupSpans extends DedupIncremental {
   }
 
   private[dedup] def spanStartsSqlCtes(n: Int): String =
-    raw"""toks AS (SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS w
-       |          FROM documents),
-       |gs AS (SELECT doc_id, CAST(i AS INTEGER) AS i,
-       |         md5(array_to_string(w[i:i+${n - 1}], ' ')) AS h
-       |       FROM (SELECT doc_id, w, unnest(generate_series(1, len(w) - ${n - 1})) AS i
-       |             FROM toks)),
+    raw"""${gramHashSqlCtes(n)},
        |rem AS (SELECT doc_id, i FROM (
        |          SELECT doc_id, i,
        |            ROW_NUMBER() OVER (PARTITION BY h ORDER BY doc_id, i) AS rn
@@ -283,15 +224,23 @@ private[graft] trait DedupSpans extends DedupIncremental {
     * survives, so no corpus content is lost, only repetition.
     */
   def dupSpanScrub(documents: DataFrame, n: Int = 8): DataFrame =
-    scrubByCoverage(documents,
-      removableStarts(documents, n)
-        .select(col("doc_id"), explode(expr(s"sequence(i, i + ${n - 1})")).as("p"))
-        .groupBy("doc_id").agg(collect_set(col("p")).as("cov")))
+    rebuild(documents, coverage(removableStarts(documents, n), "i", s"i + ${n - 1}"))
+      .orderBy("doc_id")
 
-  /** Shared scrub tail: documents joined to their per-doc covered
-    * position sets, uncovered tokens re-joined in order.
+  /** Per-doc covered position sets: the union of [`start`, `end`] over
+    * the spans of `spans`; collect_set dedups overlapping spans inside
+    * the aggregation buffers.
     */
-  private[dedup] def scrubByCoverage(documents: DataFrame, cov: DataFrame): DataFrame =
+  private def coverage(spans: DataFrame, start: String, end: String): DataFrame =
+    spans.select(col("doc_id"), explode(expr(s"sequence($start, $end)")).as("p"))
+      .groupBy("doc_id")
+      .agg(collect_set(col("p")).as("cov"))
+
+  /** The one scrub rewrite: documents joined to their per-doc covered
+    * position sets ([[coverage]]), uncovered tokens re-joined in order.
+    * Unordered — each caller places its own cut and sort.
+    */
+  private def rebuild(documents: DataFrame, cov: DataFrame): DataFrame =
     documents.select(col("doc_id"), TextOps.toks(col("text")).as("w"))
       .join(cov, Seq("doc_id"), "left")
       .withColumn("cov", coalesce(col("cov"), expr("CAST(array() AS ARRAY<INT>)")))
@@ -305,7 +254,6 @@ private[graft] trait DedupSpans extends DedupIncremental {
                    transform(sequence(1, size(w)),
                      p -> IF(array_contains(cov, p), CAST(NULL AS STRING), element_at(w, p))),
                    t -> t IS NOT NULL), ' ')""").as("cleaned_text"))
-      .orderBy("doc_id")
 
   /** [[dupSpanScrub]] at the PUBLISHED ExactSubstr operating point (r15,
     * VERDICT item 5): overlapping duplicated n-grams merge into MAXIMAL
@@ -318,84 +266,18 @@ private[graft] trait DedupSpans extends DedupIncremental {
     */
   def dupSpanScrubMinLen(
       documents: DataFrame, n: Int = 8, minLen: Int = 50): DataFrame = {
-    val wD = Window.partitionBy("doc_id").orderBy("i")
-    val lagI = lag(col("i"), 1).over(wD)
-    val spans = removableStarts(documents, n)
-      .withColumn("brk",
-        when(lagI.isNull || col("i") > lagI + n, 1L).otherwise(0L))
-      .withColumn("island",
-        sum(col("brk")).over(wD.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .groupBy("doc_id", "island")
-      .agg(min("i").as("s"), (max(col("i")) + (n - 1)).as("e"))
-      .filter(col("e") - col("s") + 1 >= minLen)
-    scrubByCoverage(documents,
-      spans.select(col("doc_id"), explode(expr("sequence(s, e)")).as("p"))
-        .groupBy("doc_id").agg(collect_set(col("p")).as("cov")))
+    val spans = spanIslands(documents, n)
+      .filter(col("span_end") - col("span_start") + 1 >= minLen)
+    rebuild(documents, coverage(spans, "span_start", "span_end")).orderBy("doc_id")
   }
 
-  /** DuckDB twin of [[dupSpanScrubMinLen]]: the shared span-start CTEs,
-    * the report's island merge with a HAVING length floor, per-span
-    * position fan-out, and the same uncovered-token rejoin.
+  /** The island merge behind [[dupSpanReport]] and
+    * [[dupSpanScrubMinLen]] (gaps-and-islands: a removable start extends
+    * the current span iff it begins within n tokens of the previous
+    * start — interval overlap or adjacency): one row per maximal span,
+    * (doc_id, span_start, span_end, n_starts), unordered.
     */
-  def dupSpanScrubMinLenSql(n: Int = 8, minLen: Int = 50): String =
-    raw"""WITH ${spanStartsSqlCtes(n)},
-       |brks AS (SELECT doc_id, i,
-       |           CASE WHEN lag(i) OVER (PARTITION BY doc_id ORDER BY i) IS NULL
-       |                  OR i > lag(i) OVER (PARTITION BY doc_id ORDER BY i) + $n
-       |                THEN 1 ELSE 0 END AS brk
-       |         FROM rem),
-       |isl AS (SELECT doc_id, i,
-       |          SUM(brk) OVER (PARTITION BY doc_id ORDER BY i
-       |                         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island
-       |        FROM brks),
-       |spans AS (SELECT doc_id, MIN(i) AS s, MAX(i) + ${n - 1} AS e
-       |          FROM isl GROUP BY doc_id, island
-       |          HAVING MAX(i) + ${n - 1} - MIN(i) + 1 >= $minLen),
-       |cov AS (SELECT DISTINCT doc_id, p FROM (
-       |          SELECT doc_id, unnest(generate_series(s, e)) AS p FROM spans)),
-       |covn AS (SELECT doc_id, COUNT(*) AS n_removed FROM cov GROUP BY 1),
-       |pos AS (SELECT doc_id, w, unnest(generate_series(1, len(w))) AS p FROM toks),
-       |kept AS (SELECT pos.doc_id, pos.p, pos.w[pos.p] AS tok
-       |         FROM pos LEFT JOIN cov ON pos.doc_id = cov.doc_id AND pos.p = cov.p
-       |         WHERE cov.p IS NULL),
-       |cleaned AS (SELECT doc_id, string_agg(tok, ' ' ORDER BY p) AS cleaned_text
-       |            FROM kept GROUP BY 1)
-       |SELECT t.doc_id, CAST(len(t.w) AS BIGINT) AS n_toks,
-       |  CAST(COALESCE(c.n_removed, 0) AS BIGINT) AS n_removed,
-       |  CAST(len(t.w) - COALESCE(c.n_removed, 0) AS BIGINT) AS n_kept,
-       |  COALESCE(cl.cleaned_text, '') AS cleaned_text
-       |FROM toks t
-       |LEFT JOIN covn c USING (doc_id)
-       |LEFT JOIN cleaned cl USING (doc_id)
-       |ORDER BY t.doc_id""".stripMargin
-
-  def dupSpanScrubSql(n: Int = 8): String =
-    raw"""WITH ${spanStartsSqlCtes(n)},
-       |cov AS (SELECT DISTINCT rem.doc_id, rem.i + d.d AS p
-       |        FROM rem CROSS JOIN (SELECT unnest(generate_series(0, ${n - 1})) AS d) d),
-       |covn AS (SELECT doc_id, COUNT(*) AS n_removed FROM cov GROUP BY 1),
-       |pos AS (SELECT doc_id, w, unnest(generate_series(1, len(w))) AS p FROM toks),
-       |kept AS (SELECT pos.doc_id, pos.p, pos.w[pos.p] AS tok
-       |         FROM pos LEFT JOIN cov ON pos.doc_id = cov.doc_id AND pos.p = cov.p
-       |         WHERE cov.p IS NULL),
-       |cleaned AS (SELECT doc_id, string_agg(tok, ' ' ORDER BY p) AS cleaned_text
-       |            FROM kept GROUP BY 1)
-       |SELECT t.doc_id, CAST(len(t.w) AS BIGINT) AS n_toks,
-       |  CAST(COALESCE(c.n_removed, 0) AS BIGINT) AS n_removed,
-       |  CAST(len(t.w) - COALESCE(c.n_removed, 0) AS BIGINT) AS n_kept,
-       |  COALESCE(cl.cleaned_text, '') AS cleaned_text
-       |FROM toks t
-       |LEFT JOIN covn c USING (doc_id)
-       |LEFT JOIN cleaned cl USING (doc_id)
-       |ORDER BY t.doc_id""".stripMargin
-
-  /** The maximal duplicated spans behind [[dupSpanScrub]], merged per
-    * document (gaps-and-islands: a removable start extends the current
-    * span iff it begins within n tokens of the previous start — interval
-    * overlap or adjacency). The audit view: where the repeated passages
-    * sit and how long they run.
-    */
-  def dupSpanReport(documents: DataFrame, n: Int = 8): DataFrame = {
+  private def spanIslands(documents: DataFrame, n: Int): DataFrame = {
     val wD = Window.partitionBy("doc_id").orderBy("i")
     val lagI = lag(col("i"), 1).over(wD)
     removableStarts(documents, n)
@@ -408,13 +290,13 @@ private[graft] trait DedupSpans extends DedupIncremental {
         min("i").as("span_start"),
         (max(col("i")) + (n - 1)).as("span_end"),
         count(lit(1)).as("n_starts"))
-      .select("doc_id", "span_start", "span_end", "n_starts")
-      .orderBy("doc_id", "span_start")
   }
 
-  def dupSpanReportSql(n: Int = 8): String =
-    raw"""WITH ${spanStartsSqlCtes(n)},
-       |brks AS (SELECT doc_id, i,
+  /** SQL twin of [[spanIslands]]'s window steps over the `rem` CTE:
+    * `brks` (break flags) and `isl` (running island id).
+    */
+  private def islandsSqlCtes(n: Int): String =
+    raw"""brks AS (SELECT doc_id, i,
        |           CASE WHEN lag(i) OVER (PARTITION BY doc_id ORDER BY i) IS NULL
        |                  OR i > lag(i) OVER (PARTITION BY doc_id ORDER BY i) + $n
        |                THEN 1 ELSE 0 END AS brk
@@ -422,7 +304,40 @@ private[graft] trait DedupSpans extends DedupIncremental {
        |isl AS (SELECT doc_id, i,
        |          SUM(brk) OVER (PARTITION BY doc_id ORDER BY i
        |                         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island
-       |        FROM brks)
+       |        FROM brks)""".stripMargin
+
+  /** DuckDB twin of [[dupSpanScrubMinLen]]: the shared span-start CTEs,
+    * the report's island merge with a HAVING length floor, per-span
+    * position fan-out, and the same uncovered-token rejoin.
+    */
+  def dupSpanScrubMinLenSql(n: Int = 8, minLen: Int = 50): String =
+    raw"""WITH ${spanStartsSqlCtes(n)},
+       |${islandsSqlCtes(n)},
+       |spans AS (SELECT doc_id, MIN(i) AS s, MAX(i) + ${n - 1} AS e
+       |          FROM isl GROUP BY doc_id, island
+       |          HAVING MAX(i) + ${n - 1} - MIN(i) + 1 >= $minLen),
+       |cov AS (SELECT DISTINCT doc_id, p FROM (
+       |          SELECT doc_id, unnest(generate_series(s, e)) AS p FROM spans)),
+       |$REBUILD_SQL""".stripMargin
+
+  def dupSpanScrubSql(n: Int = 8): String =
+    raw"""WITH ${spanStartsSqlCtes(n)},
+       |cov AS (SELECT DISTINCT rem.doc_id, rem.i + d.d AS p
+       |        FROM rem CROSS JOIN (SELECT unnest(generate_series(0, ${n - 1})) AS d) d),
+       |$REBUILD_SQL""".stripMargin
+
+  /** The maximal duplicated spans behind [[dupSpanScrub]], merged per
+    * document by [[spanIslands]]. The audit view: where the repeated
+    * passages sit and how long they run.
+    */
+  def dupSpanReport(documents: DataFrame, n: Int = 8): DataFrame =
+    spanIslands(documents, n)
+      .select("doc_id", "span_start", "span_end", "n_starts")
+      .orderBy("doc_id", "span_start")
+
+  def dupSpanReportSql(n: Int = 8): String =
+    raw"""WITH ${spanStartsSqlCtes(n)},
+       |${islandsSqlCtes(n)}
        |SELECT doc_id, MIN(i) AS span_start, MAX(i) + ${n - 1} AS span_end,
        |  CAST(COUNT(*) AS BIGINT) AS n_starts
        |FROM isl GROUP BY doc_id, island

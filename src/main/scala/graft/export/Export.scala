@@ -362,8 +362,8 @@ object Export {
     * route-count-sized, so a driver-side write is the right tool — this is
     * the one deliberate non-distributed step, matching the reference's
     * single JSON artifact per export. Ref: export_suggestions_json.py:31-83.
-    */
-  /** @return the number of rows written (the array length already in
+    *
+    * @return the number of rows written (the array length already in
     *         hand — callers wanting a manifest count must not re-execute
     *         the plan with a second count()).
     */

@@ -2,7 +2,7 @@ package graft.ml
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.text.TextOps.{hexVal, hexValSql}
+import graft.text.TextOps.{hexVal, hexValSql, toksSql}
 
 /** Deterministic hash-based dataset splitting and stratified sampling —
   * how a training-data pipeline assigns every example to
@@ -52,15 +52,64 @@ object HashSplit {
     documents.select(
       col("doc_id"),
       b.as("bucket"),
-      when(b < 80, "train").when(b < 90, "val").otherwise("test").as("split"))
+      splitOf(b).as("split"))
       .orderBy("doc_id")
   }
 
   val splitAssignSql: String = {
     val b = hashBucketSql("doc_id", 100)
     s"""SELECT doc_id, $b AS bucket,
-       |  CASE WHEN $b < 80 THEN 'train' WHEN $b < 90 THEN 'val' ELSE 'test' END AS split
+       |  ${splitSql(b)} AS split
        |FROM documents ORDER BY doc_id""".stripMargin
+  }
+
+  /** The 80/10/10 split rule over a bucket in [0, 100): train < 80 ≤ val
+    * < 90 ≤ test. Every split assignment (per document, per near-dup
+    * cluster, per vector) applies this one rule.
+    */
+  private[graft] def splitOf(bucket: Column): Column =
+    when(bucket < 80, "train").when(bucket < 90, "val").otherwise("test")
+
+  /** DuckDB twin of [[splitOf]] over a bucket expression. */
+  private[graft] def splitSql(bucket: String): String =
+    s"CASE WHEN $bucket < 80 THEN 'train' WHEN $bucket < 90 THEN 'val' ELSE 'test' END"
+
+  /** Split-leakage rollup: each pair of `pairs` (`<key>_a`, `<key>_b`)
+    * gets the split of both ends — the [[splitOf]] rule over the
+    * `<key>_id` hash bucket of `ids` — and the pairs are counted per
+    * unordered split pair; `leaks` marks the cross-split rows. The
+    * splits frame is a narrow projection, so this is two id-keyed joins
+    * of the pair frame and a |splits|²-bounded aggregate.
+    */
+  private[graft] def leakRollup(pairs: DataFrame, ids: DataFrame, key: String): DataFrame = {
+    val id = s"${key}_id"
+    val sp = ids.select(col(id), splitOf(hashBucket(col(id), 100)).as("split"))
+    pairs
+      .join(sp.select(col(id).as(s"${key}_a"), col("split").as("sa")), Seq(s"${key}_a"))
+      .join(sp.select(col(id).as(s"${key}_b"), col("split").as("sb")), Seq(s"${key}_b"))
+      .select(
+        least(col("sa"), col("sb")).as("split_x"),
+        greatest(col("sa"), col("sb")).as("split_y"))
+      .groupBy("split_x", "split_y")
+      .agg(count(lit(1)).as("n_pairs"))
+      .withColumn("leaks", col("split_x") =!= col("split_y"))
+      .orderBy("split_x", "split_y")
+  }
+
+  /** DuckDB twin of [[leakRollup]] over the `pairs` CTE and the `table`
+    * relation: an `sp` CTE and the final SELECT that finish a WITH chain.
+    */
+  private[graft] def leakRollupSql(pairs: String, table: String, key: String): String = {
+    val id = s"${key}_id"
+    s"""sp AS (SELECT $id, ${splitSql(hashBucketSql(id, 100))} AS split FROM $table)
+       |SELECT LEAST(pa.split, pb.split) AS split_x,
+       |  GREATEST(pa.split, pb.split) AS split_y,
+       |  CAST(COUNT(*) AS BIGINT) AS n_pairs,
+       |  LEAST(pa.split, pb.split) <> GREATEST(pa.split, pb.split) AS leaks
+       |FROM $pairs p
+       |JOIN sp pa ON pa.$id = p.${key}_a
+       |JOIN sp pb ON pb.$id = p.${key}_b
+       |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
   }
 
   /** Stratified deterministic sample: keep `pct`% of each stratum (here
@@ -156,7 +205,7 @@ object HashSplit {
     val b = hashBucketSql("doc_id", 1000)
     raw"""WITH per AS (
        |  SELECT source, COUNT(*) AS n_docs,
-       |    CAST(SUM(len(string_split_regex(trim(lower(text)), '\s+'))) AS BIGINT) AS n_tokens
+       |    CAST(SUM(len(${toksSql()})) AS BIGINT) AS n_tokens
        |  FROM documents GROUP BY 1),
        |tot AS (SELECT CAST(SUM(n_tokens) AS BIGINT) AS total_tokens, COUNT(*) AS n_sources FROM per),
        |w AS (SELECT source,

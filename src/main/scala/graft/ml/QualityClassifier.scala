@@ -158,7 +158,7 @@ object QualityClassifier {
     val bucket = HashSplit.hashBucketSql("tok", NumFeatures)
     val thrLit = s"CAST('$labelThreshold' AS DOUBLE)"
     raw"""w AS (SELECT [${weightsE9.mkString(", ")}] AS wl),
-       |tok AS (SELECT doc_id, unnest(string_split_regex(trim(lower(text)), '\s+')) AS tok
+       |tok AS (SELECT doc_id, unnest(${TextOps.toksSql()}) AS tok
        |        FROM documents),
        |cnts AS (SELECT doc_id, $bucket AS bucket, COUNT(*) AS cnt
        |         FROM tok GROUP BY 1, 2),

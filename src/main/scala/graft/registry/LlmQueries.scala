@@ -777,7 +777,7 @@ private[graft] trait LlmQueries extends RegistryBase {
         },
         Some(
           raw"""WITH t AS (SELECT doc_id,
-             |  CAST(len(string_split_regex(trim(lower(text)), '\s+')) AS BIGINT) AS n_toks
+             |  CAST(len(${TextOps.toksSql()}) AS BIGINT) AS n_toks
              |  FROM documents),
              |c AS (SELECT doc_id, n_toks,
              |  CAST(SUM(n_toks) OVER (ORDER BY doc_id) AS BIGINT) AS cum_tokens FROM t)

@@ -240,17 +240,6 @@ private[sim] trait KnnCore {
       s"CASE WHEN (${srpProjSql(arr, b * SrpBits + i)}) >= 0 THEN ${1 << i} ELSE 0 END")
       .mkString(" + ")
 
-  /** Embedding-cosine near-dup pairs above `threshold` via SRP-LSH:
-    * 8 bands × 12 signed-random-projection bits (4096 cells per band),
-    * candidates = vectors sharing ANY band. OR-amplification across
-    * bands buys recall; the 4096-cell bands keep per-cell populations —
-    * and therefore the per-cell self-join — sub-linear as n grows (the
-    * old single 8-bit raw-dim bucket capped at 256 cells and went
-    * quadratic per cell). This is the honest trade-off every 100 TB
-    * near-dup pass makes vs the n² exact pair join, without the cell
-    * ceiling, and with recall tunable by band count instead of being
-    * pinned to the embedding dimension.
-    */
   /** Band-stamp an embedding frame with the `SrpBands` SRP band columns
     * (plus the squared norm). Callers persist — every band join and the
     * vector join-back re-derive this frame otherwise.
@@ -284,6 +273,17 @@ private[sim] trait KnnCore {
       .withColumn("cosine", dot("ea", "eb") / (sqrt(col("na")) * sqrt(col("nb"))))
   }
 
+  /** Embedding-cosine near-dup pairs above `threshold` via SRP-LSH:
+    * 8 bands × 12 signed-random-projection bits (4096 cells per band),
+    * candidates = vectors sharing ANY band. OR-amplification across
+    * bands buys recall; the 4096-cell bands keep per-cell populations —
+    * and therefore the per-cell self-join — sub-linear as n grows (the
+    * old single 8-bit raw-dim bucket capped at 256 cells and went
+    * quadratic per cell). This is the honest trade-off every 100 TB
+    * near-dup pass makes vs the n² exact pair join, without the cell
+    * ceiling, and with recall tunable by band count instead of being
+    * pinned to the embedding dimension.
+    */
   def nearDupPairs(embeddings: DataFrame, threshold: Double = 0.3): DataFrame = {
     val e = srpBanded(embeddings).persist()
     srpPairCosines(e, e, "vec_a", "vec_b", _ < _)
@@ -302,40 +302,13 @@ private[sim] trait KnnCore {
     * banded pair frame — two id-keyed joins of a near-linear frame
     * against a narrow projection, splits²-bounded output.
     */
-  def semanticSplitLeakage(embeddings: DataFrame, threshold: Double = 0.3): DataFrame = {
-    val b = graft.ml.HashSplit.hashBucket(col("vec_id"), 100)
-    val sp = embeddings.select(col("vec_id"),
-      when(b < 80, "train").when(b < 90, "val").otherwise("test").as("split"))
-    nearDupPairs(embeddings, threshold)
-      .join(sp.select(col("vec_id").as("vec_a"), col("split").as("sa")), Seq("vec_a"))
-      .join(sp.select(col("vec_id").as("vec_b"), col("split").as("sb")), Seq("vec_b"))
-      .select(
-        least(col("sa"), col("sb")).as("split_x"),
-        greatest(col("sa"), col("sb")).as("split_y"))
-      .groupBy("split_x", "split_y")
-      .agg(count(lit(1)).as("n_pairs"))
-      .withColumn("leaks", col("split_x") =!= col("split_y"))
-      .orderBy("split_x", "split_y")
-  }
+  def semanticSplitLeakage(embeddings: DataFrame, threshold: Double = 0.3): DataFrame =
+    graft.ml.HashSplit.leakRollup(nearDupPairs(embeddings, threshold), embeddings, "vec")
 
   /** DuckDB twin of [[semanticSplitLeakage]]. */
-  def semanticSplitLeakageSql(threshold: Double = 0.3): String = {
-    val bucket = graft.ml.HashSplit.hashBucketSql("vec_id", 100)
+  def semanticSplitLeakageSql(threshold: Double = 0.3): String =
     s"""WITH p AS (${nearDupPairsSql(threshold)}),
-       |sp AS (
-       |  SELECT vec_id,
-       |    CASE WHEN ($bucket) < 80 THEN 'train'
-       |         WHEN ($bucket) < 90 THEN 'val' ELSE 'test' END AS split
-       |  FROM embeddings)
-       |SELECT LEAST(pa.split, pb.split) AS split_x,
-       |  GREATEST(pa.split, pb.split) AS split_y,
-       |  CAST(COUNT(*) AS BIGINT) AS n_pairs,
-       |  LEAST(pa.split, pb.split) <> GREATEST(pa.split, pb.split) AS leaks
-       |FROM p
-       |JOIN sp pa ON pa.vec_id = p.vec_a
-       |JOIN sp pb ON pb.vec_id = p.vec_b
-       |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
-  }
+       |${graft.ml.HashSplit.leakRollupSql("p", "embeddings", "vec")}""".stripMargin
 
   /** SQL twin of [[srpBanded]]: the banded-column list of the `b` CTE. */
   private[sim] def srpBandedSqlCols: String =
@@ -474,24 +447,6 @@ private[sim] trait KnnCore {
       .orderBy("query_id", "rank")
   }
 
-  /** Product quantization top-k: the compression half of a production
-    * IVF-PQ index ([[ivfTopK]] is the routing half). The Dim-dim vector
-    * splits into `m` subvectors; each subspace trains its own k-means
-    * codebook (`codebookSize` centroids, fixed seed, layout-pinned input
-    * — MLlib init is partition-layout sensitive), and every vector is
-    * encoded as `m` small integer codes: 64 floats (256 B) → 8 codes
-    * (8 B here), a 32× compression, which is what lets a 100 TB corpus'
-    * index live in cluster memory. Scoring is asymmetric (ADC): each
-    * query precomputes an `m × codebookSize` lookup table of partial
-    * squared distances to every sub-centroid, and a candidate's
-    * approximate distance is m table reads + adds instead of Dim
-    * multiplies — candidates are scanned compressed, never decoded.
-    * Encoding is a pure codegen expression over driver-side centroid
-    * literals (argmin over codebookSize per-subspace distances), not a
-    * per-subspace transform/join chain. Rows-only in the registry
-    * (k-means centroids are not SQL-expressible); the spec pins exact
-    * agreement with the uncompressed L2 top-k on separated clusters.
-    */
   /** Deterministic driver-side Lloyd's iteration for PQ codebooks:
     * init = evenly spaced points of the (vec_id-ordered) sample,
     * nearest-center assignment with lowest-index tie-break, empty
@@ -557,16 +512,6 @@ private[sim] trait KnnCore {
     }
   }
 
-  /** @param pinned when supplied, the codebooks are taken as a TRAINED
-    *   MODEL ARTIFACT instead of being fit in-query — the production
-    *   serving mode (PQ codebooks are trained offline once and frozen;
-    *   every later corpus is encoded against them), and the operating
-    *   point at which the whole encode + ADC pipeline is SQL-expressible
-    *   and therefore oracle-checked (the registry passes [[PqFixture]];
-    *   its provenance from [[trainPqCodebooks]] is spec-pinned). With
-    *   `pinned = None` the codebooks are fit on the input itself — the
-    *   train-time mode, exactness spec-asserted in KnnSpec.
-    */
   /** Per-subspace LUT: squared distance of `embedding`'s j-th subvector
     * to every centroid of codebook j, via higher-order functions over
     * the codebook as a LITERAL nested array — a ~10-node expression with
@@ -595,6 +540,34 @@ private[sim] trait KnnCore {
     (array_position(a, array_min(a)) - 1).cast("int")
   }
 
+  /** Product quantization top-k: the compression half of a production
+    * IVF-PQ index ([[ivfTopK]] is the routing half). The Dim-dim vector
+    * splits into `m` subvectors; each subspace trains its own k-means
+    * codebook (`codebookSize` centroids, fixed seed, layout-pinned input
+    * — MLlib init is partition-layout sensitive), and every vector is
+    * encoded as `m` small integer codes: 64 floats (256 B) → 8 codes
+    * (8 B here), a 32× compression, which is what lets a 100 TB corpus'
+    * index live in cluster memory. Scoring is asymmetric (ADC): each
+    * query precomputes an `m × codebookSize` lookup table of partial
+    * squared distances to every sub-centroid, and a candidate's
+    * approximate distance is m table reads + adds instead of Dim
+    * multiplies — candidates are scanned compressed, never decoded.
+    * Encoding is a pure codegen expression over driver-side centroid
+    * literals (argmin over codebookSize per-subspace distances), not a
+    * per-subspace transform/join chain. Rows-only in the registry
+    * (k-means centroids are not SQL-expressible); the spec pins exact
+    * agreement with the uncompressed L2 top-k on separated clusters.
+    *
+    * @param pinned when supplied, the codebooks are taken as a TRAINED
+    *   MODEL ARTIFACT instead of being fit in-query — the production
+    *   serving mode (PQ codebooks are trained offline once and frozen;
+    *   every later corpus is encoded against them), and the operating
+    *   point at which the whole encode + ADC pipeline is SQL-expressible
+    *   and therefore oracle-checked (the registry passes [[PqFixture]];
+    *   its provenance from [[trainPqCodebooks]] is spec-pinned). With
+    *   `pinned = None` the codebooks are fit on the input itself — the
+    *   train-time mode, exactness spec-asserted in KnnSpec.
+    */
   def pqTopK(
       embeddings: DataFrame, nQueries: Int = 20, k: Int = 3,
       m: Int = 8, codebookSize: Int = 16, sampleN: Int = 2048,
@@ -1117,7 +1090,7 @@ private[sim] trait KnnCore {
     s"""WITH ${pinnedAssignSqlCtes(centroids)},
        |tok AS (
        |  SELECT asg.cell,
-       |    unnest(string_split_regex(trim(lower(d.text)), '\\s+')) AS term
+       |    unnest(${graft.text.TextOps.toksSql("d.text")}) AS term
        |  FROM documents d JOIN asg ON d.doc_id = asg.vec_id),
        |tf AS (SELECT cell, term, COUNT(*) AS tf FROM tok GROUP BY 1, 2),
        |df AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY 1),

@@ -19,42 +19,6 @@ private[sim] trait KnnQuant extends KnnCore {
     */
   private[sim] val LloydScale = 1000000L
 
-  /** K-means trained FROM SCRATCH inside the engine — a deterministic
-    * Lloyd's loop whose every iteration is exact integer arithmetic, so
-    * the TRAINER itself (not just a frozen-centroid serving point) is
-    * replayable step-for-step by the SQL oracle. This closes the gap the
-    * MLlib trainer ([[trainSemDedupCentroids]]) can't: k-means‖ init +
-    * double accumulation are not SQL-expressible; the same move
-    * that promoted the BPE trainer (`bpe_train`) and the HLL estimate
-    * (`cardinality_hll`) to oracle-exact.
-    *
-    * Determinism contract, mirrored term-for-term in [[kmeansLloydTrainSql]]:
-    *   - vectors quantize to BIGINT micro-units (floor(x·1e6): float→double
-    *     widening is exact, one IEEE multiply, floor — identical in both
-    *     engines);
-    *   - seeds = the k vectors ranked first by md5(vec_id) (md5 is
-    *     engine-independent; ties impossible, vec_id appended anyway);
-    *   - assignment = argmin of the INTEGER squared distance, ties to the
-    *     lowest cluster id (array_position takes the first minimum; the
-    *     oracle's ROW_NUMBER orders by (d, j));
-    *   - update = per-dimension floor-mean computed as (s − m)/n with
-    *     m = ((s mod n) + n) mod n, so the numerator is exactly divisible
-    *     and trunc-vs-floor division semantics can't diverge;
-    *   - a cluster that loses all members keeps its previous centroid
-    *     (the LEFT JOIN + COALESCE leg, same rule both engines).
-    *
-    * Scale shape: one quantize pass over the corpus, then per iteration
-    * one broadcast of k·64 longs (the k×64 centroid grid — KB-sized at
-    * any corpus size), one narrow argmin map, and one (k×64)-group
-    * partial-aggregated sum — no shuffle ever carries vectors, and
-    * nothing is all-pairs. The driver never sees the data (centroids stay
-    * in-plan; the seed window runs on a LIMIT-k frame, bounded by
-    * construction). iters unrolls the loop into one declarative plan —
-    * at production scale you'd persist each iteration's assignment, which
-    * is exactly what the registered query's persisted base frame does.
-    * Output is pure-integer (sizes, inertia, centroid checksum), so the
-    * hash gate needs no rounding at all.
-    */
   /** Quantized corpus (vec_id, q: 64 BIGINT micro-units), persisted — it
     * feeds every iteration's assign + update legs and the final report.
     */
@@ -155,6 +119,42 @@ private[sim] trait KnnQuant extends KnnCore {
     grid.zipWithIndex.map { case (c, j) => (j, c) }.toDF("j", "c")
   }
 
+  /** K-means trained FROM SCRATCH inside the engine — a deterministic
+    * Lloyd's loop whose every iteration is exact integer arithmetic, so
+    * the TRAINER itself (not just a frozen-centroid serving point) is
+    * replayable step-for-step by the SQL oracle. This closes the gap the
+    * MLlib trainer ([[trainSemDedupCentroids]]) can't: k-means‖ init +
+    * double accumulation are not SQL-expressible; the same move
+    * that promoted the BPE trainer (`bpe_train`) and the HLL estimate
+    * (`cardinality_hll`) to oracle-exact.
+    *
+    * Determinism contract, mirrored term-for-term in [[kmeansLloydTrainSql]]:
+    *   - vectors quantize to BIGINT micro-units (floor(x·1e6): float→double
+    *     widening is exact, one IEEE multiply, floor — identical in both
+    *     engines);
+    *   - seeds = the k vectors ranked first by md5(vec_id) (md5 is
+    *     engine-independent; ties impossible, vec_id appended anyway);
+    *   - assignment = argmin of the INTEGER squared distance, ties to the
+    *     lowest cluster id (array_position takes the first minimum; the
+    *     oracle's ROW_NUMBER orders by (d, j));
+    *   - update = per-dimension floor-mean computed as (s − m)/n with
+    *     m = ((s mod n) + n) mod n, so the numerator is exactly divisible
+    *     and trunc-vs-floor division semantics can't diverge;
+    *   - a cluster that loses all members keeps its previous centroid
+    *     (the LEFT JOIN + COALESCE leg, same rule both engines).
+    *
+    * Scale shape: one quantize pass over the corpus, then per iteration
+    * one broadcast of k·64 longs (the k×64 centroid grid — KB-sized at
+    * any corpus size), one narrow argmin map, and one (k×64)-group
+    * partial-aggregated sum — no shuffle ever carries vectors, and
+    * nothing is all-pairs. The driver never sees the data (centroids stay
+    * in-plan; the seed window runs on a LIMIT-k frame, bounded by
+    * construction). iters unrolls the loop into one declarative plan —
+    * at production scale you'd persist each iteration's assignment, which
+    * is exactly what the registered query's persisted base frame does.
+    * Output is pure-integer (sizes, inertia, centroid checksum), so the
+    * hash gate needs no rounding at all.
+    */
   def kmeansLloydTrain(embeddings: DataFrame, k: Int = 4, iters: Int = 3): DataFrame = {
     val e0 = lloydQuantized(embeddings)
     val grid = lloydTrainGrid(e0, k, iters)

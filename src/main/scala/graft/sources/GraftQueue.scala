@@ -233,23 +233,6 @@ object GraftQueue {
   final case class RetentionResult(
       segmentsDeleted: Int, recordsTruncated: Long, logStartOffset: Long)
 
-  /** Offset-based retention, Kafka-style (VERDICT r12 item 3): delete
-    * every WHOLE segment whose record range lies entirely below
-    * `minRetainedOffset` — the minimum committed offset across this
-    * topic's consumers (see [[consumerFloor]]). Absolute offsets never
-    * move: the truncation marker records the new log start offset, and
-    * all planning bases itself there, so surviving segments keep the
-    * offsets a checkpointed reader was already handed.
-    *
-    * Crash-safety: the marker is created atomically FIRST, then segment
-    * files are deleted. A crash between the two leaves files that every
-    * reader already skips (snapshot() filters stamp <= marker), and a
-    * re-run finishes the deletes. Like Kafka, retention is cooperative:
-    * calling it with an offset above a live consumer's position makes
-    * that consumer's next fetch fail (its range no longer exists) — the
-    * contract is exactly "pass the MIN over registered consumer
-    * checkpoints".
-    */
   /** Delete files no reader can see anyway — segments/csegments at or
     * below the truncation marker (a crashed retain/retainByAge lost its
     * deletes) and anything shadowed by the newest live csegment (a
@@ -277,6 +260,23 @@ object GraftQueue {
     }
   }
 
+  /** Offset-based retention, Kafka-style (VERDICT r12 item 3): delete
+    * every WHOLE segment whose record range lies entirely below
+    * `minRetainedOffset` — the minimum committed offset across this
+    * topic's consumers (see [[consumerFloor]]). Absolute offsets never
+    * move: the truncation marker records the new log start offset, and
+    * all planning bases itself there, so surviving segments keep the
+    * offsets a checkpointed reader was already handed.
+    *
+    * Crash-safety: the marker is created atomically FIRST, then segment
+    * files are deleted. A crash between the two leaves files that every
+    * reader already skips (snapshot() filters stamp <= marker), and a
+    * re-run finishes the deletes. Like Kafka, retention is cooperative:
+    * calling it with an offset above a live consumer's position makes
+    * that consumer's next fetch fail (its range no longer exists) — the
+    * contract is exactly "pass the MIN over registered consumer
+    * checkpoints".
+    */
   def retain(path: String, topic: String, minRetainedOffset: Long): RetentionResult = {
     reclaimShadowed(topicDir(path, topic))
     val snap = snapshot(path, topic)

@@ -42,21 +42,31 @@ object Streams {
   // file copy each call.
   private val stagedDirs = new graft.RunOnce[String, String]
 
-  /** Streaming read of the events table (schema pinned from a batch read —
-    * file streams require an explicit schema).
+  /** Streaming read of the events table. The file source requires a
+    * directory, so the single parquet file is staged into a temp dir once
+    * (a production pipeline streams a landing directory or Kafka — this
+    * is test plumbing only).
     */
-  private def eventsStream(spark: SparkSession, dir: String): DataFrame = {
+  private def eventsStream(spark: SparkSession, dir: String): DataFrame =
+    stagedEventsStream(spark, dir, stagedDirs(dir)(stageEvents(dir, "graft_events_stream", Seq(""))))
+
+  /** A fresh temp dir holding one copy of `dir`'s events file per suffix
+    * (`events<suffix>.parquet`).
+    */
+  private def stageEvents(dir: String, prefix: String, suffixes: Seq[String]): String = {
+    val d = Files.createTempDirectory(prefix)
+    suffixes.foreach(x => Files.copy(java.nio.file.Paths.get(s"$dir/events.parquet"),
+      d.resolve(s"events$x.parquet")))
+    d.toString
+  }
+
+  /** Streaming read of the staged events directory `staged`, schema
+    * pinned from a batch read of `dir`'s events file (file streams require
+    * an explicit schema).
+    */
+  private def stagedEventsStream(spark: SparkSession, dir: String, staged: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    // The file source requires a directory; stage the single parquet file
-    // into a temp dir once (a production pipeline streams a landing
-    // directory or Kafka — this is test plumbing only).
-    val staged = stagedDirs(dir)({
-      val d = Files.createTempDirectory("graft_events_stream")
-      Files.copy(java.nio.file.Paths.get(s"$dir/events.parquet"),
-        d.resolve("events.parquet"))
-      d.toString
-    })
     spark.readStream.schema(schema).parquet(staged)
   }
 
@@ -375,14 +385,8 @@ object Streams {
     * NOTHING under at-least-once Kafka delivery).
     */
   def exactlyOnceDedupStream(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    val staged = Files.createTempDirectory("graft_dup_stream")
-    Files.copy(java.nio.file.Paths.get(s"$dir/events.parquet"),
-      staged.resolve("events_a.parquet"))
-    Files.copy(java.nio.file.Paths.get(s"$dir/events.parquet"),
-      staged.resolve("events_b.parquet"))
-    val deduped = spark.readStream.schema(schema).parquet(staged.toString)
+    val deduped = stagedEventsStream(spark, dir,
+      stageEvents(dir, "graft_dup_stream", Seq("_a", "_b")))
       .select(col("event_id"), col("event_type"))
       .dropDuplicates("event_id")
     runToTable(deduped, mode = "append")
@@ -403,14 +407,8 @@ object Streams {
     * and the oracle is the same.
     */
   def dedupWatermarkStream(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    val staged = Files.createTempDirectory("graft_dupwm_stream")
-    Files.copy(java.nio.file.Paths.get(s"$dir/events.parquet"),
-      staged.resolve("events_a.parquet"))
-    Files.copy(java.nio.file.Paths.get(s"$dir/events.parquet"),
-      staged.resolve("events_b.parquet"))
-    val deduped = spark.readStream.schema(schema).parquet(staged.toString)
+    val deduped = stagedEventsStream(spark, dir,
+      stageEvents(dir, "graft_dupwm_stream", Seq("_a", "_b")))
       .select(col("event_id"), col("event_type"),
         ntzFromNanos(col("ts")).cast("timestamp").as("observed_at"))
       .withWatermark("observed_at", "2 hours")

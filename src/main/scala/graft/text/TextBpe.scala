@@ -55,7 +55,7 @@ private[graft] trait TextBpe extends TextSimhash {
 
   def bpeMergePairsSql(topK: Int = 50): String =
     raw"""WITH w AS (
-       |  SELECT unnest(string_split_regex(trim(lower(text)), '\s+')) AS word
+       |  SELECT unnest(${toksSql()}) AS word
        |  FROM documents),
        |wc AS (SELECT word, COUNT(*) AS n FROM w GROUP BY 1 HAVING len(word) >= 2),
        |p AS (SELECT n, unnest(list_transform(generate_series(1, len(word) - 1),
@@ -162,7 +162,7 @@ private[graft] trait TextBpe extends TextSimhash {
          |  SELECT '|' || array_to_string(list_transform(generate_series(1, len(word)), i -> word[i]), '||') || '|' AS s, n
          |  FROM (
          |    SELECT word, COUNT(*) AS n FROM (
-         |      SELECT unnest(string_split_regex(trim(lower(text)), '\s+')) AS word FROM documents)
+         |      SELECT unnest(${toksSql()}) AS word FROM documents)
          |    GROUP BY 1 HAVING len(word) >= 2 AND COUNT(*) >= $minCount$cap))""".stripMargin
     val steps = (1 to numMerges).map { k =>
       s"""p$k AS MATERIALIZED (
@@ -318,7 +318,7 @@ private[graft] trait TextBpe extends TextSimhash {
       s"WHEN s[i] = '${q(l)}' AND s[i + 1] = '${q(r)}' THEN $st"
     }.mkString(" ") + " ELSE 999999 END"
     raw"""WITH RECURSIVE w AS (
-       |  SELECT DISTINCT unnest(string_split_regex(trim(lower(text)), '\s+')) AS word
+       |  SELECT DISTINCT unnest(${toksSql()}) AS word
        |  FROM documents),
        |base AS (
        |  -- no len filter: an empty token (whitespace-only doc) must
@@ -355,7 +355,7 @@ private[graft] trait TextBpe extends TextSimhash {
        |    FROM enc) f0
        |  WHERE best = 999999),
        |tok AS (
-       |  SELECT doc_id, unnest(string_split_regex(trim(lower(text)), '\s+')) AS word
+       |  SELECT doc_id, unnest(${toksSql()}) AS word
        |  FROM documents)
        |SELECT t.doc_id,
        |  COUNT(*) AS n_words,
@@ -367,7 +367,7 @@ private[graft] trait TextBpe extends TextSimhash {
 
   def vocabCoverageSql(topK: Int = 200): String =
     raw"""WITH tok AS (
-       |  SELECT unnest(string_split_regex(trim(lower(text)), '\s+')) AS token
+       |  SELECT unnest(${toksSql()}) AS token
        |  FROM documents),
        |counts AS (SELECT token, COUNT(*) AS n FROM tok GROUP BY 1),
        |total AS (SELECT SUM(n) AS total FROM counts),

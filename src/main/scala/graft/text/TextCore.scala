@@ -12,6 +12,10 @@ private[graft] trait TextCore extends Serializable {
   /** Whitespace tokens of the lower-cased, trimmed text. */
   def toks(c: Column): Column = split(trim(lower(c)), "\\s+")
 
+  /** DuckDB twin of [[toks]] over the SQL expression `text`. */
+  def toksSql(text: String = "text"): String =
+    raw"string_split_regex(trim(lower($text)), '\s+')"
+
   private[text] def occurrencesChars(padded: Column, marker: String): Column =
     length(padded) - length(regexp_replace(padded, marker, " "))
 
@@ -43,7 +47,7 @@ private[graft] trait TextCore extends Serializable {
 
   /** DuckDB twin of [[qualityScore]] over a column named `text`. */
   private[graft] val qualityScoreSqlExpr: String =
-    raw"""LEAST(1.0, CAST(len(string_split_regex(trim(lower(text)), '\s+')) AS DOUBLE) / 100.0)
+    raw"""LEAST(1.0, CAST(len(${toksSql()}) AS DOUBLE) / 100.0)
        |    * (1.0 - LEAST(1.0, CAST(length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')) AS DOUBLE) / length(text) * 5.0))
        |    * (1.0 - LEAST(1.0, CAST(length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS DOUBLE) / length(text) * 5.0))""".stripMargin
 
@@ -81,17 +85,17 @@ private[graft] trait TextCore extends Serializable {
     val stop = Seq(" the ", " a ", " and ")
       .map(m => s"(${occurrencesCharsSql(padded, m)})").mkString(" + ")
     raw"""SELECT doc_id,
-       |  CAST(len(string_split_regex(trim(lower(text)), '\s+')) AS BIGINT) AS n_tokens,
+       |  CAST(len(${toksSql()}) AS BIGINT) AS n_tokens,
        |  CAST(length(text) AS BIGINT) AS n_chars_computed,
        |  CAST(length(regexp_replace(trim(text), '\s+', '', 'g')) AS DOUBLE)
-       |    / len(string_split_regex(trim(lower(text)), '\s+')) AS avg_token_len,
+       |    / len(${toksSql()}) AS avg_token_len,
        |  CAST(length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')) AS BIGINT) AS punct_count,
        |  CAST(length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')) AS DOUBLE) / length(text) AS punct_ratio,
        |  CAST(length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS BIGINT) AS digit_count,
        |  CAST(length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS DOUBLE) / length(text) AS digit_ratio,
        |  CAST($stop AS BIGINT) AS stopword_chars,
        |  CAST($stop AS DOUBLE) / length(text) AS stopword_density,
-       |  LEAST(1.0, CAST(len(string_split_regex(trim(lower(text)), '\s+')) AS DOUBLE) / 100.0)
+       |  LEAST(1.0, CAST(len(${toksSql()}) AS DOUBLE) / 100.0)
        |    * (1.0 - LEAST(1.0, CAST(length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')) AS DOUBLE) / length(text) * 5.0))
        |    * (1.0 - LEAST(1.0, CAST(length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS DOUBLE) / length(text) * 5.0))
        |    AS quality_score
@@ -119,7 +123,7 @@ private[graft] trait TextCore extends Serializable {
   val tokenCountsSql: String = {
     val bpe = raw"len(regexp_extract_all(text, '\p{L}+|\p{N}|[^\s\p{L}\p{N}]'))"
     raw"""SELECT doc_id,
-       |  CAST(len(string_split_regex(trim(lower(text)), '\s+')) AS BIGINT) AS n_ws_tokens,
+       |  CAST(len(${toksSql()}) AS BIGINT) AS n_ws_tokens,
        |  CAST($bpe AS BIGINT) AS n_bpe_tokens,
        |  CASE WHEN $bpe > 0 THEN CAST(length(text) AS DOUBLE) / $bpe END AS chars_per_token
        |FROM documents ORDER BY doc_id""".stripMargin

@@ -30,7 +30,7 @@ private[graft] trait TextMixtures extends TextRank {
        |  $langScoreColsSql
        |FROM documents),
        |d AS (SELECT doc_id, $langCaseSql AS predicted_lang,
-       |        string_split_regex(trim(lower(text)), '\s+') AS w
+       |        ${toksSql()} AS w
        |      FROM s),
        |inst AS (SELECT doc_id, predicted_lang, w[i] AS w1, w[i+1] AS w2
        |         FROM (SELECT doc_id, predicted_lang, w,
@@ -163,7 +163,7 @@ private[graft] trait TextMixtures extends TextRank {
   /** DuckDB twin of [[packedSequences]]. */
   def packedSequencesSql(seqLen: Int = 128): String =
     raw"""WITH t AS (SELECT doc_id,
-       |  CAST(len(string_split_regex(trim(lower(text)), '\s+')) AS BIGINT) AS n_toks
+       |  CAST(len(${toksSql()}) AS BIGINT) AS n_toks
        |  FROM documents),
        |c AS (SELECT doc_id, n_toks,
        |  CAST(SUM(n_toks) OVER (ORDER BY doc_id) AS BIGINT) AS cum FROM t)
@@ -178,7 +178,7 @@ private[graft] trait TextMixtures extends TextRank {
   def chunkDocumentsSql(chunkTokens: Int = 50, overlap: Int = 10): String = {
     val stride = chunkTokens - overlap
     raw"""WITH tk AS (
-       |  SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS w FROM documents),
+       |  SELECT doc_id, ${toksSql()} AS w FROM documents),
        |ch AS (SELECT doc_id, w,
        |  unnest(generate_series(0, (len(w) - 1) // $stride)) AS chunk_idx FROM tk)
        |SELECT doc_id, CAST(chunk_idx AS INTEGER) AS chunk_idx,
@@ -217,7 +217,7 @@ private[graft] trait TextMixtures extends TextRank {
   val domainMixtureSql: String =
     raw"""WITH per AS (
        |  SELECT source, COUNT(*) AS n_docs,
-       |    CAST(SUM(len(string_split_regex(trim(lower(text)), '\s+'))) AS BIGINT) AS n_tokens
+       |    CAST(SUM(len(${toksSql()})) AS BIGINT) AS n_tokens
        |  FROM documents GROUP BY 1),
        |tot AS (SELECT CAST(SUM(n_tokens) AS BIGINT) AS total_tokens, COUNT(*) AS n_sources FROM per)
        |SELECT source, n_docs, n_tokens,
@@ -275,7 +275,7 @@ private[graft] trait TextMixtures extends TextRank {
   def temperatureMixtureSql(alpha: Double = 0.3): String =
     raw"""WITH per AS (
        |  SELECT source,
-       |    CAST(SUM(len(string_split_regex(trim(lower(text)), '\s+'))) AS BIGINT) AS n_tokens
+       |    CAST(SUM(len(${toksSql()})) AS BIGINT) AS n_tokens
        |  FROM documents GROUP BY 1),
        |t AS (SELECT source, n_tokens,
        |    SUM(n_tokens) OVER (ORDER BY source ROWS BETWEEN UNBOUNDED PRECEDING
@@ -341,7 +341,7 @@ private[graft] trait TextMixtures extends TextRank {
 
   /** DuckDB twin of [[sourceKlDivergence]]. */
   val sourceKlDivergenceSql: String =
-    raw"""WITH tk AS (SELECT source, unnest(string_split_regex(trim(lower(text)), '\s+')) AS tok
+    raw"""WITH tk AS (SELECT source, unnest(${toksSql()}) AS tok
        |            FROM documents),
        |bysrc AS (SELECT source, tok, COUNT(*) AS cs FROM tk GROUP BY 1, 2),
        |srctot AS (SELECT source, CAST(SUM(cs) AS BIGINT) AS ns FROM bysrc GROUP BY 1),
@@ -389,7 +389,7 @@ private[graft] trait TextMixtures extends TextRank {
 
   /** DuckDB twin of [[ngramDiversity]]. */
   val ngramDiversitySql: String =
-    raw"""WITH tk AS (SELECT source, string_split_regex(trim(lower(text)), '\s+') AS w
+    raw"""WITH tk AS (SELECT source, ${toksSql()} AS w
        |            FROM documents),
        |ns AS (SELECT unnest([1, 2, 3]) AS n),
        |inst AS (

@@ -62,7 +62,7 @@ private[graft] trait TextQuality extends TextMixtures {
   def qualityRuleFlagsSql(minWords: Int = 30, maxWords: Int = 100000): String = {
     val stops = RuleStopwords.map(s => s"'$s'").mkString(", ")
     raw"""WITH s AS (SELECT doc_id, source,
-       |              string_split_regex(trim(lower(text)), '\s+') AS w FROM documents),
+       |              ${toksSql()} AS w FROM documents),
        |m AS (SELECT doc_id, source,
        |  CAST(len(w) AS BIGINT) AS n_words,
        |  CAST(CAST(list_sum(list_transform(w, x -> len(x))) AS BIGINT) AS DOUBLE) / len(w) AS mean_word_len,
@@ -104,7 +104,7 @@ private[graft] trait TextQuality extends TextMixtures {
   /** DuckDB twin of [[qualityRuleReport]]. */
   def qualityRuleReportSql(minWords: Int = 30, maxWords: Int = 100000): String =
     raw"""WITH s AS (SELECT doc_id, source,
-       |              string_split_regex(trim(lower(text)), '\s+') AS w FROM documents),
+       |              ${toksSql()} AS w FROM documents),
        |m AS (SELECT doc_id, source,
        |  CAST(len(w) AS BIGINT) AS n_words,
        |  CAST(CAST(list_sum(list_transform(w, x -> len(x))) AS BIGINT) AS DOUBLE) / len(w) AS mean_word_len,
@@ -128,7 +128,7 @@ private[graft] trait TextQuality extends TextMixtures {
   /** DuckDB twin of [[repetitionStats]]. */
   val repetitionStatsSql: String =
     raw"""WITH tk AS (
-       |  SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS w FROM documents),
+       |  SELECT doc_id, ${toksSql()} AS w FROM documents),
        |bg AS (
        |  SELECT doc_id, unnest(list_transform(
        |    generate_series(1, len(w) - 1),

@@ -50,7 +50,7 @@ private[graft] trait TextRank extends TextCore {
 
   def tfidfTopTermsSql(k: Int = 3): String =
     raw"""WITH tok AS (
-       |  SELECT doc_id, unnest(string_split_regex(trim(lower(text)), '\s+')) AS term
+       |  SELECT doc_id, unnest(${toksSql()}) AS term
        |  FROM documents),
        |tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM tok GROUP BY 1, 2),
        |df AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY 1),
@@ -184,17 +184,17 @@ private[graft] trait TextRank extends TextCore {
     val values = queries.map { case (id, q) => s"($id, '$q')" }.mkString(", ")
     raw"""WITH q(query_id, qtext) AS (VALUES $values),
        |qterm AS (SELECT DISTINCT CAST(query_id AS INTEGER) AS query_id,
-       |    unnest(string_split_regex(trim(lower(qtext)), '\s+')) AS term FROM q),
-       |tok AS (SELECT doc_id, unnest(string_split_regex(trim(lower(text)), '\s+')) AS term
+       |    unnest(${toksSql("qtext")}) AS term FROM q),
+       |tok AS (SELECT doc_id, unnest(${toksSql()}) AS term
        |        FROM documents),
        |tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM tok
        |       WHERE term IN (SELECT term FROM qterm) GROUP BY 1, 2),
        |df AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY 1),
        |dl AS (SELECT doc_id,
-       |         CAST(len(string_split_regex(trim(lower(text)), '\s+')) AS BIGINT) AS dl
+       |         CAST(len(${toksSql()}) AS BIGINT) AS dl
        |       FROM documents),
        |st AS (SELECT COUNT(*) AS n,
-       |         AVG(CAST(len(string_split_regex(trim(lower(text)), '\s+')) AS BIGINT)) AS avgdl
+       |         AVG(CAST(len(${toksSql()}) AS BIGINT)) AS avgdl
        |       FROM documents),
        |contrib AS (
        |  SELECT qterm.query_id, tf.doc_id,
@@ -216,9 +216,9 @@ private[graft] trait TextRank extends TextCore {
   def bigramTopKSql(k: Int = 50): String =
     raw"""WITH b AS (
        |  SELECT unnest(list_transform(
-       |    generate_series(1, len(string_split_regex(trim(lower(text)), '\s+')) - 1),
-       |    i -> string_split_regex(trim(lower(text)), '\s+')[i] || ' ' ||
-       |         string_split_regex(trim(lower(text)), '\s+')[i + 1])) AS bigram
+       |    generate_series(1, len(${toksSql()}) - 1),
+       |    i -> ${toksSql()}[i] || ' ' ||
+       |         ${toksSql()}[i + 1])) AS bigram
        |  FROM documents)
        |SELECT bigram, COUNT(*) AS n FROM b GROUP BY 1
        |ORDER BY n DESC, bigram LIMIT $k""".stripMargin
@@ -305,7 +305,7 @@ private[graft] trait TextRank extends TextCore {
   }
 
   val bigramLmScoreSql: String =
-    raw"""WITH tk AS (SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS w
+    raw"""WITH tk AS (SELECT doc_id, ${toksSql()} AS w
        |           FROM documents),
        |inst AS (SELECT doc_id, w[i] AS w1, w[i+1] AS w2
        |         FROM (SELECT doc_id, w, unnest(generate_series(1, len(w) - 1)) AS i

@@ -26,9 +26,9 @@ private[graft] trait TextSimhash extends TextQuality {
   def hexValSql(ch: String): String =
     s"(CASE WHEN ascii($ch) >= 97 THEN ascii($ch) - 87 ELSE ascii($ch) - 48 END)"
 
-  /** doc_id → 32-bit SimHash as BIGINT. */
-  /** The 32-bit signature votes on md5 hex digits 0-7 — exactly the low
-    * half of the 64-bit signature's bit numbering — so it reads straight
+  /** doc_id → 32-bit SimHash as BIGINT. The 32-bit signature votes on
+    * md5 hex digits 0-7 — exactly the low half of the 64-bit signature's
+    * bit numbering — so it reads straight
     * off the native fused expression: one narrow per-row call, no
     * explode, no shuffle (equality with the historical composed form is
     * covered transitively by the simhash64 equivalence spec plus the
@@ -50,8 +50,8 @@ private[graft] trait TextSimhash extends TextQuality {
     * buckets per band — the 100 TB candidate-generation path (the 8-bit
     * bands of the 32-bit variant cap at 256 buckets, which goes quadratic
     * per bucket as the corpus grows).
-    */
-  /** 64-bit SimHash per document via the native fused expression
+    *
+    * 64-bit SimHash per document via the native fused expression
     * (graft.functions.SimHash64Expr): tokenize → md5 → bit-vote →
     * signature in ONE narrow per-row call — no explode, no 64-column
     * aggregation, no shuffle. The signature stage of near-dup detection
@@ -79,7 +79,7 @@ private[graft] trait TextSimhash extends TextQuality {
       .map(b => s"CASE WHEN v$b > 0 THEN CAST(${1L << (b - off)} AS BIGINT) ELSE 0 END")
       .mkString(" + ")
     raw"""tok64 AS (
-       |  SELECT doc_id, md5(unnest(string_split_regex(trim(lower(text)), '\s+'))) AS h
+       |  SELECT doc_id, md5(unnest(${toksSql()})) AS h
        |  FROM documents),
        |dig64 AS (SELECT doc_id,
        |  $digits
@@ -106,7 +106,7 @@ private[graft] trait TextSimhash extends TextQuality {
       .map(b => s"CASE WHEN v$b > 0 THEN CAST(${1L << b} AS BIGINT) ELSE 0 END")
       .mkString(" + ")
     raw"""tok AS (
-       |  SELECT doc_id, md5(unnest(string_split_regex(trim(lower(text)), '\s+'))) AS h
+       |  SELECT doc_id, md5(unnest(${toksSql()})) AS h
        |  FROM documents),
        |dig AS (SELECT doc_id,
        |  $digits

@@ -290,7 +290,7 @@ object Unigram {
     }.mkString(",\n")
     val wdBody = cap(
       "SELECT word, CAST(COUNT(*) AS BIGINT) AS f FROM (\n" +
-        "    SELECT unnest(string_split_regex(trim(lower(text)), '\\s+')) AS word\n" +
+        s"    SELECT unnest(${TextOps.toksSql()}) AS word\n" +
         "    FROM documents)\n" +
         s"  WHERE length(word) BETWEEN 1 AND $MaxWordLen GROUP BY 1$floor")
     s"""wd AS MATERIALIZED (
@@ -341,7 +341,7 @@ object Unigram {
        |dw AS (
        |  SELECT doc_id, word FROM (
        |    SELECT doc_id,
-       |      unnest(string_split_regex(trim(lower(text)), '\\s+')) AS word
+       |      unnest(${TextOps.toksSql()}) AS word
        |    FROM documents WHERE doc_id IS NOT NULL)
        |  WHERE length(word) BETWEEN 1 AND $MaxWordLen)
        |SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_words,

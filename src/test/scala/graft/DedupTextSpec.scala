@@ -355,6 +355,30 @@ class DedupTextSpec extends SparkSpec {
     assert(rep.toSet == Set((2L, 3, 10, 1L), (4L, 9, 16, 1L)))
   }
 
+  test("dup-span report: per doc, the merged spans' lengths sum to the scrub's n_removed (sf0.001)") {
+    // the island merge must yield disjoint maximal spans whose union is
+    // exactly the position set the scrub removes. n = 8 is the registered
+    // width; at n = 4 the corpus also has removable starts 2..n apart (a
+    // kept first occurrence between repeats), which only the overlap rule
+    // merges into one span
+    val d = TestdataAdapter.table(spark, "/root/testdata/sf0.001", "documents")
+    for (n <- Seq(4, 8)) {
+      val spans = Dedup.dupSpanReport(d, n)
+        .groupBy("doc_id")
+        .agg(sum(col("span_end") - col("span_start") + 1).as("covered"),
+          max(col("n_starts")).as("max_starts"))
+      val rows = Dedup.dupSpanScrub(d, n).select("doc_id", "n_removed")
+        .join(spans, Seq("doc_id"), "left")
+        .select(col("doc_id"), col("n_removed"), coalesce(col("covered"), lit(0L)).as("covered"),
+          coalesce(col("max_starts"), lit(0L)).as("max_starts"))
+        .collect()
+      val bad = rows.filter(r => r.getAs[Long]("n_removed") != r.getAs[Long]("covered"))
+      if (bad.nonEmpty) fail(s"n=$n: ${bad.length} docs differ, e.g. ${bad.take(5).mkString(", ")}")
+      assert(rows.exists(_.getAs[Long]("n_removed") > 0), s"n=$n")
+      assert(rows.exists(_.getAs[Long]("max_starts") > 1), s"n=$n") // some island merged starts
+    }
+  }
+
   test("min-span scrub (l50): a 49-token repeat survives, a 50-token one scrubs keep-first") {
     // doc 1: the source passages; doc 2 repeats 49 tokens of passage A
     // then fresh words; doc 3 repeats 50 tokens of passage B
